@@ -48,6 +48,13 @@ object PatientGenerator {
     * the golden-value oracle on `q_patient_gen`. 64 partitions still
     * parallelizes a 150B-row generate; raise deliberately if a single
     * partition's range outgrows a task.
+    *
+    * This pins GENERATION only. Consumers that cache the rows for repeated
+    * scans narrow-coalesce to one partition per core
+    * ([[graft.search.PatientSearch.setupHospitals]]): at ~9 ms of fixed
+    * overhead per task, 64 ranges per hospital would make every scan a
+    * tail of near-empty tasks, and a narrow coalesce keeps the values and
+    * their order bit-identical.
     */
   val genPartitions = 64
 

@@ -33,6 +33,7 @@ class PatientSearch(spark: SparkSession) {
 
   /** Trained-model / index accessors (for tests and reuse). */
   def globalWeights: Mlp.Weights = weights
+  def patientTable: Option[DataFrame] = patients
   def vectorIndex: Option[DataFrame] = index
 
   private def computeShardSizes(idx: DataFrame): Map[String, Long] =
@@ -43,12 +44,24 @@ class PatientSearch(spark: SparkSession) {
     * z-score per hospital (the reference normalizes each client against
     * its own stats, similarity_search.py:180+198), assemble feature
     * arrays.
+    *
+    * Layout rule: generation stays pinned at
+    * [[PatientGenerator.genPartitions]] ranges per hospital (the seeded
+    * `rand`/`randn` streams are per partition), but the cached table holds
+    * one partition per core (`defaultParallelism`). A task's fixed
+    * overhead (~9 ms) dwarfs its per-row work, so the embed pass, the
+    * cached index and every search scan run one task per core instead of
+    * one per generator range. The coalesce is narrow: each merged task
+    * reads its parent ranges in index order, so the rows, their order
+    * (which `Mlp.localFit` slices into minibatches) and the z-score stats
+    * are bit-identical to the uncoalesced table.
     */
   def setupHospitals(configs: Seq[(String, Long)], seed: Long = 42L): DataFrame = {
     val raw = PatientGenerator.setupHospitals(spark, configs, seed)
     val normalized = Normalization.zscore(raw, perGroup = Some("hospital"))
     val withFeatures = Normalization.assembleFeatures(normalized)
       // keep raw outcome columns for metadata (z-scored features live in the array)
+      .coalesce(spark.sparkContext.defaultParallelism)
       .cache()
     patients = Some(withFeatures)
     withFeatures
@@ -118,11 +131,13 @@ class PatientSearch(spark: SparkSession) {
       .withColumn("local_rank", row_number().over(localW))
       .filter(col("local_rank") <= topK)
 
+    // patient_id restarts at PT_000000 in every hospital, so hospital is
+    // the last key of a total order across shards
+    val globalOrder = Seq(col("similarity").desc, col("patient_id"), col("hospital"))
     val hits = localTopK
-      .orderBy(col("similarity").desc, col("patient_id"))
+      .orderBy(globalOrder: _*)
       .limit(topK)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("similarity").desc, col("patient_id"))))
+      .withColumn("rank", row_number().over(Window.orderBy(globalOrder: _*)))
       .select(col("rank"), col("patient_id"), col("similarity"),
         col("hospital"), col("received_transplant"), col("transplant_success"),
         col("days_to_transplant"),
