@@ -27,39 +27,18 @@ object Tables {
     * ONCE in a catalog and reuse the relation; this memo is that
     * catalog discipline for path tables. It caches the resolved
     * (schema + file listing) Dataset handle, NEVER data: every action
-    * on the returned frame still scans parquet. Keyed per session so
-    * tenant isolation holds; entries of stopped sessions are purged
-    * opportunistically.
-    */
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  // contexts that carry the eviction listener below — eviction fires on
-  // application end (context stop), not only opportunistically past the
-  // size cap, so a long-lived process that cycles sessions cannot pin
-  // stopped sessions' resolved readers (ADVICE r13)
-  private val evictListenerOn = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[org.apache.spark.SparkContext]()
-
-  /** IMMUTABLE-PATH contract: callers may only pass paths whose file set
+    * on the returned frame still scans parquet. One [[Staged]] entry
+    * per (session, path): tenant isolation holds, a hit is a lock-free
+    * lookup, and the entries go when the session's context stops.
+    *
+    * IMMUTABLE-PATH contract: callers may only pass paths whose file set
     * never changes after first read (the read-only corpus, write-once
     * staged fixtures). Mutable dirs (snapshot tables, upsert targets)
     * must stay off this memo — a cached handle pins the file listing.
     */
   def readCached(spark: SparkSession, path: String): DataFrame = {
     SessionTune.install(spark)
-    val sc = spark.sparkContext
-    if (evictListenerOn.add(sc))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          readMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-          evictListenerOn.remove(sc)
-        }
-      })
-    if (readMemo.size > 512)
-      readMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    readMemo.computeIfAbsent((spark, path), _ => spark.read.parquet(path))
+    Staged(spark, path, "read")(spark.read.parquet(path))
   }
 
   /** Widen a scan-rooted input to cluster parallelism before CPU-dense

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 
 /** `[EXT]` The six TPC-H shapes the corpus could not serve — Q2, Q9,
   * Q11, Q12, Q16, Q20 — completed by DERIVING the missing inputs
@@ -37,16 +37,8 @@ object TpchDerived extends QueryPack {
 
   // ---- derived relations (Spark side) ---------------------------------
 
-  @volatile private var sCountMemo: Map[(SparkSession, String), Long] = Map.empty
-
   private def supplierCount(s: SparkSession, dir: String): Long =
-    sCountMemo.getOrElse((s, dir), synchronized {
-      sCountMemo.getOrElse((s, dir), {
-        val n = Tables.supplier(s, dir).count()
-        sCountMemo += ((s, dir) -> n)
-        n
-      })
-    })
+    Staged(s, dir, "tpch.supplierCount")(Tables.supplier(s, dir).count())
 
   /** 4 suppliers per part by modular assignment; cents-exact cost. */
   private[operators] def partsupp(s: SparkSession, dir: String): DataFrame = {

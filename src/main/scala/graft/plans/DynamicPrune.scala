@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.BooleanType
 
+import graft.Staged
 import graft.sources.SnapshotFileIndex
 
 /** `[EXT]` IN-list dynamic file pruning for snapshot star joins — the
@@ -447,31 +448,20 @@ object DynamicPrune extends Rule[LogicalPlan] with PredicateHelper
   // DuckDB oracle's CTE, so the hash check is as strict as for a
   // native table. Build reuses JoinOrder's memoized orders snapshot
   // (partitioned by o_orderpriority — the probe's pruning evidence).
-  @volatile private var memo: Option[((SparkSession, String), String)] = None
-
   private def fixture(s: SparkSession, dir: String): (String, String) = {
     val ordersPath = JoinOrder.fixturePaths(s, dir)._1
-    memo match {
-      case Some((k, p)) if k == ((s, dir)) => (ordersPath, p)
-      case _ => synchronized {
-        memo match {
-          case Some((k, p)) if k == ((s, dir)) => (ordersPath, p)
-          case _ =>
-            import graft.sources.SnapshotTable
-            import org.apache.spark.sql.functions.substring
-            val prio = java.nio.file.Files
-              .createTempDirectory("graft_dynprune").resolve("prio").toString
-            SnapshotTable.create(s, prio,
-              SnapshotTable.read(s, ordersPath)
-                .select(col("o_orderpriority").as("p")).distinct()
-                .withColumn("pclass",
-                  (substring(col("p"), 1, 1).cast("int") % 2).cast("int")),
-              "pclass")
-            memo = Some(((s, dir), prio))
-            (ordersPath, prio)
-        }
-      }
-    }
+    (ordersPath, Staged(s, dir, "dynPrune.prio") {
+      import graft.sources.SnapshotTable
+      import org.apache.spark.sql.functions.substring
+      val prio = Staged.scratch(s, "graft_dynprune") + "/prio"
+      SnapshotTable.create(s, prio,
+        SnapshotTable.read(s, ordersPath)
+          .select(col("o_orderpriority").as("p")).distinct()
+          .withColumn("pclass",
+            (substring(col("p"), 1, 1).cast("int") % 2).cast("int")),
+        "pclass")
+      prio
+    })
   }
 
   /** The dynamically-pruned star probe: result pinned against the

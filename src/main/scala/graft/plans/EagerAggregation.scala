@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 import graft.sources.{SnapshotFileIndex, SnapshotTable}
 
 /** `[EXT]` Eager aggregation — push a partial aggregate below an inner
@@ -320,33 +320,21 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper
   // per line item. The oracle replays the plain join+aggregate.
   // ------------------------------------------------------------------
 
-  @volatile private var fixtureMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def fixture(s: SparkSession, dir: String): (String, String) =
-    fixtureMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        fixtureMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val root = java.nio.file.Files
-              .createTempDirectory("graft_eager_agg").toString
-            val fact = s"$root/lineitem"
-            val dim = s"$root/orders"
-            SnapshotTable.create(s, fact,
-              Tables.lineitem(s, dir).select(Seq("l_orderkey", "l_quantity",
-                "l_extendedprice", "l_returnflag").map(col): _*),
-              "l_returnflag")
-            SnapshotTable.create(s, dim,
-              Tables.orders(s, dir).select(Seq("o_orderkey",
-                "o_orderpriority").map(col): _*),
-              "o_orderpriority")
-            enableFor(fact)
-            val w = (fact, dim)
-            fixtureMemo = Some(((s, dir), w))
-            w
-        }
-      }
+    Staged(s, dir, "eagerAgg.fixture") {
+      val root = Staged.scratch(s, "graft_eager_agg")
+      val fact = s"$root/lineitem"
+      val dim = s"$root/orders"
+      SnapshotTable.create(s, fact,
+        Tables.lineitem(s, dir).select(Seq("l_orderkey", "l_quantity",
+          "l_extendedprice", "l_returnflag").map(col): _*),
+        "l_returnflag")
+      SnapshotTable.create(s, dim,
+        Tables.orders(s, dir).select(Seq("o_orderkey",
+          "o_orderpriority").map(col): _*),
+        "o_orderpriority")
+      enableFor(fact)
+      (fact, dim)
     }
 
   /** Line-item rollup by ORDER priority — aggregates read the fact, the
@@ -371,37 +359,25 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper
   // joined to a per-user dim — ANALYZEd on the join key, so
   // [[StatsBroadcast]]'s aggregate sizing can bound the partial
   // aggregate's output and broadcast it
-  @volatile private var eventsMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def eventsFixture(s: SparkSession, dir: String): (String, String) =
-    eventsMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        eventsMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val root = java.nio.file.Files
-              .createTempDirectory("graft_eager_ev").toString
-            val fact = s"$root/events"
-            val dim = s"$root/users"
-            SnapshotTable.create(s, fact,
-              Tables.events(s, dir).select(Seq("event_id", "user_id",
-                "event_type", "value").map(col): _*),
-              "event_type")
-            SnapshotTable.create(s, dim,
-              Tables.events(s, dir).select(col("user_id")).distinct()
-                .select(col("user_id").as("u_id"),
-                  (col("user_id") % 10).cast("string").as("u_region"),
-                  lit("all").as("u_part")),
-              "u_part")
-            enableFor(fact)
-            graft.sources.TableStats.analyze(s, fact, Seq("user_id"),
-              k = 4096)
-            val w = (fact, dim)
-            eventsMemo = Some(((s, dir), w))
-            w
-        }
-      }
+    Staged(s, dir, "eagerAgg.events") {
+      val root = Staged.scratch(s, "graft_eager_ev")
+      val fact = s"$root/events"
+      val dim = s"$root/users"
+      SnapshotTable.create(s, fact,
+        Tables.events(s, dir).select(Seq("event_id", "user_id",
+          "event_type", "value").map(col): _*),
+        "event_type")
+      SnapshotTable.create(s, dim,
+        Tables.events(s, dir).select(col("user_id")).distinct()
+          .select(col("user_id").as("u_id"),
+            (col("user_id") % 10).cast("string").as("u_region"),
+            lit("all").as("u_part")),
+        "u_part")
+      enableFor(fact)
+      graft.sources.TableStats.analyze(s, fact, Seq("user_id"),
+        k = 4096)
+      (fact, dim)
     }
 
   /** Per-region event rollup through the full composition: eager

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 import graft.sources.{SnapshotFileIndex, SnapshotTable}
 
 /** `[EXT]` Join elimination from informational key constraints — the
@@ -616,36 +616,24 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
   // the semantics-preservation proof.
   // ------------------------------------------------------------------
 
-  @volatile private var fixtureMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def fixture(s: SparkSession, dir: String): (String, String) =
-    fixtureMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        fixtureMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val root = java.nio.file.Files
-              .createTempDirectory("graft_join_elim").toString
-            val fact = s"$root/orders"
-            val dim = s"$root/customer"
-            SnapshotTable.create(s, fact,
-              Tables.orders(s, dir).select(Seq("o_orderkey", "o_custkey",
-                "o_totalprice", "o_orderpriority").map(col): _*),
-              "o_orderpriority")
-            SnapshotTable.create(s, dim,
-              Tables.customer(s, dir).select(Seq("c_custkey", "c_name",
-                "c_acctbal", "c_mktsegment").map(col): _*),
-              "c_mktsegment")
-            declareUnique(s, dim, "c_custkey", validate = true)
-            declareUnique(s, fact, "o_orderkey", validate = true)
-            declareForeignKey(s, fact, "o_custkey", dim, "c_custkey",
-              validate = true)
-            val w = (fact, dim)
-            fixtureMemo = Some(((s, dir), w))
-            w
-        }
-      }
+    Staged(s, dir, "joinElim.fixture") {
+      val root = Staged.scratch(s, "graft_join_elim")
+      val fact = s"$root/orders"
+      val dim = s"$root/customer"
+      SnapshotTable.create(s, fact,
+        Tables.orders(s, dir).select(Seq("o_orderkey", "o_custkey",
+          "o_totalprice", "o_orderpriority").map(col): _*),
+        "o_orderpriority")
+      SnapshotTable.create(s, dim,
+        Tables.customer(s, dir).select(Seq("c_custkey", "c_name",
+          "c_acctbal", "c_mktsegment").map(col): _*),
+        "c_mktsegment")
+      declareUnique(s, dim, "c_custkey", validate = true)
+      declareUnique(s, fact, "o_orderkey", validate = true)
+      declareForeignKey(s, fact, "o_custkey", dim, "c_custkey",
+        validate = true)
+      (fact, dim)
     }
 
   private def factRollup(df: DataFrame): DataFrame =

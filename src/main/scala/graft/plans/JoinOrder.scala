@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.Staged
 import graft.sources.{SnapshotFileIndex, TableStats}
 import graft.sources.SnapshotTable.FileEntry
 
@@ -362,52 +363,39 @@ object JoinOrder extends Rule[LogicalPlan] with PredicateHelper
   // orders ⋈ customer ⋈ nation over snapshot tables, WRITTEN in the
   // worst order (fact joins the big dim first); the greedy reorder
   // flips to customer ⋈ nation first from declared stats alone.
-  // Fixture memoized per session × corpus; k = 65536 keeps every key
-  // sketch in its exact regime through the bench SF (15k customers).
-  @volatile private var memo: Option[((SparkSession, String),
-    (String, String, String))] = None
+  // k = 65536 keeps every key sketch in its exact regime through the
+  // bench SF (15k customers).
 
   /** The memoized (orders, customer, nation) snapshot fixture —
-    * shared with [[DynamicPrune]]'s driver query so the bench builds
-    * the star tables once.
+    * shared with [[DynamicPrune]]'s and [[WindowTopK]]'s driver queries
+    * so the bench builds the star tables once.
     */
   private[plans] def fixturePaths(s: SparkSession, dir: String)
-      : (String, String, String) = fixture(s, dir)
-
-  private def fixture(s: SparkSession, dir: String)
-      : (String, String, String) = memo match {
-    case Some((k, w)) if k == ((s, dir)) => w
-    case _ => synchronized {
-      memo match {
-        case Some((k, w)) if k == ((s, dir)) => w
-        case _ =>
-          import graft.sources.SnapshotTable
-          import graft.Tables
-          val root = java.nio.file.Files
-            .createTempDirectory("graft_joinorder").toString
-          val (o, c, nt) = (s"$root/orders", s"$root/customer", s"$root/nation")
-          // statsCols: per-file o_totalprice (lo, hi, nulls, rows) +
-          // range clustering within each priority partition — what
-          // arms WindowTopK's per-group thresholds on this fixture
-          SnapshotTable.create(s, o, Tables.orders(s, dir)
-            .select(col("o_orderkey"), col("o_custkey"),
-              col("o_totalprice"), col("o_orderpriority")),
-            "o_orderpriority", statsCols = Seq("o_totalprice"))
-          SnapshotTable.create(s, c, Tables.customer(s, dir)
-            .select(col("c_custkey"), col("c_nationkey"),
-              col("c_mktsegment")), "c_mktsegment")
-          SnapshotTable.create(s, nt, Tables.nation(s, dir)
-            .select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
-            "n_regionkey")
-          TableStats.analyze(s, o, Seq("o_custkey"), k = 65536)
-          TableStats.analyze(s, c, Seq("c_custkey", "c_nationkey"),
-            k = 65536)
-          TableStats.analyze(s, nt, Seq("n_nationkey"), k = 65536)
-          memo = Some(((s, dir), (o, c, nt)))
-          (o, c, nt)
-      }
+      : (String, String, String) =
+    Staged(s, dir, "joinOrder") {
+      import graft.sources.SnapshotTable
+      import graft.Tables
+      val root = Staged.scratch(s, "graft_joinorder")
+      val (o, c, nt) = (s"$root/orders", s"$root/customer", s"$root/nation")
+      // statsCols: per-file o_totalprice (lo, hi, nulls, rows) +
+      // range clustering within each priority partition — what
+      // arms WindowTopK's per-group thresholds on this fixture
+      SnapshotTable.create(s, o, Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"), col("o_orderpriority")),
+        "o_orderpriority", statsCols = Seq("o_totalprice"))
+      SnapshotTable.create(s, c, Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_nationkey"),
+          col("c_mktsegment")), "c_mktsegment")
+      SnapshotTable.create(s, nt, Tables.nation(s, dir)
+        .select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
+        "n_regionkey")
+      TableStats.analyze(s, o, Seq("o_custkey"), k = 65536)
+      TableStats.analyze(s, c, Seq("c_custkey", "c_nationkey"),
+        k = 65536)
+      TableStats.analyze(s, nt, Seq("n_nationkey"), k = 65536)
+      (o, c, nt)
     }
-  }
 
   /** The reordered star rollup: plan shape comes from the greedy
     * reorder (JoinOrderSpec pins the flip and the refusals); this
@@ -419,9 +407,10 @@ object JoinOrder extends Rule[LogicalPlan] with PredicateHelper
     install(s)
     enable(s)
     import graft.sources.SnapshotTable
-    val orders = SnapshotTable.read(s, fixture(s, dir)._1)
-    val customer = SnapshotTable.read(s, fixture(s, dir)._2)
-    val nation = SnapshotTable.read(s, fixture(s, dir)._3)
+    val (o, c, nt) = fixturePaths(s, dir)
+    val orders = SnapshotTable.read(s, o)
+    val customer = SnapshotTable.read(s, c)
+    val nation = SnapshotTable.read(s, nt)
     orders
       .join(customer, col("o_custkey") === col("c_custkey"))
       .join(nation.filter(col("n_name") === "NATION_19"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
-import graft.QueryPack
+import graft.{QueryPack, Staged}
 
 /** `[EXT]` Registered materialized summary views over snapshot tables,
   * plus the bookkeeping the transparent query-rewrite rule
@@ -210,30 +210,12 @@ object MaterializedView extends QueryPack {
 
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
 
-  private def memoized[T](memo: () => Option[((SparkSession, String), T)],
-                          set: Option[((SparkSession, String), T)] => Unit,
-                          s: SparkSession, dir: String)(build: => T): T =
-    memo() match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        memo() match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ => val w = build; set(Some(((s, dir), w))); w
-        }
-      }
-    }
-
   // static source (the memoized read-only orders snapshot) + its MV —
   // built once; repeated bench runs measure the REWRITTEN QUERY (the
   // operator under test), not the fixture build
-  @volatile private var staticMvMemo: Option[((SparkSession, String), MvDef)] = None
-
   private def staticMv(s: SparkSession, dir: String): MvDef =
-    memoized(() => staticMvMemo,
-        (v: Option[((SparkSession, String), MvDef)]) => staticMvMemo = v,
-        s, dir) {
-      val view = java.nio.file.Files
-        .createTempDirectory("graft_mview").resolve("t").toString
+    Staged(s, dir, "mview.static") {
+      val view = Staged.scratch(s, "graft_mview") + "/t"
       create(s, view, SnapshotTable.deleteBase(s, dir),
         "o_orderpriority", "o_totalprice",
         castTo = Some(org.apache.spark.sql.types.DecimalType(18, 2)),
@@ -243,15 +225,10 @@ object MaterializedView extends QueryPack {
   // 3-version source (base → append → merge; read-only after build:
   // refreshes mutate the VIEW, never the source) + the v1 view base
   // each run clones
-  @volatile private var rwSrcMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def rwScenario(s: SparkSession, dir: String): (String, String) =
-    memoized(() => rwSrcMemo,
-        (v: Option[((SparkSession, String), (String, String))]) => rwSrcMemo = v,
-        s, dir) {
+    Staged(s, dir, "mview.rwSrc") {
       val src = SnapshotTable.cloneTable(s, SnapshotTable.deleteBase(s, dir))
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_mview_base").resolve("t").toString
+      val base = Staged.scratch(s, "graft_mview_base") + "/t"
       val d = MvDef(base, src, "o_custkey", "o_totalprice",
         Some(org.apache.spark.sql.types.DecimalType(18, 2)), buckets = 16)
       SnapshotTable.create(s, base,

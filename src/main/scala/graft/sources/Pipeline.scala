@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 
 /** `[EXT]` Declarative incremental pipeline DAG — the training-data
   * pipeline as code: named nodes materialized as snapshot tables,
@@ -310,79 +310,64 @@ final case class Pipeline(nodes: Seq[Pipeline.Node]) {
 object PipelinePack extends QueryPack {
   import org.apache.spark.sql.functions._
 
-  @volatile private var memo: Option[((SparkSession, String), Pipeline)] = None
-  @volatile private var streamMemo: Option[((SparkSession, String), Pipeline)] = None
-
   private def scenario(s: SparkSession, dir: String): Pipeline =
-    scenarioIn(s, dir, memo, memo = _, stream = false)
+    Staged(s, dir, "pipeline")(buildScenario(s, dir, stream = false))
 
   /** The SAME source, mutations, and DAG — but the refresh is driven by
     * the continuous runner tailing the source's commit log instead of
     * one explicit call. Both must converge to the identical view.
     */
   private def streamScenario(s: SparkSession, dir: String): Pipeline =
-    scenarioIn(s, dir, streamMemo, streamMemo = _, stream = true)
+    Staged(s, dir, "pipeline.stream")(buildScenario(s, dir, stream = true))
 
-  private def scenarioIn(s: SparkSession, dir: String,
-                         get: => Option[((SparkSession, String), Pipeline)],
-                         set: Option[((SparkSession, String), Pipeline)] => Unit,
-                         stream: Boolean): Pipeline =
-    get match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        get match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val root = java.nio.file.Files
-              .createTempDirectory("graft_pipeline").toString
-            val src = s"$root/src"
-            SnapshotTable.create(s, src, Tables.orders(s, dir)
-              .select(col("o_orderkey"), col("o_custkey"),
-                col("o_totalprice"), col("o_orderpriority")),
-              "o_orderpriority")
-            val pipe = Pipeline(Seq(
-              Pipeline.Source("orders_t", src),
-              Pipeline.Transform("big_orders", s"$root/big", "orders_t",
-                "o_orderpriority",
-                df => df.filter(col("o_totalprice") > 50000.0),
-                key = Some("o_orderkey")),
-              Pipeline.Agg("rev_by_prio", s"$root/rev", "big_orders",
-                "o_orderpriority", "o_totalprice")))
-            pipe.init(s)
-            // 1) append: 5 fresh rows straddling the filter threshold
-            val maxKey = Tables.orders(s, dir)
-              .agg(max(col("o_orderkey"))).head().getLong(0)
-            val tableSchema = SnapshotTable.read(s, src).schema
-            SnapshotTable.commitAppend(s, src, s.range(1, 6).select(
-              (col("id") + maxKey).as("o_orderkey"),
-              lit(1L).as("o_custkey"),
-              (col("id") * 20000.0).as("o_totalprice"),
-              lit("1-URGENT").as("o_orderpriority"))
-              .select(tableSchema.map(f =>
-                col(f.name).cast(f.dataType)).toIndexedSeq: _*),
-              "o_orderpriority")
-            // 2) update: %89 keys crash below the threshold, %97 keys
-            //    get pushed above it (89 wins on overlap)
-            val cur = SnapshotTable.read(s, src)
-            SnapshotTable.commitMerge(s, src, cur
-              .filter(col("o_orderkey") % 89 === 0 ||
-                col("o_orderkey") % 97 === 0)
-              .withColumn("o_totalprice",
-                when(col("o_orderkey") % 89 === 0, lit(1.0))
-                  .otherwise(col("o_totalprice") + 100000.0)),
-              "o_orderkey", "o_orderpriority")
-            // 3) delete: the classic key-window predicate
-            SnapshotTable.commitDelete(s, src,
-              col("o_orderkey") % 101 === 0 &&
-                col("o_orderkey").between(1000, 5000),
-              "o_orderpriority")
-            if (stream) graft.streaming.SnapshotSink.runPipeline(s, pipe, src)
-            else pipe.refresh(s)
-            set(Some(((s, dir), pipe)))
-            pipe
-        }
-      }
-    }
+  private def buildScenario(s: SparkSession, dir: String,
+                            stream: Boolean): Pipeline = {
+    val root = Staged.scratch(s, "graft_pipeline")
+    val src = s"$root/src"
+    SnapshotTable.create(s, src, Tables.orders(s, dir)
+      .select(col("o_orderkey"), col("o_custkey"),
+        col("o_totalprice"), col("o_orderpriority")),
+      "o_orderpriority")
+    val pipe = Pipeline(Seq(
+      Pipeline.Source("orders_t", src),
+      Pipeline.Transform("big_orders", s"$root/big", "orders_t",
+        "o_orderpriority",
+        df => df.filter(col("o_totalprice") > 50000.0),
+        key = Some("o_orderkey")),
+      Pipeline.Agg("rev_by_prio", s"$root/rev", "big_orders",
+        "o_orderpriority", "o_totalprice")))
+    pipe.init(s)
+    // 1) append: 5 fresh rows straddling the filter threshold
+    val maxKey = Tables.orders(s, dir)
+      .agg(max(col("o_orderkey"))).head().getLong(0)
+    val tableSchema = SnapshotTable.read(s, src).schema
+    SnapshotTable.commitAppend(s, src, s.range(1, 6).select(
+      (col("id") + maxKey).as("o_orderkey"),
+      lit(1L).as("o_custkey"),
+      (col("id") * 20000.0).as("o_totalprice"),
+      lit("1-URGENT").as("o_orderpriority"))
+      .select(tableSchema.map(f =>
+        col(f.name).cast(f.dataType)).toIndexedSeq: _*),
+      "o_orderpriority")
+    // 2) update: %89 keys crash below the threshold, %97 keys
+    //    get pushed above it (89 wins on overlap)
+    val cur = SnapshotTable.read(s, src)
+    SnapshotTable.commitMerge(s, src, cur
+      .filter(col("o_orderkey") % 89 === 0 ||
+        col("o_orderkey") % 97 === 0)
+      .withColumn("o_totalprice",
+        when(col("o_orderkey") % 89 === 0, lit(1.0))
+          .otherwise(col("o_totalprice") + 100000.0)),
+      "o_orderkey", "o_orderpriority")
+    // 3) delete: the classic key-window predicate
+    SnapshotTable.commitDelete(s, src,
+      col("o_orderkey") % 101 === 0 &&
+        col("o_orderkey").between(1000, 5000),
+      "o_orderpriority")
+    if (stream) graft.streaming.SnapshotSink.runPipeline(s, pipe, src)
+    else pipe.refresh(s)
+    pipe
+  }
 
   private def aggRollup(s: SparkSession, pipe: Pipeline): DataFrame =
     SnapshotTable.read(s, pipe.nodes.collectFirst {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 
 /** `[EXT]` Rank (quantile) statistics for snapshot tables — the second
   * sidecar family next to [[TableStats]]' NDV sketches: mergeable
@@ -882,28 +882,14 @@ object RankStats extends QueryPack {
   // like a pipeline that analyzes once per ingest window); the measured
   // path is what a 100 TB user pays per report — the metadata serve
   // plus the validation scan.
-  @volatile private var fixtures = Map.empty[(String, SparkSession, String), String]
-
-  private def memoized(name: String, s: SparkSession, dir: String)
-                      (build: String => Unit): String = synchronized {
-    fixtures.get((name, s, dir)) match {
-      case Some(t) => t
-      case None =>
-        val t = java.nio.file.Files.createTempDirectory(name)
-          .resolve("t").toString
-        build(t)
-        fixtures += ((name, s, dir) -> t)
-        t
-    }
-  }
-
   /** EXACT regime end-to-end: a ≤-m-row snapshot table's sidecar serves
     * quantiles as true order statistics, replayed by the oracle as a
     * rank window over the same rows. A wrong weight, a mis-ordered
     * point, or a broken lookup shifts a rank and breaks the hash.
     */
   private def exactFixture(s: SparkSession, dir: String): String =
-    memoized("graft_rank_ex", s, dir) { t =>
+    Staged(s, dir, "graft_rank_ex") {
+      val t = Staged.scratch(s, "graft_rank_ex") + "/t"
       // % 101 keeps the slice under m through the bench SF (sf0.1 →
       // ~1.5k rows), so the exact regime (weight-1 points, errRows 0)
       // holds at every driver scale
@@ -912,6 +898,7 @@ object RankStats extends QueryPack {
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       SnapshotTable.create(s, t, slice, "o_orderpriority")
       RankStats.analyze(s, t, Seq("o_totalprice"), m = 8192)
+      t
     }
 
   def exactQuantileQuery(s: SparkSession, dir: String): DataFrame = {
@@ -936,11 +923,13 @@ object RankStats extends QueryPack {
     */
   def boundedQuantileQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val t = memoized("graft_rank_bd", s, dir) { t =>
+    val t = Staged(s, dir, "graft_rank_bd") {
+      val t = Staged.scratch(s, "graft_rank_bd") + "/t"
       val orders = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       SnapshotTable.create(s, t, orders, "o_orderpriority")
       RankStats.analyze(s, t, Seq("o_totalprice"), m = 256)
+      t
     }
     val qs = Seq(0.5, 0.9, 0.99)
     val (vals, err, n) = quantilesServed(s, t, "o_totalprice", qs).get
@@ -1000,12 +989,14 @@ object RankStats extends QueryPack {
     */
   def rankBroadcastQuery(s: SparkSession, dir: String): DataFrame = {
     graft.plans.StatsBroadcast.install(s)
-    val t = memoized("graft_rank_bc", s, dir) { t =>
+    val t = Staged(s, dir, "graft_rank_bc") {
+      val t = Staged.scratch(s, "graft_rank_bc") + "/t"
       val orders = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       SnapshotTable.create(s, t, orders, "o_orderpriority",
         statsCols = Seq("o_orderkey"))
       RankStats.analyze(s, t, Seq("o_totalprice"), m = 256)
+      t
     }
     val dim = SnapshotTable.read(s, t)
       .filter(col("o_totalprice") < 30000.0)
@@ -1032,12 +1023,14 @@ object RankStats extends QueryPack {
     * engine-stable.
     */
   private def topkFixture(s: SparkSession, dir: String): String =
-    memoized("graft_rank_tk", s, dir) { t =>
+    Staged(s, dir, "graft_rank_tk") {
+      val t = Staged.scratch(s, "graft_rank_tk") + "/t"
       val orders = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       SnapshotTable.create(s, t, orders, "o_orderpriority",
         statsCols = Seq("o_totalprice"))
       RankStats.analyze(s, t, Seq("o_totalprice"), m = 256)
+      t
     }
 
   def rankTopKQuery(s: SparkSession, dir: String): DataFrame = {
@@ -1098,7 +1091,8 @@ object RankStats extends QueryPack {
     */
   def rankTopKDescQuery(s: SparkSession, dir: String): DataFrame = {
     graft.plans.RankTopK.install(s)
-    val t = memoized("graft_rank_tkdesc", s, dir) { t =>
+    val t = Staged(s, dir, "graft_rank_tkdesc") {
+      val t = Staged.scratch(s, "graft_rank_tkdesc") + "/t"
       val orders = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
       SnapshotTable.create(s, t, orders.filter(col("o_orderkey") % 7 =!= 0),
@@ -1111,6 +1105,7 @@ object RankStats extends QueryPack {
         "delta path (a full analyze would not exercise segments)")
       require(rf.summaries.forall(_.spans),
         "desc-topk fixture: delta segments must keep the span property")
+      t
     }
     SnapshotTable.read(s, t)
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))

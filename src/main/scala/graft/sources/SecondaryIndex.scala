@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 
 /** `[EXT]` Record-level secondary index over a snapshot table — exact
   * key → data-file postings, for point lookups on a column the layout
@@ -543,9 +543,6 @@ object SecondaryIndex extends QueryPack {
   // base state (table@v1 + index applied=1, both read-only) and the
   // finished batch scenario (append landed, index refreshed) — the
   // streaming twin clones the BASE and lets the stream do the rest
-  @volatile private var baseMemo: Option[((SparkSession, String), (String, String))] = None
-  @volatile private var memo: Option[((SparkSession, String), (String, String))] = None
-
   private def freshBatch(s: SparkSession, dir: String,
                          work: String): DataFrame = {
     val maxKey = Tables.orders(s, dir)
@@ -561,45 +558,28 @@ object SecondaryIndex extends QueryPack {
   }
 
   private def baseScenario(s: SparkSession, dir: String): (String, String) =
-    baseMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        baseMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_secidx").resolve("t").toString
-            val idx = work + "_idx"
-            SnapshotTable.withFileGranularity(s, 1L << 20) {
-              SnapshotTable.create(s, work, Tables.orders(s, dir)
-                .select(col("o_orderkey"), col("o_custkey"),
-                  col("o_totalprice"), col("o_orderpriority")),
-                "o_orderpriority")
-            }
-            create(s, work, "o_orderkey", idx, buckets = 16)
-            baseMemo = Some(((s, dir), (work, idx)))
-            (work, idx)
-        }
+    Staged(s, dir, "secIdx.base") {
+      val work = Staged.scratch(s, "graft_secidx") + "/t"
+      val idx = work + "_idx"
+      SnapshotTable.withFileGranularity(s, 1L << 20) {
+        SnapshotTable.create(s, work, Tables.orders(s, dir)
+          .select(col("o_orderkey"), col("o_custkey"),
+            col("o_totalprice"), col("o_orderpriority")),
+          "o_orderpriority")
       }
+      create(s, work, "o_orderkey", idx, buckets = 16)
+      (work, idx)
     }
 
   private def scenario(s: SparkSession, dir: String): (String, String) =
-    memo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        memo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val (workBase, idxBase) = baseScenario(s, dir)
-            val work = SnapshotTable.cloneTable(s, workBase)
-            val idx = SnapshotTable.cloneTable(s, idxBase)
-            SnapshotTable.commitAppend(s, work, freshBatch(s, dir, work),
-              "o_orderpriority")
-            refresh(s, work, "o_orderkey", idx)
-            memo = Some(((s, dir), (work, idx)))
-            (work, idx)
-        }
-      }
+    Staged(s, dir, "secIdx") {
+      val (workBase, idxBase) = baseScenario(s, dir)
+      val work = SnapshotTable.cloneTable(s, workBase)
+      val idx = SnapshotTable.cloneTable(s, idxBase)
+      SnapshotTable.commitAppend(s, work, freshBatch(s, dir, work),
+        "o_orderpriority")
+      refresh(s, work, "o_orderkey", idx)
+      (work, idx)
     }
 
   private def shape(df: DataFrame): DataFrame =
@@ -753,37 +733,27 @@ object SecondaryIndex extends QueryPack {
   // clone of the base state. The rollup proves exactly the fresh rows
   // landed: a wrongly-inserted conflict doubles a count, a wrongly-
   // updated price shifts a sum, a wrongly-dropped fresh row loses one.
-  @volatile private var uniqueMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def uniqueScenario(s: SparkSession, dir: String): (String, String) =
-    uniqueMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        uniqueMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val (workBase, idxBase) = baseScenario(s, dir)
-            val work = SnapshotTable.cloneTable(s, workBase)
-            val idx = SnapshotTable.cloneTable(s, idxBase)
-            val orders = Tables.orders(s, dir)
-            val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-            val conflicts = orders.filter(col("o_orderkey") % 97 === 0)
-              .select(col("o_orderkey"), col("o_custkey"),
-                (col("o_totalprice") + 5000.0).as("o_totalprice"),
-                col("o_orderpriority"))
-            // shift past maxKey + 1: keys are 0-based, so a plain +max
-            // would fold key 0 onto the existing maxKey row
-            val freshRows = orders.filter(col("o_orderkey") % 89 === 0)
-              .select((col("o_orderkey") + maxKey + 1L).as("o_orderkey"),
-                col("o_custkey"),
-                (col("o_totalprice") + 1000.0).as("o_totalprice"),
-                col("o_orderpriority"))
-            appendUnique(s, work, conflicts.unionByName(freshRows),
-              "o_orderkey", "o_orderpriority", idx, onConflict = "skip")
-            uniqueMemo = Some(((s, dir), (work, idx)))
-            (work, idx)
-        }
-      }
+    Staged(s, dir, "secIdx.unique") {
+      val (workBase, idxBase) = baseScenario(s, dir)
+      val work = SnapshotTable.cloneTable(s, workBase)
+      val idx = SnapshotTable.cloneTable(s, idxBase)
+      val orders = Tables.orders(s, dir)
+      val maxKey = orders.agg(max(col("o_orderkey"))).head().getLong(0)
+      val conflicts = orders.filter(col("o_orderkey") % 97 === 0)
+        .select(col("o_orderkey"), col("o_custkey"),
+          (col("o_totalprice") + 5000.0).as("o_totalprice"),
+          col("o_orderpriority"))
+      // shift past maxKey + 1: keys are 0-based, so a plain +max
+      // would fold key 0 onto the existing maxKey row
+      val freshRows = orders.filter(col("o_orderkey") % 89 === 0)
+        .select((col("o_orderkey") + maxKey + 1L).as("o_orderkey"),
+          col("o_custkey"),
+          (col("o_totalprice") + 1000.0).as("o_totalprice"),
+          col("o_orderpriority"))
+      appendUnique(s, work, conflicts.unionByName(freshRows),
+        "o_orderkey", "o_orderpriority", idx, onConflict = "skip")
+      (work, idx)
     }
 
   /** Post-append rollup of the enforced-unique table: base rows plus

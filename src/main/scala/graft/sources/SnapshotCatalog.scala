@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.QueryPack
+import graft.{QueryPack, Staged}
 
 /** `[EXT]` Multi-table CATALOG with atomic cross-table transactions —
   * the published Nessie / Iceberg-REST-catalog construction scaled to
@@ -169,8 +169,7 @@ object SnapshotCatalogPack extends QueryPack {
     */
   def catalogTxnQuery(s: SparkSession, dir: String): DataFrame = {
     import SnapshotCatalog._
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_snapshot_cat").toString
+    val work = Staged.scratch(s, "graft_snapshot_cat")
     val ordersT = SnapshotTable.cloneTable(s,
       SnapshotTable.deleteBase(s, dir))
     val rollupT = s"$work/rollup"

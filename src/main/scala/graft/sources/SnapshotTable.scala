@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 
 /** `[EXT]` manifest-committed snapshot table — atomic multi-partition
   * commits and snapshot-isolated readers for a plain-parquet table,
@@ -3103,25 +3103,11 @@ object SnapshotTable extends QueryPack {
     }
   }
 
-  @volatile private var scenarioMemo: Option[((SparkSession, String), String)] = None
-
   private def scenario(s: SparkSession, dir: String): String =
-    scenarioMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        scenarioMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val w = buildScenario(s, dir)
-            scenarioMemo = Some(((s, dir), w))
-            w
-        }
-      }
-    }
+    Staged(s, dir, "snapshot.scenario")(buildScenario(s, dir))
 
   private def buildScenario(s: SparkSession, dir: String): String = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_snapshot_run").resolve("t").toString
+    val work = Staged.scratch(s, "graft_snapshot_run") + "/t"
     val orders = Tables.orders(s, dir)
       .select(Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
         "o_orderpriority").map(col): _*)
@@ -3203,27 +3189,16 @@ object SnapshotTable extends QueryPack {
   // with per-file (ts, event_id) stats — the two columns correlate
   // (ids are assigned in arrival order), so a predicate on the
   // NON-cluster column still skips files. Read-only after create.
-  @volatile private var eventsMemo: Option[((SparkSession, String), String)] = None
-
   private def eventsScenario(s: SparkSession, dir: String): String =
-    eventsMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        eventsMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_snapshot_ev").resolve("t").toString
-            withFileGranularity(s, 1L << 20) {
-              create(s, work, Tables.events(s, dir)
-                .select(Seq("event_id", "ts", "user_id", "event_type",
-                  "value").map(col): _*),
-                "event_type", statsCols = Seq("ts", "event_id"))
-            }
-            eventsMemo = Some(((s, dir), work))
-            work
-        }
+    Staged(s, dir, "snapshot.events") {
+      val work = Staged.scratch(s, "graft_snapshot_ev") + "/t"
+      withFileGranularity(s, 1L << 20) {
+        create(s, work, Tables.events(s, dir)
+          .select(Seq("event_id", "ts", "user_id", "event_type",
+            "value").map(col): _*),
+          "event_type", statsCols = Seq("ts", "event_id"))
       }
+      work
     }
 
   /** Per-type rollup AFTER a retention pass (expire `ts <
@@ -3263,28 +3238,17 @@ object SnapshotTable extends QueryPack {
   // (ts, user_id) — two INDEPENDENT dimensions (user ids are uniform
   // across time), so 1-D ts clustering could never prune a user_id
   // predicate. Read-only after the cluster commit → memoized.
-  @volatile private var zorderMemo: Option[((SparkSession, String), String)] = None
-
   private def zorderScenario(s: SparkSession, dir: String): String =
-    zorderMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        zorderMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_snapshot_zo").resolve("t").toString
-            withFileGranularity(s, 1L << 20) {
-              create(s, work, Tables.events(s, dir)
-                .select(Seq("event_id", "ts", "user_id", "event_type",
-                  "value").map(col): _*),
-                "event_type", statsCols = Seq("ts"))
-              clusterZOrder(s, work, "event_type", "ts", "user_id")
-            }
-            zorderMemo = Some(((s, dir), work))
-            work
-        }
+    Staged(s, dir, "snapshot.zorder") {
+      val work = Staged.scratch(s, "graft_snapshot_zo") + "/t"
+      withFileGranularity(s, 1L << 20) {
+        create(s, work, Tables.events(s, dir)
+          .select(Seq("event_id", "ts", "user_id", "event_type",
+            "value").map(col): _*),
+          "event_type", statsCols = Seq("ts"))
+        clusterZOrder(s, work, "event_type", "ts", "user_id")
       }
+      work
     }
 
   /** Per-type rollup of a (time window × user band) read on the
@@ -3309,25 +3273,14 @@ object SnapshotTable extends QueryPack {
   // bloom scenario: orders keyed by bloom on o_orderkey, NO min/max
   // stats — equality skipping must come from the filters alone.
   // Read-only after create → memoized.
-  @volatile private var bloomMemo: Option[((SparkSession, String), String)] = None
-
   private def bloomScenario(s: SparkSession, dir: String): String =
-    bloomMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        bloomMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_snapshot_bl").resolve("t").toString
-            create(s, work, Tables.orders(s, dir)
-              .select(col("o_orderkey"), col("o_custkey"),
-                col("o_totalprice"), col("o_orderpriority")),
-              "o_orderpriority", bloomCols = Seq("o_orderkey"))
-            bloomMemo = Some(((s, dir), work))
-            work
-        }
-      }
+    Staged(s, dir, "snapshot.bloom") {
+      val work = Staged.scratch(s, "graft_snapshot_bl") + "/t"
+      create(s, work, Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"), col("o_orderpriority")),
+        "o_orderpriority", bloomCols = Seq("o_orderkey"))
+      work
     }
 
   /** Point-lookup rollup through per-file BLOOM skipping: the probed
@@ -3347,31 +3300,20 @@ object SnapshotTable extends QueryPack {
 
   // partition-evolution scenario: generation 1 partitioned by priority,
   // generation 2 by customer — read-only after the append, memoized
-  @volatile private var partEvoMemo: Option[((SparkSession, String), String)] = None
-
   private def partEvoScenario(s: SparkSession, dir: String): String =
-    partEvoMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        partEvoMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_snapshot_pe").resolve("t").toString
-            create(s, work, Tables.orders(s, dir)
-              .select(col("o_orderkey"), col("o_custkey"),
-                col("o_totalprice"), col("o_orderpriority")),
-              "o_orderpriority")
-            commitAppend(s, work, Tables.orders(s, dir)
-              .filter(col("o_custkey") <= 5)
-              .select((col("o_orderkey") + 7000000L).as("o_orderkey"),
-                col("o_custkey"), col("o_totalprice"),
-                col("o_orderpriority")),
-              "o_custkey")
-            partEvoMemo = Some(((s, dir), work))
-            work
-        }
-      }
+    Staged(s, dir, "snapshot.partEvo") {
+      val work = Staged.scratch(s, "graft_snapshot_pe") + "/t"
+      create(s, work, Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"), col("o_orderpriority")),
+        "o_orderpriority")
+      commitAppend(s, work, Tables.orders(s, dir)
+        .filter(col("o_custkey") <= 5)
+        .select((col("o_orderkey") + 7000000L).as("o_orderkey"),
+          col("o_custkey"), col("o_totalprice"),
+          col("o_orderpriority")),
+        "o_custkey")
+      work
     }
 
   /** Rollup of a priority-pruned read over a PARTITION-EVOLVED table
@@ -3394,27 +3336,16 @@ object SnapshotTable extends QueryPack {
   // queries read) — built once per (session, corpus) and CLONED per
   // invocation, so repeated runs measure the delete (candidate scan +
   // pruned rewrite), not a repeated table build
-  @volatile private var deleteBaseMemo: Option[((SparkSession, String), String)] = None
-
   private[sources] def deleteBase(s: SparkSession, dir: String): String =
-    deleteBaseMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        deleteBaseMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_snapshot_delbase").resolve("t").toString
-            withFileGranularity(s, 1L << 20) {
-              create(s, work, Tables.orders(s, dir)
-                .select(Seq("o_orderkey", "o_custkey", "o_totalprice",
-                  "o_orderdate", "o_orderpriority").map(col): _*),
-                "o_orderpriority", statsCols = Seq("o_orderkey"))
-            }
-            deleteBaseMemo = Some(((s, dir), work))
-            work
-        }
+    Staged(s, dir, "snapshot.deleteBase") {
+      val work = Staged.scratch(s, "graft_snapshot_delbase") + "/t"
+      withFileGranularity(s, 1L << 20) {
+        create(s, work, Tables.orders(s, dir)
+          .select(Seq("o_orderkey", "o_custkey", "o_totalprice",
+            "o_orderdate", "o_orderpriority").map(col): _*),
+          "o_orderpriority", statsCols = Seq("o_orderkey"))
       }
+      work
     }
 
   /** Clone a committed table to a fresh location — immutable files
@@ -3427,8 +3358,7 @@ object SnapshotTable extends QueryPack {
     * side unlinks only its own directory entry.
     */
   private[graft] def cloneTable(s: SparkSession, src: String): String = {
-    val dst = java.nio.file.Files
-      .createTempDirectory("graft_snapshot_del").resolve("t").toString
+    val dst = Staged.scratch(s, "graft_snapshot_del") + "/t"
     val f = fs(s, src)
     if (f.getScheme == "file") {
       val base = java.nio.file.Paths.get(src)
@@ -3653,8 +3583,7 @@ object SnapshotTable extends QueryPack {
     * loses nothing.
     */
   def evolveQuery(s: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_snapshot_evo").resolve("t").toString
+    val work = Staged.scratch(s, "graft_snapshot_evo") + "/t"
     val base = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey").cast("int").as("o_custkey"),
         col("o_totalprice"), col("o_orderpriority"))
@@ -3716,21 +3645,8 @@ object SnapshotTable extends QueryPack {
   // READ-ONLY afterwards — readChangesBetween never advances versions —
   // so it memoizes like the merge/events scenarios and repeated bench
   // runs measure the change-feed read, not a repeated table build
-  @volatile private var changesMemo: Option[((SparkSession, String), String)] = None
-
   private[sources] def changesScenario(s: SparkSession, dir: String): String =
-    changesMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        changesMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val w = buildChangesScenario(s, dir)
-            changesMemo = Some(((s, dir), w))
-            w
-        }
-      }
-    }
+    Staged(s, dir, "snapshot.changes")(buildChangesScenario(s, dir))
 
   /** Change-data-feed rollup: on a clone of the base table, append
     * (v2), merge (v3), equality-delete (v4), and aggregate
@@ -3791,29 +3707,19 @@ object SnapshotTable extends QueryPack {
   // SMJ reads co-partitioned buckets straight off the manifests).
   // Read-only after create → memoized; repeated bench runs measure the
   // shuffle-free join, not the table build.
-  @volatile private var bucketedMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def bucketedScenario(s: SparkSession, dir: String): (String, String) =
-    bucketedMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        bucketedMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val base = java.nio.file.Files.createTempDirectory("graft_snapshot_bk")
-            val t1 = base.resolve("orders").toString
-            val t2 = base.resolve("customer").toString
-            create(s, t1, Tables.orders(s, dir)
-              .select(col("o_orderkey"), col("o_custkey"),
-                col("o_totalprice"), col("o_orderpriority")),
-              "o_orderpriority", bucketBy = Some(("o_custkey", 16)))
-            create(s, t2, Tables.customer(s, dir)
-              .select(col("c_custkey"), col("c_mktsegment")),
-              "c_mktsegment", bucketBy = Some(("c_custkey", 16)))
-            bucketedMemo = Some(((s, dir), (t1, t2)))
-            (t1, t2)
-        }
-      }
+    Staged(s, dir, "snapshot.bucketed") {
+      val base = Staged.scratch(s, "graft_snapshot_bk")
+      val t1 = s"$base/orders"
+      val t2 = s"$base/customer"
+      create(s, t1, Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"), col("o_orderpriority")),
+        "o_orderpriority", bucketBy = Some(("o_custkey", 16)))
+      create(s, t2, Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_mktsegment")),
+        "c_mktsegment", bucketBy = Some(("c_custkey", 16)))
+      (t1, t2)
     }
 
   /** Per-segment revenue rollup of the BUCKETED orders⋈customer join —
@@ -3839,32 +3745,22 @@ object SnapshotTable extends QueryPack {
   // file per bucket — the shape where Spark grants the scan an
   // outputOrdering and the fact⋈fact SMJ plans with zero exchanges AND
   // zero sorts. Read-only after create → memoized.
-  @volatile private var sortedBucketMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def sortedBucketScenario(s: SparkSession, dir: String): (String, String) =
-    sortedBucketMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        sortedBucketMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val base = java.nio.file.Files.createTempDirectory("graft_snapshot_sb")
-            val t1 = base.resolve("orders").toString
-            val t2 = base.resolve("lineitem").toString
-            create(s, t1, Tables.orders(s, dir)
-              .select(col("o_orderkey"), col("o_orderpriority"))
-              .withColumn("grp", lit("all")),
-              "grp", bucketBy = Some(("o_orderkey", 16)),
-              sortBy = Some("o_orderkey"))
-            create(s, t2, Tables.lineitem(s, dir)
-              .select(col("l_orderkey"), col("l_extendedprice"))
-              .withColumn("grp", lit("all")),
-              "grp", bucketBy = Some(("l_orderkey", 16)),
-              sortBy = Some("l_orderkey"))
-            sortedBucketMemo = Some(((s, dir), (t1, t2)))
-            (t1, t2)
-        }
-      }
+    Staged(s, dir, "snapshot.sortedBucket") {
+      val base = Staged.scratch(s, "graft_snapshot_sb")
+      val t1 = s"$base/orders"
+      val t2 = s"$base/lineitem"
+      create(s, t1, Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_orderpriority"))
+        .withColumn("grp", lit("all")),
+        "grp", bucketBy = Some(("o_orderkey", 16)),
+        sortBy = Some("o_orderkey"))
+      create(s, t2, Tables.lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_extendedprice"))
+        .withColumn("grp", lit("all")),
+        "grp", bucketBy = Some(("l_orderkey", 16)),
+        sortBy = Some("l_orderkey"))
+      (t1, t2)
     }
 
   /** Priority rollup of the SORTED-bucketed orders⋈lineitem join — the
@@ -4038,36 +3934,25 @@ object SnapshotTable extends QueryPack {
 
   // exact-sum scenario: plain orders snapshot, ANALYZEd with integral
   // column sums — read-only after the analyze, memoized
-  @volatile private var sumMemo: Option[((SparkSession, String), String)] = None
-
   private def sumScenario(s: SparkSession, dir: String): String =
-    sumMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        sumMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_snapshot_sum").resolve("t").toString
-            // o_price_dec is the DECIMAL sum lane (money columns are
-            // where SUM pushdown pays); its per-file stats feed the
-            // same-sign proof the decimal fold demands in every mode
-            create(s, work, Tables.orders(s, dir)
-              .select(col("o_orderkey"), col("o_custkey"),
-                col("o_totalprice"),
-                col("o_totalprice").cast("decimal(12,2)").as("o_price_dec"),
-                col("o_orderpriority")),
-              "o_orderpriority",
-              // custkey stats feed the same-sign proof the grouped
-              // long-sum fold demands under ANSI (Spark 4's default)
-              statsCols = Seq("o_orderkey", "o_price_dec", "o_custkey"))
-            TableStats.analyze(s, work, Seq.empty,
-              sumCols = Seq("o_orderkey", "o_custkey", "o_price_dec"),
-              groupSumCols = Seq("o_price_dec", "o_custkey"))
-            sumMemo = Some(((s, dir), work))
-            work
-        }
-      }
+    Staged(s, dir, "snapshot.sum") {
+      val work = Staged.scratch(s, "graft_snapshot_sum") + "/t"
+      // o_price_dec is the DECIMAL sum lane (money columns are
+      // where SUM pushdown pays); its per-file stats feed the
+      // same-sign proof the decimal fold demands in every mode
+      create(s, work, Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"),
+          col("o_totalprice").cast("decimal(12,2)").as("o_price_dec"),
+          col("o_orderpriority")),
+        "o_orderpriority",
+        // custkey stats feed the same-sign proof the grouped
+        // long-sum fold demands under ANSI (Spark 4's default)
+        statsCols = Seq("o_orderkey", "o_price_dec", "o_custkey"))
+      TableStats.analyze(s, work, Seq.empty,
+        sumCols = Seq("o_orderkey", "o_custkey", "o_price_dec"),
+        groupSumCols = Seq("o_price_dec", "o_custkey"))
+      work
     }
 
   /** Whole-table SUMs answered from the ANALYZE sidecar's exact
@@ -4210,35 +4095,24 @@ object SnapshotTable extends QueryPack {
   // reference column (integral, so the commit's stats pass is pure
   // parquet-footer metadata — null counts included) over the standard
   // priority partitioning
-  @volatile private var nullScenarioMemo: Option[((SparkSession, String), String)] = None
-
   private def nullScenario(s: SparkSession, dir: String): String =
-    nullScenarioMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        nullScenarioMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val work = java.nio.file.Files
-              .createTempDirectory("graft_snapshot_nulls").resolve("t").toString
-            val orders = Tables.orders(s, dir).select(
-              col("o_orderkey"),
-              when(col("o_orderkey") % 3 === 0, col("o_custkey"))
-                .as("o_ship_ref"),
-              (col("o_custkey") % 701).as("o_ref_bucket"),
-              col("o_orderpriority"))
-            withFileGranularity(s, 1L << 20) {
-              create(s, work, orders, "o_orderpriority",
-                statsCols = Seq("o_orderkey", "o_ship_ref"))
-            }
-            // ANALYZE once at build: ≤701 distinct buckets at k=1024
-            // keeps the sketch in its exact regime (TableStatsSpec
-            // covers saturation + staleness)
-            TableStats.analyze(s, work, Seq("o_ref_bucket"), k = 1024)
-            nullScenarioMemo = Some(((s, dir), work))
-            work
-        }
+    Staged(s, dir, "snapshot.nullScenario") {
+      val work = Staged.scratch(s, "graft_snapshot_nulls") + "/t"
+      val orders = Tables.orders(s, dir).select(
+        col("o_orderkey"),
+        when(col("o_orderkey") % 3 === 0, col("o_custkey"))
+          .as("o_ship_ref"),
+        (col("o_custkey") % 701).as("o_ref_bucket"),
+        col("o_orderpriority"))
+      withFileGranularity(s, 1L << 20) {
+        create(s, work, orders, "o_orderpriority",
+          statsCols = Seq("o_orderkey", "o_ship_ref"))
       }
+      // ANALYZE once at build: ≤701 distinct buckets at k=1024
+      // keeps the sketch in its exact regime (TableStatsSpec
+      // covers saturation + staleness)
+      TableStats.analyze(s, work, Seq("o_ref_bucket"), k = 1024)
+      work
     }
 
   /** Driver query: per-partition `count(*)` AND `count(col)` over a
@@ -4332,31 +4206,19 @@ object SnapshotTable extends QueryPack {
   // two event-type user corpora as snapshot tables + their ANALYZE
   // sidecars — read-only after build, memoized; the overlap query then
   // costs two sidecar reads and a driver-side hash-set fold
-  @volatile private var overlapMemo: Option[((SparkSession, String), (String, String))] = None
-
   private def overlapScenario(s: SparkSession, dir: String): (String, String) =
-    overlapMemo match {
-      case Some((k, w)) if k == ((s, dir)) => w
-      case _ => synchronized {
-        overlapMemo match {
-          case Some((k, w)) if k == ((s, dir)) => w
-          case _ =>
-            val root = java.nio.file.Files
-              .createTempDirectory("graft_ndv_overlap").toString
-            val ev = Tables.load(s, dir, "events")
-              .select(col("user_id"), col("event_type"))
-            def side(name: String, etype: String): String = {
-              val t = s"$root/$name"
-              create(s, t, ev.filter(col("event_type") === etype),
-                "event_type")
-              TableStats.analyze(s, t, Seq("user_id"), k = 8192)
-              t
-            }
-            val w = (side("viewers", "view"), side("purchasers", "purchase"))
-            overlapMemo = Some(((s, dir), w))
-            w
-        }
+    Staged(s, dir, "snapshot.overlap") {
+      val root = Staged.scratch(s, "graft_ndv_overlap")
+      val ev = Tables.load(s, dir, "events")
+        .select(col("user_id"), col("event_type"))
+      def side(name: String, etype: String): String = {
+        val t = s"$root/$name"
+        create(s, t, ev.filter(col("event_type") === etype),
+          "event_type")
+        TableStats.analyze(s, t, Seq("user_id"), k = 8192)
+        t
       }
+      (side("viewers", "view"), side("purchasers", "purchase"))
     }
 
   /** Cross-table audience overlap from the ANALYZE sidecars — distinct

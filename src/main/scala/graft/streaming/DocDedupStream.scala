@@ -106,7 +106,7 @@ object DocDedupStream {
       val q = claims.writeStream
         .outputMode(OutputMode.Append())
         .format("memory").queryName(name)
-        .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+        .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()

@@ -57,7 +57,7 @@ object EventStreams {
     val q = agg.writeStream
       .outputMode(OutputMode.Complete())
       .format("memory").queryName(name)
-      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -108,7 +108,7 @@ object EventStreams {
     val q = agg.writeStream
       .outputMode(OutputMode.Append())
       .format("memory").queryName(name)
-      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -136,7 +136,7 @@ object EventStreams {
     val q = source.writeStream
       .outputMode(OutputMode.Complete())
       .format("memory").queryName(name)
-      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -165,7 +165,7 @@ object EventStreams {
     val q = source.writeStream
       .outputMode(OutputMode.Append())
       .format("memory").queryName(name)
-      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -199,7 +199,7 @@ object EventStreams {
     val q = enriched.writeStream
       .outputMode(OutputMode.Complete())
       .format("memory").queryName(name)
-      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -237,7 +237,7 @@ object EventStreams {
     val q = joined.writeStream
       .outputMode(OutputMode.Append())
       .format("memory").queryName(name)
-      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -272,7 +272,7 @@ object EventStreams {
           .parquet(s"$outDir/batch_id=$batchId")
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -321,7 +321,7 @@ object EventStreams {
     val q = sessions.writeStream
       .outputMode(OutputMode.Update())
       .format("memory").queryName(name)
-      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+      .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

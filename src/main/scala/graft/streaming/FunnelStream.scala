@@ -96,7 +96,7 @@ object FunnelStream {
       val q = detect(source).writeStream
         .outputMode(OutputMode.Update())
         .format("memory").queryName(name)
-        .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir())
+        .option("checkpointLocation", StreamHousekeeping.freshCheckpointDir(spark))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 import graft.operators.{IncrementalDedup, MinHashDedup}
 
 /** `[EXT]` STREAMING cross-run near-duplicate detection — the
@@ -105,18 +105,16 @@ object IncrDedupStream extends QueryPack {
         // no read of each other) and all must land before the checkpoint
         // commit — overlap them (guide §2.6) so the tick pays one write
         // tail, not three in sequence.
-        import scala.concurrent.{Await, Future}
+        import scala.concurrent.Future
         import scala.concurrent.ExecutionContext.Implicits.global
-        val writes = Seq(
+        awaitAll(Seq(
           Future(pairs.write.mode(SaveMode.Overwrite)
             .parquet(s"$resultsP/batch_id=$id")),
           Future(batch.write.mode(SaveMode.Overwrite)
             .parquet(s"$docsP/batch_id=$id")),
           Future(IncrementalDedup.absorbBatch(batch, s"$bandsP/batch_id=$id",
-            mode = SaveMode.Overwrite)))
-        writes.foreach(Await.result(_,
-          scala.concurrent.duration.Duration(1, "hour")))
-        ()
+            mode = SaveMode.Overwrite))),
+          scala.concurrent.duration.Duration(1, "hour"))
       }
       .option("checkpointLocation", s"$statePath/checkpoint")
       .trigger(Trigger.AvailableNow())
@@ -134,6 +132,18 @@ object IncrDedupStream extends QueryPack {
           spark.sparkContext.emptyRDD[Row],
           StructType.fromDDL("a_id BIGINT, b_id BIGINT, jac DOUBLE"))
     }
+  }
+
+  /** Wait until EVERY future has settled, then rethrow the first failure
+    * (in `writes` order). Rethrowing as soon as one fails would hand
+    * control back — and let the engine retry the batch — while its
+    * sibling writes still run into the same batch-scoped dirs, so the
+    * retry's Overwrite could interleave with stale in-flight files.
+    */
+  private[streaming] def awaitAll(writes: Seq[scala.concurrent.Future[Any]],
+                                  atMost: scala.concurrent.duration.Duration): Unit = {
+    writes.foreach(scala.concurrent.Await.ready(_, atMost))
+    writes.foreach(_.value.get.get)
   }
 
   /** Highest batch id the checkpoint has COMMITTED — the safe compaction
@@ -194,7 +204,7 @@ object IncrDedupStream extends QueryPack {
       val dst = new Path(tmp)
       val fs = dst.getFileSystem(hconf)
       fs.mkdirs(dst)
-      val scratch = StreamHousekeeping.scratchDir("graft_incr_stage")
+      val scratch = Staged.scratch(s, "graft_incr_stage")
       val t = new Path(scratch, "stage")
       docs.filter(IncrementalDedup.isBatch).coalesce(1).write.parquet(t.toString)
       val part = fs.listStatus(t).map(_.getPath)

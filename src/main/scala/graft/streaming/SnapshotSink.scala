@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.{QueryPack, Tables}
+import graft.{QueryPack, Staged, Tables}
 import graft.sources.{SnapshotCatalog, SnapshotTable}
 
 /** `[EXT]` streaming sink committing each micro-batch as one atomic
@@ -75,7 +75,7 @@ object SnapshotSink extends QueryPack {
         ()
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -115,7 +115,7 @@ object SnapshotSink extends QueryPack {
         ()
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -153,7 +153,7 @@ object SnapshotSink extends QueryPack {
           ()
         }
         .option("checkpointLocation",
-          checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+          checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -181,7 +181,7 @@ object SnapshotSink extends QueryPack {
         ()
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -210,7 +210,7 @@ object SnapshotSink extends QueryPack {
         ()
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -222,7 +222,7 @@ object SnapshotSink extends QueryPack {
     * holds if every row landed exactly once.
     */
   def streamEtlQuery(s: SparkSession, dir: String): DataFrame = {
-    val table = StreamHousekeeping.scratchDir("graft_snapsink") + "/t"
+    val table = Staged.scratch(s, "graft_snapsink") + "/t"
     run(s, dir, table)
     SnapshotTable.read(s, table)
       .groupBy(col("event_type"))
@@ -277,7 +277,7 @@ object SnapshotSink extends QueryPack {
         ()
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -291,7 +291,7 @@ object SnapshotSink extends QueryPack {
     * boundaries, partition moves, and the bootstrap create.
     */
   def streamUpsertQuery(s: SparkSession, dir: String): DataFrame = {
-    val table = StreamHousekeeping.scratchDir("graft_snapup") + "/t"
+    val table = Staged.scratch(s, "graft_snapup") + "/t"
     runUpsert(s, dir, table)
     SnapshotTable.read(s, table)
       .select(col("user_id").cast("long").as("user_id"),
@@ -392,7 +392,7 @@ object SnapshotSink extends QueryPack {
         ()
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -405,7 +405,7 @@ object SnapshotSink extends QueryPack {
     */
   def streamCatalogTxnQuery(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val root = StreamHousekeeping.scratchDir("graft_ctxroot")
+    val root = Staged.scratch(s, "graft_ctxroot")
     val fact = root + "/fact"
     val agg = root + "/agg"
     SnapshotTable.createEmpty(s, fact)
@@ -477,7 +477,7 @@ object SnapshotSink extends QueryPack {
         ()
       }
       .option("checkpointLocation",
-        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir()))
+        checkpoint.getOrElse(StreamHousekeeping.freshCheckpointDir(spark)))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -486,28 +486,18 @@ object SnapshotSink extends QueryPack {
   // staged at-least-once corpus: the full events table plus an exact
   // re-delivery of the event_id % 13 slice, as separate files so the
   // duplicates mostly arrive in LATER micro-batches than the originals
-  @volatile private var dupStageMemo: Option[(String, String)] = None
-
   private def stagedDupDir(s: SparkSession, dir: String): String =
-    dupStageMemo match {
-      case Some((k, w)) if k == dir => w
-      case _ => synchronized {
-        dupStageMemo match {
-          case Some((k, w)) if k == dir => w
-          case _ =>
-            val out = StreamHousekeeping.scratchDir("graft_dupsrc")
-            s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            // the even-id half of the corpus (the dedup semantics need
-            // volume, not the whole table; the oracle filters the same)
-            val ev = Tables.load(s, dir, "events")
-              .filter(col("event_id") % 2 === 0)
-            ev.repartition(1).write.mode("append").parquet(out)
-            ev.filter(col("event_id") % 13 === 0)
-              .repartition(1).write.mode("append").parquet(out)
-            dupStageMemo = Some((dir, out))
-            out
-        }
-      }
+    Staged(s, dir, "snapSink.dupSrc") {
+      val out = Staged.scratch(s, "graft_dupsrc")
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the even-id half of the corpus (the dedup semantics need
+      // volume, not the whole table; the oracle filters the same)
+      val ev = Tables.load(s, dir, "events")
+        .filter(col("event_id") % 2 === 0)
+      ev.repartition(1).write.mode("append").parquet(out)
+      ev.filter(col("event_id") % 13 === 0)
+        .repartition(1).write.mode("append").parquet(out)
+      out
     }
 
   /** Driver query: ingest the duplicated corpus through the
@@ -516,7 +506,7 @@ object SnapshotSink extends QueryPack {
     * was dropped and every original landed exactly once.
     */
   def streamUniqueAppendQuery(s: SparkSession, dir: String): DataFrame = {
-    val root = StreamHousekeeping.scratchDir("graft_uniqsink")
+    val root = Staged.scratch(s, "graft_uniqsink")
     val table = root + "/t"
     val index = root + "/t_idx"
     runUniqueAppend(s, stagedDupDir(s, dir),

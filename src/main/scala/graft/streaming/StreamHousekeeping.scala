@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
 
@@ -8,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * in-catalog litter a long-lived session would otherwise accumulate:
   *
   *  - per-run CHECKPOINT dirs (unavoidably fresh: reusing one would make a
-  *    re-run a no-op replay) all live under one process-scoped root that a
-  *    shutdown hook removes;
+  *    re-run a no-op replay) are [[graft.Staged.scratch]] dirs, deleted
+  *    when the session's SparkContext stops;
   *  - STAGING dirs are fixed per key (md5 of the source path), so repeated
   *    runs reuse one dir per corpus — and a checkpointed query restarted
   *    against the "same" source sees the same basePath across processes;
@@ -19,51 +18,20 @@ import org.apache.spark.sql.SparkSession
   */
 private[streaming] object StreamHousekeeping {
 
-  /** Unique driver-scratch dir minted through the Hadoop FileSystem
-    * API — the whole repo's filesystem discipline, now including
-    * scratch (`java.nio` retired end to end). Uniqueness is a UUID
-    * (no create-exclusive dance needed: nothing else knows the name).
-    *
-    * Pinned to the LOCAL filesystem explicitly: `base` is a
-    * scheme-less local path (java.io.tmpdir, /dev/shm), and resolving
-    * it through `Path.getFileSystem` would bind it to `fs.defaultFS` —
-    * on an HDFS-defaulted deployment the driver's scratch and
-    * checkpoint dirs would silently be created REMOTELY (including a
-    * fabricated /dev/shm path) where the retired java.nio code
-    * guaranteed local disk. `FileSystem.getLocal` keeps the guarantee.
-    */
-  def scratchDir(prefix: String, base: String =
-      System.getProperty("java.io.tmpdir")): String = {
-    val p = new HPath(base,
-      s"$prefix-${java.util.UUID.randomUUID().toString.take(16)}")
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(new Configuration())
-    require(fs.mkdirs(p), s"scratch: could not create $p")
-    p.toUri.getPath
+  // checkpoints are scratch state: prefer the ram-backed tmpfs when the
+  // host has one — a micro-batch commits its offset/state files
+  // synchronously, so checkpoint fsync latency is pure overhead at local
+  // scale (a production deployment points this at durable storage by
+  // passing an explicit checkpointLocation instead)
+  private lazy val ckBase: String = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) shm.getPath
+    else System.getProperty("java.io.tmpdir")
   }
 
-  private lazy val ckRoot: String = {
-    // checkpoints are scratch state scoped to this process (the
-    // shutdown hook removes them): prefer the ram-backed tmpfs when the
-    // host has one — a micro-batch commits its offset/state files
-    // synchronously, so checkpoint fsync latency is pure overhead at
-    // local scale (a production deployment points this at durable
-    // storage by passing an explicit checkpointLocation instead)
-    val root =
-      try scratchDir("graft_stream_ck", "/dev/shm")
-      catch { case _: Exception => scratchDir("graft_stream_ck") }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val p = new HPath(root)
-      // same local-FS pin as scratchDir: the root was created locally,
-      // so it must be deleted locally — defaultFS resolution could
-      // "clean up" an unrelated remote path of the same name
-      try org.apache.hadoop.fs.FileSystem.getLocal(new Configuration())
-        .delete(p, true)
-      catch { case _: java.io.IOException => () }
-    }))
-    root
-  }
-
-  def freshCheckpointDir(): String = scratchDir("run", ckRoot)
+  /** A fresh checkpoint dir, deleted when `spark`'s context stops. */
+  def freshCheckpointDir(spark: SparkSession): String =
+    graft.Staged.scratch(spark, "graft_stream_ck", ckBase)
 
   /** Run `body` (a whole stream run: start → awaitTermination) with the
     * session's shuffle-partition count — which for a stateful stream is

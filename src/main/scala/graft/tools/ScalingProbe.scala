@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * ratios are ≈1, so "this query parallelises" was unfalsifiable from
   * driver data). The probe DERIVES a larger volume from the corpus
   * (lineitem/orders multiplied `mult`× with disjoint key ranges —
-  * deterministic integer arithmetic, staged once per invocation in a
-  * temp dir), times a fixed set of COMPUTE-SHAPED declared queries on
+  * deterministic integer arithmetic, staged once per (corpus, mult) in
+  * a content-addressed tmp dir that later runs reuse), times a fixed set of COMPUTE-SHAPED declared queries on
   * it at two core counts in one JVM (two sequential SparkContexts), and
   * prints one JSON line per query plus a summary. A compute-bound query
   * shows ratio(t_low / t_high) well above 1 at 4× the cores; a
@@ -123,11 +123,16 @@ object ScalingProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(16)
     val outFile = args.drop(2).headOption.getOrElse("plans/r14/SCALING.json")
-    val scaled = java.nio.file.Files
-      .createTempDirectory("graft_scaleprobe").toString
-
     val s0 = session(32)
-    stage(s0, sfDir, mult, scaled)
+    // the volume outlives s0 (both timed configs read it), so it is
+    // staged the way Ingest stages its corpora, not as session scratch
+    val scaled = graft.sources.Ingest.ensureStaged(
+      graft.sources.Ingest.stagedPath(s0, s"graft_scaleprobe_${mult}x_",
+        Seq("orders", "lineitem", "region", "nation", "customer",
+          "supplier", "part").map(t => s"$sfDir/$t.parquet"))) { tmp =>
+      stage(s0, sfDir, mult, tmp)
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_SUCCESS"))
+    }
     s0.stop()
     Thread.sleep(500)
 

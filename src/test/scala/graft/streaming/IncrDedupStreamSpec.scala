@@ -122,4 +122,29 @@ class IncrDedupStreamSpec extends SparkSpec {
     assert(after === clean.toSet ++ expectedNew,
       "a post-compaction batch sees exactly the same history")
   }
+
+  test("overlapped state writes: one failing write does not return " +
+    "control before its sibling settles; the failure is then rethrown") {
+    import java.util.concurrent.{CountDownLatch, Executors}
+    import java.util.concurrent.atomic.AtomicBoolean
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pool = Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val release = new CountDownLatch(1)
+      val slowDone = new AtomicBoolean(false)
+      val failed = Future[Unit](throw new IllegalStateException("write failed"))
+      val slow = Future { release.await(); slowDone.set(true) }
+      val waiter = Future(IncrDedupStream.awaitAll(Seq(failed, slow), 1.minute))
+      Await.ready(failed, 10.seconds)
+      Thread.sleep(300)
+      assert(!waiter.isCompleted,
+        "the wait must not return while a sibling write is still running")
+      release.countDown()
+      val e = intercept[IllegalStateException](Await.result(waiter, 1.minute))
+      assert(e.getMessage == "write failed")
+      assert(slowDone.get, "the slow write settled before the rethrow")
+    } finally pool.shutdownNow()
+  }
 }

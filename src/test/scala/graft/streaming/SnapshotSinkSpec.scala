@@ -28,7 +28,7 @@ class SnapshotSinkSpec extends SparkSpec {
 
   test("restarting from the same checkpoint re-commits nothing") {
     val table = freshPath("snapsink_r")
-    val ckpt = StreamHousekeeping.freshCheckpointDir()
+    val ckpt = StreamHousekeeping.freshCheckpointDir(spark)
     SnapshotSink.run(spark, sfDir, table, Some(ckpt))
     val v = SnapshotTable.currentVersion(spark, table)
     val n = SnapshotTable.read(spark, table).count()
@@ -53,7 +53,7 @@ class SnapshotSinkSpec extends SparkSpec {
     val plain = seeded()
     SnapshotSink.run(spark, sfDir, plain)
     val table = seeded()
-    val ckpt = StreamHousekeeping.freshCheckpointDir()
+    val ckpt = StreamHousekeeping.freshCheckpointDir(spark)
     // the janitor fires after every batch with a 2-file trigger, so the
     // litter folds DURING the stream, co-scheduled with the writer
     SnapshotSink.run(spark, sfDir, table, Some(ckpt),
@@ -78,7 +78,7 @@ class SnapshotSinkSpec extends SparkSpec {
   test("CDC-apply sink converges to the per-key argmax, survives " +
     "replay, and is idempotent by VALUE beyond the tag ledger") {
     val table = freshPath("snapup")
-    val ckpt = StreamHousekeeping.freshCheckpointDir()
+    val ckpt = StreamHousekeeping.freshCheckpointDir(spark)
     SnapshotSink.runUpsert(spark, sfDir, table, Some(ckpt))
     def state() = SnapshotTable.read(spark, table)
       .select(col("user_id"), col("event_id"), col("event_type"))
