@@ -49,13 +49,15 @@ object Tables {
     * round-robin repartition costs one shuffle of the (small) rows and
     * only fires when the input is narrower than the cluster; a
     * warehouse-scale scan is already wider, so this is a no-op there
-    * (no new exchange). The explicit count is exempt from AQE
+    * (no new exchange), and so is a frame whose width cannot be read
+    * from file metadata (any leaf that is not a file scan: a local
+    * relation, a cached frame, a range). The explicit count is exempt from AQE
     * coalescing by design: these stages are CPU-bound and byte-tiny,
     * exactly the shape byte-based coalescing mis-sizes.
     */
   def widen(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (estimatedScanWidth(df).forall(_ < p)) df.repartition(p) else df
+    if (estimatedScanWidth(df).exists(_ < p)) df.repartition(p) else df
   }
 
   /** Estimated scan-task width of a SCAN-ROOTED frame from file

@@ -74,40 +74,25 @@ case class TopKByExpr(idExpr: Expression, scoreExpr: Expression, kExpr: Expressi
   }
 
   override def merge(a: TopKByExpr.Buffer, b: TopKByExpr.Buffer): TopKByExpr.Buffer = {
-    var i = 0
-    while (i < b.size) { a.push(b.ids(i), b.scores(i)); i += 1 }
+    a.pushAll(b)
     a
   }
 
-  override def eval(buf: TopKByExpr.Buffer): Any = {
-    val pairs = (0 until buf.size)
-      .map(i => (buf.ids(i), buf.scores(i)))
-      .sortBy { case (id, s) => (-s, id) }
-    new GenericArrayData(pairs.map { case (id, s) =>
+  override def eval(buf: TopKByExpr.Buffer): Any =
+    new GenericArrayData(buf.ranked.map { case (id, s) =>
       InternalRow(id, s)
     }.toArray[Any])
-  }
 
   override def serialize(buf: TopKByExpr.Buffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream(8 + buf.size * 16)
     val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    var i = 0
-    while (i < buf.size) {
-      out.writeLong(buf.ids(i)); out.writeDouble(buf.scores(i)); i += 1
-    }
+    buf.writeTo(out)
     out.flush()
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): TopKByExpr.Buffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new TopKByExpr.Buffer(k)
-    var i = 0
-    while (i < n) { buf.push(in.readLong(), in.readDouble()); i += 1 }
-    buf
-  }
+  override def deserialize(bytes: Array[Byte]): TopKByExpr.Buffer =
+    TopKByExpr.Buffer.readFrom(new DataInputStream(new ByteArrayInputStream(bytes)), k)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKByExpr =
     copy(mutableAggBufferOffset = newOffset)
@@ -172,6 +157,38 @@ object TopKByExpr {
         ids(0) = id; scores(0) = score
         siftDown(0)
       }
+
+    def pushAll(other: Buffer): Unit = {
+      var i = 0
+      while (i < other.size) { push(other.ids(i), other.scores(i)); i += 1 }
+    }
+
+    /** True when no value within `slack` of `score` could enter: the
+      * heap is full and `score` lies more than `slack` below its minimum.
+      * A NaN score is never excluded. */
+    def excludes(score: Double, slack: Double): Boolean =
+      size == k && (k == 0 || score < scores(0) - slack)
+
+    /** The kept pairs in output order: score desc, ties id asc. */
+    def ranked: IndexedSeq[(Long, Double)] =
+      (0 until size).map(i => (ids(i), scores(i))).sortBy { case (id, s) => (-s, id) }
+
+    /** Wire form: size, then (id, score) pairs — k × 16 bytes at most. */
+    def writeTo(out: DataOutputStream): Unit = {
+      out.writeInt(size)
+      var i = 0
+      while (i < size) { out.writeLong(ids(i)); out.writeDouble(scores(i)); i += 1 }
+    }
+  }
+
+  object Buffer {
+    def readFrom(in: DataInputStream, k: Int): Buffer = {
+      val buf = new Buffer(k)
+      val n = in.readInt()
+      var i = 0
+      while (i < n) { buf.push(in.readLong(), in.readDouble()); i += 1 }
+      buf
+    }
   }
 
   /** Column-API form: `topKBy(col("id"), col("score"), k)`. */

@@ -261,6 +261,9 @@ object Relational extends QueryPack {
     * row's own group). numwait = Σ n_late over qualifying pairs —
     * integer arithmetic throughout, so the result set is bit-identical
     * to the subquery form (the oracle still runs the EXISTS shape).
+    * Lines with a NULL l_suppkey are dropped first: in the subquery form
+    * they neither qualify themselves nor count as another supplier
+    * (`l2.l_suppkey <> l1.l_suppkey` is unknown, never true).
     *
     * ONE wide exchange: lineitem joins the F-orders slice (broadcast at
     * this SF; at 100 TB both sides hash on the order key), is
@@ -278,6 +281,7 @@ object Relational extends QueryPack {
       .select(col("o_orderkey"), col("o_orderdate"))
     val lines = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
+      .filter(col("l_suppkey").isNotNull)
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey"), col("l_suppkey"),
         (col("l_shipdate") >

@@ -99,23 +99,23 @@ object VectorSearch extends QueryPack {
       count_distinct(col("hospital")).as("hospitals_hit"))
   }
 
-  /** Batched multi-query top-k: all query vectors broadcast at once, one
-    * scan of the corpus, per-query bounded-heap partial aggregation
-    * ([[graft.functions.TopKAggregator]]). The shuffle carries ≤ k
-    * candidates per (partition × query) — corpus rows never shuffle, so
-    * query THROUGHPUT scales with cluster width while per-query latency
-    * stays one scan amortized over the whole batch. This is the shape
-    * that beats the reference's one-query-at-a-time loop.
+  /** Batched multi-query top-k: one pass over the corpus answers the
+    * whole batch. The queries `(query_id, q_emb)` are collected to the
+    * driver and travel to the tasks inside the plan; each task runs the
+    * [[graft.functions.CosineTopKExpr]] kernel over its corpus rows
+    * `(vec_id, embedding)` — every row decoded once for all queries,
+    * norms summed once per row and per query, 6-dp rounding only for
+    * scores that can still enter a heap — and keeps a k-sized heap per
+    * query_id. Only those heaps shuffle to the single final merge, so
+    * corpus rows never leave their partition and no (row, query) pair is
+    * ever a row. The result is `(query_id, rank, vec_id, sim)` ordered by
+    * query_id, rank: per query_id the k best `round(cosine, 6)`, ties by
+    * vec_id — bit for bit what scoring every pair and ranking them gives.
     */
   def batchKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    corpus.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"),
-        round(cosineSimilarity(col("embedding"), col("q_emb")), 6).as("sim"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKByExpr(col("vec_id"), col("sim"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("vec_id"), col("col.score").as("sim"))
+    corpus
+      .agg(graft.functions.CosineTopKExpr(col("vec_id"), col("embedding"), queries, k).as("top"))
+      .select(inline(col("top")))
       .orderBy(col("query_id"), col("rank"))
 
   def batchKnnQuery(s: SparkSession, dir: String): DataFrame = {

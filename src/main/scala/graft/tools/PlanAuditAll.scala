@@ -110,11 +110,17 @@ object PlanAuditAll {
     // widest-stage task count per query: the parallelism the query
     // actually achieved at this config (scaling evidence, guide §1)
     val maxTasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (ListenerDrain.isSentinel(js.properties))
+            js.stageInfos.foreach(si => sentinelStages.add(si.stageId))
         override def onStageCompleted(
             sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          maxTasks.getAndAccumulate(sc.stageInfo.numTasks, math.max)
+          if (!sentinelStages.contains(sc.stageInfo.stageId))
+            maxTasks.getAndAccumulate(sc.stageInfo.numTasks, math.max)
       })
 
     val sb = new StringBuilder
@@ -126,7 +132,7 @@ object PlanAuditAll {
         maxTasks.set(0)
         val df = fn(spark, sfDir)
         df.collect()
-        Thread.sleep(50) // listener bus drain
+        ListenerDrain(spark.sparkContext)
         val qe = df.queryExecution
         val plan = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -44,30 +44,38 @@ object Profile {
     val stageJob = mutable.Map[Int, String]()
     // (stage label, numTasks, executorRunTime ms) for hot-stage spotting
     val stageRecs = mutable.ArrayBuffer[(String, Int, Double)]()
+    // the drain's sentinel job and its stages are not the query's
+    val sentinelStages = mutable.Set[Int]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-        val cs = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(js.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .orElse(js.stageInfos.lastOption.map(_.name.take(60)))
-          .getOrElse("?")
-        jobs(js.jobId) = JobRec(js.jobId, cs, -1, js.time)
-        js.stageInfos.foreach(si => stageJob(si.stageId) = s"job ${js.jobId} $cs")
-        order += js.jobId
+        if (ListenerDrain.isSentinel(js.properties))
+          sentinelStages ++= js.stageInfos.map(_.stageId)
+        else {
+          val cs = Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .orElse(Option(js.properties)
+              .flatMap(p => Option(p.getProperty("callSite.short"))))
+            .orElse(js.stageInfos.lastOption.map(_.name.take(60)))
+            .getOrElse("?")
+          jobs(js.jobId) = JobRec(js.jobId, cs, -1, js.time)
+          js.stageInfos.foreach(si => stageJob(si.stageId) = s"job ${js.jobId} $cs")
+          order += js.jobId
+        }
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
         jobs.get(je.jobId).foreach(r => r.ms = (je.time - r.started).toDouble)
       }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         synchronized {
-          stages += 1
-          tasks += sc.stageInfo.numTasks
-          taskMs += sc.stageInfo.taskMetrics.executorRunTime.toDouble
-          val label = stageJob.getOrElse(sc.stageInfo.stageId,
-            sc.stageInfo.name.take(40)) + " | " + sc.stageInfo.name.take(40)
-          stageRecs += ((label, sc.stageInfo.numTasks,
-            sc.stageInfo.taskMetrics.executorRunTime.toDouble))
+          if (!sentinelStages.contains(sc.stageInfo.stageId)) {
+            stages += 1
+            tasks += sc.stageInfo.numTasks
+            taskMs += sc.stageInfo.taskMetrics.executorRunTime.toDouble
+            val label = stageJob.getOrElse(sc.stageInfo.stageId,
+              sc.stageInfo.name.take(40)) + " | " + sc.stageInfo.name.take(40)
+            stageRecs += ((label, sc.stageInfo.numTasks,
+              sc.stageInfo.taskMetrics.executorRunTime.toDouble))
+          }
         }
     }
 
@@ -84,8 +92,7 @@ object Profile {
       try fn(spark, sfDir).count() catch { case e: Throwable =>
         println(s"[$name] FAILED: ${e.getMessage}") }
       val wallMs = (System.nanoTime() - t0) / 1e6
-      // listener bus is async; give it a beat to drain
-      Thread.sleep(300)
+      ListenerDrain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       val recs = synchronized(order.toSeq.flatMap(jobs.get))
       val jobSum = recs.map(_.ms.max(0)).sum

@@ -91,11 +91,17 @@ object ScalingProbe {
   private def runConfig(cpus: Int, dir: String): Map[String, (Double, Int)] = {
     val s = session(cpus)
     val maxTasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     s.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (ListenerDrain.isSentinel(js.properties))
+            js.stageInfos.foreach(si => sentinelStages.add(si.stageId))
         override def onStageCompleted(
             sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          maxTasks.getAndAccumulate(sc.stageInfo.numTasks, math.max)
+          if (!sentinelStages.contains(sc.stageInfo.stageId))
+            maxTasks.getAndAccumulate(sc.stageInfo.numTasks, math.max)
       })
     val out = Probes.map { name =>
       val fn = graft.SparkEntry.queries(name)
@@ -109,7 +115,7 @@ object ScalingProbe {
         fn(s, dir).count()
         (System.nanoTime() - t0) / 1e9
       }.min
-      Thread.sleep(100)
+      ListenerDrain(s.sparkContext)
       name -> (t, maxTasks.get)
     }.toMap
     s.stop()

@@ -1,6 +1,6 @@
 package graft.search
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -15,6 +15,7 @@ import graft.gen.PatientGenerator
 import graft.schema.PatientSchema
 import graft.sources.TableIO
 import graft.store.PatientIndex
+import graft.tools.ListenerDrain
 
 /** E2E pipeline + scatter-gather invariants (SURVEY.md §5.3/§5.4).
   * Small corpus + 1 training round keeps this fast; invariants (not golden
@@ -39,41 +40,28 @@ class PatientSearchSpec extends SparkSpec {
   private case class Observed(jobs: Int, tasksPerStage: Map[Int, Int])
 
   /** Runs `body` under a SparkListener and returns what its jobs launched.
-    * The listener bus is asynchronous but delivers in order, so after
-    * `body` one sentinel job runs and the drain waits (bounded) for the
-    * sentinel's job-end event: by then every event of `body` has landed.
-    * The sentinel's own job, stages and tasks are not counted.
+    * The listener bus is asynchronous, so [[ListenerDrain]] then waits
+    * (bounded) until every event of `body` has landed. The drain's own
+    * sentinel job, stages and tasks are not counted.
     */
   private def observed[T](body: => T): (T, Observed) = {
     val sc = spark.sparkContext
-    val sentinelKey = "graft.test.sentinel"
-    def isSentinel(props: java.util.Properties): Boolean =
-      props != null && props.getProperty(sentinelKey) != null
     val jobs = new AtomicInteger(0)
     val sentinelStages = ConcurrentHashMap.newKeySet[Int]()
     val tasks = new ConcurrentHashMap[Int, AtomicInteger]()
-    val drained = new CountDownLatch(1)
-    @volatile var sentinelJob = -1
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (isSentinel(js.properties)) sentinelJob = js.jobId
-        else jobs.incrementAndGet()
+        if (!ListenerDrain.isSentinel(js.properties)) jobs.incrementAndGet()
       override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
-        if (isSentinel(ss.properties)) sentinelStages.add(ss.stageInfo.stageId)
+        if (ListenerDrain.isSentinel(ss.properties)) sentinelStages.add(ss.stageInfo.stageId)
       override def onTaskStart(ts: SparkListenerTaskStart): Unit =
         if (!sentinelStages.contains(ts.stageId))
           tasks.computeIfAbsent(ts.stageId, _ => new AtomicInteger(0)).incrementAndGet()
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        if (je.jobId == sentinelJob) drained.countDown()
     }
     sc.addSparkListener(listener)
     try {
       val result = body
-      sc.setLocalProperty(sentinelKey, "drain")
-      try sc.parallelize(Seq(0), 1).count()
-      finally sc.setLocalProperty(sentinelKey, null)
-      assert(drained.await(60, TimeUnit.SECONDS),
-        "listener bus did not deliver the sentinel job's end within 60 s")
+      ListenerDrain(sc)
       (result, Observed(jobs.get, tasks.asScala.map { case (k, v) => k -> v.get }.toMap))
     } finally sc.removeSparkListener(listener)
   }
