@@ -15,11 +15,13 @@ import org.apache.spark.sql.types._
   * returned as `array<struct<id bigint, score double>>` sorted score desc
   * (ties id asc).
   *
-  * This is the [[TopKAggregator]] semantics one layer deeper in the
-  * engine: a `TypedImperativeAggregate` with a compact custom
-  * serializer (k × 16 bytes) instead of an `Aggregator` with kryo-encoded
-  * buffers — partial (map-side) aggregation, shuffle of k-sized byte
-  * buffers, usable from SQL via [[graft.GraftExtensions]].
+  * The point is the shuffle shape for per-group (e.g. batched-query)
+  * top-k: a `TypedImperativeAggregate` with a compact custom serializer
+  * (k × 16 bytes), so map-side partial aggregation reduces every
+  * partition to ≤ k candidates per group before the exchange; usable
+  * from SQL via [[graft.GraftExtensions]]. (A single global top-k needs
+  * none of this — Catalyst's TakeOrderedAndProject already is a bounded
+  * heap.)
   */
 case class TopKByExpr(idExpr: Expression, scoreExpr: Expression, kExpr: Expression,
                       mutableAggBufferOffset: Int = 0,
@@ -109,7 +111,7 @@ object TopKByExpr {
 
   /** Parallel-array min-heap of ≤ k (id, score); heap order: lower score
     * first, ties id DESC — so the kept set matches ORDER BY score DESC,
-    * id ASC (identical to [[TopKAggregator]]).
+    * id ASC.
     */
   final class Buffer(k: Int) {
     val ids = new Array[Long](k)

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,8 +18,9 @@ import graft.store.PatientIndex
   *
   * Lifecycle E1 (SURVEY.md §3): query dict → per-row-normalized 20-vector
   * (P3) → driver-side MLP forward (O(1)) → literal array broadcast into a
-  * per-row cosine expression → window local top-k per hospital →
-  * TakeOrderedAndProject global top-k → one conditional-agg stats pass.
+  * per-row cosine expression → TakeOrderedAndProject global top-k (a
+  * k-bounded heap per partition, one k × partitions merge) → rank window
+  * over ≤ k rows → one conditional-agg stats pass.
   */
 class PatientSearch(spark: SparkSession) {
 
@@ -55,13 +56,26 @@ class PatientSearch(spark: SparkSession) {
     * reads its parent ranges in index order, so the rows, their order
     * (which `Mlp.localFit` slices into minibatches) and the z-score stats
     * are bit-identical to the uncoalesced table.
+    *
+    * Plan rule: the table is cached over a one-leaf logical plan
+    * ([[org.apache.spark.sql.GraftPlanBridge.oneLeaf]]), not over the
+    * generator's lineage (29 `withColumn`s per hospital that cannot
+    * collapse around `rand`/`randn`, times the hospitals, plus the
+    * z-score join). The index and every search frame derive from this
+    * table, so their plans stay small: Spark re-analyzes a frame's plan
+    * when it is built and prints it for every SQL execution and AQE
+    * stage update, which used to cost a search more driver time than its
+    * scoring. Planning the one-leaf frame runs the z-score stats stage
+    * (AQE plans the join from its result) here, during set-up, instead
+    * of when the cache first fills; it is the same work, done earlier.
     */
   def setupHospitals(configs: Seq[(String, Long)], seed: Long = 42L): DataFrame = {
     val raw = PatientGenerator.setupHospitals(spark, configs, seed)
     val normalized = Normalization.zscore(raw, perGroup = Some("hospital"))
-    val withFeatures = Normalization.assembleFeatures(normalized)
-      // keep raw outcome columns for metadata (z-scored features live in the array)
-      .coalesce(spark.sparkContext.defaultParallelism)
+    val withFeatures = GraftPlanBridge.oneLeaf(
+      Normalization.assembleFeatures(normalized)
+        // keep raw outcome columns for metadata (z-scored features live in the array)
+        .coalesce(spark.sparkContext.defaultParallelism))
       .cache()
     patients = Some(withFeatures)
     withFeatures
@@ -113,52 +127,16 @@ class PatientSearch(spark: SparkSession) {
 
   /** §2.12 parity: `SecureMultiPartyComputation.secure_similarity_search`
     * (similarity_search.py:322-363) — scatter-gather over the shard
-    * boundary from a raw query embedding. "Secure" in the reference means
-    * only local top-k winners leave each shard; here that is literally
-    * the dataflow: the window's local filter runs shard-side and only
-    * n_shards × k candidate rows reach the global merge.
+    * boundary from a raw query embedding; see [[PatientSearch.search]].
     */
   def secureSimilaritySearch(qEmbedding: Array[Float], topK: Int = 10): PatientSearch.Result = {
     val idx = index.getOrElse(sys.error("generateAndStoreEmbeddings first"))
-
-    val sim = graft.functions.VectorFunctions
-      .cosineSimilarity(col("embedding"), typedlit(qEmbedding.toSeq))
-
-    val localW = Window.partitionBy(col("hospital"))
-      .orderBy(col("similarity").desc, col("patient_id"))
-    val localTopK = idx
-      .withColumn("similarity", sim)
-      .withColumn("local_rank", row_number().over(localW))
-      .filter(col("local_rank") <= topK)
-
-    // patient_id restarts at PT_000000 in every hospital, so hospital is
-    // the last key of a total order across shards
-    val globalOrder = Seq(col("similarity").desc, col("patient_id"), col("hospital"))
-    val hits = localTopK
-      .orderBy(globalOrder: _*)
-      .limit(topK)
-      .withColumn("rank", row_number().over(Window.orderBy(globalOrder: _*)))
-      .select(col("rank"), col("patient_id"), col("similarity"),
-        col("hospital"), col("received_transplant"), col("transplant_success"),
-        col("days_to_transplant"),
-        // presentation form of the reference's 'N/A' sentinel (§1.2)
-        coalesce(date_format(col("transplant_date"), "yyyy-MM-dd"), lit("N/A"))
-          .as("transplant_date"),
-        col("waitlist_status"), col("metadata"))
-      .cache()
-
-    // total_searched is the reference's candidate-pool size,
-    // len(all_results) (similarity_search.py:361): each shard contributes
-    // min(k, |shard|) local winners. Shard sizes were computed once at
-    // index build/load — NO corpus scan happens on the search path.
+    // Shard sizes were computed once at index build/load — NO corpus
+    // scan happens on the search path.
     val sizes = shardSizes.getOrElse {
       val s = computeShardSizes(idx); shardSizes = Some(s); s
     }
-    PatientSearch.Result(
-      topSimilarPatients = hits,
-      totalSearched = sizes.valuesIterator.map(math.min(_, topK.toLong)).sum,
-      transplantStatistics = TransplantStats.statisticsBlock(hits),
-      clinicalInsights = TransplantStats.clinicalInsights(hits))
+    PatientSearch.search(idx, sizes, qEmbedding, topK)
   }
 }
 
@@ -172,4 +150,47 @@ object PatientSearch {
     * DataFrame.
     */
   type HospitalVectorDB = DataFrame
+
+  /** The top-k search over an index whose hospitals hold `shardSizes`
+    * rows. The global top-k is one `orderBy(similarity desc, patient_id,
+    * hospital).limit(k)`, which plans as TakeOrderedAndProject: each
+    * partition keeps a k-bounded heap and one task merges the
+    * k × partitions survivors. That is exact without a per-hospital
+    * pass: the global order restricted to one hospital is that
+    * hospital's local order, so every global winner is among its
+    * hospital's local top-k, and each partition's survivors are local
+    * winners of their own hospitals — only local winners leave a shard,
+    * as in the reference. `patient_id` restarts at PT_000000 in every
+    * hospital, so hospital is the last key of the total order.
+    *
+    * The hits are one partition in rank order (the rank window runs on
+    * ≤ k rows), so the stats and insights averages sum in rank order.
+    * `totalSearched` is the reference's candidate-pool size,
+    * `len(all_results)` (similarity_search.py:361): each shard
+    * contributes min(k, |shard|) local winners.
+    */
+  private[search] def search(idx: DataFrame, shardSizes: Map[String, Long],
+                             qEmbedding: Array[Float], topK: Int): Result = {
+    val sim = graft.functions.VectorFunctions
+      .cosineSimilarity(col("embedding"), typedlit(qEmbedding.toSeq))
+    val globalOrder = Seq(col("similarity").desc, col("patient_id"), col("hospital"))
+    val hits = idx
+      .withColumn("similarity", sim)
+      .orderBy(globalOrder: _*)
+      .limit(topK)
+      .withColumn("rank", row_number().over(Window.orderBy(globalOrder: _*)))
+      .select(col("rank"), col("patient_id"), col("similarity"),
+        col("hospital"), col("received_transplant"), col("transplant_success"),
+        col("days_to_transplant"),
+        // presentation form of the reference's 'N/A' sentinel (§1.2)
+        coalesce(date_format(col("transplant_date"), "yyyy-MM-dd"), lit("N/A"))
+          .as("transplant_date"),
+        col("waitlist_status"), col("metadata"))
+      .cache()
+    Result(
+      topSimilarPatients = hits,
+      totalSearched = shardSizes.valuesIterator.map(math.min(_, topK.toLong)).sum,
+      transplantStatistics = TransplantStats.statisticsBlock(hits),
+      clinicalInsights = TransplantStats.clinicalInsights(hits))
+  }
 }

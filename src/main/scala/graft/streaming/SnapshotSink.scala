@@ -326,6 +326,22 @@ object SnapshotSink extends QueryPack {
                     aggName: String = "agg", typeCol: String = "event_type",
                     valueCol: String = "value",
                     checkpoint: Option[String] = None): Unit =
+    catalogTxn(spark, sourceDir, schema, root, factName, aggName, typeCol,
+      valueCol, checkpoint, DeltaCollectBound)
+
+  /** Most per-type delta rows one [[runCatalogTxn]] tick collects to the
+    * driver. A batch with more distinct types keeps its delta a frame:
+    * the merge source is the batch aggregate itself, joined against the
+    * whole aggregate table instead of a pruned read of the touched types.
+    */
+  private[streaming] val DeltaCollectBound = 4096
+
+  private[streaming] def catalogTxn(spark: SparkSession, sourceDir: String,
+                                    schema: org.apache.spark.sql.types.StructType,
+                                    root: String, factName: String,
+                                    aggName: String, typeCol: String,
+                                    valueCol: String, checkpoint: Option[String],
+                                    collectBound: Int): Unit =
       StreamHousekeeping.withStatePartitions(spark, 8) {
     val pins0 = SnapshotCatalog.entries(spark, root)
     val factPath = pins0(factName)._1
@@ -347,6 +363,9 @@ object SnapshotSink extends QueryPack {
           // against the few touched agg rows instead of re-aggregating
           // the batch a second time (guide §2.4: don't compute things
           // twice; measured: one full batch scan per tick removed).
+          // At most collectBound + 1 rows reach the driver; past the
+          // bound the delta stays a frame (one more batch aggregation
+          // in the merge, against the whole agg table).
           // Pinned column types (long, decimal(28,6)) keep the agg
           // schema FIXED across batches — decimal addition is exact
           // and associative, so the running totals are independent
@@ -356,18 +375,22 @@ object SnapshotSink extends QueryPack {
               sum(col(valueCol).cast("decimal(18,6)"))
                 .cast("decimal(28,6)").as("sum_value"))
           val deltaRows = graft.JobLabel(s, "ctx:batch-delta") {
-            deltaQ.collect()
+            deltaQ.limit(collectBound + 1).collect()
           }
-          val touched = deltaRows.map(_.get(0).toString).toSeq
-          if (touched.nonEmpty) {
-            val delta = s.createDataFrame(
-              s.sparkContext.parallelize(deltaRows.toIndexedSeq, 1),
-              deltaQ.schema)
+          if (deltaRows.nonEmpty) {
+            val collected = deltaRows.length <= collectBound
+            val delta =
+              if (collected) s.createDataFrame(
+                s.sparkContext.parallelize(deltaRows.toIndexedSeq, 1),
+                deltaQ.schema)
+              else deltaQ
             val merged =
               if (SnapshotTable.tableStats(s, aggPath)._1 == 0L) delta
               else {
-                val existing = SnapshotTable
-                  .readWhere(s, aggPath, typeCol, touched)
+                val existing =
+                  (if (collected) SnapshotTable.readWhere(s, aggPath, typeCol,
+                    deltaRows.map(_.get(0).toString).toSeq)
+                  else SnapshotTable.read(s, aggPath))
                   .select(col(typeCol), col("n").as("__n0"),
                     col("sum_value").as("__s0"))
                 delta.join(existing, Seq(typeCol), "left_outer")

@@ -26,11 +26,24 @@ object GraftStreamingBridge {
       execution.datasources.LogicalRelation(relation, isStreaming = true))
 }
 
-/** Bridge to the `private[sql]` session-state registries — imperative
-  * (per-session) registration of table-valued functions, for sessions
-  * built without `spark.sql.extensions` (the extensions path registers
-  * the same builders via `injectTableFunction`).
+/** Bridge to the `private[sql]` one-leaf frame constructor: `df`'s rows
+  * under a single `LogicalRDD` over its executed RDD, built the way
+  * `Dataset.checkpoint` builds its result — but with no checkpoint and
+  * no second storage copy. Frames derived from the result analyze,
+  * optimize and print that one leaf instead of `df`'s whole lineage.
+  *
+  * `toRdd` plans `df` now; with AQE on that also runs any shuffle stage
+  * its final plan depends on (an aggregate feeding a join, say). The
+  * result's own rows are computed when it is first used.
   */
+object GraftPlanBridge {
+  def oneLeaf(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
+  }
+}
+
 /** Bridge to the resolved `autoBroadcastJoinThreshold` (SQLConf parses
   * the size-string forms — "10MB", "-1" — which a raw conf.get string
   * would force callers to re-implement).
@@ -41,6 +54,11 @@ object GraftConfBridge {
       .autoBroadcastJoinThreshold
 }
 
+/** Bridge to the `private[sql]` session-state registries — imperative
+  * (per-session) registration of table-valued functions, for sessions
+  * built without `spark.sql.extensions` (the extensions path registers
+  * the same builders via `injectTableFunction`).
+  */
 object GraftRegistryBridge {
   def registerTableFunction(
       spark: SparkSession, name: String,

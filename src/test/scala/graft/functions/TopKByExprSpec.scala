@@ -44,6 +44,38 @@ class TopKByExprSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getString(0).hashCode.toLong, r.getLong(1)))
   }
 
+  private def heap(k: Int, items: Seq[(Long, Double)]): TopKByExpr.Buffer = {
+    val buf = new TopKByExpr.Buffer(k)
+    items.foreach { case (id, score) => buf.push(id, score) }
+    buf
+  }
+
+  test("heap semantics: top-k by score desc, ties broken id asc") {
+    val items = Seq(
+      (1L, 0.5), (2L, 0.9), (3L, 0.9), (4L, 0.1), (5L, 0.7), (6L, 0.7))
+    assert(heap(3, items).ranked == Seq((2L, 0.9), (3L, 0.9), (5L, 0.7)))
+  }
+
+  test("merge of partial heaps equals global top-k") {
+    val rng = new scala.util.Random(11)
+    val items = Seq.fill(500)((rng.nextLong() & 0xFFFF, rng.nextDouble()))
+    val (a, b) = items.splitAt(250)
+    // b's heap crosses the shuffle in its wire form
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    heap(4, b).writeTo(out)
+    out.flush()
+    val merged = heap(4, a)
+    merged.pushAll(TopKByExpr.Buffer.readFrom(
+      new java.io.DataInputStream(new java.io.ByteArrayInputStream(bos.toByteArray)), 4))
+    val expected = items.sortBy { case (id, s) => (-s, id) }.take(4)
+    assert(merged.ranked == expected)
+  }
+
+  test("fewer rows than k: returns all, sorted") {
+    assert(heap(10, Seq((1L, 0.2), (2L, 0.8))).ranked == Seq((2L, 0.8), (1L, 0.2)))
+  }
+
   test("Column API: per-group top-k equals the window reference") {
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001")
     val got = ev.groupBy(col("event_type"))

@@ -27,6 +27,18 @@ class GoldenSpec extends SparkSpec {
     assert(got.map(_._1).toSeq == (1 to 10))
   }
 
+  test("batchKnn: batched result equals per-query brute force") {
+    val dir = sfDir
+    val batched = graft.search.VectorSearch.batchKnnQuery(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    // per-query check for query 0: self first, then the golden knn order
+    val q0 = batched.filter(_._1 == 0L).map(_._3)
+    assert(q0.head == 0L) // self-similarity 1.0 ranks first
+    assert(q0.tail == Seq(17L, 225L, 12L, 483L)) // GoldenSpec order
+    assert(batched.map(_._1).distinct.sorted == Seq(0L, 1L, 2L, 3L, 4L))
+    assert(batched.groupBy(_._1).values.forall(_.length == 5))
+  }
+
   test("generator golden: seed 42 first row is stable across JVMs") {
     val r = graft.gen.PatientGenerator.patients(spark, 5, "H", 42)
       .orderBy("patient_id").head()

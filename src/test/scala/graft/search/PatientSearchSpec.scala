@@ -7,6 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Range}
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.execution.RangeExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -160,6 +165,35 @@ class PatientSearchSpec extends SparkSpec {
     assert(seen.jobs > 0 && seen.tasksPerStage.nonEmpty)
     assert(seen.tasksPerStage.values.forall(_ <= cores),
       s"tasks per stage ${seen.tasksPerStage} exceed $cores cores")
+  }
+
+  /** Every node of `p`, through the plans that caches and adaptive
+    * execution print as inner children. */
+  private def planNodes(p: TreeNode[_]): Seq[TreeNode[_]] =
+    p +: (p.children ++ p.innerChildren).flatMap {
+      case c: TreeNode[_] => planNodes(c)
+      case _ => Nil
+    }
+
+  test("plans: the cached patient table and index sit on one leaf, and a " +
+    "search's frames explain in under 64 KB") {
+    val ps = system._1
+    for ((name, df) <- Seq("patientTable" -> ps.patientTable.get,
+        "vectorIndex" -> ps.vectorIndex.get)) {
+      val analyzed = df.queryExecution.analyzed
+      assert(analyzed.collectLeaves().size == 1, s"$name:\n${analyzed.treeString}")
+      val lineage = planNodes(df.queryExecution.withCachedData).collect {
+        case n @ (_: Range | _: Join | _: Aggregate | _: RangeExec |
+                  _: BaseJoinExec | _: BaseAggregateExec) => n.nodeName
+      }
+      assert(lineage.isEmpty, s"$name carries generator lineage: ${lineage.distinct}")
+    }
+    val r = ps.searchSimilarPatients(PatientSchema.demoQueryPatient.updated("bmi", 31.0), topK)
+    r.transplantStatistics.collect()
+    for ((name, df) <- Seq("hits" -> r.topSimilarPatients, "stats" -> r.transplantStatistics)) {
+      val explained = df.queryExecution.toString.length
+      assert(explained < 64 * 1024, s"$name frame explains in $explained chars")
+    }
   }
 
   test("stats block: counts partition and rates are consistent (A3)") {

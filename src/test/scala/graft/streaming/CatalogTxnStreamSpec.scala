@@ -95,6 +95,25 @@ class CatalogTxnStreamSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, fact).count() === 6L)
   }
 
+  test("a tick whose delta passes the collect bound merges from the " +
+    "frame and lands where the collected path does") {
+    val src = buildSource()
+    def run(collectBound: Int): (Seq[String], Long, Int) = {
+      val (root, fact, _) = buildRoot()
+      SnapshotSink.catalogTxn(spark, src, schema, root, "fact", "agg",
+        "event_type", "value", None, collectBound)
+      (aggRows(SnapshotCatalog.read(spark, root, "agg")),
+        SnapshotTable.read(spark, fact).count(),
+        SnapshotCatalog.versions(spark, root).size)
+    }
+    // bound 1: the first slice (two types, empty agg table) and the last
+    // (two types, one of them already in the agg table) go over it; the
+    // second (one type) is collected
+    val framed = run(1)
+    assert(framed === run(SnapshotSink.DeltaCollectBound))
+    assert(framed._1 === rollup(spark.read.parquet(src)))
+  }
+
   test("a fresh-checkpoint replay is exactly-once: no table version, no " +
     "catalog version, no value moves") {
     val src = buildSource()
