@@ -44,6 +44,11 @@ object GraftPlanBridge {
   }
 }
 
+/** Bridge to the `private[sql]` session-state registries — imperative
+  * (per-session) registration of table-valued functions, for sessions
+  * built without `spark.sql.extensions` (the extensions path registers
+  * the same builders via `injectTableFunction`).
+  */
 /** Bridge to the resolved `autoBroadcastJoinThreshold` (SQLConf parses
   * the size-string forms — "10MB", "-1" — which a raw conf.get string
   * would force callers to re-implement).
@@ -54,11 +59,6 @@ object GraftConfBridge {
       .autoBroadcastJoinThreshold
 }
 
-/** Bridge to the `private[sql]` session-state registries — imperative
-  * (per-session) registration of table-valued functions, for sessions
-  * built without `spark.sql.extensions` (the extensions path registers
-  * the same builders via `injectTableFunction`).
-  */
 object GraftRegistryBridge {
   def registerTableFunction(
       spark: SparkSession, name: String,

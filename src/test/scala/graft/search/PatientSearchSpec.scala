@@ -27,6 +27,7 @@ import graft.tools.ListenerDrain
   * values) make it robust to training nondeterminism across JVMs.
   */
 class PatientSearchSpec extends SparkSpec {
+  import PatientSearchSpec.bits
 
   private val topK = 5
   private val configs = Seq(("Hospital_A", 150L), ("Hospital_B", 100L), ("Hospital_C", 120L))
@@ -69,16 +70,6 @@ class PatientSearchSpec extends SparkSpec {
       ListenerDrain(sc)
       (result, Observed(jobs.get, tasks.asScala.map { case (k, v) => k -> v.get }.toMap))
     } finally sc.removeSparkListener(listener)
-  }
-
-  /** Row values with every float/double replaced by its raw bits (arrays
-    * and structs recursively), so `==` is a bit-for-bit comparison. */
-  private def bits(v: Any): Any = v match {
-    case f: Float => java.lang.Float.floatToRawIntBits(f)
-    case d: Double => java.lang.Double.doubleToRawLongBits(d)
-    case r: Row => r.toSeq.map(bits)
-    case xs: scala.collection.Seq[_] => xs.map(bits)
-    case other => other
   }
 
   test("index holds one 128-dim embedding + metadata struct per patient") {
@@ -270,5 +261,17 @@ class PatientSearchSpec extends SparkSpec {
     Seq("avg_wait_transplanted_days", "avg_age_success",
       "avg_wait_not_transplanted_days", "still_waiting")
       .foreach(c => assert(cols.contains(c)))
+  }
+}
+
+object PatientSearchSpec {
+  /** Row values with every float/double replaced by its raw bits (arrays
+    * and structs recursively), so `==` is a bit-for-bit comparison. */
+  def bits(v: Any): Any = v match {
+    case f: Float => java.lang.Float.floatToRawIntBits(f)
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case r: Row => r.toSeq.map(bits)
+    case xs: scala.collection.Seq[_] => xs.map(bits)
+    case other => other
   }
 }

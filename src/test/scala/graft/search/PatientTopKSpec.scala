@@ -64,17 +64,8 @@ class PatientTopKSpec extends SparkSpec {
     StructField("creatinine", DoubleType), StructField("bilirubin", DoubleType),
     StructField("dialysis", IntegerType), StructField("diabetes", IntegerType)))
 
-  /** Row values with every float/double replaced by its raw bits (arrays
-    * and structs recursively), so `==` is a bit-for-bit comparison. */
-  private def bits(v: Any): Any = v match {
-    case f: Float => java.lang.Float.floatToRawIntBits(f)
-    case d: Double => java.lang.Double.doubleToRawLongBits(d)
-    case r: Row => r.toSeq.map(bits)
-    case xs: scala.collection.Seq[_] => xs.map(bits)
-    case other => other
-  }
-
-  private def rows(df: DataFrame): Seq[Any] = df.collect().toSeq.map(bits)
+  private def rows(df: DataFrame): Seq[Any] =
+    df.collect().toSeq.map(PatientSearchSpec.bits)
 
   // ---- generators ----
 
