@@ -25,21 +25,8 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
   // columns and query literals in this library are float arrays)
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) 0.0 else dot / denom
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarityExpr.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -70,6 +57,22 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
 }
 
 object CosineSimilarityExpr {
+  /** The score of two non-NULL float arrays (the interpreted path, and
+    * the facade search's per-row scoring). */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = x.getFloat(i).toDouble
+      val yv = y.getFloat(i).toDouble
+      dot += xv * yv; na += xv * xv; nb += yv * yv
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) 0.0 else dot / denom
+  }
+
   def apply(a: Column, b: Column): Column =
     GraftColumnBridge.column(CosineSimilarityExpr(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -36,8 +36,9 @@ import org.apache.spark.sql.types._
   *
   * Rows with a NULL id or embedding, and queries with a NULL vector,
   * score nothing. Queries that share a query_id share one heap.
-  * Partial aggregates shuffle only the k-sized heaps (≤ k × 16 bytes per
-  * query_id).
+  * `VectorSearch.batchKnn` runs `update` over each corpus partition in
+  * one job and `merge`s the serialized heaps (≤ k × 16 bytes per
+  * query_id) on the driver.
   */
 case class CosineTopKExpr(idExpr: Expression, embExpr: Expression,
                           batch: CosineTopKExpr.Batch, k: Int,
@@ -248,13 +249,4 @@ object CosineTopKExpr {
         rows.map(r => if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
     }
   }
-
-  /** Column-API form over the corpus columns `id` and `embedding`. */
-  def apply(id: Column, embedding: Column, queries: DataFrame, k: Int): Column =
-    GraftColumnBridge.column(
-      CosineTopKExpr(
-        GraftColumnBridge.expression(id),
-        GraftColumnBridge.expression(embedding),
-        Batch.collect(queries), k)
-        .toAggregateExpression())
 }

@@ -198,6 +198,7 @@ object DedupClusters extends QueryPack {
     // truncation plan depth grows linearly and anyone raising `iters`
     // past the demo 3 hits the same plan explosion CC solved
     var state = ck(deg.withColumn("rank", lit(1.0 / n)))
+    var earlier = Vector.empty[DataFrame]
     var iter = 0
     var done = false
     while (iter < iters && !done) {
@@ -217,18 +218,45 @@ object DedupClusters extends QueryPack {
           .agg(max(abs(col("rank") - col("prev"))).as("d"))
           .head().getDouble(0) < t
       }
+      earlier :+= state
       state = next
       iter += 1
     }
-    // unpersist only when an action inside the loop already materialized
-    // the final state (eager per-round checkpoints, or tol's convergence
-    // scan). In the lazy fixed-round path NOTHING has run yet — the one
-    // final job computes every round from the cached edges, so dropping
-    // the cache here would silently recompute the union+distinct shuffle
-    // once per round (ADVICE r13). The cache then expires with the
-    // session, which is the documented localCheckpoint lifetime anyway.
+    // unpersist now only when an action inside the loop already
+    // materialized the final state (eager per-round checkpoints, or tol's
+    // convergence scan). In the lazy fixed-round path NOTHING has run yet
+    // — the one final job computes every round from the cached edges, so
+    // dropping the cache here would recompute the union+distinct shuffle
+    // once per round (ADVICE r13). There the edges, the pairs' checkpoint
+    // and the earlier rounds are released after the consumer's action.
     if (tol.isDefined || checkpointDir.isDefined) edges.unpersist()
+    else releaseOnceCheckpointed(state) {
+      edges.unpersist(blocking = false)
+      (raw +: earlier).foreach(checkpointOf(_).unpersist(blocking = false))
+    }
     state.select(col("v_id"), col("rank"), col("deg").cast("long").as("degree"))
+  }
+
+  /** The RDD whose blocks hold a `localCheckpoint`ed frame's rows. */
+  private def checkpointOf(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+
+  /** Runs `release` at the first job end after `result`, a lazily
+    * `localCheckpoint`ed frame, has been checkpointed — i.e. after the
+    * first action that computed it. From then on its rows are its own
+    * checkpoint blocks, so what only that action read can go.
+    */
+  private def releaseOnceCheckpointed(result: DataFrame)(release: => Unit): Unit = {
+    val sc = result.sparkSession.sparkContext
+    val rdd = checkpointOf(result)
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (rdd.isCheckpointed && released.compareAndSet(false, true)) {
+          sc.removeSparkListener(this)
+          release
+        }
+    })
   }
 
   /** Driver query: centrality of the near-dup pair graph, top 20. */

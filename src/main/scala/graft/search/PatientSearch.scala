@@ -1,10 +1,15 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Coalesce, DateFormatClass, Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
+import graft.JobLabel
 import graft.feat.Normalization
+import graft.functions.CosineSimilarityExpr
 import graft.gen.PatientGenerator
 import graft.model.{FederatedTrainer, Mlp}
 import graft.schema.PatientSchema
@@ -17,16 +22,16 @@ import graft.store.PatientIndex
   * with transplant statistics.
   *
   * Lifecycle E1 (SURVEY.md §3): query dict → per-row-normalized 20-vector
-  * (P3) → driver-side MLP forward (O(1)) → literal array broadcast into a
-  * per-row cosine expression → TakeOrderedAndProject global top-k (a
-  * k-bounded heap per partition, one k × partitions merge) → rank window
-  * over ≤ k rows → one conditional-agg stats pass.
+  * (P3) → driver-side MLP forward (O(1)) → one Spark job over the index
+  * RDD planned at build/load time: per partition, a cosine score per row
+  * into a k-bounded heap → a k × partitions merge on the driver → the
+  * ranked hits, and the statistics and insights rows folded over them.
   */
 class PatientSearch(spark: SparkSession) {
 
   private var patients: Option[DataFrame] = None
   private var weights: Mlp.Weights = Mlp.init()
-  private var index: Option[DataFrame] = None
+  private var index: Option[PlannedIndex] = None
   // per-shard row counts, computed ONCE at index build/load — the search
   // path must not rescan the corpus for bookkeeping (at warehouse scale
   // that is two extra full scans per query)
@@ -35,11 +40,23 @@ class PatientSearch(spark: SparkSession) {
   /** Trained-model / index accessors (for tests and reuse). */
   def globalWeights: Mlp.Weights = weights
   def patientTable: Option[DataFrame] = patients
-  def vectorIndex: Option[DataFrame] = index
+  def vectorIndex: Option[DataFrame] = index.map(_.frame)
 
+  // the count fills the index cache; in generateAndStoreEmbeddings that
+  // is part of the embed phase, whose label wins
   private def computeShardSizes(idx: DataFrame): Map[String, Long] =
-    idx.groupBy(col("hospital")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    JobLabel.ifUnset(spark, "setup:cache-fill") {
+      idx.groupBy(col("hospital")).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+
+  /** Makes `idx` the searched index: its shard sizes are counted and its
+    * scan planned once, here. */
+  private def useIndex(idx: DataFrame): DataFrame = {
+    shardSizes = Some(computeShardSizes(idx))
+    index = Some(new PlannedIndex(idx))
+    idx
+  }
 
   /** setup_hospitals (similarity_search.py:419-434): generate shards,
     * z-score per hospital (the reference normalizes each client against
@@ -72,11 +89,12 @@ class PatientSearch(spark: SparkSession) {
   def setupHospitals(configs: Seq[(String, Long)], seed: Long = 42L): DataFrame = {
     val raw = PatientGenerator.setupHospitals(spark, configs, seed)
     val normalized = Normalization.zscore(raw, perGroup = Some("hospital"))
-    val withFeatures = GraftPlanBridge.oneLeaf(
-      Normalization.assembleFeatures(normalized)
-        // keep raw outcome columns for metadata (z-scored features live in the array)
-        .coalesce(spark.sparkContext.defaultParallelism))
-      .cache()
+    val withFeatures = JobLabel(spark, "setup:zscore-stats") {
+      GraftPlanBridge.oneLeaf(
+        Normalization.assembleFeatures(normalized)
+          // keep raw outcome columns for metadata (z-scored features live in the array)
+          .coalesce(spark.sparkContext.defaultParallelism))
+    }.cache()
     patients = Some(withFeatures)
     withFeatures
   }
@@ -89,13 +107,12 @@ class PatientSearch(spark: SparkSession) {
     losses
   }
 
-  /** generate_and_store_embeddings (similarity_search.py:495-539). */
-  def generateAndStoreEmbeddings(): DataFrame = {
+  /** generate_and_store_embeddings (similarity_search.py:495-539). Runs
+    * the embed pass (filling the index cache) and plans the index scan
+    * every search runs. */
+  def generateAndStoreEmbeddings(): DataFrame = JobLabel(spark, "index:embed") {
     val df = patients.getOrElse(sys.error("setupHospitals first"))
-    val built = PatientIndex.build(FederatedTrainer.withEmbeddings(df, weights))
-    index = Some(built)
-    shardSizes = Some(computeShardSizes(built))
-    built
+    useIndex(PatientIndex.build(FederatedTrainer.withEmbeddings(df, weights)))
   }
 
   /** Persist the built index shard-partitioned (the durable form of the
@@ -104,15 +121,11 @@ class PatientSearch(spark: SparkSession) {
     */
   def persistIndex(path: String): Unit =
     graft.sources.TableIO.writeIndex(
-      index.getOrElse(sys.error("generateAndStoreEmbeddings first")), path)
+      vectorIndex.getOrElse(sys.error("generateAndStoreEmbeddings first")), path)
 
   /** Reload a persisted index into this facade (cold-start serving). */
-  def loadIndex(path: String): DataFrame = {
-    val loaded = graft.sources.TableIO.readIndex(spark, path).cache()
-    index = Some(loaded)
-    shardSizes = Some(computeShardSizes(loaded))
-    loaded
-  }
+  def loadIndex(path: String): DataFrame =
+    useIndex(graft.sources.TableIO.readIndex(spark, path).cache())
 
   /** search_similar_patients (similarity_search.py:541-559 → 322-363).
     * Returns (hits with rank/similarity/promoted outcome fields + metadata,
@@ -128,15 +141,13 @@ class PatientSearch(spark: SparkSession) {
   /** §2.12 parity: `SecureMultiPartyComputation.secure_similarity_search`
     * (similarity_search.py:322-363) — scatter-gather over the shard
     * boundary from a raw query embedding; see [[PatientSearch.search]].
+    * Shard sizes were counted and the index scan planned at build/load
+    * time: this call runs no job, and the first action on the result runs
+    * the search's one job.
     */
   def secureSimilaritySearch(qEmbedding: Array[Float], topK: Int = 10): PatientSearch.Result = {
     val idx = index.getOrElse(sys.error("generateAndStoreEmbeddings first"))
-    // Shard sizes were computed once at index build/load — NO corpus
-    // scan happens on the search path.
-    val sizes = shardSizes.getOrElse {
-      val s = computeShardSizes(idx); shardSizes = Some(s); s
-    }
-    PatientSearch.search(idx, sizes, qEmbedding, topK)
+    PatientSearch.search(idx, shardSizes.get, qEmbedding, topK)
   }
 }
 
@@ -152,45 +163,126 @@ object PatientSearch {
   type HospitalVectorDB = DataFrame
 
   /** The top-k search over an index whose hospitals hold `shardSizes`
-    * rows. The global top-k is one `orderBy(similarity desc, patient_id,
-    * hospital).limit(k)`, which plans as TakeOrderedAndProject: each
-    * partition keeps a k-bounded heap and one task merges the
-    * k × partitions survivors. That is exact without a per-hospital
-    * pass: the global order restricted to one hospital is that
-    * hospital's local order, so every global winner is among its
-    * hospital's local top-k, and each partition's survivors are local
-    * winners of their own hospitals — only local winners leave a shard,
-    * as in the reference. `patient_id` restarts at PT_000000 in every
-    * hospital, so hospital is the last key of the total order.
+    * rows: the hits, statistics and insights frames of one [[TopKJob]].
+    * Building them runs no job; the first action on any of them runs the
+    * search's one job over the planned index, and every frame reads its
+    * kept result.
     *
-    * The hits are one partition in rank order (the rank window runs on
-    * ≤ k rows), so the stats and insights averages sum in rank order.
-    * `totalSearched` is the reference's candidate-pool size,
-    * `len(all_results)` (similarity_search.py:361): each shard
-    * contributes min(k, |shard|) local winners.
+    * The job scores each row against the query with
+    * [[graft.functions.CosineSimilarityExpr]]'s arithmetic, and each
+    * partition keeps a k-bounded heap in the order (similarity desc,
+    * `patient_id`, `hospital`), comparing as Spark's sort does (NULL
+    * similarity last, NaN above every number, -0.0 = 0.0). The driver
+    * merges the heaps. That is exact without a per-hospital pass: the
+    * global order restricted to one hospital is that hospital's local
+    * order, so every global winner is among its hospital's local top-k,
+    * and only local winners leave a shard, as in the reference.
+    * `patient_id` restarts at PT_000000 in every hospital, so hospital
+    * is the last key of the total order.
+    *
+    * The statistics and insights rows are folded over the hits in rank
+    * order ([[TransplantStats]]). `totalSearched` is the reference's
+    * candidate-pool size, `len(all_results)` (similarity_search.py:361):
+    * each shard contributes min(k, |shard|) local winners.
     */
-  private[search] def search(idx: DataFrame, shardSizes: Map[String, Long],
+  private[search] def search(idx: PlannedIndex, shardSizes: Map[String, Long],
                              qEmbedding: Array[Float], topK: Int): Result = {
-    val sim = graft.functions.VectorFunctions
-      .cosineSimilarity(col("embedding"), typedlit(qEmbedding.toSeq))
-    val globalOrder = Seq(col("similarity").desc, col("patient_id"), col("hospital"))
-    val hits = idx
-      .withColumn("similarity", sim)
-      .orderBy(globalOrder: _*)
-      .limit(topK)
-      .withColumn("rank", row_number().over(Window.orderBy(globalOrder: _*)))
-      .select(col("rank"), col("patient_id"), col("similarity"),
-        col("hospital"), col("received_transplant"), col("transplant_success"),
-        col("days_to_transplant"),
-        // presentation form of the reference's 'N/A' sentinel (§1.2)
-        coalesce(date_format(col("transplant_date"), "yyyy-MM-dd"), lit("N/A"))
-          .as("transplant_date"),
-        col("waitlist_status"), col("metadata"))
-      .cache()
-    Result(
-      topSimilarPatients = hits,
-      totalSearched = shardSizes.valuesIterator.map(math.min(_, topK.toLong)).sum,
-      transplantStatistics = TransplantStats.statisticsBlock(hits),
-      clinicalInsights = TransplantStats.clinicalInsights(hits))
+    val Seq(hits, stats, insights) = new Search(idx, qEmbedding, topK).frames
+    Result(hits, shardSizes.valuesIterator.map(math.min(_, topK.toLong)).sum, stats, insights)
+  }
+
+  private final class Search(idx: PlannedIndex, q: Array[Float], k: Int)
+      extends TopKJob(idx.frame.sparkSession, "search:cosine-topk") {
+    private val in = idx.frame.schema
+    private val emb = in.fieldIndex("embedding")
+    private val order = new HitOrder(in.fieldIndex("patient_id"), in.fieldIndex("hospital"))
+
+    /** The hits: rank, similarity and the index's columns, with the
+      * transplant date in the reference's text form. */
+    private val hitsSchema = StructType(Seq(
+      StructField("rank", IntegerType, nullable = false), in("patient_id"),
+      StructField("similarity", DoubleType, in("embedding").nullable),
+      in("hospital"), in("received_transplant"), in("transplant_success"),
+      in("days_to_transplant"),
+      StructField("transplant_date", StringType, nullable = false),
+      in("waitlist_status"), in("metadata")))
+
+    /** `coalesce(date_format(transplant_date, 'yyyy-MM-dd'), 'N/A')`:
+      * the presentation form of the reference's 'N/A' sentinel (§1.2). */
+    private val dateText = {
+      val tz = Some(idx.frame.sparkSession.conf.get("spark.sql.session.timeZone"))
+      val date = in("transplant_date")
+      Coalesce(Seq(
+        DateFormatClass(Cast(BoundReference(in.fieldIndex("transplant_date"), date.dataType,
+          date.nullable), TimestampType, tz), Literal("yyyy-MM-dd"), tz),
+        Literal("N/A")))
+    }
+
+    def schemas: Seq[StructType] =
+      Seq(hitsSchema, TransplantStats.statisticsSchema, TransplantStats.insightsSchema)
+
+    protected def run(): Seq[Seq[InternalRow]] = {
+      // locals: the task closure must not capture this job
+      val (q, k, emb, order) = (this.q, this.k, this.emb, this.order)
+      val heaps = idx.rdd.sparkContext.runJob(idx.rdd,
+        (rows: Iterator[InternalRow]) => topK(rows, q, k, emb, order))
+      val hits = heaps.flatten.sorted(order).take(k).toSeq.zipWithIndex.map {
+        case (h, i) =>
+          val values = hitsSchema.fieldNames.map {
+            case "rank" => i + 1
+            case "similarity" => if (h.simNull) null else h.sim
+            case "transplant_date" => dateText.eval(h.row)
+            case c => h.row.get(in.fieldIndex(c), in(c).dataType)
+          }
+          InternalRow.fromSeq(values.toSeq): InternalRow
+      }
+      val folded = TransplantStats.hits(hits, hitsSchema)
+      Seq(hits, Seq(TransplantStats.statistics(folded)), Seq(TransplantStats.insights(folded)))
+    }
+
+    override def toString: String = s"top-$k cosine, 1 query"
+  }
+
+  /** An index row and its similarity (`simNull` when the embedding is
+    * NULL). */
+  private final class Scored(val sim: Double, val simNull: Boolean, val row: InternalRow)
+      extends Serializable
+
+  /** The hit order: similarity desc (NULL last), then `patient_id`, then
+    * `hospital` (NULL first), as Spark's `SortOrder`s compare. */
+  private final class HitOrder(pid: Int, hospital: Int) extends Ordering[Scored] {
+    def compare(a: Scored, b: Scored): Int = compare(a.sim, a.simNull, a.row, b)
+
+    def compare(sim: Double, simNull: Boolean, row: InternalRow, b: Scored): Int = {
+      val bySim =
+        if (simNull || b.simNull) java.lang.Boolean.compare(simNull, b.simNull)
+        else SQLOrderingUtil.compareDoubles(b.sim, sim)
+      if (bySim != 0) bySim
+      else {
+        val byId = text(row, b.row, pid)
+        if (byId != 0) byId else text(row, b.row, hospital)
+      }
+    }
+
+    private def text(x: InternalRow, y: InternalRow, i: Int): Int =
+      if (x.isNullAt(i) || y.isNullAt(i)) java.lang.Boolean.compare(!x.isNullAt(i), !y.isNullAt(i))
+      else x.getUTF8String(i).binaryCompare(y.getUTF8String(i))
+  }
+
+  /** One partition's k best rows in `order` (unsorted). */
+  private def topK(rows: Iterator[InternalRow], q: Array[Float], k: Int, emb: Int,
+                   order: HitOrder): Array[Scored] = {
+    val query = UnsafeArrayData.fromPrimitiveArray(q)
+    val heap = new java.util.PriorityQueue[Scored](math.max(k, 1), order.reverse)
+    rows.foreach { r =>
+      val simNull = r.isNullAt(emb)
+      val sim = if (simNull) 0.0 else CosineSimilarityExpr.cosine(r.getArray(emb), query)
+      if (heap.size < k) heap.add(new Scored(sim, simNull, r.copy()))
+      else if (k > 0 && order.compare(sim, simNull, r, heap.peek()) < 0) {
+        heap.poll()
+        heap.add(new Scored(sim, simNull, r.copy()))
+      }
+    }
+    heap.toArray(new Array[Scored](0))
   }
 }

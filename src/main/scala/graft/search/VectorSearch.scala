@@ -1,10 +1,16 @@
 package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 
 import graft.{QueryPack, Tables}
+import graft.functions.CosineTopKExpr
 import graft.functions.VectorFunctions._
 
 /** Top-k cosine similarity search — the reference's flagship query path
@@ -99,24 +105,65 @@ object VectorSearch extends QueryPack {
       count_distinct(col("hospital")).as("hospitals_hit"))
   }
 
-  /** Batched multi-query top-k: one pass over the corpus answers the
-    * whole batch. The queries `(query_id, q_emb)` are collected to the
-    * driver and travel to the tasks inside the plan; each task runs the
+  /** Batched multi-query top-k: one Spark job over the corpus answers
+    * the whole batch. The queries `(query_id, q_emb)` are collected to
+    * the driver and travel to the tasks with the job; each task runs the
     * [[graft.functions.CosineTopKExpr]] kernel over its corpus rows
     * `(vec_id, embedding)` — every row decoded once for all queries,
     * norms summed once per row and per query, 6-dp rounding only for
     * scores that can still enter a heap — and keeps a k-sized heap per
-    * query_id. Only those heaps shuffle to the single final merge, so
-    * corpus rows never leave their partition and no (row, query) pair is
-    * ever a row. The result is `(query_id, rank, vec_id, sim)` ordered by
-    * query_id, rank: per query_id the k best `round(cosine, 6)`, ties by
-    * vec_id — bit for bit what scoring every pair and ranking them gives.
+    * query_id. The driver merges the tasks' heaps (≤ k × 16 bytes per
+    * query_id each), so nothing shuffles and no (row, query) pair is
+    * ever a row. The corpus is planned once per frame (its
+    * `queryExecution` keeps the RDD), so a caller that reuses one corpus
+    * frame pays for its planning once.
+    *
+    * The result is one frame over a [[CosineTopK]] leaf, `(query_id,
+    * rank, vec_id, sim)` ordered by query_id, rank: per query_id the k
+    * best `round(cosine, 6)`, ties by vec_id — bit for bit what scoring
+    * every pair and ranking them gives. Building it runs no job over the
+    * corpus; its first action runs the one job.
     */
   def batchKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    corpus
-      .agg(graft.functions.CosineTopKExpr(col("vec_id"), col("embedding"), queries, k).as("top"))
-      .select(inline(col("top")))
-      .orderBy(col("query_id"), col("rank"))
+    new BatchKnn(corpus, queries, k).frames.head
+
+  private final class BatchKnn(corpus: DataFrame, queries: DataFrame, k: Int)
+      extends TopKJob(corpus.sparkSession, "search:batch-knn") {
+    private val kernel = {
+      def ref(name: String) = {
+        val f = corpus.schema(name)
+        BoundReference(corpus.schema.fieldIndex(name), f.dataType, f.nullable)
+      }
+      val e = CosineTopKExpr(ref("vec_id"), ref("embedding"), CosineTopKExpr.Batch.collect(queries), k)
+      e.checkInputDataTypes() match {
+        case TypeCheckResult.TypeCheckFailure(msg) => throw new IllegalArgumentException(msg)
+        case _ => e
+      }
+    }
+    private val schema =
+      kernel.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+
+    def schemas: Seq[StructType] = Seq(schema)
+
+    protected def run(): Seq[Seq[InternalRow]] = {
+      val rdd = corpus.queryExecution.toRdd
+      val kernel = this.kernel // a local: the task closure must not capture this job
+      val heaps = rdd.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
+        val buf = kernel.createAggregationBuffer()
+        rows.foreach(kernel.update(buf, _))
+        kernel.serialize(buf)
+      })
+      val merged = heaps.iterator.map(kernel.deserialize)
+        .foldLeft(kernel.createAggregationBuffer())(kernel.merge)
+      val byQueryThenRank = new InterpretedOrdering(Seq(
+        SortOrder(BoundReference(0, schema(0).dataType, schema(0).nullable), Ascending),
+        SortOrder(BoundReference(1, IntegerType, nullable = false), Ascending)))
+      Seq(kernel.eval(merged).asInstanceOf[ArrayData].toSeq[InternalRow](schema)
+        .sorted(byQueryThenRank))
+    }
+
+    override def toString: String = s"top-$k cosine, ${kernel.batch}"
+  }
 
   def batchKnnQuery(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)

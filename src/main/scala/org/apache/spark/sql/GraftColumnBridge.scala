@@ -42,6 +42,11 @@ object GraftPlanBridge {
     classic.Dataset.ofRows(ds.sparkSession,
       execution.LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false))
   }
+
+  /** A frame over a resolved logical plan (analysis runs now; nothing
+    * executes until an action). */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }
 
 /** Bridge to the `private[sql]` session-state registries — imperative

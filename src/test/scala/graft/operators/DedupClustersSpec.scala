@@ -104,4 +104,20 @@ class DedupClustersSpec extends SparkSpec {
       members.foreach(m => assert(m._3 == members.length))
     }
   }
+
+  test("pageRankQuery leaves no cached edges or round state behind: after " +
+    "its action the only new persisted RDD is the result's own checkpoint") {
+    val sc = spark.sparkContext
+    MinHashDedup.minhashPairsStaged(spark, sfDir).count() // stage the pairs first
+    val before = sc.getPersistentRDDs.keySet
+    val query = DedupClusters.pageRankQuery(spark, sfDir)
+    val first = query.collect().toSeq
+    // the release runs on the listener bus at the first job end after the
+    // result is checkpointed; the drain's sentinel job is one
+    graft.tools.ListenerDrain(sc)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.size == 1 && left.values.forall(_.isCheckpointed),
+      s"new persisted RDDs after the action: ${left.values.map(_.toDebugString.linesIterator.next())}")
+    assert(query.collect().toSeq == first, "the result must stay readable after the release")
+  }
 }

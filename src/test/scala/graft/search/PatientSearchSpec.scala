@@ -41,9 +41,10 @@ class PatientSearchSpec extends SparkSpec {
     (ps, ps.searchSimilarPatients(PatientSchema.demoQueryPatient, topK))
   }
 
-  /** What the jobs run by one block launched: job count and tasks per
-    * stage. */
-  private case class Observed(jobs: Int, tasksPerStage: Map[Int, Int])
+  /** What the jobs run by one block launched: job count, tasks per
+    * stage and the jobs' descriptions (labels). */
+  private case class Observed(jobs: Int, tasksPerStage: Map[Int, Int],
+                              descriptions: Seq[String])
 
   /** Runs `body` under a SparkListener and returns what its jobs launched.
     * The listener bus is asynchronous, so [[ListenerDrain]] then waits
@@ -53,11 +54,15 @@ class PatientSearchSpec extends SparkSpec {
   private def observed[T](body: => T): (T, Observed) = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger(0)
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinelStages = ConcurrentHashMap.newKeySet[Int]()
     val tasks = new ConcurrentHashMap[Int, AtomicInteger]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (!ListenerDrain.isSentinel(js.properties)) jobs.incrementAndGet()
+        if (!ListenerDrain.isSentinel(js.properties)) {
+          jobs.incrementAndGet()
+          descriptions.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+        }
       override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
         if (ListenerDrain.isSentinel(ss.properties)) sentinelStages.add(ss.stageInfo.stageId)
       override def onTaskStart(ts: SparkListenerTaskStart): Unit =
@@ -68,7 +73,8 @@ class PatientSearchSpec extends SparkSpec {
     try {
       val result = body
       ListenerDrain(sc)
-      (result, Observed(jobs.get, tasks.asScala.map { case (k, v) => k -> v.get }.toMap))
+      (result, Observed(jobs.get, tasks.asScala.map { case (k, v) => k -> v.get }.toMap,
+        descriptions.asScala.toSeq))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -156,6 +162,38 @@ class PatientSearchSpec extends SparkSpec {
     assert(seen.jobs > 0 && seen.tasksPerStage.nonEmpty)
     assert(seen.tasksPerStage.values.forall(_ <= cores),
       s"tasks per stage ${seen.tasksPerStage} exceed $cores cores")
+  }
+
+  test("one job per search: collecting the hits, statistics and insights " +
+    "runs one job of <= one task per core, labelled search:cosine-topk") {
+    val ps = system._1
+    val cores = spark.sparkContext.defaultParallelism
+    val query = PatientSchema.demoQueryPatient.updated("meld_score", 22.0)
+    val (rows, seen) = observed {
+      val r = ps.searchSimilarPatients(query, topK)
+      (r.topSimilarPatients.collect(), r.transplantStatistics.collect(),
+        r.clinicalInsights.collect())
+    }
+    assert(rows._1.length == topK && rows._2.length == 1 && rows._3.length == 1)
+    assert(seen.jobs == 1, s"saw ${seen.jobs} jobs")
+    assert(seen.tasksPerStage.size == 1 && seen.tasksPerStage.values.forall(_ <= cores),
+      s"tasks per stage ${seen.tasksPerStage}")
+    assert(seen.descriptions == Seq("search:cosine-topk"))
+  }
+
+  test("one job per batch: batchKnn(...).collect() runs one job, labelled " +
+    "search:batch-knn") {
+    val idx = system._1.vectorIndex.get
+    val corpus = idx.select(xxhash64(col("patient_id"), col("hospital")).as("vec_id"),
+      col("embedding"))
+    val s = spark
+    import s.implicits._
+    val queries = idx.select("embedding").head(3).zipWithIndex
+      .map { case (r, j) => (j.toLong, r.getSeq[Float](0)) }.toSeq.toDF("query_id", "q_emb")
+    val (rows, seen) = observed(VectorSearch.batchKnn(corpus, queries, 4).collect())
+    assert(rows.length == 3 * 4)
+    assert(seen.jobs == 1, s"saw ${seen.jobs} jobs")
+    assert(seen.descriptions == Seq("search:batch-knn"))
   }
 
   /** Every node of `p`, through the plans that caches and adaptive

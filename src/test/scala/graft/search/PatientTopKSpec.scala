@@ -11,18 +11,19 @@ import org.scalacheck.util.Pretty
 
 import graft.SparkSpec
 import graft.functions.VectorFunctions
-import graft.stats.TransplantStats
 import graft.store.PatientIndex
 
 /** Differential spec of the facade's global top-k: on generated indexes
   * [[PatientSearch.search]] must give the bits of the scatter-gather
   * plan it replaced — a `row_number` per hospital keeping each shard's
   * local top-k, then `orderBy(similarity desc, patient_id,
-  * hospital).limit(k)` and the rank window — kept here as the reference.
-  * Hits (every metadata field included), statistics and insights rows
-  * and `totalSearched` must all agree.
+  * hospital).limit(k)` and the rank window — kept here as the reference,
+  * with the conditional-aggregate statistics and insights plans over its
+  * hits. Hits (every metadata field included), statistics and insights
+  * rows and `totalSearched` must all agree.
   */
 class PatientTopKSpec extends SparkSpec {
+  import PatientTopKSpec._
 
   private val hospitals = Seq("Hospital_A", "Hospital_B", "Hospital_C")
 
@@ -163,7 +164,7 @@ class PatientTopKSpec extends SparkSpec {
       try {
         idx.count() // fill the cache: both plans read the same metadata.timestamp
         val q = c.q.toArray
-        val got = PatientSearch.search(idx, c.sizes, q, c.k)
+        val got = PatientSearch.search(new PlannedIndex(idx), c.sizes, q, c.k)
         val want = reference(idx, c.sizes, q, c.k)
         try {
           val same = Seq(
@@ -189,5 +190,94 @@ class PatientTopKSpec extends SparkSpec {
       "zero embedding", "hospital with fewer than k rows", "k > corpus",
       "partitions mixing hospitals")
     assert(required.subsetOf(seen), s"generator never produced: ${required -- seen}")
+  }
+
+  test("the search's frames inside larger plans, and collected twice, give " +
+    "the reference's rows") {
+    // the frames go on as one partition into joins, aggregates and sorts
+    def larger(r: PatientSearch.Result): Seq[DataFrame] = Seq(
+      r.topSimilarPatients.crossJoin(r.transplantStatistics).crossJoin(r.clinicalInsights)
+        .orderBy(col("rank")),
+      r.topSimilarPatients.groupBy(col("hospital"))
+        .agg(count(lit(1)).as("n"), max(col("similarity")).as("best"), min(col("rank")).as("top"))
+        .orderBy(col("hospital")),
+      r.topSimilarPatients.select(col("rank"), round(col("similarity"), 3).as("s"))
+        .union(r.transplantStatistics.select(lit(0), col("transplant_rate")))
+        .orderBy(col("rank")))
+    val prop = Prop.forAll(genCase) { c =>
+      val idx = PatientIndex.build(spark.createDataFrame(
+        spark.sparkContext.parallelize(c.rows, c.parts), embeddedSchema))
+      try {
+        idx.count()
+        val q = c.q.toArray
+        val got = PatientSearch.search(new PlannedIndex(idx), c.sizes, q, c.k)
+        val want = reference(idx, c.sizes, q, c.k)
+        try {
+          val frames = (r: PatientSearch.Result) =>
+            Seq(r.topSimilarPatients, r.transplantStatistics, r.clinicalInsights)
+          val first = frames(got).map(rows)
+          val same = Seq(
+            frames(got).map(_.schema) == frames(want).map(_.schema),
+            larger(got).map(rows) == larger(want).map(rows),
+            frames(got).map(rows) == first,
+            first == frames(want).map(rows))
+          Prop(same.forall(identity)) :| s"checks $same"
+        } finally want.topSimilarPatients.unpersist()
+      } finally idx.unpersist()
+    }
+    val res = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(12).withInitialSeed(20261019L), prop)
+    assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
+  }
+}
+
+
+object PatientTopKSpec {
+  /** The statistics and insights plans the facade ran before it folded
+    * them on the driver: one conditional-aggregation pass over the hits
+    * each (similarity_search.py:366-407 and 707-738). */
+  object TransplantStats {
+    def statisticsBlock(hits: DataFrame): DataFrame = {
+      val t = col("received_transplant") // promoted boolean on index rows
+      hits.agg(
+        count(lit(1)).as("total_similar_patients"),
+        sum(when(t, 1L).otherwise(0L)).as("transplanted_count"),
+        sum(when(!t, 1L).otherwise(0L)).as("not_transplanted_count"),
+        (sum(when(t, 1L).otherwise(0L)) / nullif(count(lit(1)), lit(0L)))
+          .as("transplant_rate"),
+        sum(when(t && col("transplant_success"), 1L).otherwise(0L))
+          .as("successful_transplants"),
+        (sum(when(t && col("transplant_success"), 1L).otherwise(0L)) /
+          nullif(sum(when(t, 1L).otherwise(0L)), lit(0L)))
+          .as("transplant_success_rate"),
+        avg(when(t, col("days_to_transplant"))).as("average_wait_time_days"),
+        (avg(when(t, col("days_to_transplant"))) / 30.44)
+          .as("average_wait_time_months"),
+        sum(when(!t && col("waitlist_status") === 0, 1L).otherwise(0L))
+          .as("still_on_waitlist"),
+        sum(when(!t && col("waitlist_status") === 1, 1L).otherwise(0L))
+          .as("removed_too_sick"),
+        sum(when(!t && col("waitlist_status") === 2, 1L).otherwise(0L))
+          .as("removed_improved"),
+        sum(when(!t && col("waitlist_status") === 3, 1L).otherwise(0L))
+          .as("deceased_on_waitlist"))
+    }
+
+    def clinicalInsights(hits: DataFrame): DataFrame = {
+      val t = col("received_transplant")
+      val succ = t && col("transplant_success")
+      hits.agg(
+        avg(when(t, col("days_to_transplant"))).as("avg_wait_transplanted_days"),
+        (avg(when(t, col("days_to_transplant"))) / 30.44)
+          .as("avg_wait_transplanted_months"),
+        avg(when(succ, col("metadata.age"))).as("avg_age_success"),
+        avg(when(succ, col("metadata.meld_score"))).as("avg_meld_success"),
+        avg(when(succ, col("metadata.diabetes").cast("int")))
+          .as("diabetes_rate_success"),
+        avg(when(!t, col("metadata.days_on_waitlist")))
+          .as("avg_wait_not_transplanted_days"),
+        sum(when(!t && col("waitlist_status") === 0, 1L).otherwise(0L))
+          .as("still_waiting"))
+    }
   }
 }
