@@ -4,17 +4,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Batched top-k cosine search as one ungrouped aggregate: for a fixed
-  * batch of query vectors, `CosineTopKExpr(id, embedding, batch, k)`
-  * over a corpus keeps, per query_id, the k best
+/** The batched top-k cosine search kernel: for a fixed batch of query
+  * vectors, `CosineTopKExpr(batch, k, id, embedding)` over a corpus's
+  * `(id, embedding)` rows keeps, per query_id, the k best
   * `(id, round(cosine(embedding, q), 6))` and returns them as
-  * `array<struct<query_id, rank int, vec_id bigint, sim double>>`,
+  * `(query_id, rank int, vec_id bigint, sim double)` rows,
   * one query_id after another, each ranked by rounded score desc, ties
   * id asc.
   *
@@ -36,46 +33,30 @@ import org.apache.spark.sql.types._
   *
   * Rows with a NULL id or embedding, and queries with a NULL vector,
   * score nothing. Queries that share a query_id share one heap.
-  * `VectorSearch.batchKnn` runs `update` over each corpus partition in
-  * one job and `merge`s the serialized heaps (≤ k × 16 bytes per
-  * query_id) on the driver.
+  * `VectorSearch.batchKnn` folds each corpus partition into one buffer
+  * with `update` in one job, ships it `serialize`d (≤ k × 16 bytes per
+  * query_id) and `merge`s the buffers on the driver; `eval` ranks them.
+  * A plain kernel, not a Catalyst expression: no plan evaluates it, so it
+  * reads its two columns from the corpus rows by ordinal.
   */
-case class CosineTopKExpr(idExpr: Expression, embExpr: Expression,
-                          batch: CosineTopKExpr.Batch, k: Int,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[CosineTopKExpr.Heaps] {
+final class CosineTopKExpr(val batch: CosineTopKExpr.Batch, k: Int, idOrdinal: Int,
+                           embOrdinal: Int) extends Serializable {
   import CosineTopKExpr._
 
-  override def children: Seq[Expression] = Seq(idExpr, embExpr)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (idExpr.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"cosine top-k id must be BIGINT, got ${idExpr.dataType.simpleString}")
-    else if (!embExpr.dataType.isInstanceOf[ArrayType] ||
-             embExpr.dataType.asInstanceOf[ArrayType].elementType != FloatType)
-      TypeCheckResult.TypeCheckFailure(
-        s"cosine top-k embedding must be ARRAY<FLOAT>, got ${embExpr.dataType.simpleString}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** The type of [[eval]]'s rows. */
+  def schema: StructType = StructType(Seq(
     StructField("query_id", batch.idType, batch.idNullable),
     StructField("rank", IntegerType, nullable = false),
     StructField("vec_id", LongType, nullable = false),
-    StructField("sim", DoubleType, nullable = false))), containsNull = false)
+    StructField("sim", DoubleType, nullable = false)))
 
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Heaps =
+  def createBuffer(): Heaps =
     new Heaps(Array.fill(batch.slotIds.length)(new TopKByExpr.Buffer(k)))
 
-  override def update(buf: Heaps, input: InternalRow): Heaps = {
-    val idV = idExpr.eval(input)
-    val embV = embExpr.eval(input)
-    if (idV != null && embV != null) score(buf, idV.asInstanceOf[Long], embV.asInstanceOf[ArrayData])
-    buf
-  }
+  /** Scores one corpus row against every query. */
+  def update(buf: Heaps, row: InternalRow): Unit =
+    if (!row.isNullAt(idOrdinal) && !row.isNullAt(embOrdinal))
+      score(buf, row.getLong(idOrdinal), row.getArray(embOrdinal))
 
   private def score(buf: Heaps, id: Long, emb: ArrayData): Unit = {
     val n = emb.numElements()
@@ -149,22 +130,21 @@ case class CosineTopKExpr(idExpr: Expression, embExpr: Expression,
     if (!heap.excludes(raw, RoundingSlack)) heap.push(id, round6(raw))
   }
 
-  override def merge(a: Heaps, b: Heaps): Heaps = {
+  def merge(a: Heaps, b: Heaps): Heaps = {
     var s = 0
     while (s < a.heaps.length) { a.heaps(s).pushAll(b.heaps(s)); s += 1 }
     a
   }
 
-  override def eval(buf: Heaps): Any = {
-    val rows = buf.heaps.indices.flatMap { s =>
+  /** Every query_id's ranked hits, one query_id after another. */
+  def eval(buf: Heaps): Seq[InternalRow] =
+    buf.heaps.indices.flatMap { s =>
       buf.heaps(s).ranked.zipWithIndex.map { case ((id, sim), r) =>
         InternalRow(batch.slotIds(s), r + 1, id, sim)
       }
     }
-    new GenericArrayData(rows.toArray[Any])
-  }
 
-  override def serialize(buf: Heaps): Array[Byte] = {
+  def serialize(buf: Heaps): Array[Byte] = {
     val bos = new ByteArrayOutputStream(4 + buf.heaps.length * (4 + k * 16))
     val out = new DataOutputStream(bos)
     buf.heaps.foreach(_.writeTo(out))
@@ -172,20 +152,10 @@ case class CosineTopKExpr(idExpr: Expression, embExpr: Expression,
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): Heaps = {
+  def deserialize(bytes: Array[Byte]): Heaps = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     new Heaps(Array.fill(batch.slotIds.length)(TopKByExpr.Buffer.readFrom(in, k)))
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CosineTopKExpr =
-    copy(mutableAggBufferOffset = newOffset)
-
-  override def withNewInputAggBufferOffset(newOffset: Int): CosineTopKExpr =
-    copy(inputAggBufferOffset = newOffset)
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(idExpr = newChildren(0), embExpr = newChildren(1))
 }
 
 object CosineTopKExpr {

@@ -49,42 +49,52 @@ object PatientGenerator {
     * parallelizes a 150B-row generate; raise deliberately if a single
     * partition's range outgrows a task.
     *
-    * This pins GENERATION only. Consumers that cache the rows for repeated
-    * scans narrow-coalesce to one partition per core
-    * ([[graft.search.PatientSearch.setupHospitals]]): at ~9 ms of fixed
-    * overhead per task, 64 ranges per hospital would make every scan a
-    * tail of near-empty tasks, and a narrow coalesce keeps the values and
-    * their order bit-identical.
+    * This pins GENERATION only, not the tasks that run it. A narrow
+    * coalesce hands each task several whole ranges, each evaluated with
+    * its own partition index, so the values and their order stay
+    * bit-identical: [[graft.search.PatientSearch.setupHospitals]] runs
+    * the generator once at one task per core (at ~9 ms of fixed overhead
+    * per task, 64 ranges per hospital would be a tail of near-empty
+    * tasks) and tags each row with its range, which is all the per-range
+    * z-score stats need ([[graft.feat.Normalization.zscoreBySourceRange]]).
     */
   val genPartitions = 64
 
   /** S1+S2: n patients for one hospital. Seed shifts per column; pass a
     * different base seed per hospital for distinct populations.
+    *
+    * Three projections: the features, then `received_transplant` (drawn
+    * against the features), then the outcomes that depend on it. A column
+    * built from `rand`/`randn` is nondeterministic, so a projection that
+    * reads it cannot merge with the one that draws it; one projection per
+    * step (not one `withColumn` per column) keeps the plan, its analysis
+    * and its generated code small. Each draw keeps its own seed and its
+    * place in its `when` branch, so it sees the stream it always saw.
     */
   def patients(spark: SparkSession, n: Long, hospital: String, seed: Long): DataFrame = {
-    val base = spark.range(0, n, 1, genPartitions)
-      // S1 — features (similarity_search.py:59-80)
-      .withColumn("age", clip(normal(55, 15, seed + 1), 18, 80))
-      .withColumn("meld_score", clip(exponential(15, seed + 2), 6, 40))
-      .withColumn("bmi", clip(normal(27, 5, seed + 3), 18, 45))
-      .withColumn("creatinine", clip(exponential(1.2, seed + 4), 0.5, 8))
-      .withColumn("bilirubin", clip(exponential(5, seed + 5), 0.3, 50))
-      .withColumn("inr", clip(exponential(1.8, seed + 6), 0.8, 6))
-      .withColumn("sodium", clip(normal(138, 5, seed + 7), 125, 150))
-      .withColumn("albumin", clip(normal(3.2, 0.8, seed + 8), 1.5, 5))
-      .withColumn("dialysis", binomial(0.15, seed + 9))
-      .withColumn("ascites", binomial(0.40, seed + 10))
-      .withColumn("encephalopathy", binomial(0.25, seed + 11))
-      .withColumn("diabetes", binomial(0.30, seed + 12))
-      .withColumn("hypertension", binomial(0.45, seed + 13))
-      .withColumn("etiology_alcohol", binomial(0.30, seed + 14))
-      .withColumn("etiology_nash", binomial(0.25, seed + 15))
-      .withColumn("etiology_hcv", binomial(0.20, seed + 16))
-      .withColumn("etiology_other", binomial(0.25, seed + 17))
-      .withColumn("blood_type_o", binomial(0.45, seed + 18))
-      .withColumn("blood_type_a", binomial(0.40, seed + 19))
-      .withColumn("blood_type_b", binomial(0.15, seed + 20))
-      .withColumn("patient_id", format_string("PT_%06d", col("id")))
+    // S1 — features (similarity_search.py:59-80)
+    val features = spark.range(0, n, 1, genPartitions).select(
+      clip(normal(55, 15, seed + 1), 18, 80).as("age"),
+      clip(exponential(15, seed + 2), 6, 40).as("meld_score"),
+      clip(normal(27, 5, seed + 3), 18, 45).as("bmi"),
+      clip(exponential(1.2, seed + 4), 0.5, 8).as("creatinine"),
+      clip(exponential(5, seed + 5), 0.3, 50).as("bilirubin"),
+      clip(exponential(1.8, seed + 6), 0.8, 6).as("inr"),
+      clip(normal(138, 5, seed + 7), 125, 150).as("sodium"),
+      clip(normal(3.2, 0.8, seed + 8), 1.5, 5).as("albumin"),
+      binomial(0.15, seed + 9).as("dialysis"),
+      binomial(0.40, seed + 10).as("ascites"),
+      binomial(0.25, seed + 11).as("encephalopathy"),
+      binomial(0.30, seed + 12).as("diabetes"),
+      binomial(0.45, seed + 13).as("hypertension"),
+      binomial(0.30, seed + 14).as("etiology_alcohol"),
+      binomial(0.25, seed + 15).as("etiology_nash"),
+      binomial(0.20, seed + 16).as("etiology_hcv"),
+      binomial(0.25, seed + 17).as("etiology_other"),
+      binomial(0.45, seed + 18).as("blood_type_o"),
+      binomial(0.40, seed + 19).as("blood_type_a"),
+      binomial(0.15, seed + 20).as("blood_type_b"),
+      format_string("PT_%06d", col("id")).as("patient_id"))
 
     // S2 — outcomes (similarity_search.py:92-166)
     val meldFactor = (col("meld_score") - 6) / (40 - 6)
@@ -97,32 +107,26 @@ object PatientGenerator {
       lit(0.85) - (col("age") - 50) / 100 - (col("meld_score") - 15) / 100
         - (col("diabetes") + col("dialysis")) * 0.05, 0.3, 0.95)
 
+    val transplanted = col("received_transplant") === 1
     val u = rand(seed + 23) // waitlist status draw, p = [.6,.2,.1,.1]
-    base
-      .withColumn("received_transplant",
-        (rand(seed + 21) < transplantProb).cast("int"))
-      .withColumn("days_to_transplant",
-        when(col("received_transplant") === 1,
-          clip(exponential(120, seed + 22), 1, 1000)).otherwise(0.0))
-      .withColumn("transplant_success",
-        when(col("received_transplant") === 1,
-          (rand(seed + 24) < successProb).cast("int")).otherwise(0))
-      .withColumn("transplant_date",
-        when(col("received_transplant") === 1,
+    features
+      .select(col("*"), (rand(seed + 21) < transplantProb).cast("int").as("received_transplant"))
+      .select(col("*"),
+        when(transplanted, clip(exponential(120, seed + 22), 1, 1000)).otherwise(0.0)
+          .as("days_to_transplant"),
+        when(transplanted, (rand(seed + 24) < successProb).cast("int")).otherwise(0)
+          .as("transplant_success"),
+        when(transplanted,
           date_add(to_date(lit(epoch)) - expr("INTERVAL 5 YEARS"),
             (rand(seed + 25) * (5 * 365)).cast("int")))
-          .otherwise(lit(null).cast("date")))
-      .withColumn("follow_up_days",
-        when(col("received_transplant") === 1,
-          clip(exponential(400, seed + 26), 30, 1800)).otherwise(0.0))
-      .withColumn("days_on_waitlist",
-        when(col("received_transplant") === 0,
-          clip(exponential(200, seed + 27), 1, 2000)).otherwise(0.0))
-      .withColumn("waitlist_status",
-        when(col("received_transplant") === 1, 0)
-          .when(u < 0.6, 0).when(u < 0.8, 1).when(u < 0.9, 2).otherwise(3))
-      .withColumn("hospital", lit(hospital))
-      .drop("id")
+          .otherwise(lit(null).cast("date")).as("transplant_date"),
+        when(transplanted, clip(exponential(400, seed + 26), 30, 1800)).otherwise(0.0)
+          .as("follow_up_days"),
+        when(col("received_transplant") === 0, clip(exponential(200, seed + 27), 1, 2000))
+          .otherwise(0.0).as("days_on_waitlist"),
+        when(transplanted, 0)
+          .when(u < 0.6, 0).when(u < 0.8, 1).when(u < 0.9, 2).otherwise(3).as("waitlist_status"),
+        lit(hospital).as("hospital"))
   }
 
   /** `setup_hospitals` (similarity_search.py:419-434): one DataFrame for

@@ -61,42 +61,67 @@ class PatientSearch(spark: SparkSession) {
   /** setup_hospitals (similarity_search.py:419-434): generate shards,
     * z-score per hospital (the reference normalizes each client against
     * its own stats, similarity_search.py:180+198), assemble feature
-    * arrays.
+    * arrays. Returns the cached patient table, already filled.
     *
     * Layout rule: generation stays pinned at
     * [[PatientGenerator.genPartitions]] ranges per hospital (the seeded
-    * `rand`/`randn` streams are per partition), but the cached table holds
-    * one partition per core (`defaultParallelism`). A task's fixed
-    * overhead (~9 ms) dwarfs its per-row work, so the embed pass, the
-    * cached index and every search scan run one task per core instead of
-    * one per generator range. The coalesce is narrow: each merged task
-    * reads its parent ranges in index order, so the rows, their order
-    * (which `Mlp.localFit` slices into minibatches) and the z-score stats
-    * are bit-identical to the uncoalesced table.
+    * `rand`/`randn` streams are per partition), but everything after it
+    * runs one task per core (`defaultParallelism`). A task's fixed
+    * overhead (~9 ms) dwarfs its per-row work, so the generator pass, the
+    * z-score stats, the embed pass, the cached index and every search
+    * scan run one task per core instead of one per generator range. The
+    * coalesce is narrow: each merged task reads its parent ranges in
+    * index order, and `rand`/`randn` see the same partition indices, so
+    * the rows and their order (which `Mlp.localFit` slices into
+    * minibatches) are bit-identical to the uncoalesced table.
+    *
+    * Generate once: the generator runs in one job (`setup:generate`),
+    * which materializes its coalesced output with each row's source range
+    * (`spark_partition_id()` over the generated ranges) in a cache that
+    * this call releases before it returns. The z-score stats are one fold
+    * over that cache (`setup:zscore-stats`,
+    * [[Normalization.zscoreBySourceRange]]): a partial per (hospital,
+    * range) with Spark's `avg`/`stddev_pop` update formulas, merged in
+    * range order on the driver — the bits of Spark's two-phase aggregate
+    * over the uncoalesced frame, without its 64 tasks per hospital. The
+    * z-score and the feature array are then computed over the same cache
+    * and the patient table cached (`setup:cache-fill`).
     *
     * Plan rule: the table is cached over a one-leaf logical plan
     * ([[org.apache.spark.sql.GraftPlanBridge.oneLeaf]]), not over the
-    * generator's lineage (29 `withColumn`s per hospital that cannot
+    * generator's lineage (a few projections per hospital that cannot
     * collapse around `rand`/`randn`, times the hospitals, plus the
     * z-score join). The index and every search frame derive from this
     * table, so their plans stay small: Spark re-analyzes a frame's plan
     * when it is built and prints it for every SQL execution and AQE
     * stage update, which used to cost a search more driver time than its
-    * scoring. Planning the one-leaf frame runs the z-score stats stage
-    * (AQE plans the join from its result) here, during set-up, instead
-    * of when the cache first fills; it is the same work, done earlier.
+    * scoring.
     */
   def setupHospitals(configs: Seq[(String, Long)], seed: Long = 42L): DataFrame = {
-    val raw = PatientGenerator.setupHospitals(spark, configs, seed)
-    val normalized = Normalization.zscore(raw, perGroup = Some("hospital"))
-    val withFeatures = JobLabel(spark, "setup:zscore-stats") {
-      GraftPlanBridge.oneLeaf(
-        Normalization.assembleFeatures(normalized)
-          // keep raw outcome columns for metadata (z-scored features live in the array)
-          .coalesce(spark.sparkContext.defaultParallelism))
-    }.cache()
+    val generated = JobLabel(spark, "setup:generate") {
+      val g = PatientGenerator.setupHospitals(spark, configs, seed)
+        .withColumn(PatientSearch.SourceRange, spark_partition_id())
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .cache()
+      fill(g)
+    }
+    val normalized = JobLabel(spark, "setup:zscore-stats") {
+      Normalization.zscoreBySourceRange(generated, PatientSearch.SourceRange, "hospital")
+    }
+    val withFeatures = JobLabel(spark, "setup:cache-fill") {
+      // keep raw outcome columns for metadata (z-scored features live in the array)
+      fill(GraftPlanBridge.oneLeaf(Normalization.assembleFeatures(normalized)).cache())
+    }
+    generated.unpersist(blocking = true)
     patients = Some(withFeatures)
     withFeatures
+  }
+
+  /** Fills `cached`'s cache in one job (a count would add an aggregate's
+    * two). */
+  private def fill(cached: DataFrame): DataFrame = {
+    cached.write.format("noop").mode("overwrite").save()
+    cached
   }
 
   /** run_federated_training (similarity_search.py:436-474). */
@@ -152,6 +177,9 @@ class PatientSearch(spark: SparkSession) {
 }
 
 object PatientSearch {
+  /** The generated rows' source-range column during set-up. */
+  private val SourceRange = "__source_range"
+
   /** Search result shape (similarity_search.py:359-363). */
   case class Result(topSimilarPatients: DataFrame, totalSearched: Long,
                     transplantStatistics: DataFrame, clinicalInsights: DataFrame)

@@ -2,12 +2,10 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructType}
 
 import graft.{QueryPack, Tables}
 import graft.functions.CosineTopKExpr
@@ -130,18 +128,16 @@ object VectorSearch extends QueryPack {
   private final class BatchKnn(corpus: DataFrame, queries: DataFrame, k: Int)
       extends TopKJob(corpus.sparkSession, "search:batch-knn") {
     private val kernel = {
-      def ref(name: String) = {
-        val f = corpus.schema(name)
-        BoundReference(corpus.schema.fieldIndex(name), f.dataType, f.nullable)
-      }
-      val e = CosineTopKExpr(ref("vec_id"), ref("embedding"), CosineTopKExpr.Batch.collect(queries), k)
-      e.checkInputDataTypes() match {
-        case TypeCheckResult.TypeCheckFailure(msg) => throw new IllegalArgumentException(msg)
-        case _ => e
-      }
+      val Seq(id, emb) = Seq("vec_id", "embedding").map(corpus.schema(_).dataType)
+      if (id != LongType)
+        throw new IllegalArgumentException(s"cosine top-k id must be BIGINT, got ${id.simpleString}")
+      if (!emb.isInstanceOf[ArrayType] || emb.asInstanceOf[ArrayType].elementType != FloatType)
+        throw new IllegalArgumentException(
+          s"cosine top-k embedding must be ARRAY<FLOAT>, got ${emb.simpleString}")
+      new CosineTopKExpr(CosineTopKExpr.Batch.collect(queries), k,
+        corpus.schema.fieldIndex("vec_id"), corpus.schema.fieldIndex("embedding"))
     }
-    private val schema =
-      kernel.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    private val schema = kernel.schema
 
     def schemas: Seq[StructType] = Seq(schema)
 
@@ -149,17 +145,16 @@ object VectorSearch extends QueryPack {
       val rdd = corpus.queryExecution.toRdd
       val kernel = this.kernel // a local: the task closure must not capture this job
       val heaps = rdd.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
-        val buf = kernel.createAggregationBuffer()
+        val buf = kernel.createBuffer()
         rows.foreach(kernel.update(buf, _))
         kernel.serialize(buf)
       })
       val merged = heaps.iterator.map(kernel.deserialize)
-        .foldLeft(kernel.createAggregationBuffer())(kernel.merge)
+        .foldLeft(kernel.createBuffer())(kernel.merge)
       val byQueryThenRank = new InterpretedOrdering(Seq(
         SortOrder(BoundReference(0, schema(0).dataType, schema(0).nullable), Ascending),
         SortOrder(BoundReference(1, IntegerType, nullable = false), Ascending)))
-      Seq(kernel.eval(merged).asInstanceOf[ArrayData].toSeq[InternalRow](schema)
-        .sorted(byQueryThenRank))
+      Seq(kernel.eval(merged).sorted(byQueryThenRank))
     }
 
     override def toString: String = s"top-$k cosine, ${kernel.batch}"

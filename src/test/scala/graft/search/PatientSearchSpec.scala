@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.feat.Normalization
+import graft.feat.{Normalization, ZScoreStatsSpec}
 import graft.gen.PatientGenerator
 import graft.schema.PatientSchema
 import graft.sources.TableIO
@@ -42,9 +42,15 @@ class PatientSearchSpec extends SparkSpec {
   }
 
   /** What the jobs run by one block launched: job count, tasks per
-    * stage and the jobs' descriptions (labels). */
+    * stage, the jobs' descriptions (labels) and the stages that ran. */
   private case class Observed(jobs: Int, tasksPerStage: Map[Int, Int],
-                              descriptions: Seq[String])
+                              descriptions: Seq[String], stages: Seq[StageRun])
+
+  /** A stage that ran: its job's description and whether it computed
+    * generator ranges — its lineage holds `spark.range`'s
+    * [[PatientGenerator.genPartitions]]-partition source and its tasks
+    * read neither a cached block nor shuffle output. */
+  private case class StageRun(description: String, generates: Boolean)
 
   /** Runs `body` under a SparkListener and returns what its jobs launched.
     * The listener bus is asynchronous, so [[ListenerDrain]] then waits
@@ -57,25 +63,68 @@ class PatientSearchSpec extends SparkSpec {
     val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinelStages = ConcurrentHashMap.newKeySet[Int]()
     val tasks = new ConcurrentHashMap[Int, AtomicInteger]()
+    val stageJob = new ConcurrentHashMap[Int, String]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRun]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         if (!ListenerDrain.isSentinel(js.properties)) {
           jobs.incrementAndGet()
-          descriptions.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+          val d = String.valueOf(js.properties.getProperty("spark.job.description"))
+          descriptions.add(d)
+          js.stageIds.foreach(stageJob.put(_, d))
         }
       override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
         if (ListenerDrain.isSentinel(ss.properties)) sentinelStages.add(ss.stageInfo.stageId)
       override def onTaskStart(ts: SparkListenerTaskStart): Unit =
         if (!sentinelStages.contains(ts.stageId))
           tasks.computeIfAbsent(ts.stageId, _ => new AtomicInteger(0)).incrementAndGet()
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val info = sc.stageInfo
+        if (stageJob.containsKey(info.stageId)) {
+          val m = info.taskMetrics
+          val reads = m.inputMetrics.bytesRead > 0 || m.shuffleReadMetrics.totalBytesRead > 0
+          val ranges = info.rddInfos.exists(r =>
+            r.name == "ParallelCollectionRDD" && r.numPartitions == PatientGenerator.genPartitions)
+          stages.add(StageRun(stageJob.get(info.stageId), ranges && !reads))
+        }
+      }
     }
     sc.addSparkListener(listener)
     try {
       val result = body
       ListenerDrain(sc)
       (result, Observed(jobs.get, tasks.asScala.map { case (k, v) => k -> v.get }.toMap,
-        descriptions.asScala.toSeq))
+        descriptions.asScala.toSeq, stages.asScala.toSeq))
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("layout: set-up generates once at <= one task per core, labels every " +
+    "job, and leaves only the patient table in storage") {
+    val cores = spark.sparkContext.defaultParallelism
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = stored
+    val ps = new PatientSearch(spark)
+    val (table, setup) = observed(ps.setupHospitals(configs))
+    val added = stored -- before
+    val (index, embed) = observed(ps.generateAndStoreEmbeddings())
+    try {
+      for (seen <- Seq(setup, embed))
+        assert(seen.tasksPerStage.values.forall(_ <= cores),
+          s"tasks per stage ${seen.tasksPerStage} exceed $cores cores")
+      val generating = (setup.stages ++ embed.stages).filter(_.generates).map(_.description)
+      assert(generating == Seq("setup:generate"), s"generator ran in: $generating")
+      assert(Seq("setup:generate", "setup:zscore-stats", "setup:cache-fill")
+        .forall(setup.descriptions.contains), s"set-up jobs: ${setup.descriptions}")
+      val unlabelled = (setup.descriptions ++ embed.descriptions)
+        .filterNot(d => d.startsWith("setup:") || d.startsWith("index:"))
+      assert(unlabelled.isEmpty, s"jobs without a set-up label: $unlabelled")
+      assert(added.size == 1, s"storage after set-up: $added")
+      table.unpersist(blocking = true)
+      assert((stored & added).isEmpty, "the one RDD set-up left in storage is the patient table's")
+    } finally {
+      index.unpersist(blocking = true)
+      table.unpersist(blocking = true)
+    }
   }
 
   test("index holds one 128-dim embedding + metadata struct per patient") {
@@ -140,8 +189,9 @@ class PatientSearchSpec extends SparkSpec {
 
   test("layout: coalescing the cached patient table keeps every row, " +
     "in order and bit for bit") {
-    val uncoalesced = Normalization.assembleFeatures(Normalization.zscore(
-      PatientGenerator.setupHospitals(spark, configs), perGroup = Some("hospital")))
+    // the stats by Spark's aggregate over the 192-range generator frame
+    val uncoalesced = Normalization.assembleFeatures(ZScoreStatsSpec.aggregateZscore(
+      PatientGenerator.setupHospitals(spark, configs), PatientSchema.featureCols, Some("hospital")))
     val cached = system._1.patientTable.get
     assert(cached.columns.toSeq == uncoalesced.columns.toSeq)
     val expected = uncoalesced.collect().map(bits).toSeq
