@@ -19,9 +19,6 @@ import org.apache.spark.sql.SparkSession
   * taskMs 14.5 s → 6.3 s with the conf on; guide §2.2 "fewer, larger
   * reduce partitions"). Scale-neutral: at any volume AQE sizes the
   * cached plan's shuffles by bytes instead of the static conf.
-  *
-  * Opt out with `spark.graft.cachedPlanAqe=false` (set before first
-  * library call).
   */
 object SessionTune {
 
@@ -30,8 +27,7 @@ object SessionTune {
   def install(s: SparkSession): Unit =
     if (!s.conf.getOption(Marker).contains("true")) {
       s.conf.set(Marker, "true")
-      if (s.conf.get("spark.graft.cachedPlanAqe", "true") == "true")
-        s.conf.set(
-          "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      s.conf.set(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     }
 }

@@ -256,7 +256,8 @@ object StatsBroadcast extends Rule[LogicalPlan] with PredicateHelper {
     * `defaultSize` is a guess, not a bound), or any sketch is missing /
     * saturated / stale. This is what lets an
     * [[EagerAggregation]]-rewritten partial aggregate BROADCAST when
-    * its key space is small — the composition PlanAudit16 pins.
+    * its key space is small — the composition `StatsBroadcastSpec`
+    * pins ("eager aggregation composes").
     */
   private def aggOutputBytes(agg: Aggregate): Option[Long] = {
     val groupAttrs = agg.groupingExpressions.collect {

@@ -381,8 +381,8 @@ object SecondaryIndex extends QueryPack {
     * snapshot relation, its broadcastability is decided from the same
     * manifest fold that prunes the fact — Spark's own Filter sizing
     * sees the dim at full-table bytes and would shuffle the pruned
-    * fact anyway, wasting the index's work (PlanAudit14 pins the
-    * static BroadcastHashJoin).
+    * fact anyway, wasting the index's work (`StatsBroadcastSpec`
+    * pins the static BroadcastHashJoin, "index-pruned inner join").
     */
   def innerJoinPruned(spark: SparkSession, table: String, factKey: String,
                       index: String, dim: DataFrame, dimKey: String,

@@ -26,8 +26,8 @@ object PlanDump {
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     }
-    // collect() finalizes THIS df's AQE plan (count() would audit a
-    // different query — see graft.Plans)
+    // collect() finalizes THIS df's AQE plan (count() would plan and
+    // run a different query, its own aggregate over this one)
     df.collect()
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)

@@ -214,6 +214,49 @@ class EagerAggregationSpec extends SparkSpec {
     assert(rows(q2()) == withRuleOff(rows(q2())))
   }
 
+  test("measured effect: a high fan-in fact ships its partial " +
+    "aggregates, >= 5x fewer shuffle records than every fact row; rows " +
+    "identical") {
+    // 20000 rows over 50 join keys (400 per key), a per-key dimension;
+    // AQE and broadcast off so the static plan's shuffles run as planned
+    val f = freshDir("ea_fanin")
+    SnapshotTable.create(spark, f, spark.range(0, 20000).select(
+      (col("id") % 50).as("uk"), (col("id") % 997).cast("double").as("uv"),
+      col("id").as("ue"), (col("id") % 4).cast("string").as("up")), "up")
+    EagerAggregation.enableFor(f)
+    val d = freshDir("ea_users")
+    SnapshotTable.create(spark, d, spark.range(0, 50).select(
+      col("id").as("u_id"), (col("id") % 10).cast("string").as("u_region"),
+      lit("all").as("u_part")), "u_part")
+    def q() = SnapshotTable.read(spark, f)
+      .join(SnapshotTable.read(spark, d), col("uk") === col("u_id"))
+      .groupBy(col("u_region"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("uv").cast("decimal(18,6)")).cast("double").as("s"),
+        max(col("ue")).as("mx"))
+    def shuffled(): (Long, Seq[String]) = {
+      val df = q()
+      val out = rows(df)
+      (df.queryExecution.executedPlan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+          e.metrics("shuffleRecordsWritten").value
+      }.sum, out)
+    }
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val (on, onRows) = shuffled()
+      val (off, offRows) = withRuleOff(shuffled())
+      assert(onRows == offRows)
+      assert(on * 5 < off, s"shuffle records: rule on $on, off $off")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   test("driver query runs the eager plan") {
     val q = EagerAggregation.eagerAggQuery(spark, sfDir)
     assert(partialAggs(q) == 1, q.queryExecution.optimizedPlan.toString)

@@ -129,6 +129,34 @@ class StatsBroadcastSpec extends SparkSpec {
     }
   }
 
+  test("index-pruned inner join: its filtered snapshot dim broadcasts " +
+    "statically by the manifest fold that prunes the fact (Spark's own " +
+    "sizing sees the full dim); rule off shuffle-joins; rows identical") {
+    import graft.sources.SecondaryIndex
+    val t = dimTable()
+    val f = freshDir()
+    SnapshotTable.create(spark, f,
+      fact.withColumn("fp", (col("fk") % 4).cast("string")), "fp")
+    SecondaryIndex.create(spark, f, "fk", f + "_idx", buckets = 8)
+    withThreshold(131072L) {
+      // the dim keeps its full width in the output (its pad rides the
+      // aggregate), so only the pruned-bytes proof can fit it
+      def q() = SecondaryIndex.innerJoinPruned(spark, f, "fk", f + "_idx",
+        SnapshotTable.read(spark, t).filter(col("p") === "p3"), "k",
+        autoRefresh = false)
+        .groupBy(col("p"))
+        .agg(count(lit(1)).as("n"), sum(length(col("pad"))).as("padlen"),
+          sum(length(col("fpad"))).as("fpadlen"))
+      val on = q()
+      assert(bhj(on) === 1 && smj(on) === 0)
+      val (offBhj, offSmj, offRows) = withRuleOff {
+        val d = q(); (bhj(d), smj(d), d.collect().toSeq)
+      }
+      assert(offBhj === 0 && offSmj === 1)
+      assert(on.collect().toSeq === offRows)
+    }
+  }
+
   // ---- aggregate-side sizing (NDV-bounded builds) --------------------
 
   import graft.sources.TableStats
@@ -166,6 +194,36 @@ class StatsBroadcastSpec extends SparkSpec {
       assert(q.collect().toSeq.map(_.toString).sorted ===
         withRuleOff(aggJoined(aggSideOf(t))
           .collect().toSeq.map(_.toString).sorted))
+    }
+  }
+
+  test("eager aggregation composes: the partial aggregate it pushes " +
+    "below the join broadcasts by the fact's NDV bound where the wide " +
+    "dim and the fact both refuse; rule off shuffle-joins; rows identical") {
+    val f = keyedTable()
+    EagerAggregation.install(spark)
+    EagerAggregation.enableFor(spark, f, force = false)
+    TableStats.analyze(spark, f, Seq("k"), k = 1024)
+    // 50 keys, each with eight 128-char pads the query groups by, so the
+    // dim keeps its width through column pruning
+    val d = freshDir()
+    SnapshotTable.create(spark, d, spark.range(0, 50).select(
+      Seq(col("id").as("dk"), (col("id") % 10).as("region")) ++
+        (1 to 8).map(i => sha2(concat(lit(i.toString),
+          col("id").cast("string")), 512).as(s"pad$i")) :+
+        lit("all").as("dp"): _*), "dp")
+    def q() = SnapshotTable.read(spark, f)
+      .join(SnapshotTable.read(spark, d), col("k") === col("dk"))
+      .groupBy(col("region") +: (1 to 8).map(i => col(s"pad$i")): _*)
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"), max(col("v")).as("mx"))
+    withThreshold(16384L) {
+      val on = q()
+      assert(bhj(on) === 1 && smj(on) === 0, on.queryExecution.sparkPlan.toString)
+      val (offB, offS, offRows) = withRuleOff {
+        val o = q(); (bhj(o), smj(o), o.collect().map(_.toString).sorted.toSeq)
+      }
+      assert(offB === 0 && offS === 1)
+      assert(on.collect().map(_.toString).sorted.toSeq === offRows)
     }
   }
 

@@ -326,6 +326,8 @@ class SecondaryIndexSpec extends SparkSpec {
     // exactly the candidate list — nothing else was touched
     val after = SnapshotTable.readManifest(spark, t, v2).map(_.path).toSet
     assert((before -- after) === expectedFiles)
+    assert(expectedFiles.size < before.size,
+      "scattered keys must rewrite a strict subset of the table's files")
     // twin table through the plain scan path: end states identical
     val t2 = buildTable()
     SnapshotTable.commitDeleteKeys(spark, t2,

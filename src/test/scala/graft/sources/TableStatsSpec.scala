@@ -170,6 +170,17 @@ class TableStatsSpec extends SparkSpec {
     assert(ov.union === 500.0 && ov.intersect === 100.0)
     // consistency with the union-merge estimator in the exact regime
     assert(TableStats.merge(a, b).estimate === 500.0)
+    // the same sets as two ANALYZEd snapshot tables: the overlap of
+    // their sidecar sketches is exact too
+    def sidecar(ids: Range): TableStats.NdvSketch = {
+      val t = freshDir()
+      SnapshotTable.create(spark, t, ids.map(i => (i.toLong, s"g${i % 3}"))
+        .toDF("u", "g"), "g")
+      TableStats.analyze(spark, t, Seq("u"), k = 1024)
+        .sketches.find(_.col == "u").get
+    }
+    val ovT = TableStats.overlap(sidecar(1 to 300), sidecar(201 to 500))
+    assert(ovT.exact && ovT.union === 500.0 && ovT.intersect === 100.0)
   }
 
   test("overlap with a saturated side serves FLAGGED estimates within " +
