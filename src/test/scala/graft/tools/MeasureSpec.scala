@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -20,8 +21,20 @@ class MeasureSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val queries =
     Seq("q3_shipping_priority", "q_snapshot_skip", "q_minhash_neardup")
 
-  private lazy val records: Map[String, Measure.Record] = queries.map(n =>
-    n -> Measure.measure(spark, n)(SparkEntry.queries(n)(spark, sfDir))).toMap
+  // each query's record, and the frame of its measured run (the last
+  // one built), whose final plan AQE may have shaped differently from
+  // another run's
+  private lazy val measured: Map[String, (Measure.Record, DataFrame)] =
+    queries.map { n =>
+      var last: DataFrame = null
+      val r = Measure.measure(spark, n) {
+        last = SparkEntry.queries(n)(spark, sfDir); last
+      }
+      n -> (r, last)
+    }.toMap
+
+  private def records: Map[String, Measure.Record] =
+    measured.map { case (n, (r, _)) => n -> r }
 
   test("covered time is the union of the job intervals, not their sum") {
     assert(Measure.covered(Seq((0L, 10L), (5L, 15L), (20L, 25L)), 100L) === 20L)
@@ -60,10 +73,9 @@ class MeasureSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("exchange and join counts are the final plan's operator counts") {
     queries.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      df.collect()
+      val (r, df) = measured(n)
       val plan = df.queryExecution.executedPlan
-      val shape = records(n).shape.get
+      val shape = r.shape.get
       assert(shape.shuffles === collect(plan) { case e: ShuffleExchangeLike => e }.size, n)
       assert(shape.broadcasts === collect(plan) { case e: BroadcastExchangeLike => e }.size, n)
       assert(shape.joins === collect(plan) { case j: BaseJoinExec => j.nodeName }
