@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.unsafe.Platform
 
 /** Codegen'd cosine similarity over two float-array columns — the hot-path
   * form of [[VectorFunctions.cosineSimilarity]] (one fused loop inside
@@ -58,7 +59,7 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
 
 object CosineSimilarityExpr {
   /** The score of two non-NULL float arrays (the interpreted path, and
-    * the facade search's per-row scoring). */
+    * [[Scorer]]'s fallback). */
   def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -69,8 +70,50 @@ object CosineSimilarityExpr {
       dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
-    val denom = math.sqrt(na) * math.sqrt(nb)
+    cosine(dot, math.sqrt(na), math.sqrt(nb))
+  }
+
+  /** The score from its parts: the dot product and the two norms. */
+  def cosine(dot: Double, normA: Double, normB: Double): Double = {
+    val denom = normA * normB
     if (denom == 0.0) 0.0 else dot / denom
+  }
+
+  /** Scores rows against one query `q` (the facade search's per-row
+    * scoring): q is widened and ‖q‖² summed once, here. Per row only the
+    * dot product and ‖e‖² are summed, left to right, over the row's
+    * floats read in place. Every sum is the same sequence of additions
+    * as [[cosine]]'s, so a score is its bits. A row of another length
+    * than q (whose pair sums run over the common prefix), or an array
+    * that is not an `UnsafeArrayData`, is scored by [[cosine]] itself.
+    */
+  final class Scorer(q: Array[Float]) extends Serializable {
+    private val qd: Array[Double] = q.map(_.toDouble)
+    private val normQ: Double = {
+      var nb = 0.0
+      var i = 0
+      while (i < qd.length) { nb += qd(i) * qd(i); i += 1 }
+      math.sqrt(nb)
+    }
+    @transient private lazy val query = UnsafeArrayData.fromPrimitiveArray(q)
+
+    /** The cosine of a non-NULL row array `e` and q. */
+    def score(e: ArrayData): Double = e match {
+      case u: UnsafeArrayData if u.numElements() == qd.length =>
+        val qd = this.qd
+        val n = qd.length
+        val base = u.getBaseObject
+        val at = u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(n)
+        var dot = 0.0; var ne = 0.0
+        var i = 0
+        while (i < n) {
+          val x = Platform.getFloat(base, at + 4L * i).toDouble
+          dot += x * qd(i); ne += x * x
+          i += 1
+        }
+        cosine(dot, math.sqrt(ne), normQ)
+      case _ => cosine(e, query)
+    }
   }
 
   def apply(a: Column, b: Column): Column =

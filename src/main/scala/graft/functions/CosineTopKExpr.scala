@@ -42,6 +42,7 @@ import org.apache.spark.sql.types._
 final class CosineTopKExpr(val batch: CosineTopKExpr.Batch, k: Int, idOrdinal: Int,
                            embOrdinal: Int) extends Serializable {
   import CosineTopKExpr._
+  import CosineSimilarityExpr.cosine
 
   /** The type of [[eval]]'s rows. */
   def schema: StructType = StructType(Seq(
@@ -162,12 +163,6 @@ object CosineTopKExpr {
 
   /** Largest move of Spark's 6-dp rounding (5e-7), with headroom. */
   private val RoundingSlack = 1e-6
-
-  /** [[CosineSimilarityExpr]]'s score from its three parts. */
-  private def cosine(dot: Double, sqrtNa: Double, sqrtNb: Double): Double = {
-    val denom = sqrtNa * sqrtNb
-    if (denom == 0.0) 0.0 else dot / denom
-  }
 
   /** Spark's `round(x, 6)` on a double. */
   private def round6(x: Double): Double =

@@ -1,5 +1,7 @@
 package graft.search
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,14 +12,35 @@ import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartiti
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** A cached frame planned once: the RDD its executed plan yields (a scan
   * of the cache). Searches run their job straight over this RDD, so an
   * index is analyzed and planned when it is built or loaded, not again
   * per query.
+  *
+  * An index cached by [[graft.store.PatientIndex.cache]] and filled
+  * before it is planned here has its cache's lineage cut: the RDD's
+  * lineage ends at the cache's blocks, so a search job ships a task
+  * binary of the scan alone. That RDD cannot recompute a released
+  * cache, so [[rdd]] checks that the cache is still held.
   */
 final class PlannedIndex(val frame: DataFrame) {
-  val rdd: RDD[InternalRow] = frame.queryExecution.toRdd
+  private val buffers =
+    GraftPlanBridge.cacheBuffers(frame).getOrElse(throw PlannedIndex.released)
+  private val planned: RDD[InternalRow] = frame.queryExecution.toRdd
+
+  /** The planned scan of the cache. Throws an `IllegalStateException`
+    * once the cache has been released (`unpersist`), rather than let a
+    * job recompute the index's pipeline, or fail on the cut lineage's
+    * missing blocks. */
+  def rdd: RDD[InternalRow] =
+    if (buffers.getStorageLevel == StorageLevel.NONE) throw PlannedIndex.released else planned
+}
+
+object PlannedIndex {
+  private def released = new IllegalStateException(
+    "the index cache was released (unpersisted): build or load the index again before searching it")
 }
 
 /** One top-k search over a [[PlannedIndex]]: a single Spark job (one
@@ -36,10 +59,8 @@ abstract class TopKJob(spark: SparkSession, label: String) {
   protected def run(): Seq[Seq[InternalRow]]
 
   private lazy val results: IndexedSeq[IndexedSeq[InternalRow]] =
-    graft.JobLabel(spark, label)(run()).zip(schemas).map { case (rows, schema) =>
-      val toUnsafe = UnsafeProjection.create(schema)
-      rows.map(r => toUnsafe(r).copy(): InternalRow).toIndexedSeq
-    }.toIndexedSeq
+    graft.JobLabel(spark, label)(run()).zip(schemas)
+      .map { case (rows, schema) => TopKJob.toUnsafe(schema, rows) }.toIndexedSeq
 
   def rows(part: Int): IndexedSeq[InternalRow] = results(part)
 
@@ -49,6 +70,19 @@ abstract class TopKJob(spark: SparkSession, label: String) {
     CosineTopKStrategy.register(spark)
     schemas.indices.map(i =>
       GraftPlanBridge.ofRows(spark, CosineTopK(this, i, DataTypeUtils.toAttributes(schemas(i)))))
+  }
+}
+
+object TopKJob {
+  /** One projection per output schema, made on first use and shared by
+    * every later job of that schema (making one costs a codegen pass,
+    * ~1 ms). A projection reuses its one output row, so a use holds its
+    * lock. */
+  private val projections = new ConcurrentHashMap[StructType, UnsafeProjection]()
+
+  private def toUnsafe(schema: StructType, rows: Seq[InternalRow]): IndexedSeq[InternalRow] = {
+    val p = projections.computeIfAbsent(schema, s => UnsafeProjection.create(s))
+    p.synchronized(rows.map(r => p(r).copy(): InternalRow).toIndexedSeq)
   }
 }
 

@@ -2,7 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Coalesce, DateFormatClass, Literal, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Coalesce, DateFormatClass, Literal}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,8 +50,9 @@ class PatientSearch(spark: SparkSession) {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
 
-  /** Makes `idx` the searched index: its shard sizes are counted and its
-    * scan planned once, here. */
+  /** Makes `idx`, cached by [[PatientIndex.cache]] and not yet filled,
+    * the searched index: its shard sizes are counted (the job that fills
+    * the cache and cuts its lineage) and its scan planned once, here. */
   private def useIndex(idx: DataFrame): DataFrame = {
     shardSizes = Some(computeShardSizes(idx))
     index = Some(new PlannedIndex(idx))
@@ -150,7 +151,7 @@ class PatientSearch(spark: SparkSession) {
 
   /** Reload a persisted index into this facade (cold-start serving). */
   def loadIndex(path: String): DataFrame =
-    useIndex(graft.sources.TableIO.readIndex(spark, path).cache())
+    useIndex(PatientIndex.cache(graft.sources.TableIO.readIndex(spark, path)))
 
   /** search_similar_patients (similarity_search.py:541-559 → 322-363).
     * Returns (hits with rank/similarity/promoted outcome fields + metadata,
@@ -196,8 +197,14 @@ object PatientSearch {
     * search's one job over the planned index, and every frame reads its
     * kept result.
     *
-    * The job scores each row against the query with
-    * [[graft.functions.CosineSimilarityExpr]]'s arithmetic, and each
+    * The job's task binary is the scan of the index cache alone: the
+    * cache's lineage was cut when it was filled ([[PatientIndex.cache]]),
+    * so a search over a released cache fails at once
+    * ([[PlannedIndex.rdd]]). The job scores each row against the query
+    * with a [[graft.functions.CosineSimilarityExpr.Scorer]]: ‖q‖² is
+    * summed once per search, and per row only the dot product and ‖e‖²,
+    * reading the row's floats in place — the bits of
+    * [[graft.functions.CosineSimilarityExpr]]'s per-pair loop. Each
     * partition keeps a k-bounded heap in the order (similarity desc,
     * `patient_id`, `hospital`), comparing as Spark's sort does (NULL
     * similarity last, NaN above every number, -0.0 = 0.0). The driver
@@ -251,9 +258,11 @@ object PatientSearch {
 
     protected def run(): Seq[Seq[InternalRow]] = {
       // locals: the task closure must not capture this job
-      val (q, k, emb, order) = (this.q, this.k, this.emb, this.order)
-      val heaps = idx.rdd.sparkContext.runJob(idx.rdd,
-        (rows: Iterator[InternalRow]) => topK(rows, q, k, emb, order))
+      val (scorer, k, emb, order) =
+        (new CosineSimilarityExpr.Scorer(q), this.k, this.emb, this.order)
+      val rdd = idx.rdd
+      val heaps = rdd.sparkContext.runJob(rdd,
+        (rows: Iterator[InternalRow]) => topK(rows, scorer, k, emb, order))
       val hits = heaps.flatten.sorted(order).take(k).toSeq.zipWithIndex.map {
         case (h, i) =>
           val values = hitsSchema.fieldNames.map {
@@ -298,13 +307,12 @@ object PatientSearch {
   }
 
   /** One partition's k best rows in `order` (unsorted). */
-  private def topK(rows: Iterator[InternalRow], q: Array[Float], k: Int, emb: Int,
-                   order: HitOrder): Array[Scored] = {
-    val query = UnsafeArrayData.fromPrimitiveArray(q)
+  private def topK(rows: Iterator[InternalRow], scorer: CosineSimilarityExpr.Scorer, k: Int,
+                   emb: Int, order: HitOrder): Array[Scored] = {
     val heap = new java.util.PriorityQueue[Scored](math.max(k, 1), order.reverse)
     rows.foreach { r =>
       val simNull = r.isNullAt(emb)
-      val sim = if (simNull) 0.0 else CosineSimilarityExpr.cosine(r.getArray(emb), query)
+      val sim = if (simNull) 0.0 else scorer.score(r.getArray(emb))
       if (heap.size < k) heap.add(new Scored(sim, simNull, r.copy()))
       else if (k > 0 && order.compare(sim, simNull, r, heap.peek()) < 0) {
         heap.poll()

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.functions._
 
 /** S3/P4 — the "vector store": one DataFrame of
@@ -46,10 +46,10 @@ object PatientIndex {
 
   /** Build + cache the index from an embedded patient DataFrame
     * (generateAndStoreEmbeddings' storage half,
-    * similarity_search.py:509-537).
+    * similarity_search.py:509-537), cached by [[cache]].
     */
   def build(embedded: DataFrame): DataFrame =
-    embedded.select(
+    cache(embedded.select(
       col("patient_id"), col("hospital"), col("embedding"),
       metadataStruct.as("metadata"),
       // promoted outcome fields for easy access (similarity_search.py:344-349)
@@ -60,6 +60,16 @@ object PatientIndex {
         .otherwise(0.0).as("days_to_transplant"),
       col("transplant_date"),
       when(col("received_transplant") === 0, col("waitlist_status"))
-        .otherwise(0).cast("int").as("waitlist_status"))
-      .cache()
+        .otherwise(0).cast("int").as("waitlist_status")))
+
+  /** Caches an index so that its first fill also cuts the cache's RDD
+    * lineage ([[GraftPlanBridge.cacheWithoutLineage]]): a search job over
+    * the index then ships the cache scan (~16 KB), not the pipeline that
+    * computed the index — for a built index, the embed pass with the
+    * model's weights and the patient generator below it (~700 KB at the
+    * paper's scale). The index cache can then no longer be recomputed
+    * once released; a search over a released index fails
+    * ([[graft.search.PlannedIndex]]).
+    */
+  def cache(index: DataFrame): DataFrame = GraftPlanBridge.cacheWithoutLineage(index)
 }

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the `private[sql]` Column ⇄ Expression converters — the
@@ -47,6 +48,34 @@ object GraftPlanBridge {
     * executes until an action). */
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Caches `df` with its cache's column-buffer RDD marked for a local
+    * checkpoint, and returns it. The job that first fills the cache then
+    * also truncates the buffers' lineage, so a plan over the cache ships
+    * the cache scan only, not the plan that computed the cache. The mark
+    * must come before that job (an RDD that has run a job never
+    * checkpoints), so a cache that is already filled keeps its lineage.
+    * The storage level stays the one `cache()` sets, memory and disk.
+    * Once the cache is released, the buffers cannot be recomputed.
+    */
+  def cacheWithoutLineage(df: DataFrame): DataFrame = {
+    df.cache()
+    cacheBuilder(df).foreach { b =>
+      if (!b.isCachedColumnBuffersLoaded) b.cachedColumnBuffers.localCheckpoint()
+    }
+    df
+  }
+
+  /** The column-buffer RDD of `df`'s cache, or `None` if `df` is not
+    * cached. Its storage level is NONE once the cache is released. */
+  def cacheBuffers(df: DataFrame): Option[RDD[_]] =
+    cacheBuilder(df).map(_.cachedColumnBuffers)
+
+  private def cacheBuilder(df: DataFrame): Option[execution.columnar.CachedRDDBuilder] = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+  }
 }
 
 /** Bridge to the `private[sql]` session-state registries — imperative

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Range}
@@ -13,6 +15,7 @@ import org.apache.spark.sql.execution.RangeExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 import graft.feat.{Normalization, ZScoreStatsSpec}
@@ -272,6 +275,66 @@ class PatientSearchSpec extends SparkSpec {
     for ((name, df) <- Seq("hits" -> r.topSimilarPatients, "stats" -> r.transplantStatistics)) {
       val explained = df.queryExecution.toString.length
       assert(explained < 64 * 1024, s"$name frame explains in $explained chars")
+    }
+  }
+
+  /** The RDDs of `rdd`'s lineage, down every dependency. */
+  private def lineage(rdd: RDD[_]): Seq[RDD[_]] =
+    rdd +: rdd.dependencies.flatMap(d => lineage(d.rdd))
+
+  test("lineage: the index's planned scan, a loaded index's and a select over " +
+    "the index stop at the index cache and serialize in under 64 KB") {
+    val ps = new PatientSearch(spark)
+    val table = ps.setupHospitals(configs)
+    val index = ps.generateAndStoreEmbeddings()
+    val dir = java.nio.file.Files.createTempDirectory("graft_psearch_lineage").toString
+    ps.persistIndex(dir)
+    val reloaded = new PatientSearch(spark)
+    val loaded = reloaded.loadIndex(dir)
+    try {
+      // perfbench's knn_batch corpus
+      val corpus = index.select(xxhash64(col("patient_id"), col("hospital")).as("vec_id"),
+        col("embedding"))
+      val serializer = SparkEnv.get.closureSerializer.newInstance()
+      for ((name, df) <- Seq("index" -> index, "loaded index" -> loaded, "select" -> corpus)) {
+        val rdds = lineage(df.queryExecution.toRdd)
+        val names = rdds.map(_.getClass.getSimpleName)
+        val cached = rdds.filter(_.getStorageLevel != StorageLevel.NONE)
+        assert(cached.size == 1 && cached.head.isCheckpointed,
+          s"$name: lineage holds cached RDDs ${cached.map(_.id)}, not one checkpointed cache: $names")
+        assert(rdds.filter(_.dependencies.isEmpty).forall(_.getClass.getSimpleName ==
+          "LocalCheckpointRDD"), s"$name: lineage goes below the cache: $names")
+        assert(!names.contains("ParallelCollectionRDD") && !names.contains("FileScanRDD"),
+          s"$name: lineage holds a source: $names")
+        val bytes = serializer.serialize(df.queryExecution.toRdd).limit()
+        assert(bytes < 64 * 1024, s"$name: planned RDD serializes in $bytes bytes")
+      }
+    } finally {
+      Seq(loaded, index, table).foreach(_.unpersist(blocking = true))
+    }
+  }
+
+  test("a search over a released index cache fails at once with an " +
+    "IllegalStateException; a reloaded index searches again") {
+    val ps = new PatientSearch(spark)
+    val table = ps.setupHospitals(configs)
+    ps.generateAndStoreEmbeddings()
+    val dir = java.nio.file.Files.createTempDirectory("graft_psearch_released").toString
+    ps.persistIndex(dir)
+    def ids() = ps.searchSimilarPatients(PatientSchema.demoQueryPatient, topK)
+      .topSimilarPatients.select("patient_id", "hospital").collect().toSeq
+    try {
+      val before = ids()
+      ps.vectorIndex.get.unpersist(blocking = true)
+      val (err, seen) = observed(intercept[IllegalStateException](ids()))
+      assert(err.getMessage.contains("index cache was released") &&
+        err.getMessage.contains("build or load the index again"), err.getMessage)
+      assert(seen.jobs == 0, s"a search over the released cache ran ${seen.jobs} jobs")
+      ps.loadIndex(dir)
+      assert(ids() == before)
+    } finally {
+      ps.vectorIndex.foreach(_.unpersist(blocking = true))
+      table.unpersist(blocking = true)
     }
   }
 

@@ -76,7 +76,19 @@ class PatientTopKSpec extends SparkSpec {
   private val baseVec: Gen[Seq[Float]] =
     Gen.listOfN(dim, Gen.choose(-3, 3).map(_.toFloat))
 
-  private val genRow: Gen[Seq[Float] => Row] = for {
+  /** A row's embedding: mostly `vector`'s, sometimes NULL, one element
+    * shorter or longer than the query, or holding a NULL element. */
+  private def rowEmbedding(vector: Gen[Seq[Float]]): Gen[Seq[java.lang.Float]] = {
+    def boxed(v: Seq[Float]): Seq[java.lang.Float] = v.map(Float.box)
+    Gen.frequency(
+      16 -> vector.map(boxed),
+      1 -> Gen.const(null),
+      1 -> vector.map(v => boxed(v.init)),
+      1 -> Gen.zip(vector, Gen.choose(-3, 3)).map { case (v, x) => boxed(v :+ x.toFloat) },
+      1 -> Gen.zip(vector, Gen.choose(0, dim - 1)).map { case (v, i) => boxed(v).updated(i, null) })
+  }
+
+  private val genRow: Gen[Seq[java.lang.Float] => Row] = for {
     age <- Gen.choose(18.0, 80.0)
     meld <- Gen.choose(6.0, 40.0)
     bmi <- Gen.choose(17.0, 40.0)
@@ -91,18 +103,24 @@ class PatientTopKSpec extends SparkSpec {
     bili <- Gen.choose(0.2, 10.0)
     dialysis <- Gen.choose(0, 1)
     diabetes <- Gen.choose(0, 1)
-  } yield (emb: Seq[Float]) => Row(null, null, emb, age, meld, bmi, received, success,
+  } yield (emb: Seq[java.lang.Float]) => Row(null, null, emb, age, meld, bmi, received, success,
     wait, date.map(d => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d.toLong))).orNull,
     follow, onList, status, creat, bili, dialysis, diabetes)
 
   private final case class Case(rows: Seq[Row], q: Seq[Float], k: Int, parts: Int) {
     private def key(r: Row) = (r.getString(0), r.getString(1))
-    private def emb(r: Row) = r.getSeq[Float](2)
+    /** The row's embedding (NULL elements as the 0 they are stored as),
+      * or `None` for a NULL embedding. */
+    private def emb(r: Row): Option[Seq[Float]] =
+      Option(r.getSeq[java.lang.Float](2)).map(_.map(x => if (x == null) 0f else x.floatValue))
     private def cosine(a: Seq[Float], b: Seq[Float]): Double = {
-      val d = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
-      val n = math.sqrt(a.map(x => x.toDouble * x).sum) * math.sqrt(b.map(x => x.toDouble * x).sum)
+      val pairs = a.zip(b) // the common prefix, as the search scores it
+      val d = pairs.map { case (x, y) => x.toDouble * y }.sum
+      val n = math.sqrt(pairs.map { case (x, _) => x.toDouble * x }.sum) *
+        math.sqrt(pairs.map { case (_, y) => y.toDouble * y }.sum)
       if (n == 0.0) 0.0 else d / n
     }
+    private def embeddings = rows.map(r => r.getSeq[java.lang.Float](2))
     val sizes: Map[String, Long] =
       rows.groupBy(_.getString(1)).map { case (h, rs) => h -> rs.size.toLong }
     /** The row chunks `parallelize` makes: contiguous, in order. */
@@ -112,10 +130,17 @@ class PatientTopKSpec extends SparkSpec {
       if (rows.groupBy(_.getString(0)).values.exists(rs =>
         rs.map(_.getString(1)).distinct.size > 1 && rs.map(emb).distinct.size < rs.size))
         Some("same id and embedding in two hospitals") else None,
-      if (rows.map(r => cosine(emb(r), q)).groupBy(identity).values.exists(_.size > 1))
+      if (rows.flatMap(emb).map(cosine(_, q)).groupBy(identity).values.exists(_.size > 1))
         Some("similarity ties") else None,
-      if (rows.exists(r => emb(r).forall(_ == 0f)) || q.forall(_ == 0f))
+      if (rows.flatMap(emb).exists(_.forall(_ == 0f)) || q.forall(_ == 0f))
         Some("zero embedding") else None,
+      if (embeddings.contains(null)) Some("NULL embedding") else None,
+      if (embeddings.exists(e => e != null && e.size < q.size))
+        Some("embedding shorter than the query") else None,
+      if (embeddings.exists(e => e != null && e.size > q.size))
+        Some("embedding longer than the query") else None,
+      if (embeddings.exists(e => e != null && e.contains(null)))
+        Some("NULL element in an embedding") else None,
       if (hospitals.exists(h => sizes.getOrElse(h, 0L) > 0 && sizes(h) < k))
         Some("hospital with fewer than k rows") else None,
       if (rows.size < k) Some("k > corpus") else None,
@@ -137,7 +162,7 @@ class PatientTopKSpec extends SparkSpec {
     n <- Gen.frequency(1 -> Gen.const(0), 9 -> Gen.choose(1, 30))
     keys <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 9), Gen.frequency(
       5 -> Gen.const(hospitals(0)), 3 -> Gen.const(hospitals(1)), 1 -> Gen.const(hospitals(2)))))
-    embs <- Gen.listOfN(n, vector)
+    embs <- Gen.listOfN(n, rowEmbedding(vector))
     partials <- Gen.listOfN(n, genRow)
     q <- vector
     k <- Gen.choose(1, 8)
@@ -145,7 +170,7 @@ class PatientTopKSpec extends SparkSpec {
   } yield {
     // one row per (patient_id, hospital), the index's key; every other
     // row reuses the embedding its patient_id first had in any hospital
-    val firstEmb = mutable.Map[Int, Seq[Float]]()
+    val firstEmb = mutable.Map[Int, Seq[java.lang.Float]]()
     val rows = keys.zip(embs).zip(partials).distinctBy(_._1._1).zipWithIndex.map {
       case ((((id, h), e), mk), i) =>
         val emb = if (i % 2 == 0) firstEmb.getOrElseUpdate(id, e) else e
@@ -188,7 +213,8 @@ class PatientTopKSpec extends SparkSpec {
     assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
     val required = Set("same id and embedding in two hospitals", "similarity ties",
       "zero embedding", "hospital with fewer than k rows", "k > corpus",
-      "partitions mixing hospitals")
+      "partitions mixing hospitals", "NULL embedding", "embedding shorter than the query",
+      "embedding longer than the query", "NULL element in an embedding")
     assert(required.subsetOf(seen), s"generator never produced: ${required -- seen}")
   }
 
