@@ -287,7 +287,7 @@ class PatientSearchSpec extends SparkSpec {
     val ps = new PatientSearch(spark)
     val table = ps.setupHospitals(configs)
     val index = ps.generateAndStoreEmbeddings()
-    val dir = java.nio.file.Files.createTempDirectory("graft_psearch_lineage").toString
+    val dir = graft.Staged.scratch(spark, "graft_psearch_lineage")
     ps.persistIndex(dir)
     val reloaded = new PatientSearch(spark)
     val loaded = reloaded.loadIndex(dir)
@@ -319,7 +319,7 @@ class PatientSearchSpec extends SparkSpec {
     val ps = new PatientSearch(spark)
     val table = ps.setupHospitals(configs)
     ps.generateAndStoreEmbeddings()
-    val dir = java.nio.file.Files.createTempDirectory("graft_psearch_released").toString
+    val dir = graft.Staged.scratch(spark, "graft_psearch_released")
     ps.persistIndex(dir)
     def ids() = ps.searchSimilarPatients(PatientSchema.demoQueryPatient, topK)
       .topSimilarPatients.select("patient_id", "hospital").collect().toSeq
