@@ -111,7 +111,9 @@ object TopKByExpr {
 
   /** Parallel-array min-heap of ≤ k (id, score); heap order: lower score
     * first, ties id DESC — so the kept set matches ORDER BY score DESC,
-    * id ASC.
+    * id ASC. As in Spark SQL's ordering, NaN is above every other score
+    * and equal to itself, so the kept set does not depend on the order
+    * of pushes or merges.
     */
   final class Buffer(k: Int) {
     val ids = new Array[Long](k)
@@ -119,7 +121,9 @@ object TopKByExpr {
     var size = 0
 
     private def lt(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
-      s1 < s2 || (s1 == s2 && i1 > i2)
+      if (s1 < s2) true
+      else if (s1 == s2 || (s1.isNaN && s2.isNaN)) i1 > i2
+      else !s1.isNaN && s2.isNaN
 
     private def siftDown(from: Int): Unit = {
       var i = from
@@ -165,6 +169,11 @@ object TopKByExpr {
       while (i < other.size) { push(other.ids(i), other.scores(i)); i += 1 }
     }
 
+    /** The minimum less `slack` once the heap is full, −∞ while it has
+      * room: a score below it could not enter. */
+    def floor(slack: Double): Double =
+      if (size == k && k > 0) scores(0) - slack else Double.NegativeInfinity
+
     /** True when no value within `slack` of `score` could enter: the
       * heap is full and `score` lies more than `slack` below its minimum.
       * A NaN score is never excluded. */
@@ -173,7 +182,8 @@ object TopKByExpr {
 
     /** The kept pairs in output order: score desc, ties id asc. */
     def ranked: IndexedSeq[(Long, Double)] =
-      (0 until size).map(i => (ids(i), scores(i))).sortBy { case (id, s) => (-s, id) }
+      (0 until size).map(i => (ids(i), scores(i))).sortWith { case ((i1, s1), (i2, s2)) =>
+        lt(s2, i2, s1, i1) }
 
     /** Wire form: size, then (id, score) pairs — k × 16 bytes at most. */
     def writeTo(out: DataOutputStream): Unit = {

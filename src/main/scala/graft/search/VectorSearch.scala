@@ -108,13 +108,16 @@ object VectorSearch extends QueryPack {
     * the driver and travel to the tasks with the job; each task runs the
     * [[graft.functions.CosineTopKExpr]] kernel over its corpus rows
     * `(vec_id, embedding)` — every row decoded once for all queries,
-    * norms summed once per row and per query, 6-dp rounding only for
-    * scores that can still enter a heap — and keeps a k-sized heap per
-    * query_id. The driver merges the tasks' heaps (≤ k × 16 bytes per
-    * query_id each), so nothing shuffles and no (row, query) pair is
-    * ever a row. The corpus is planned once per frame (its
-    * `queryExecution` keeps the RDD), so a caller that reuses one corpus
-    * frame pays for its planning once.
+    * norms summed once per row and per query, a pair's dot product
+    * stopped at half the row once its Cauchy–Schwarz bound cannot reach
+    * its heap, 6-dp rounding only for scores that can still enter a
+    * heap — and keeps a k-sized heap per query_id. The driver merges the
+    * tasks' heaps (≤ k × 16 bytes per query_id each), so nothing
+    * shuffles and no (row, query) pair is ever a row. Each task adds the
+    * pairs it stopped early to the `longAccumulator` named
+    * [[graft.functions.CosineTopKExpr.skippedPairsAcc]]. The corpus is
+    * planned once per frame (its `queryExecution` keeps the RDD), so a
+    * caller that reuses one corpus frame pays for its planning once.
     *
     * The result is one frame over a [[CosineTopK]] leaf, `(query_id,
     * rank, vec_id, sim)` ordered by query_id, rank: per query_id the k
@@ -144,9 +147,11 @@ object VectorSearch extends QueryPack {
     protected def run(): Seq[Seq[InternalRow]] = {
       val rdd = corpus.queryExecution.toRdd
       val kernel = this.kernel // a local: the task closure must not capture this job
+      val skipped = rdd.sparkContext.longAccumulator(CosineTopKExpr.skippedPairsAcc)
       val heaps = rdd.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
         val buf = kernel.createBuffer()
         rows.foreach(kernel.update(buf, _))
+        skipped.add(buf.skipped)
         kernel.serialize(buf)
       })
       val merged = heaps.iterator.map(kernel.deserialize)

@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *     codegen, the scale-killer flags, and files read against the
   *     table's files per scan;
   *   - the Catalyst rule time of the measured run;
-  *   - the operators' dropped-candidate counters ([[Counters]]).
+  *   - the operators' dropped-candidate counters and the batch cosine
+  *     kernel's skipped-pair counter ([[Counters]]).
   *
   * Usage: runMain graft.tools.Measure <sfDir> <outFile> [q1,q2,...] [mult]
   *   - the query filter works as `graft.Verify`'s third argument does;
@@ -45,15 +46,17 @@ import org.apache.spark.sql.functions.{broadcast, col}
 object Measure {
 
   /** Names of the operators' dropped-candidate `longAccumulator`s (the
-    * nine sites in `src/main` register these seven names). Every record
-    * carries all of them, 0 when no task added to one.
+    * nine sites in `src/main` register these seven names) and of the
+    * batch cosine kernel's skipped-pair counter. Every record carries
+    * all of them, 0 when no task added to one.
     */
   val Counters: Seq[String] = {
+    import graft.functions.CosineTopKExpr
     import graft.operators.{CdcChunking, MinHashDedup, SimHash}
     Seq(MinHashDedup.droppedBucketsAcc, MinHashDedup.droppedDocSlotsAcc,
       MinHashDedup.droppedShinglesAcc, SimHash.droppedBucketsAcc,
       SimHash.droppedDocSlotsAcc, CdcChunking.droppedChunksAcc,
-      CdcChunking.droppedChunksAcc + ".slots")
+      CdcChunking.droppedChunksAcc + ".slots", CosineTopKExpr.skippedPairsAcc)
   }
 
   /** A job of the measured run; start and end are ms after its start. */

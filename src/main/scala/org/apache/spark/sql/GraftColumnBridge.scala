@@ -49,6 +49,14 @@ object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `df`'s rows as Catalyst rows: its executed plan's `executeCollect`
+    * under a new SQL execution id, as `Dataset.collect` runs it, but
+    * without decoding the rows through the Row encoder. */
+  def collectInternal(df: DataFrame): Array[catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
   /** Caches `df` with its cache's column-buffer RDD marked for a local
     * checkpoint, and returns it. The job that first fills the cache then
     * also truncates the buffers' lineage, so a plan over the cache ships

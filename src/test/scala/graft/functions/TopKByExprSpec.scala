@@ -72,6 +72,14 @@ class TopKByExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(merged.ranked == expected)
   }
 
+  test("NaN ranks above every score, so the kept set is the same in any push order") {
+    val items = Seq((1L, 0.5), (2L, Double.NaN), (3L, 0.9), (4L, Double.NaN), (5L, 0.7))
+    val want = Seq((2L, "NaN"), (4L, "NaN"), (3L, "0.9"))
+    items.permutations.foreach { p =>
+      assert(heap(3, p).ranked.map { case (id, s) => (id, s.toString) } == want, s"pushed $p")
+    }
+  }
+
   test("fewer rows than k: returns all, sorted") {
     assert(heap(10, Seq((1L, 0.2), (2L, 0.8))).ranked == Seq((2L, 0.8), (1L, 0.2)))
   }

@@ -358,7 +358,7 @@ class PatientSearchSpec extends SparkSpec {
 
   test("index persists shard-partitioned and search works after reload") {
     val (ps, before) = system
-    val dir = java.nio.file.Files.createTempDirectory("graft_psearch").toString
+    val dir = graft.Staged.scratch(spark, "graft_psearch")
     ps.persistIndex(dir)
     val reloaded = ps.loadIndex(dir)
     assert(reloaded.count() == 370)
@@ -396,7 +396,7 @@ class PatientSearchSpec extends SparkSpec {
       lit(0.0).as("follow_up_days"), lit(100.0).as("days_on_waitlist"),
       lit(1).as("waitlist_status"), lit(1.0).as("creatinine"),
       lit(1.0).as("bilirubin"), lit(0).as("dialysis"), lit(0).as("diabetes"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_psearch_tie").toString
+    val dir = graft.Staged.scratch(spark, "graft_psearch_tie")
     TableIO.writeIndex(PatientIndex.build(embedded), dir)
     val ps = new PatientSearch(spark)
     ps.loadIndex(dir)
