@@ -19,40 +19,9 @@ import graft.functions.CosineSimilarityExpr
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    // opt-in ANN top-k rewrite (spark.graft.ann.rewrite=true)
-    e.injectOptimizerRule(_ => graft.plans.AnnTopKRewrite)
-    // metadata-only count/min/max over snapshot relations (on by
-    // default; spark.graft.snapshot.metadataAgg=false disables)
-    e.injectOptimizerRule(_ => graft.plans.MetadataAggPushdown)
-    // transparent materialized-view rewrite for registered summaries
-    // (on by default; spark.graft.mview.rewrite=false disables)
-    e.injectOptimizerRule(_ => graft.plans.MviewRewrite)
-    // manifest-sized broadcast hints for filtered snapshot join sides
-    // (on by default; spark.graft.snapshot.statsBroadcast=false)
-    e.injectOptimizerRule(_ => graft.plans.StatsBroadcast)
-    // declared-key join elimination over snapshot relations (on by
-    // default once keys are declared; spark.graft.joinElimination=false)
-    e.injectOptimizerRule(_ => graft.plans.JoinElimination)
-    // eager aggregation below inner equi-joins for opted-in fact tables
-    // (EagerAggregation.enableFor; kill-switch spark.graft.eagerAgg)
-    e.injectOptimizerRule(_ => graft.plans.EagerAggregation)
-    // rank-threshold top-k prefilter for ORDER BY col LIMIT k over
-    // snapshot relations (on by default once the column is
-    // rank-ANALYZEd; spark.graft.snapshot.rankTopK=false disables)
-    e.injectOptimizerRule(_ => graft.plans.RankTopK)
-    // stats-driven inner-equi join ordering over snapshot relations
-    // (opt-in: spark.graft.joinOrder=true; refuses without proven
-    // manifest rows + exact NDV sketches)
-    e.injectOptimizerRule(_ => graft.plans.JoinOrder)
-    // IN-list dynamic file pruning for snapshot star joins (opt-in
-    // per BUILD table: DynamicPrune.enableFor — planning-time
-    // execution of the registered small side)
-    e.injectOptimizerRule(_ => graft.plans.DynamicPrune)
-    // grouped top-k prefilter for row_number()/rank() OVER
-    // (PARTITION BY p ORDER BY v) <= k over snapshot relations
-    // partitioned by p (on by default, proof-gated;
-    // spark.graft.snapshot.windowTopK=false disables)
-    e.injectOptimizerRule(_ => graft.plans.WindowTopK)
+    // the engine's optimizer rules, one list (graft.plans.Rules: what
+    // each does, how each is opted into or switched off)
+    graft.plans.Rules.all.foreach(r => e.injectOptimizerRule(_ => r))
     // snapshot-table SQL surface: snapshot_table(path[, version]) and
     // snapshot_changes(path, from, to) table-valued functions
     graft.sources.SnapshotSql.tvfs.foreach { case (name, info, builder) =>

@@ -1,9 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSessionBridge, SparkSession}
 
-/** One-time per-session planner tuning the library installs at its
-  * table-access funnels (idempotent, marker-guarded).
+import graft.plans.Rules
+
+/** One-time per-session set-up the library installs at its table-access
+  * funnels ([[Tables.readCached]], every [[graft.sources.SnapshotTable]]
+  * read, and `SnapshotTable.create`): idempotent, marker-guarded, safe
+  * under concurrent callers.
+  *
+  * Optimizer rules: appends [[Rules.all]] to the session's
+  * `spark.experimental.extraOptimizations`, so every query of the
+  * session plans with the same rules whichever query ran first. A
+  * session built with [[GraftExtensions]] already runs them (injected
+  * into its optimizer), and they are not added a second time. Switch a
+  * rule off with Spark's own conf, in either kind of session:
+  * `spark.sql.optimizer.excludedRules=graft.plans.RankTopK`.
+  * `newSession` starts with no rules and installs them at its first
+  * funnel; `cloneSession` copies them.
   *
   * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`:
   * Spark defaults this OFF, which disables ALL of AQE (including
@@ -24,10 +38,18 @@ object SessionTune {
 
   private val Marker = "spark.graft.sessionTuned"
 
+  private def tuned(s: SparkSession): Boolean =
+    s.conf.getOption(Marker).contains("true")
+
   def install(s: SparkSession): Unit =
-    if (!s.conf.getOption(Marker).contains("true")) {
-      s.conf.set(Marker, "true")
-      s.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    if (!tuned(s)) synchronized {
+      if (!tuned(s)) {
+        s.conf.set(
+          "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        val present = GraftSessionBridge.extensionOptimizerRules(s) ++
+          s.experimental.extraOptimizations
+        s.experimental.extraOptimizations ++= Rules.all.filterNot(present.contains)
+        s.conf.set(Marker, "true")
+      }
     }
 }

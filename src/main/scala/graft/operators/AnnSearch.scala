@@ -33,7 +33,13 @@ object AnnSearch extends QueryPack {
 
   // ---------------------------------------------------------------- LSH
 
-  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] = {
+  /** Hyperplane count and seed of the engine's LSH bucketing: the
+    * persisted index ([[ensureLshIndex]]) and the optimizer rewrite
+    * ([[graft.plans.AnnTopKRewrite]]) must hash with the same planes. */
+  val LshPlanes = 4
+  val LshSeed = 42L
+
+  def hyperplanes(nPlanes: Int, dim: Int, seed: Long = LshSeed): Array[Array[Double]] = {
     val rng = new scala.util.Random(seed)
     Array.fill(nPlanes, dim)(rng.nextGaussian())
   }
@@ -70,7 +76,7 @@ object AnnSearch extends QueryPack {
     */
   def lshSearch(corpus: DataFrame, embCol: String, idCol: String,
                 queryVec: Array[Float], topK: Int = 10,
-                nPlanes: Int = 4, seed: Long = 42L): DataFrame = {
+                nPlanes: Int = LshPlanes, seed: Long = LshSeed): DataFrame = {
     val planes = hyperplanes(nPlanes, queryVec.length, seed)
     withLshBucket(corpus, embCol, planes)
       .filter(col("lsh_bucket").isin(probeBuckets(queryVec, planes): _*))
@@ -155,8 +161,8 @@ object AnnSearch extends QueryPack {
     * most once per corpus per process and always round-trips through
     * parquet, so serving exercises the real cold-start path.
     */
-  def ensureLshIndex(s: SparkSession, dir: String, nPlanes: Int = 4,
-                     seed: Long = 42L): (String, Array[Array[Double]]) =
+  def ensureLshIndex(s: SparkSession, dir: String, nPlanes: Int = LshPlanes,
+                     seed: Long = LshSeed): (String, Array[Array[Double]]) =
     lshBuilt.computeIfAbsent(dir, { _ =>
       lshBuildCount.incrementAndGet()
       val corpus = Tables.embeddings(s, dir).filter(col("vec_id") =!= 0)

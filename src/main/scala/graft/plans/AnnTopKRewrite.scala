@@ -20,14 +20,13 @@ import graft.operators.AnnSearch
   * This trades exactness for scan volume (recall follows the
   * random-hyperplane collision bound), so it is strictly OPT-IN:
   *
-  *  - `spark.graft.ann.rewrite = true`    enable (default false)
-  *  - `spark.graft.ann.planes  = 4`       hyperplane count (must match the
-  *                                        bucketing of the stored index)
-  *  - `spark.graft.ann.seed    = 42`      hyperplane seed (ditto)
+  * `spark.graft.ann.rewrite = true` enables it (default false). The
+  * hyperplanes are the ones the stored index was bucketed with:
+  * [[AnnSearch.LshPlanes]] planes from [[AnnSearch.LshSeed]].
   *
   * The probe set is the query's own bucket plus all 1-bit flips
-  * (multiprobe), mirroring [[AnnSearch.probeBuckets]]. Registered via
-  * [[graft.GraftExtensions]] `injectOptimizerRule`.
+  * (multiprobe), mirroring [[AnnSearch.probeBuckets]]. Installed with
+  * the other [[Rules]].
   */
 object AnnTopKRewrite extends Rule[LogicalPlan] {
 
@@ -35,8 +34,6 @@ object AnnTopKRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConfString("spark.graft.ann.rewrite", "false").toBoolean) return plan
-    val nPlanes = conf.getConfString("spark.graft.ann.planes", "4").toInt
-    val seed = conf.getConfString("spark.graft.ann.seed", "42").toLong
 
     plan.transformDown {
       // head sort key = similarity DESC; trailing unique tiebreakers are
@@ -60,7 +57,8 @@ object AnnTopKRewrite extends Rule[LogicalPlan] {
         else resolveThroughChain(attr, chain) match {
           case Some(qVec) if qVec.nonEmpty =>
             val bucketAttr = base.output.find(_.name == BucketCol).get
-            val planes = AnnSearch.hyperplanes(nPlanes, qVec.length, seed)
+            val planes = AnnSearch.hyperplanes(
+              AnnSearch.LshPlanes, qVec.length, AnnSearch.LshSeed)
             val probes = AnnSearch.probeBuckets(qVec, planes)
             // inject directly above the relation so the IN-filter can
             // become partition pruning regardless of what sits between

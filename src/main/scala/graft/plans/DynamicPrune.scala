@@ -71,8 +71,7 @@ import graft.sources.SnapshotFileIndex
   * Registry: `spark.graft.dynamicPrune.tables` — session-conf-carried
   * (micro-batch `cloneSession` inherits, `newSession` tenants stay
   * isolated), parsed defensively (a malformed entry is ignored, never
-  * a planning failure). Install per session via [[install]] or
-  * globally through `spark.sql.extensions=graft.GraftExtensions`.
+  * a planning failure). Installed with the other [[Rules]].
   */
 object DynamicPrune extends Rule[LogicalPlan] with PredicateHelper
     with graft.QueryPack {
@@ -106,12 +105,6 @@ object DynamicPrune extends Rule[LogicalPlan] with PredicateHelper
 
   private[graft] def clearEnabled(spark: SparkSession): Unit =
     spark.conf.unset(TablesKey)
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 
   // collected DISTINCT key sets per session (weak — a dropped session
   // drops its cache), keyed by the canonicalized keys-subplan: the
@@ -470,7 +463,6 @@ object DynamicPrune extends Rule[LogicalPlan] with PredicateHelper
     * by DynamicPruneSpec's executed-plan file counts.
     */
   def dppJoinQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     import graft.sources.SnapshotTable
     val (ordersPath, prioPath) = fixture(s, dir)
     enableFor(s, prioPath)

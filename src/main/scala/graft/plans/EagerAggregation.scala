@@ -60,14 +60,11 @@ import graft.sources.{SnapshotFileIndex, SnapshotTable}
   * saturated/stale one) keeps the owner's declaration;
   * `enableFor(table, force = true)` skips the cost gate entirely.
   *
-  * Install per session via [[EagerAggregation.install]] or globally via
-  * `spark.sql.extensions=graft.GraftExtensions`; kill-switch
-  * `spark.graft.eagerAgg=false`.
+  * Installed with the other [[Rules]]; switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.EagerAggregation`.
   */
 object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper
     with QueryPack {
-
-  private val FlagKey = "spark.graft.eagerAgg"
 
   // SESSION-SCOPED carrier: the opt-ins live in the SESSION CONF
   // (URL-encoded entries under one key), which draws exactly the right
@@ -121,18 +118,11 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper
   private[graft] def clearEnabled(spark: SparkSession): Unit =
     spark.conf.unset(TablesKey)
 
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // the planning session's conf (SQLConf is clone-copied) IS the
     // registry — no session-instance lookup anywhere in the rule
     val enabled = parseTables(conf.getConfString(TablesKey, ""))
-    if (enabled.isEmpty ||
-        conf.getConfString(FlagKey, "true") != "true") plan
+    if (enabled.isEmpty) plan
     else plan.transformDown {
       // attr-only Projects between the Aggregate and the Join (column
       // pruning leaves one) are bypassed: the rebuilt child exposes a
@@ -342,7 +332,6 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper
     * crosses the join in place of the raw line items.
     */
   def eagerAggQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     val (factT, dimT) = fixture(s, dir)
     val fact = SnapshotTable.read(s, factT)
     val dim = SnapshotTable.read(s, dimT)
@@ -389,8 +378,6 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper
     * replay exact.
     */
   def aggBroadcastQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
-    StatsBroadcast.install(s)
     val (factT, dimT) = eventsFixture(s, dir)
     val fact = SnapshotTable.read(s, factT)
     val dim = SnapshotTable.read(s, dimT)

@@ -58,14 +58,11 @@ import graft.sources.{SnapshotFileIndex, SnapshotTable}
   * uniqueness, an anti-join probe for RI — both one pass, both
   * manifest-pruned like any other read).
   *
-  * Install per session via [[JoinElimination.install]] or globally via
-  * `spark.sql.extensions=graft.GraftExtensions`; disable with
-  * `spark.graft.joinElimination=false`.
+  * Installed with the other [[Rules]]; switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.JoinElimination`.
   */
 object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     with QueryPack {
-
-  private val FlagKey = "spark.graft.joinElimination"
 
   // ---- informational constraint registry: norm'd table path →
   // declared key column SETS (a single-column key is a one-element
@@ -250,20 +247,12 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     spark.conf.unset(FksKey)
   }
 
-  /** Idempotently append the rule to the session's experimental
-    * optimizer batch (fixed point, after the main operator batch — by
-    * then column pruning has already made "output uses no dim column"
-    * syntactically visible as Project/Aggregate references).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
+  // run from the experimental optimizer batch (fixed point, after the
+  // main operator batch), the rule sees column pruning's result:
+  // "output uses no dim column" is syntactically visible as
+  // Project/Aggregate references
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(UniqKeysKey, "").isEmpty ||
-        conf.getConfString(FlagKey, "true") != "true") plan
+    if (conf.getConfString(UniqKeysKey, "").isEmpty) plan
     else plan.transformDown {
       // semi/anti joins define their own output (= the left side), so
       // they need no parent gating: EXISTS/IN subqueries land here
@@ -649,7 +638,6 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     * every dimension). The declared unique key eliminates the join.
     */
   def leftElimQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     val (factT, dimT) = fixture(s, dir)
     val fact = SnapshotTable.read(s, factT)
     val dim = SnapshotTable.read(s, dimT)
@@ -662,7 +650,6 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     * the join into `o_custkey IS NOT NULL` on the fact alone.
     */
   def innerElimQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     val (factT, dimT) = fixture(s, dir)
     val fact = SnapshotTable.read(s, factT)
     val dim = SnapshotTable.read(s, dimT)
@@ -675,7 +662,6 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     * own aggregation is the plan's only shuffle.
     */
   def distinctElimQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     val (factT, _) = fixture(s, dir)
     val distinctRows = SnapshotTable.read(s, factT)
       .filter(col("o_totalprice") > 100000.0)
@@ -692,7 +678,6 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     * join-free. Twin of [[innerElimQuery]]'s oracle.
     */
   def sqlConstraintsQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     graft.sources.SnapshotSql.register(s)
     val (factT, dimT) = fixture(s, dir)
     s.sql(s"SELECT * FROM snapshot_declare_key('$dimT', 'c_custkey', 1)")
@@ -714,7 +699,6 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     * LEFT SEMI join the declared FK collapses to a not-null filter.
     */
   def semiElimQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     val (factT, dimT) = fixture(s, dir)
     val fact = SnapshotTable.read(s, factT)
     val dim = SnapshotTable.read(s, dimT)
@@ -727,7 +711,6 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     * of the per-key dedup expansion.
     */
   def countDistinctQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     val (factT, _) = fixture(s, dir)
     SnapshotTable.read(s, factT)
       .groupBy(col("o_orderpriority"))
@@ -744,7 +727,6 @@ object JoinElimination extends Rule[LogicalPlan] with PredicateHelper
     * only shuffle. Decimal math keeps the oracle hash exact.
     */
   def groupByKeyQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     val (factT, _) = fixture(s, dir)
     val perOrder = SnapshotTable.read(s, factT)
       .groupBy(col("o_orderkey"), col("o_orderpriority"))

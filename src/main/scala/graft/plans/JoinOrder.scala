@@ -52,19 +52,12 @@ import graft.sources.SnapshotTable.FileEntry
   * OPT-IN: inert unless `spark.graft.joinOrder` is `true` in the
   * session (the conf travels to cloned micro-batch sessions and stays
   * isolated from `newSession` tenants, like every conf-carried
-  * registry here). Install per session via [[install]] or globally
-  * through `spark.sql.extensions=graft.GraftExtensions`.
+  * registry here). Installed with the other [[Rules]].
   */
 object JoinOrder extends Rule[LogicalPlan] with PredicateHelper
     with graft.QueryPack {
 
   private val FlagKey = "spark.graft.joinOrder"
-
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 
   def enable(spark: SparkSession): Unit =
     spark.conf.set(FlagKey, "true")
@@ -404,7 +397,6 @@ object JoinOrder extends Rule[LogicalPlan] with PredicateHelper
     * the oracle's plain 3-way join.
     */
   def joinOrderQuery(s: SparkSession, dir: String): DataFrame = {
-    install(s)
     enable(s)
     import graft.sources.SnapshotTable
     val (o, c, nt) = fixturePaths(s, dir)

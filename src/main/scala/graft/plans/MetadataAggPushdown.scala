@@ -50,29 +50,14 @@ import graft.sources.SnapshotTable.FileEntry
   *    rounded and the stat is an approximation — timestamps, recorded
   *    as fractional epoch seconds, are excluded for the same reason).
   *
-  * Install per session via [[MetadataAggPushdown.install]] (the
-  * `spark.experimental.extraOptimizations` hook) or globally through
-  * `spark.sql.extensions=graft.GraftExtensions`; disable with
-  * `spark.graft.snapshot.metadataAgg=false` (the spec uses the flag to
-  * prove rewritten ≡ scanned).
+  * Installed with the other [[Rules]]; switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.MetadataAggPushdown`
+  * (the spec switches it off to prove rewritten ≡ scanned).
   */
 object MetadataAggPushdown extends Rule[LogicalPlan] {
 
-  private val FlagKey = "spark.graft.snapshot.metadataAgg"
-
-  /** Idempotently append the rule to the session's experimental
-    * optimizer batch — the per-session install for sessions built
-    * without `spark.sql.extensions`.
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FlagKey, "true") != "true") plan
-    else plan.transformDown {
+    plan.transformDown {
       case agg: Aggregate if agg.groupingExpressions.isEmpty =>
         bareSnapshotEntries(agg.child) match {
           case Some(entries) =>

@@ -57,25 +57,14 @@ import graft.sources.{IncrementalView, MaterializedView, SnapshotFileIndex, Snap
   * → Σtotal` with output types proven equal. The 100 TB win compounds:
   * the join itself disappears, not just the aggregate.
   *
-  * Install per session via [[install]] or globally through
-  * `spark.sql.extensions=graft.GraftExtensions`; disable with
-  * `spark.graft.mview.rewrite=false` (the spec proves rewritten ≡
-  * scanned under the flag).
+  * Installed with the other [[Rules]]; switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.MviewRewrite` (the
+  * spec switches it off to prove rewritten ≡ scanned).
   */
 object MviewRewrite extends Rule[LogicalPlan] {
 
-  private val FlagKey = "spark.graft.mview.rewrite"
-
-  /** Idempotently append to the session's experimental optimizer batch. */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FlagKey, "true") != "true" ||
-        !(MaterializedView.anyRegistered ||
+    if (!(MaterializedView.anyRegistered ||
           MaterializedView.anyJoinRegistered)) plan
     else plan.transformDown {
       case agg: Aggregate =>

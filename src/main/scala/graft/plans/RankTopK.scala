@@ -63,32 +63,13 @@ import graft.sources.{RankStats, SnapshotFileIndex}
   * hi is NaN sorts last in the ASC accumulation and everything is ≤
   * NaN in Spark's ordering — sound, merely unprunable).
   *
-  * Install per session via [[install]] or globally via
-  * `spark.sql.extensions=graft.GraftExtensions`; disable with
-  * `spark.graft.snapshot.rankTopK=false`.
+  * Installed with the other [[Rules]]; switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.RankTopK`.
   */
 object RankTopK extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val FlagKey = "spark.graft.snapshot.rankTopK"
-
-  /** SESSION-scoped registration (not JVM-global): `experimental`
-    * resolves to the session's own `SessionState.experimentalMethods`
-    * — `newSession` starts with a fresh instance (RankTopKSpec pins
-    * the two-session isolation), `cloneSession` copies the parent's
-    * (micro-batch planning keeps firing). The object-level
-    * `synchronized` only serializes two concurrent installs into the
-    * SAME session's read-modify-write; it shares no state between
-    * sessions.
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FlagKey, "true") != "true") plan
-    else plan.transformUp {
+    plan.transformUp {
       case limit @ Limit(limitExpr @ IntegerLiteral(k),
           sort @ Sort(SortOrder(attr: AttributeReference, dir, nulls, _) +: _,
             true, child, _)) if k > 0 =>

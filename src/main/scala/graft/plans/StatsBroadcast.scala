@@ -51,28 +51,16 @@ import graft.sources.{SnapshotFileIndex, TableStats}
   *    ignores a broadcast hint on a side it cannot build against the
   *    join type, so the rewrite can never produce an invalid plan.
   *
-  * Install per session via [[StatsBroadcast.install]] or globally via
-  * `spark.sql.extensions=graft.GraftExtensions`; disable with
-  * `spark.graft.snapshot.statsBroadcast=false`.
+  * Installed with the other [[Rules]]; switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.StatsBroadcast`.
   */
 object StatsBroadcast extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val FlagKey = "spark.graft.snapshot.statsBroadcast"
-
-  /** Idempotently append the rule to the session's experimental
-    * optimizer batch (runs after hint resolution, so the decision
-    * lands directly in `Join.hint` the way `EliminateResolvedHint`
-    * would have put it).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
+  // runs after hint resolution, so the decision lands directly in
+  // `Join.hint` the way `EliminateResolvedHint` would have put it
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val threshold = conf.autoBroadcastJoinThreshold
-    if (threshold <= 0 || conf.getConfString(FlagKey, "true") != "true") plan
+    if (threshold <= 0) plan
     else plan.transformUp {
       // a user strategy hint on EITHER side pins the whole join's
       // strategy choice: injecting a broadcast hint on the other side

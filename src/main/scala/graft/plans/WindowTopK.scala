@@ -61,25 +61,16 @@ import graft.sources.SnapshotTable.FileEntry
   * independently sound). Fixpoint-stable: the second pass sees the
   * injected Filter under the Window and refuses.
   *
-  * Install per session via [[install]] or globally via
-  * `spark.sql.extensions=graft.GraftExtensions`; disable with
-  * `spark.graft.snapshot.windowTopK=false`.
+  * Installed with the other [[Rules]]; switch it off with
+  * `spark.sql.optimizer.excludedRules=graft.plans.WindowTopK`.
   */
 object WindowTopK extends Rule[LogicalPlan] with PredicateHelper
     with graft.QueryPack {
 
-  private val FlagKey = "spark.graft.snapshot.windowTopK"
   private val MaxGroupsKey = "spark.graft.snapshot.windowTopK.maxGroups"
 
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FlagKey, "true") != "true") plan
-    else plan.transformUp {
+    plan.transformUp {
       case f @ Filter(cond, w: Window) =>
         rankLimit(cond, w) match {
           case Some(k) =>
@@ -234,7 +225,6 @@ object WindowTopK extends Rule[LogicalPlan] with PredicateHelper
     */
   def topkGroupedQuery(s: SparkSession,
                        dir: String): org.apache.spark.sql.DataFrame = {
-    install(s)
     import org.apache.spark.sql.functions.{col, row_number}
     val orders = graft.sources.SnapshotTable.read(s,
       JoinOrder.fixturePaths(s, dir)._1)
@@ -256,7 +246,6 @@ object WindowTopK extends Rule[LogicalPlan] with PredicateHelper
     */
   def sqlTopkGroupedQuery(s: SparkSession,
                           dir: String): org.apache.spark.sql.DataFrame = {
-    install(s)
     graft.sources.SnapshotSql.register(s)
     val t = JoinOrder.fixturePaths(s, dir)._1
     s.sql(

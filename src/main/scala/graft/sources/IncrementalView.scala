@@ -509,7 +509,6 @@ object IncrementalView extends QueryPack {
     * measured path without re-measuring the refresh the twin times.
     */
   def mviewJoinRewriteQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MviewRewrite.install(s)
     val (fact, dim) = joinScenario(s, dir)
     // join_rw measures the REWRITE (proof + substitution), not the
     // refresh its explicit-read twin already times live — so the

@@ -247,7 +247,6 @@ object MaterializedView extends QueryPack {
     * re-aggregation are exact).
     */
   def rewriteQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MviewRewrite.install(s)
     val d = staticMv(s, dir)
     SnapshotTable.read(s, d.src)
       .groupBy(col("o_orderpriority"))
@@ -262,7 +261,6 @@ object MaterializedView extends QueryPack {
     * onto the view scan (and its manifest stats) unchanged.
     */
   def rewriteSelQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MviewRewrite.install(s)
     val d = staticMv(s, dir)
     SnapshotTable.read(s, d.src)
       .filter(col("o_orderpriority").isin("1-URGENT", "3-MEDIUM"))
@@ -281,7 +279,6 @@ object MaterializedView extends QueryPack {
     * refreshed view.
     */
   def refreshRewriteQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MviewRewrite.install(s)
     val (src, base) = rwScenario(s, dir)
     val d = MvDef(SnapshotTable.cloneTable(s, base), src, "o_custkey",
       "o_totalprice", Some(org.apache.spark.sql.types.DecimalType(18, 2)),

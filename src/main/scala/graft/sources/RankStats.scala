@@ -988,7 +988,6 @@ object RankStats extends QueryPack {
     * wrong build would break the oracle hash.
     */
   def rankBroadcastQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.StatsBroadcast.install(s)
     val t = Staged(s, dir, "graft_rank_bc") {
       val t = Staged.scratch(s, "graft_rank_bc") + "/t"
       val orders = Tables.orders(s, dir)
@@ -1034,7 +1033,6 @@ object RankStats extends QueryPack {
     }
 
   def rankTopKQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.RankTopK.install(s)
     val t = topkFixture(s, dir)
     SnapshotTable.read(s, t)
       .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -1051,7 +1049,6 @@ object RankStats extends QueryPack {
     * against the oracle's plain filtered DESC/ASC SQL.
     */
   def rankTopKPartQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.RankTopK.install(s)
     val t = topkFixture(s, dir)
     SnapshotTable.read(s, t)
       .filter(col("o_orderpriority") === "1-URGENT")
@@ -1069,7 +1066,6 @@ object RankStats extends QueryPack {
     * query pins the RESULT against the oracle's plain range SQL.
     */
   def rankTopKRangeQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.RankTopK.install(s)
     val t = topkFixture(s, dir)
     SnapshotTable.read(s, t)
       .filter(col("o_orderpriority") >= "3")
@@ -1090,7 +1086,6 @@ object RankStats extends QueryPack {
     * the oracle hash against plain full-table DESC SQL.
     */
   def rankTopKDescQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.RankTopK.install(s)
     val t = Staged(s, dir, "graft_rank_tkdesc") {
       val t = Staged.scratch(s, "graft_rank_tkdesc") + "/t"
       val orders = Tables.orders(s, dir)

@@ -376,8 +376,8 @@ object SecondaryIndex extends QueryPack {
     * pinned snapshot. INNER only — pruned fact rows must be ones the
     * join discards anyway.
     *
-    * The DIM side's sizing rides [[graft.plans.StatsBroadcast]]
-    * (installed here, idempotent): when the dim is itself a filtered
+    * The DIM side's sizing rides [[graft.plans.StatsBroadcast]]: when
+    * the dim is itself a filtered
     * snapshot relation, its broadcastability is decided from the same
     * manifest fold that prunes the fact — Spark's own Filter sizing
     * sees the dim at full-table bytes and would shuffle the pruned
@@ -388,7 +388,6 @@ object SecondaryIndex extends QueryPack {
                       index: String, dim: DataFrame, dimKey: String,
                       maxFiles: Int = 100000,
                       autoRefresh: Boolean = true): DataFrame = {
-    graft.plans.StatsBroadcast.install(spark)
     if (autoRefresh) refresh(spark, table, factKey, index)
     val v = SnapshotTable.currentVersion(spark, table)
     def plain = {

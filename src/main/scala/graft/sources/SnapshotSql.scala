@@ -469,8 +469,7 @@ object SnapshotSql {
           "or a comma-separated composite) UNIQUE over the snapshot " +
           "table (informational / RELY): feeds join and distinct " +
           "elimination. validate=1 probes the current version once and " +
-          "refuses a violated declaration. Installs the constraint " +
-          "optimizer rules in this session. The result row reports " +
+          "refuses a violated declaration. The result row reports " +
           "(validated 1|0)",
         "_FUNC_(string, string[, bigint])"),
       (exprs: Seq[Expression]) => {
@@ -483,7 +482,6 @@ object SnapshotSql {
           strArg("snapshot_declare_key", exprs, 0),
           strArg("snapshot_declare_key", exprs, 1)
             .split(",").map(_.trim).toSeq, validate)
-        graft.plans.JoinElimination.install(spark)
         outcomeRow(spark, Seq("validated" -> (if (validate) 1L else 0L)))
       }),
     ("snapshot_declare_fk",
@@ -505,7 +503,6 @@ object SnapshotSql {
           strArg("snapshot_declare_fk", exprs, 1),
           strArg("snapshot_declare_fk", exprs, 2),
           strArg("snapshot_declare_fk", exprs, 3), validate)
-        graft.plans.JoinElimination.install(spark)
         outcomeRow(spark, Seq("validated" -> (if (validate) 1L else 0L)))
       }),
     ("snapshot_append_unique",
@@ -537,8 +534,7 @@ object SnapshotSql {
           "aggregation (partial aggregates pushed below inner " +
           "equi-joins when it is the fact side); fresh NDV sketches " +
           "still DECLINE a rewrite proven unable to halve the shuffle " +
-          "unless force=1. Installs the rule in this session. The " +
-          "result row reports (enabled)",
+          "unless force=1. The result row reports (enabled)",
         "_FUNC_(string[, bigint])"),
       (exprs: Seq[Expression]) => {
         require(exprs.length == 1 || exprs.length == 2,
@@ -548,7 +544,6 @@ object SnapshotSql {
           longArg("snapshot_enable_eager_agg", exprs, 1) == 1L
         graft.plans.EagerAggregation.enableFor(
           strArg("snapshot_enable_eager_agg", exprs, 0), force)
-        graft.plans.EagerAggregation.install(spark)
         outcomeRow(spark, Seq("enabled" -> 1L))
       }),
     ("snapshot_enable_join_order",
@@ -557,14 +552,13 @@ object SnapshotSql {
           "3+-table inner equi-join clusters over snapshot relations " +
           "reorder greedily by proven manifest row counts and exact " +
           "NDV sketches (smallest intermediate first); clusters " +
-          "without the proofs are left alone. Installs the rule in " +
-          "this session. The result row reports (enabled)",
+          "without the proofs are left alone. The result row reports " +
+          "(enabled)",
         "_FUNC_()"),
       (exprs: Seq[Expression]) => {
         require(exprs.isEmpty,
           s"snapshot_enable_join_order: expected 0 arguments, got ${exprs.length}")
         val spark = SparkSession.active
-        graft.plans.JoinOrder.install(spark)
         graft.plans.JoinOrder.enable(spark)
         outcomeRow(spark, Seq("enabled" -> 1L))
       }),
@@ -575,14 +569,13 @@ object SnapshotSql {
           "BUILD side: joins whose provably-small side reads it may " +
           "execute that side once at planning time and push its " +
           "distinct join keys into the probe scan as an IN, pruning " +
-          "probe FILES by partition stamp / stats / bloom. Installs " +
-          "the rule in this session. The result row reports (enabled)",
+          "probe FILES by partition stamp / stats / bloom. The result " +
+          "row reports (enabled)",
         "_FUNC_(string)"),
       (exprs: Seq[Expression]) => {
         require(exprs.length == 1,
           s"snapshot_enable_dynamic_prune: expected 1 argument, got ${exprs.length}")
         val spark = SparkSession.active
-        graft.plans.DynamicPrune.install(spark)
         graft.plans.DynamicPrune.enableFor(spark,
           strArg("snapshot_enable_dynamic_prune", exprs, 0))
         outcomeRow(spark, Seq("enabled" -> 1L))

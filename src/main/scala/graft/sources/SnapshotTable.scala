@@ -1235,12 +1235,16 @@ object SnapshotTable extends QueryPack {
   private def readWithDeletes(spark: SparkSession, table: String,
                               entries: Seq[FileEntry],
                               deletes: Seq[DeleteFile],
-                              hdr: Header): DataFrame =
+                              hdr: Header): DataFrame = {
+    // every snapshot read is a table-access funnel (the optimizer rules
+    // match snapshot relations only)
+    graft.SessionTune.install(spark)
     if (deletes.isEmpty) indexedRead(spark, table, entries, hdr)
     else entries.groupBy(e => deletes.filter(_.seq > e.seq))
       .map { case (dels, es) =>
         maskDeletes(spark, table, indexedRead(spark, table, es, hdr), dels)
       }.reduce(_.unionByName(_))
+  }
 
   // ---- public surface
 
@@ -3154,7 +3158,6 @@ object SnapshotTable extends QueryPack {
     * stage runs rather than by AQE after both map stages shuffled.
     */
   def statsBroadcastQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.StatsBroadcast.install(s)
     val dim = read(s, scenario(s, dir))
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -3925,7 +3928,6 @@ object SnapshotTable extends QueryPack {
     * proves the manifest's row counts and stats ARE the data's.
     */
   def metaAggQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     read(s, scenario(s, dir)).agg(
       count(lit(1)).as("n_rows"),
       min(col("o_orderkey")).as("min_key"),
@@ -3963,7 +3965,6 @@ object SnapshotTable extends QueryPack {
     * the recorded decimal totals ARE the data's.
     */
   def metaSumQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     read(s, sumScenario(s, dir)).agg(
       count(lit(1)).as("n_rows"),
       sum(col("o_orderkey")).as("sum_key"),
@@ -3981,7 +3982,6 @@ object SnapshotTable extends QueryPack {
     * anything but the scan's exact total breaks the hash.
     */
   def metaSumDecQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     // avg_price is emitted as the decimal(16,6) STRING: the oracle
     // rebuilds the identical digits by integer arithmetic (half-up at
     // scale 6 — provably Spark's own result here: the quotient of
@@ -4008,7 +4008,6 @@ object SnapshotTable extends QueryPack {
     * the same integer half-up-at-6 oracle replica as the global fold.
     */
   def metaGroupSumsQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     read(s, sumScenario(s, dir))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_rows"),
@@ -4047,7 +4046,6 @@ object SnapshotTable extends QueryPack {
     * plans zero data files (MetadataAggSpec pins the LocalRelation).
     */
   def metaSelQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     read(s, scenario(s, dir))
       .filter(col("o_orderpriority").isin("1-URGENT", "3-MEDIUM"))
       .agg(
@@ -4083,7 +4081,6 @@ object SnapshotTable extends QueryPack {
     * with zero data files planned.
     */
   def metaPartsQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     read(s, scenario(s, dir)).groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("o_orderkey")).as("min_key"),
@@ -4121,7 +4118,6 @@ object SnapshotTable extends QueryPack {
     * pins the values against a raw recompute).
     */
   def metaNullsQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     read(s, nullScenario(s, dir)).groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_rows"),
         count(col("o_ship_ref")).as("n_ref"),
@@ -4252,7 +4248,6 @@ object SnapshotTable extends QueryPack {
   }
 
   def metaNdvQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.MetadataAggPushdown.install(s)
     read(s, nullScenario(s, dir)).agg(
       count(lit(1)).as("n_rows"),
       count_distinct(col("o_ref_bucket")).as("n_buckets"),

@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * (nothing else can differ).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outFile> <query> [k=v ...]
+  *
+  * The rule-off plan of a query, say `q_rank_topk` without its rule:
+  * `runMain graft.tools.PlanDump /root/testdata/sf0.01 off.txt q_rank_topk
+  * spark.sql.optimizer.excludedRules=graft.plans.RankTopK`
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

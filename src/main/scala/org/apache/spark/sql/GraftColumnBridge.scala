@@ -86,11 +86,6 @@ object GraftPlanBridge {
   }
 }
 
-/** Bridge to the `private[sql]` session-state registries — imperative
-  * (per-session) registration of table-valued functions, for sessions
-  * built without `spark.sql.extensions` (the extensions path registers
-  * the same builders via `injectTableFunction`).
-  */
 /** Bridge to the resolved `autoBroadcastJoinThreshold` (SQLConf parses
   * the size-string forms — "10MB", "-1" — which a raw conf.get string
   * would force callers to re-implement).
@@ -101,6 +96,21 @@ object GraftConfBridge {
       .autoBroadcastJoinThreshold
 }
 
+/** Bridge to the `private[sql]` extensions a session was built with:
+  * the optimizer rules they inject, so an installer can tell which rules
+  * the session already runs.
+  */
+object GraftSessionBridge {
+  def extensionOptimizerRules(spark: SparkSession)
+      : Seq[catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]] =
+    spark.asInstanceOf[classic.SparkSession].extensions.buildOptimizerRules(spark)
+}
+
+/** Bridge to the `private[sql]` session-state registries — imperative
+  * (per-session) registration of table-valued functions, for sessions
+  * built without `spark.sql.extensions` (the extensions path registers
+  * the same builders via `injectTableFunction`).
+  */
 object GraftRegistryBridge {
   def registerTableFunction(
       spark: SparkSession, name: String,

@@ -153,8 +153,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "LIMIT over a rank-ANALYZEd snapshot_table gains the threshold " +
     "prefilter and returns the exact top-k") {
     import org.apache.spark.sql.functions._
-    val t = java.nio.file.Files.createTempDirectory("ext_topk")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "ext_topk") + "/t"
     graft.sources.SnapshotTable.create(spark, t,
       spark.range(0, 2000).select(col("id").as("k"),
         ((col("id") * 733L) % 2000L).cast("double").as("v"),
@@ -179,8 +178,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "sum/avg over an analyzed snapshot_table plans a LocalRelation " +
     "and the TVF pipeline (analyze_sums -> sums) closes the loop") {
     import org.apache.spark.sql.functions._
-    val t = java.nio.file.Files.createTempDirectory("ext_sums")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "ext_sums") + "/t"
     graft.sources.SnapshotTable.create(spark, t,
       spark.range(1, 1001).select(col("id").as("k"),
         (col("id") * 3L).as("w"), lit("all").as("p")),
@@ -210,8 +208,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     "snapshot_enable_join_order procedure: a fact-first 3-way join " +
     "reorders to the filtered selective dim first, results unchanged") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("ext_joinorder")
-      .toString
+    val root = graft.Staged.scratch(spark, "ext_joinorder")
     val (f, a, b) = (s"$root/fact", s"$root/dima", s"$root/dimb")
     graft.sources.SnapshotTable.create(spark, f,
       spark.range(0, 8000).select(col("id").as("k"),
@@ -259,5 +256,39 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(after.collect().map(_.toString).toSeq === beforeRows,
         "reorder must never change results")
     } finally spark.conf.set("spark.graft.joinOrder", "false")
+  }
+
+  test("the extension injects graft.plans.Rules.all, in order") {
+    assert(org.apache.spark.sql.GraftSessionBridge
+      .extensionOptimizerRules(spark) === graft.plans.Rules.all)
+  }
+
+  test("a funnel in an extension-built session adds no rule a second " +
+    "time, and excluding a rule by name switches it off") {
+    import org.apache.spark.sql.functions._
+    val t = graft.Staged.scratch(spark, "ext_funnel") + "/t"
+    graft.sources.SnapshotTable.create(spark, t,
+      spark.range(0, 500).select(col("id").as("k"), lit("all").as("p")),
+      "p", statsCols = Seq("k"))
+    def q() = graft.sources.SnapshotTable.read(spark, t)
+      .agg(count(lit(1)).as("n"), max(col("k")).as("hi"))
+    graft.Tables.orders(spark, "/root/testdata/sf0.001")
+    graft.SessionTune.install(spark)
+    val running = org.apache.spark.sql.GraftSessionBridge
+      .extensionOptimizerRules(spark) ++ spark.experimental.extraOptimizations
+    graft.plans.Rules.all.foreach { r =>
+      assert(running.count(_ eq r) === 1, s"${r.ruleName} runs once")
+    }
+    def folded(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collectFirst {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+      }.nonEmpty
+    assert(folded(q()))
+    val off = graft.SparkSpec.withoutRules(spark,
+        graft.plans.MetadataAggPushdown) {
+      assert(!folded(q()), "the excluded injected rule must not fire")
+      q().head()
+    }
+    assert(off === q().head())
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite (guide: one SparkSession per suite). */
@@ -18,4 +20,25 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+}
+
+object SparkSpec {
+  private val ExcludedRules = "spark.sql.optimizer.excludedRules"
+
+  /** Runs `body` with `rules` switched off in `spark`, the way a user
+    * switches a rule off: their names appended to Spark's
+    * `spark.sql.optimizer.excludedRules`. The prior value comes back
+    * afterwards. Plans optimized inside `body` are the rule-off
+    * reference.
+    */
+  def withoutRules[T](spark: SparkSession, rules: Rule[LogicalPlan]*)(body: => T): T = {
+    val prior = spark.conf.getOption(ExcludedRules)
+    spark.conf.set(ExcludedRules,
+      (prior.filter(_.nonEmpty).toSeq ++ rules.map(_.ruleName)).mkString(","))
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(ExcludedRules, v)
+      case None    => spark.conf.unset(ExcludedRules)
+    }
+  }
 }

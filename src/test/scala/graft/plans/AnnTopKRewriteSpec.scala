@@ -42,7 +42,7 @@ class AnnTopKRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     * optimizer batch runs; a relation column survives).
     */
   private lazy val indexDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_rewrite").toString
+    val dir = graft.Staged.scratch(spark, "graft_ann_rewrite")
     val planes = AnnSearch.hyperplanes(4, 64)
     graft.sources.TableIO.writeAnnIndex(
       AnnSearch.withLshBucket(

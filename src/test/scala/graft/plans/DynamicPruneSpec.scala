@@ -21,10 +21,8 @@ import graft.sources.SnapshotTable
   */
 class DynamicPruneSpec extends SparkSpec {
 
-  DynamicPrune.install(spark)
-
   private def freshDir(name: String): String =
-    java.nio.file.Files.createTempDirectory("dynprune").resolve(name).toString
+    graft.Staged.scratch(spark, "dynprune") + "/" + name
 
   /** 10k-row fact over 10 partition stamps; (dp, attr) dim with 10
     * keys, `attr = 0` keeping 4 of them.
@@ -269,11 +267,9 @@ class DynamicPruneSpec extends SparkSpec {
     }
     assert(dynConjuncts(q(spark)) === 1)
     val sibling = spark.newSession()
-    DynamicPrune.install(sibling)
     assert(dynConjuncts(q(sibling)) === 0,
       "a sibling session must not inherit the registry")
     val cloneLike = spark.newSession()
-    DynamicPrune.install(cloneLike)
     cloneLike.conf.set("spark.graft.dynamicPrune.tables",
       spark.conf.get("spark.graft.dynamicPrune.tables"))
     assert(dynConjuncts(q(cloneLike)) === 1,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.SnapshotTable
 
 /** Eager aggregation must (a) place a partial Aggregate BELOW the join
@@ -18,10 +19,8 @@ import graft.sources.SnapshotTable
   */
 class EagerAggregationSpec extends SparkSpec {
 
-  EagerAggregation.install(spark)
-
   private def freshDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).resolve("t").toString
+    graft.Staged.scratch(spark, name) + "/t"
 
   // fact: 1000 rows over 60 join keys (fan-in), some null keys, some
   // null measure values; key 59 has no dim partner
@@ -63,11 +62,6 @@ class EagerAggregationSpec extends SparkSpec {
         case a: Aggregate => a }).size
     }.sum
 
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.eagerAgg", "false")
-    try body finally spark.conf.unset("spark.graft.eagerAgg")
-  }
-
   /** Canonical row strings; doubles at 9 significant digits — a double
     * `sum`'s grouping is re-associated by the rewrite (exactly as
     * Spark's own partial aggregation re-associates it across
@@ -85,7 +79,7 @@ class EagerAggregationSpec extends SparkSpec {
     val eager = build
     assert(partialAggs(eager) == 1,
       eager.queryExecution.optimizedPlan.toString)
-    assert(rows(eager) == withRuleOff(rows(build)))
+    assert(rows(eager) == withoutRules(spark, EagerAggregation)(rows(build)))
   }
 
   test("grouped by dim attr: sum/count/min/max push below the join") {
@@ -114,8 +108,9 @@ class EagerAggregationSpec extends SparkSpec {
       .agg(sum(col("v").cast("decimal(18,4)")).as("s"))
     val eager = build
     assert(partialAggs(eager) == 1)
-    assert(eager.schema("s").dataType == withRuleOff(build.schema("s").dataType))
-    assert(rows(eager) == withRuleOff(rows(build)))
+    assert(eager.schema("s").dataType ==
+      withoutRules(spark, EagerAggregation)(build.schema("s").dataType))
+    assert(rows(eager) == withoutRules(spark, EagerAggregation)(rows(build)))
   }
 
   test("multi-column equi condition qualifies") {
@@ -196,7 +191,7 @@ class EagerAggregationSpec extends SparkSpec {
       .groupBy(col("dgrp")).agg(sum(col("uv")).as("s"))
     assert(partialAggs(q()) == 0,
       "proven near-unique partial keys must decline the rewrite")
-    assert(rows(q()) == withRuleOff(rows(q())))
+    assert(rows(q()) == withoutRules(spark, EagerAggregation)(rows(q())))
     // the owner's force flag skips the gate
     EagerAggregation.enableFor(uniq, force = true)
     assert(partialAggs(q()) == 1, "force must skip the cost gate")
@@ -211,7 +206,7 @@ class EagerAggregationSpec extends SparkSpec {
       .join(dim, col("fk") === col("dk"))
       .groupBy(col("dgrp")).agg(sum(col("fv")).as("s"))
     assert(partialAggs(q2()) == 1, "a proven 50x reduction must fire")
-    assert(rows(q2()) == withRuleOff(rows(q2())))
+    assert(rows(q2()) == withoutRules(spark, EagerAggregation)(rows(q2())))
   }
 
   test("measured effect: a high fan-in fact ships its partial " +
@@ -248,7 +243,7 @@ class EagerAggregationSpec extends SparkSpec {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val (on, onRows) = shuffled()
-      val (off, offRows) = withRuleOff(shuffled())
+      val (off, offRows) = withoutRules(spark, EagerAggregation)(shuffled())
       assert(onRows == offRows)
       assert(on * 5 < off, s"shuffle records: rule on $on, off $off")
     } finally saved.foreach {
@@ -267,7 +262,6 @@ class EagerAggregationSpec extends SparkSpec {
   test("opt-ins are SESSION-scoped: a sibling session with the rule " +
     "installed does not inherit them until it opts in itself") {
     val sibling = spark.newSession()
-    EagerAggregation.install(sibling)
     def q(s: org.apache.spark.sql.SparkSession) = {
       val f = SnapshotTable.read(s, factPath)
       val dd = SnapshotTable.read(s, dimPath)
@@ -281,7 +275,6 @@ class EagerAggregationSpec extends SparkSpec {
     // Streaming's micro-batch planner does) — the carrier key is the
     // whole registry, so copying it is all a clone needs to keep firing
     val cloneLike = spark.newSession()
-    EagerAggregation.install(cloneLike)
     cloneLike.conf.set("spark.graft.eagerAgg.tables",
       spark.conf.get("spark.graft.eagerAgg.tables"))
     assert(partialAggs(q(cloneLike)) == 1,

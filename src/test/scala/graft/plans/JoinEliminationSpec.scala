@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.SnapshotTable
 
 /** Declared-key join elimination must (a) delete the join from the
@@ -16,10 +17,8 @@ import graft.sources.SnapshotTable
   */
 class JoinEliminationSpec extends SparkSpec {
 
-  JoinElimination.install(spark)
-
   private def freshDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).resolve("t").toString
+    graft.Staged.scratch(spark, name) + "/t"
 
   // dim: unique pk 0..99 with payload; one nonmatching pk band (>= 90
   // has no fact partner, fact fk 200..249 has no dim partner) so the
@@ -58,11 +57,6 @@ class JoinEliminationSpec extends SparkSpec {
   private def joins(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
 
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.joinElimination", "false")
-    try body finally spark.conf.unset("spark.graft.joinElimination")
-  }
-
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
@@ -75,7 +69,7 @@ class JoinEliminationSpec extends SparkSpec {
   test("left join on declared unique key is eliminated, rows unchanged") {
     val q = factAgg(fact.join(dim, col("fk") === col("pk"), "left"))
     assert(joins(q) == 0, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(
       factAgg(fact.join(dim, col("fk") === col("pk"), "left")))))
   }
 
@@ -84,14 +78,14 @@ class JoinEliminationSpec extends SparkSpec {
       dim.filter(col("dpart") === "1"),
       col("fk") === col("pk") && col("fval") > col("pk"), "left"))
     assert(joins(q) == 0, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
   }
 
   test("inner join on declared FK reduces to a not-null filter") {
     def q = factAgg(fact.join(dim, col("fk") === col("pk")))
     assert(joins(q) == 0, q.queryExecution.optimizedPlan.toString)
     // NULL fks are dropped exactly like the real inner join drops them
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
   }
 
   test("kept: output references a dim column") {
@@ -133,13 +127,13 @@ class JoinEliminationSpec extends SparkSpec {
   test("semi join (EXISTS) collapses to a not-null filter") {
     def q = factAgg(fact.join(dim, col("fk") === col("pk"), "left_semi"))
     assert(joins(q) == 0, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
   }
 
   test("anti join (NOT EXISTS) collapses to an is-null filter") {
     def q = factAgg(fact.join(dim, col("fk") === col("pk"), "left_anti"))
     assert(joins(q) == 0, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
   }
 
   test("kept: semi on a key with no FK declaration") {
@@ -151,7 +145,7 @@ class JoinEliminationSpec extends SparkSpec {
   test("right outer mirrors left") {
     val q = factAgg(dim.join(fact, col("fk") === col("pk"), "right"))
     assert(joins(q) == 0, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(
       factAgg(dim.join(fact, col("fk") === col("pk"), "right")))))
   }
 
@@ -167,7 +161,7 @@ class JoinEliminationSpec extends SparkSpec {
       .groupBy(col("fpart")).agg(count(lit(1)).as("n"))
       .orderBy(col("fpart"))
     assert(aggs(q) == 1, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
   }
 
   test("distinct kept: no distinct column is a declared key") {
@@ -203,7 +197,7 @@ class JoinEliminationSpec extends SparkSpec {
       .agg(countDistinct(col("fid")).as("nk"), count(lit(1)).as("n"))
       .orderBy(col("fpart"))
     assert(distinctAggs(q) == 0, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
     def nonKey = fact.groupBy(col("fpart"))
       .agg(countDistinct(col("fk")).as("nfk"), count(lit(1)).as("n"))
     assert(distinctAggs(nonKey) == 1)
@@ -218,7 +212,7 @@ class JoinEliminationSpec extends SparkSpec {
     val src = SnapshotTable.read(spark, t)
     def q = src.agg(countDistinct(col("a"), col("b")).as("n"))
     assert(distinctAggs(q) == 0, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
     // one member alone proves nothing
     def half = src.agg(countDistinct(col("a")).as("n"))
     assert(distinctAggs(half) == 1)
@@ -238,7 +232,7 @@ class JoinEliminationSpec extends SparkSpec {
         count(lit(1)).as("groups"))
       .orderBy(col("fpart"))
     assert(aggs(q) == 1, q.queryExecution.optimizedPlan.toString)
-    assert(rows(q) == withRuleOff(rows(q)))
+    assert(rows(q) == withoutRules(spark, JoinElimination)(rows(q)))
   }
 
   test("GROUP BY kept: grouping does not cover a key") {
@@ -284,7 +278,7 @@ class JoinEliminationSpec extends SparkSpec {
       col("fk") === col("a") && col("fval") === col("b"), "left"))
     assert(joins(covered) == 0,
       covered.queryExecution.optimizedPlan.toString)
-    assert(rows(covered) == withRuleOff(rows(covered)))
+    assert(rows(covered) == withoutRules(spark, JoinElimination)(rows(covered)))
     // only one member covered: fan-out possible, join must stay
     val partial = factAgg(fact.join(cdim, col("fk") === col("a"), "left"))
     assert(joins(partial) == 1)
@@ -305,7 +299,7 @@ class JoinEliminationSpec extends SparkSpec {
     def full = src.select("a", "b").distinct()
       .groupBy(col("a")).agg(count(lit(1)).as("n")).orderBy(col("a"))
     assert(aggs(full) == 1, full.queryExecution.optimizedPlan.toString)
-    assert(rows(full) == withRuleOff(rows(full)))
+    assert(rows(full) == withoutRules(spark, JoinElimination)(rows(full)))
     val half = src.select("a", "cp").distinct()
       .groupBy(col("cp")).agg(count(lit(1)).as("n"))
     assert(aggs(half) == 2)
@@ -384,7 +378,6 @@ class JoinEliminationSpec extends SparkSpec {
     }
     assert(joins(q(spark)) == 0, "declaring session must eliminate")
     val sibling = spark.newSession()
-    JoinElimination.install(sibling)
     assert(joins(q(sibling)) == 1,
       "a sibling session must NOT inherit this session's trust")
     JoinElimination.loadDeclarations(sibling, d)
@@ -393,7 +386,6 @@ class JoinEliminationSpec extends SparkSpec {
     // a conf-carrying clone (streaming's micro-batch planner copies
     // the session conf) inherits the trust without re-declaring
     val cloneLike = spark.newSession()
-    JoinElimination.install(cloneLike)
     cloneLike.conf.set("spark.graft.constraints.uniqueKeys",
       spark.conf.get("spark.graft.constraints.uniqueKeys"))
     assert(joins(q(cloneLike)) == 0,

@@ -15,10 +15,8 @@ import graft.sources.{SnapshotFileIndex, SnapshotTable, TableStats}
   */
 class JoinOrderSpec extends SparkSpec {
 
-  JoinOrder.install(spark)
-
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("joinorder").toString
+    graft.Staged.scratch(spark, "joinorder")
 
   /** In-order snapshot-table paths of the optimized plan — the join
     * order's observable.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.SnapshotTable
 
 /** Metadata-only aggregates must be (a) answered WITHOUT planning any
@@ -17,20 +18,13 @@ import graft.sources.SnapshotTable
   */
 class MetadataAggSpec extends SparkSpec {
 
-  MetadataAggPushdown.install(spark)
-
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("metaagg").resolve("t").toString
+    graft.Staged.scratch(spark, "metaagg") + "/t"
 
   private def rewritten(df: DataFrame): Boolean = {
     val plan = df.queryExecution.optimizedPlan
     plan.collectFirst { case l: LogicalRelation => l }.isEmpty &&
       plan.collectFirst { case l: LocalRelation => l }.nonEmpty
-  }
-
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.snapshot.metadataAgg", "false")
-    try body finally spark.conf.set("spark.graft.snapshot.metadataAgg", "true")
   }
 
   private def smallTable(): String = {
@@ -53,7 +47,7 @@ class MetadataAggSpec extends SparkSpec {
       min(col("v")).as("mnv"), max(col("v")).as("mxv"))
     assert(rewritten(agg()))
     val meta = agg().head()
-    val scanned = withRuleOff { agg().head() }
+    val scanned = withoutRules(spark, MetadataAggPushdown) { agg().head() }
     assert(meta === scanned)
     assert(meta.getLong(0) === 5L && meta.getLong(1) === 1L &&
       meta.getLong(2) === 5L && meta.getInt(3) === 10 && meta.getInt(4) === 50)
@@ -70,7 +64,7 @@ class MetadataAggSpec extends SparkSpec {
     def agg() = SnapshotTable.read(spark, t).agg(
       count(lit(1)).as("n"), max(col("v")).as("mx"))
     assert(rewritten(agg()))
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(agg().head().getLong(0) === 6L && agg().head().getInt(1) === 90)
   }
 
@@ -83,7 +77,7 @@ class MetadataAggSpec extends SparkSpec {
     val got = agg().collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).sortBy(_._1)
     assert(got === Array(("a", 2L, 1L, 20), ("b", 3L, 3L, 50)))
-    assert(got.toSeq === withRuleOff { agg().collect().map(r =>
+    assert(got.toSeq === withoutRules(spark, MetadataAggPushdown) { agg().collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
       .sortBy(_._1).toSeq })
   }
@@ -112,9 +106,11 @@ class MetadataAggSpec extends SparkSpec {
     val eq = base.filter(col("p") === "b").agg(
       count(lit(1)).as("n"), min(col("k")).as("mn"), max(col("k")).as("mx"))
     assert(rewritten(eq))
-    assert(eq.head() === withRuleOff { base.filter(col("p") === "b").agg(
-      count(lit(1)).as("n"), min(col("k")).as("mn"), max(col("k")).as("mx"))
-      .head() })
+    assert(eq.head() === withoutRules(spark, MetadataAggPushdown) {
+      base.filter(col("p") === "b").agg(
+        count(lit(1)).as("n"), min(col("k")).as("mn"), max(col("k")).as("mx"))
+        .head()
+    })
 
     val in = base.filter(col("p").isin("a", "zzz"))
       .agg(count(lit(1)).as("n"))
@@ -185,7 +181,7 @@ class MetadataAggSpec extends SparkSpec {
     assert(rewritten(pruned))
     val r = pruned.head()
     assert(r.getLong(0) === 2L && r.getLong(1) === 2L)
-    assert(r === withRuleOff { pruned.head() })
+    assert(r === withoutRules(spark, MetadataAggPushdown) { pruned.head() })
   }
 
   test("sum/avg from the sidecar's exact decimal sums: rewritten, " +
@@ -199,7 +195,7 @@ class MetadataAggSpec extends SparkSpec {
       count(lit(1)).as("n"), sum(col("k")).as("sk"),
       sum(col("v")).as("sv"), avg(col("v")).as("av"))
     assert(rewritten(agg()), agg().queryExecution.optimizedPlan.toString)
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(agg().head().getLong(1) === 15L)
     assert(agg().head().getLong(2) === 150L)
     assert(agg().head().getDouble(3) === 30.0)
@@ -211,14 +207,14 @@ class MetadataAggSpec extends SparkSpec {
     val (_, delta) = TableStats.refresh(spark, t)
     assert(delta)
     assert(rewritten(agg()))
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(agg().head().getLong(1) === 24L)
     // a plain re-ANALYZE (no sumCols) must CARRY the sum tier, not
     // silently destroy it — the sidecar stays one consistent snapshot
     TableStats.analyze(spark, t, Seq("k"), k = 64)
     assert(rewritten(agg()),
       "re-analyzing sketches must not drop the recorded sums")
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     // floating column: never summed from metadata (order-dependent)
     def fagg() = SnapshotTable.read(spark, t).agg(sum(col("x")).as("sx"))
     assert(!rewritten(fagg()))
@@ -241,7 +237,7 @@ class MetadataAggSpec extends SparkSpec {
     def agg() = SnapshotTable.read(spark, t)
       .agg(sum(col("nl")).as("s"), count(lit(1)).as("n"))
     assert(rewritten(agg()))
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(agg().head().isNullAt(0), "sum of no non-null rows is SQL NULL")
   }
 
@@ -306,7 +302,8 @@ class MetadataAggSpec extends SparkSpec {
       def plainMixed() = SnapshotTable.read(spark, mixed)
         .agg(sum(col("k")).as("s"))
       assert(rewritten(plainMixed()))
-      assert(plainMixed().head() === withRuleOff { plainMixed().head() })
+      assert(plainMixed().head() ===
+        withoutRules(spark, MetadataAggPushdown) { plainMixed().head() })
       assert(!rewritten(SnapshotTable.read(spark, mixed)
         .selectExpr("try_sum(k) AS s")),
         "try_sum must refuse even under legacy conf")
@@ -322,7 +319,7 @@ class MetadataAggSpec extends SparkSpec {
       .selectExpr("try_sum(k) AS s")
     assert(rewritten(tryPos()),
       "try_sum WITH same-sign evidence is provably scan-exact")
-    assert(tryPos().head() === withRuleOff { tryPos().head() })
+    assert(tryPos().head() === withoutRules(spark, MetadataAggPushdown) { tryPos().head() })
     assert(tryPos().head().getLong(0) === 16L)
   }
 
@@ -349,7 +346,7 @@ class MetadataAggSpec extends SparkSpec {
     def agg() = SnapshotTable.read(spark, t)
       .agg(sum(col("price")).as("s"), count(lit(1)).as("n"))
     assert(rewritten(agg()), agg().queryExecution.optimizedPlan.toString)
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(agg().head().getDecimal(0) ===
       new java.math.BigDecimal("17.75"))
     // delta refresh stays exact decimal addition
@@ -362,7 +359,7 @@ class MetadataAggSpec extends SparkSpec {
     assert(rewritten(agg()))
     assert(agg().head().getDecimal(0) ===
       new java.math.BigDecimal("20.00"))
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     // mixed-sign decimals: no same-sign proof -> no fold, in ANY mode
     val m = freshDir()
     SnapshotTable.create(spark, m,
@@ -399,7 +396,7 @@ class MetadataAggSpec extends SparkSpec {
     def agg() = SnapshotTable.read(spark, t)
       .agg(avg(col("price")).as("a"), count(lit(1)).as("n"))
     assert(rewritten(agg()), agg().queryExecution.optimizedPlan.toString)
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(agg().head().getDecimal(0) ===
       new java.math.BigDecimal("3.333333"))
     // delta refresh keeps the exact decimal (sum, count) pair armed
@@ -410,7 +407,7 @@ class MetadataAggSpec extends SparkSpec {
     val (_, delta) = TableStats.refresh(spark, t)
     assert(delta)
     assert(rewritten(agg()))
-    assert(agg().head() === withRuleOff { agg().head() })
+    assert(agg().head() === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(agg().head().getDecimal(0) ===
       new java.math.BigDecimal("2.562500"))
     // mixed signs: no transient-overflow proof, no fold — the scan's
@@ -443,7 +440,7 @@ class MetadataAggSpec extends SparkSpec {
     def wagg() = SnapshotTable.read(spark, w)
       .agg(avg(col("price")).as("a"))
     assert(rewritten(wagg()), wagg().queryExecution.optimizedPlan.toString)
-    assert(wagg().head() === withRuleOff { wagg().head() })
+    assert(wagg().head() === withoutRules(spark, MetadataAggPushdown) { wagg().head() })
     assert(wagg().head().getDecimal(0) ===
       new java.math.BigDecimal("3.333333"))
   }
@@ -475,7 +472,8 @@ class MetadataAggSpec extends SparkSpec {
     TableStats.analyze(spark, t, Seq.empty, sumCols = Seq("price", "k"),
       groupSumCols = Seq("price", "k"))
     assert(rewritten(agg()), agg().queryExecution.optimizedPlan.toString)
-    assert(agg().collect().toSeq === withRuleOff { agg().collect().toSeq })
+    assert(agg().collect().toSeq ===
+      withoutRules(spark, MetadataAggPushdown) { agg().collect().toSeq })
     val rows = agg().collect()
     assert(rows(0).getDecimal(2) === new java.math.BigDecimal("7.75"))
     assert(rows(0).getDecimal(3) === new java.math.BigDecimal("3.875000"))
@@ -486,7 +484,8 @@ class MetadataAggSpec extends SparkSpec {
       .groupBy(col("p"))
       .agg(sum(col("price")).as("s"), avg(col("price")).as("a"))
     assert(rewritten(one()))
-    assert(one().collect().toSeq === withRuleOff { one().collect().toSeq })
+    assert(one().collect().toSeq ===
+      withoutRules(spark, MetadataAggPushdown) { one().collect().toSeq })
     // delta refresh: more rows in 'b' AND a brand-new group 'c'
     SnapshotTable.commitAppend(spark, t,
       Seq((5L, BigDecimal("1.00"), "b"), (6L, BigDecimal("9.00"), "c"))
@@ -496,7 +495,8 @@ class MetadataAggSpec extends SparkSpec {
     val (_, delta) = TableStats.refresh(spark, t)
     assert(delta, "append window must take the delta path")
     assert(rewritten(agg()))
-    assert(agg().collect().toSeq === withRuleOff { agg().collect().toSeq })
+    assert(agg().collect().toSeq ===
+      withoutRules(spark, MetadataAggPushdown) { agg().collect().toSeq })
     val after = agg().collect()
     assert(after.map(_.getString(0)).toSeq === Seq("a", "b", "c"))
     assert(after(1).getDecimal(2) === new java.math.BigDecimal("3.75"))
@@ -532,16 +532,16 @@ class MetadataAggSpec extends SparkSpec {
     // split answers exactly
     val le = agg(_.filter(col("p") <= 2))
     assert(rewritten(le), le.queryExecution.optimizedPlan.toString)
-    assert(le.head() === withRuleOff { le.head() })
+    assert(le.head() === withoutRules(spark, MetadataAggPushdown) { le.head() })
     assert(le.head().getLong(0) === 300L)
     val between = agg(_.filter(col("p").between(5, 7)))
     assert(rewritten(between))
-    assert(between.head() === withRuleOff { between.head() })
+    assert(between.head() === withoutRules(spark, MetadataAggPushdown) { between.head() })
     assert(between.head().getLong(0) === 300L)
     // range on a NON-partition column: no stamp proof, no rewrite
     val nonPart = agg(_.filter(col("v") >= 600))
     assert(!rewritten(nonPart))
-    assert(nonPart.head() === withRuleOff { nonPart.head() })
+    assert(nonPart.head() === withoutRules(spark, MetadataAggPushdown) { nonPart.head() })
   }
 
   test("distinct and filtered aggregates are never claimed") {

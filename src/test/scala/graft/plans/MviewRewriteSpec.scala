@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.{MaterializedView, SnapshotFileIndex, SnapshotTable}
 
 /** Plan-level proof that [[MviewRewrite]] substitutes the registered
@@ -15,17 +16,14 @@ import graft.sources.{MaterializedView, SnapshotFileIndex, SnapshotTable}
 class MviewRewriteSpec extends SparkSpec {
 
   private lazy val init: (String, MaterializedView.MvDef) = {
-    MviewRewrite.install(spark)
-    val src = java.nio.file.Files
-      .createTempDirectory("graft_mvr_src").resolve("t").toString
+    val src = graft.Staged.scratch(spark, "graft_mvr_src") + "/t"
     val df = spark.range(0, 1000).select(
       (col("id") % 7).as("k"),
       when(col("id") % 13 =!= 0, col("id").cast("double"))
         .as("v"), // every 13th row NULL — count(v) ≠ count(*)
       (col("id") % 3).as("p"))
     SnapshotTable.create(spark, src, df, partCol = "p")
-    val view = java.nio.file.Files
-      .createTempDirectory("graft_mvr_view").resolve("t").toString
+    val view = graft.Staged.scratch(spark, "graft_mvr_view") + "/t"
     val d = MaterializedView.create(spark, view, src, "k", "v", buckets = 2)
     (src, d)
   }
@@ -50,17 +48,12 @@ class MviewRewriteSpec extends SparkSpec {
         max(col("v")).as("hi"), avg(col("v")).as("m"))
       .orderBy(col("k"))
 
-  private def withFlag[T](on: Boolean)(body: => T): T = {
-    spark.conf.set("spark.graft.mview.rewrite", on.toString)
-    try body finally spark.conf.set("spark.graft.mview.rewrite", "true")
-  }
-
   test("grouped aggregate is answered from the view, values unchanged") {
     val (src, d) = init
     val q = agg(src)
     assert(scanned(q) == Set(d.view),
       "rewritten plan must scan ONLY the view")
-    val direct = withFlag(on = false) {
+    val direct = withoutRules(spark, MviewRewrite) {
       val p = agg(src)
       assert(scanned(p) == Set(src), "flag off must scan the source")
       p.collect().toSeq
@@ -75,7 +68,7 @@ class MviewRewriteSpec extends SparkSpec {
       .groupBy(col("k")).agg(sum(col("v")).as("s")).orderBy(col("k"))
     assert(scanned(keyed) == Set(d.view))
     assert(keyed.collect().toSeq ==
-      withFlag(on = false)(keyed.collect().toSeq))
+      withoutRules(spark, MviewRewrite)(keyed.collect().toSeq))
 
     val valued = SnapshotTable.read(spark, src).filter(col("v") > 10)
       .groupBy(col("k")).agg(sum(col("v")).as("s"))
@@ -88,7 +81,7 @@ class MviewRewriteSpec extends SparkSpec {
     val g = SnapshotTable.read(spark, src)
       .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
     assert(scanned(g) == Set(d.view))
-    assert(g.collect().toSeq == withFlag(on = false)(g.collect().toSeq))
+    assert(g.collect().toSeq == withoutRules(spark, MviewRewrite)(g.collect().toSeq))
   }
 
   test("distinct and unsupported aggregates refuse") {
@@ -110,7 +103,7 @@ class MviewRewriteSpec extends SparkSpec {
     MaterializedView.refresh(spark, d)
     val q2 = agg(src)
     assert(scanned(q2) == Set(d.view), "refresh restores the rewrite")
-    assert(q2.collect().toSeq == withFlag(on = false)(q2.collect().toSeq))
+    assert(q2.collect().toSeq == withoutRules(spark, MviewRewrite)(q2.collect().toSeq))
 
     val old = SnapshotTable.readVersion(spark, src, 1L)
       .groupBy(col("k")).agg(sum(col("v")).as("s"))
@@ -119,8 +112,7 @@ class MviewRewriteSpec extends SparkSpec {
   }
 
   private lazy val joinInit: (String, String, String) = {
-    MviewRewrite.install(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft_mvr_join")
+    val root = java.nio.file.Paths.get(graft.Staged.scratch(spark, "graft_mvr_join"))
     val fact = root.resolve("fact").toString
     val dim = root.resolve("dim").toString
     SnapshotTable.create(spark, fact,
@@ -155,7 +147,7 @@ class MviewRewriteSpec extends SparkSpec {
     val q = joinAgg(fact, dim)
     assert(scanned(q) == Set(view),
       "rewritten plan must scan ONLY the join view — neither source")
-    assert(q.collect().toSeq == withFlag(on = false) {
+    assert(q.collect().toSeq == withoutRules(spark, MviewRewrite) {
       val p = joinAgg(fact, dim)
       assert(scanned(p) == Set(fact, dim))
       p.collect().toSeq
@@ -171,7 +163,7 @@ class MviewRewriteSpec extends SparkSpec {
       .groupBy(col("seg")).agg(count(lit(1)).as("n")).orderBy(col("seg"))
     assert(scanned(filtered) == Set(view))
     assert(filtered.collect().toSeq ==
-      withFlag(on = false)(filtered.collect().toSeq))
+      withoutRules(spark, MviewRewrite)(filtered.collect().toSeq))
 
     val factFiltered = f.filter(col("amount") > 100)
       .join(d, f("cust") === d("ck"))
@@ -191,15 +183,14 @@ class MviewRewriteSpec extends SparkSpec {
     val freshQ = joinAgg(fact, dim)
     assert(scanned(freshQ) == Set(view), "refreshJoin restores the rewrite")
     assert(freshQ.collect().toSeq ==
-      withFlag(on = false)(freshQ.collect().toSeq))
+      withoutRules(spark, MviewRewrite)(freshQ.collect().toSeq))
   }
 
   test("refresh purges vanished groups and the rewrite stays exact") {
     val (srcBase, _) = init
     // isolated copy: deletes on the shared fixture would break others
     val src = SnapshotTable.cloneTable(spark, srcBase)
-    val view = java.nio.file.Files
-      .createTempDirectory("graft_mvr_view2").resolve("t").toString
+    val view = graft.Staged.scratch(spark, "graft_mvr_view2") + "/t"
     val d = MaterializedView.create(spark, view, src, "k", "v", buckets = 2)
     SnapshotTable.commitDelete(spark, src, col("k") === 2L, "p")
     MaterializedView.refresh(spark, d)
@@ -207,6 +198,6 @@ class MviewRewriteSpec extends SparkSpec {
     assert(scanned(q) == Set(d.view))
     val ks = q.select("k").collect().map(_.getLong(0)).toSet
     assert(!ks.contains(2L), "vanished group must not resurface")
-    assert(q.collect().toSeq == withFlag(on = false)(q.collect().toSeq))
+    assert(q.collect().toSeq == withoutRules(spark, MviewRewrite)(q.collect().toSeq))
   }
 }

@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.{RankStats, SnapshotTable}
 
 /** Rank-threshold top-k pushdown: ORDER BY col LIMIT k over a bare
@@ -16,10 +17,8 @@ import graft.sources.{RankStats, SnapshotTable}
   */
 class RankTopKSpec extends SparkSpec {
 
-  RankTopK.install(spark)
-
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("ranktopk").resolve("t").toString
+    graft.Staged.scratch(spark, "ranktopk") + "/t"
 
   /** 10k rows clustered on v (statsCols head = range-split + per-file
     * sort), so a v threshold prunes most files.
@@ -61,12 +60,6 @@ class RankTopKSpec extends SparkSpec {
     walk(df.queryExecution.executedPlan)
   }
 
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.snapshot.rankTopK", "false")
-    try body
-    finally spark.conf.set("spark.graft.snapshot.rankTopK", "true")
-  }
-
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
@@ -77,7 +70,7 @@ class RankTopKSpec extends SparkSpec {
       .orderBy(col("v"), col("k")).limit(25)
       .select(col("k"), col("v"))
     val fast = q()
-    val (slowRows, slowFiles) = withRuleOff {
+    val (slowRows, slowFiles) = withoutRules(spark, RankTopK) {
       val d = q(); (rows(d), filesRead(d))
     }
     assert(rows(fast) === slowRows)
@@ -93,7 +86,7 @@ class RankTopKSpec extends SparkSpec {
     def desc() = SnapshotTable.read(spark, t)
       .orderBy(col("v").desc, col("k")).limit(25)
       .select(col("k"), col("v"))
-    val (slowRows, slowFiles) = withRuleOff {
+    val (slowRows, slowFiles) = withoutRules(spark, RankTopK) {
       val d = desc(); (rows(d), filesRead(d))
     }
     assert(rows(desc()) === slowRows)
@@ -109,15 +102,15 @@ class RankTopKSpec extends SparkSpec {
     val (rf, delta) = RankStats.refresh(spark, t)
     assert(delta, "append window must take the delta path")
     assert(rf.summaries.forall(_.spans), "delta segments must keep spans")
-    val descRows2 = withRuleOff { rows(desc()) }
+    val descRows2 = withoutRules(spark, RankTopK) { rows(desc()) }
     assert(rows(desc()) === descRows2)
-    assert(filesRead(desc()) < withRuleOff { filesRead(desc()) },
+    assert(filesRead(desc()) < withoutRules(spark, RankTopK) { filesRead(desc()) },
       "a span-preserving delta refresh must keep the DESC threshold armed")
     def asc() = SnapshotTable.read(spark, t)
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    val ascRowsOff = withRuleOff { rows(asc()) }
+    val ascRowsOff = withoutRules(spark, RankTopK) { rows(asc()) }
     assert(rows(asc()) === ascRowsOff)
-    assert(filesRead(asc()) < withRuleOff { filesRead(asc()) },
+    assert(filesRead(asc()) < withoutRules(spark, RankTopK) { filesRead(asc()) },
       "ASC needs no span property - cum <= true rank holds across segments")
 
     // a LEGACY merged summary (single span-less segment) still refuses
@@ -133,7 +126,7 @@ class RankTopKSpec extends SparkSpec {
     def q() = SnapshotTable.read(spark, t)
       .sort(col("v").asc_nulls_first, col("k")).limit(25)
       .select(col("k"), col("v"))
-    val off = withRuleOff { rows(q()) }
+    val off = withoutRules(spark, RankTopK) { rows(q()) }
     assert(rows(q()) === off)
     assert(off.count(_.contains("null")) > 0,
       "fixture must actually place nulls in the top-k")
@@ -153,8 +146,8 @@ class RankTopKSpec extends SparkSpec {
     RankStats.analyze(spark, t, Seq("v"), m = 64)
     def q() = SnapshotTable.read(spark, t)
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    assert(rows(q()) === withRuleOff { rows(q()) })
-    assert(filesRead(q()) === withRuleOff { filesRead(q()) },
+    assert(rows(q()) === withoutRules(spark, RankTopK) { rows(q()) })
+    assert(filesRead(q()) === withoutRules(spark, RankTopK) { filesRead(q()) },
       "2^53-scale long values must refuse the threshold filter")
   }
 
@@ -166,8 +159,8 @@ class RankTopKSpec extends SparkSpec {
     def filtered() = SnapshotTable.read(spark, t)
       .filter(col("k") % 2 === 0)
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    assert(rows(filtered()) === withRuleOff { rows(filtered()) })
-    assert(filesRead(filtered()) === withRuleOff { filesRead(filtered()) })
+    assert(rows(filtered()) === withoutRules(spark, RankTopK) { rows(filtered()) })
+    assert(filesRead(filtered()) === withoutRules(spark, RankTopK) { filesRead(filtered()) })
     // append WITHOUT refresh: the sidecar fingerprint goes stale, but
     // tier 2 serves from the planned entries' own stats - exact parity
     // (the appended row is the new global minimum and must survive)
@@ -176,10 +169,10 @@ class RankTopKSpec extends SparkSpec {
       Seq((99999L, -1.0, "all")).toDF("k", "v", "p"), "p")
     def q() = SnapshotTable.read(spark, t)
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    assert(rows(q()) === withRuleOff { rows(q()) })
+    assert(rows(q()) === withoutRules(spark, RankTopK) { rows(q()) })
     assert(rows(q()).exists(_.contains("99999")),
       "fixture sanity: the appended minimum must be in the top-k")
-    assert(filesRead(q()) < withRuleOff { filesRead(q()) },
+    assert(filesRead(q()) < withoutRules(spark, RankTopK) { filesRead(q()) },
       "per-file stats must keep pruning when the sidecar is stale")
     // k > provable rows refuses (tiny table)
     val t2 = freshDir()
@@ -189,7 +182,7 @@ class RankTopKSpec extends SparkSpec {
     RankStats.analyze(spark, t2, Seq("v"), m = 64)
     def big() = SnapshotTable.read(spark, t2)
       .orderBy(col("v"), col("k")).limit(100).select(col("k"), col("v"))
-    assert(rows(big()) === withRuleOff { rows(big()) })
+    assert(rows(big()) === withoutRules(spark, RankTopK) { rows(big()) })
   }
 
   /** 12k rows over 3 partitions, clustered on v within each — the
@@ -213,20 +206,21 @@ class RankTopKSpec extends SparkSpec {
     def asc() = SnapshotTable.read(spark, t)
       .filter(col("p") === "p1")
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    val (offRows, offFiles) = withRuleOff { val d = asc(); (rows(d), filesRead(d)) }
+    val (offRows, offFiles) =
+      withoutRules(spark, RankTopK) { val d = asc(); (rows(d), filesRead(d)) }
     assert(rows(asc()) === offRows)
     assert(filesRead(asc()) < offFiles,
       s"filtered ASC top-k must prune: ${filesRead(asc())} vs $offFiles")
     def desc() = SnapshotTable.read(spark, t)
       .filter(col("p") === "p1")
       .orderBy(col("v").desc, col("k")).limit(25).select(col("k"), col("v"))
-    assert(rows(desc()) === withRuleOff { rows(desc()) })
-    assert(filesRead(desc()) < withRuleOff { filesRead(desc()) })
+    assert(rows(desc()) === withoutRules(spark, RankTopK) { rows(desc()) })
+    assert(filesRead(desc()) < withoutRules(spark, RankTopK) { filesRead(desc()) })
     def inq() = SnapshotTable.read(spark, t)
       .filter(col("p").isin("p0", "p2"))
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    assert(rows(inq()) === withRuleOff { rows(inq()) })
-    assert(filesRead(inq()) < withRuleOff { filesRead(inq()) })
+    assert(rows(inq()) === withoutRules(spark, RankTopK) { rows(inq()) })
+    assert(filesRead(inq()) < withoutRules(spark, RankTopK) { filesRead(inq()) })
   }
 
   test("a table with NO rank sidecar at all still top-k-prunes from " +
@@ -234,8 +228,8 @@ class RankTopKSpec extends SparkSpec {
     val t = partedTable() // never rank-analyzed
     def q() = SnapshotTable.read(spark, t)
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    assert(rows(q()) === withRuleOff { rows(q()) })
-    assert(filesRead(q()) < withRuleOff { filesRead(q()) },
+    assert(rows(q()) === withoutRules(spark, RankTopK) { rows(q()) })
+    assert(filesRead(q()) < withoutRules(spark, RankTopK) { filesRead(q()) },
       "bare top-k must prune from file stats without any sidecar")
   }
 
@@ -255,15 +249,15 @@ class RankTopKSpec extends SparkSpec {
     def stampQ() = SnapshotTable.read(spark, t)
       .filter(col("p") === "__HIVE_DEFAULT_PARTITION__")
       .orderBy(col("v"), col("k")).limit(10).select(col("k"), col("v"))
-    assert(rows(stampQ()) === withRuleOff { rows(stampQ()) })
-    assert(filesRead(stampQ()) === withRuleOff { filesRead(stampQ()) },
+    assert(rows(stampQ()) === withoutRules(spark, RankTopK) { rows(stampQ()) })
+    assert(filesRead(stampQ()) === withoutRules(spark, RankTopK) { filesRead(stampQ()) },
       "the stamp literal must refuse the threshold rewrite")
     // a real partition value: stamped (NULL) files are excluded from
     // the accumulation, so the proven threshold covers only genuinely
     // passing rows — exact parity with the rule off
     def pq() = SnapshotTable.read(spark, t).filter(col("p") === "p1")
       .orderBy(col("v"), col("k")).limit(10).select(col("k"), col("v"))
-    assert(rows(pq()) === withRuleOff { rows(pq()) })
+    assert(rows(pq()) === withoutRules(spark, RankTopK) { rows(pq()) })
   }
 
   test("install is SESSION-scoped, not JVM-global: a sibling session " +
@@ -273,15 +267,22 @@ class RankTopKSpec extends SparkSpec {
     def q(s: org.apache.spark.sql.SparkSession) =
       SnapshotTable.read(s, t)
         .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    val allFiles = withRuleOff { filesRead(q(spark)) }
+    val allFiles = withoutRules(spark, RankTopK) { filesRead(q(spark)) }
     assert(filesRead(q(spark)) < allFiles,
       "suite session (installed) must prune")
     val sibling = spark.newSession()
-    assert(filesRead(q(sibling)) === allFiles,
+    assert(sibling.experimental.extraOptimizations.isEmpty,
       "a sibling session must not inherit the experimental rule")
-    RankTopK.install(sibling)
-    assert(filesRead(q(sibling)) < allFiles,
+    // the suite session's plan, analyzed and optimized in the sibling
+    // before any read of its own has installed anything there
+    val plan = q(spark).queryExecution.logical
+    assert(filesRead(GraftPlanBridge.ofRows(sibling, plan)) === allFiles,
+      "a sibling session without its own install must not prune")
+    graft.SessionTune.install(sibling)
+    assert(filesRead(GraftPlanBridge.ofRows(sibling, plan)) < allFiles,
       "the sibling's own install arms the rewrite")
+    assert(filesRead(q(spark.newSession())) < allFiles,
+      "a fresh session's first snapshot read installs the rules")
   }
 
   test("an all-NaN file's stats never close a threshold: the file-" +
@@ -307,7 +308,7 @@ class RankTopKSpec extends SparkSpec {
     def desc120() = SnapshotTable.read(spark, t)
       .orderBy(col("v").desc, col("k")).limit(120)
       .select(col("k"), col("v"))
-    val off = withRuleOff { rows(desc120()) }
+    val off = withoutRules(spark, RankTopK) { rows(desc120()) }
     assert(off.length === 120, "fixture sanity: 160 rows, k=120")
     assert(rows(desc120()) === off)
     // small k in both directions still proves from the real files
@@ -316,12 +317,12 @@ class RankTopKSpec extends SparkSpec {
     def desc20() = SnapshotTable.read(spark, t)
       .orderBy(col("v").desc, col("k")).limit(20)
       .select(col("k"), col("v"))
-    assert(rows(desc20()) === withRuleOff { rows(desc20()) })
+    assert(rows(desc20()) === withoutRules(spark, RankTopK) { rows(desc20()) })
     assert(rows(desc20()).forall(_.contains("NaN")),
       "fixture sanity: DESC top-20 is NaN rows (NaN sorts greatest)")
     def asc20() = SnapshotTable.read(spark, t)
       .orderBy(col("v"), col("k")).limit(20).select(col("k"), col("v"))
-    assert(rows(asc20()) === withRuleOff { rows(asc20()) })
+    assert(rows(asc20()) === withoutRules(spark, RankTopK) { rows(asc20()) })
   }
 
   test("a RANGE predicate on the partition column proves whole-file " +
@@ -332,7 +333,7 @@ class RankTopKSpec extends SparkSpec {
     def rangeF() = SnapshotTable.read(spark, t)
       .filter(col("p") >= "p1")
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    val (offRows, offFiles) = withRuleOff {
+    val (offRows, offFiles) = withoutRules(spark, RankTopK) {
       val d = rangeF(); (rows(d), filesRead(d))
     }
     assert(rows(rangeF()) === offRows)
@@ -342,16 +343,16 @@ class RankTopKSpec extends SparkSpec {
       .filter(col("p").between("p1", "p2"))
       .orderBy(col("v").desc, col("k")).limit(25)
       .select(col("k"), col("v"))
-    assert(rows(betweenF()) === withRuleOff { rows(betweenF()) })
-    assert(filesRead(betweenF()) < withRuleOff { filesRead(betweenF()) },
+    assert(rows(betweenF()) === withoutRules(spark, RankTopK) { rows(betweenF()) })
+    assert(filesRead(betweenF()) < withoutRules(spark, RankTopK) { filesRead(betweenF()) },
       "BETWEEN (two range conjuncts) must prune, DESC included")
     // a range on a NON-partition column says nothing about whole-file
     // membership: plan untouched
     def nonPart() = SnapshotTable.read(spark, t)
       .filter(col("k") >= 6000L)
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    assert(rows(nonPart()) === withRuleOff { rows(nonPart()) })
-    assert(filesRead(nonPart()) === withRuleOff { filesRead(nonPart()) },
+    assert(rows(nonPart()) === withoutRules(spark, RankTopK) { rows(nonPart()) })
+    assert(filesRead(nonPart()) === withoutRules(spark, RankTopK) { filesRead(nonPart()) },
       "a non-partition range must refuse the threshold rewrite")
   }
 
@@ -371,7 +372,8 @@ class RankTopKSpec extends SparkSpec {
     def q() = SnapshotTable.read(spark, t)
       .filter(col("p") <= 2)
       .orderBy(col("v"), col("k")).limit(25).select(col("k"), col("v"))
-    val (offRows, offFiles) = withRuleOff { val d = q(); (rows(d), filesRead(d)) }
+    val (offRows, offFiles) =
+      withoutRules(spark, RankTopK) { val d = q(); (rows(d), filesRead(d)) }
     assert(rows(q()) === offRows)
     assert(filesRead(q()) < offFiles,
       "numeric partition range must prune soundly (2 < 10 even " +

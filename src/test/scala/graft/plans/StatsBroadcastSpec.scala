@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoi
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.SnapshotTable
 
 /** The stats-broadcast rule must (a) turn a shuffle join into a STATIC
@@ -22,10 +23,8 @@ import graft.sources.SnapshotTable
   */
 class StatsBroadcastSpec extends SparkSpec {
 
-  StatsBroadcast.install(spark)
-
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("statsbc").resolve("t").toString
+    graft.Staged.scratch(spark, "statsbc") + "/t"
 
   // ~5 partitions x ~2000 rows of incompressible-ish payload: full
   // table well over the 64 KB test threshold, one partition well under
@@ -66,12 +65,6 @@ class StatsBroadcastSpec extends SparkSpec {
     try body finally spark.conf.set(key, old)
   }
 
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.snapshot.statsBroadcast", "false")
-    try body
-    finally spark.conf.set("spark.graft.snapshot.statsBroadcast", "true")
-  }
-
   // keeps every dim column in the output so Spark's column-ratio
   // sizing cannot shrink the flag-off side under the threshold
   private def joined(dim: DataFrame): DataFrame =
@@ -90,7 +83,7 @@ class StatsBroadcastSpec extends SparkSpec {
       val on = joined(dim())
       assert(bhj(on) === 1 && smj(on) === 0)
       // plan must be forced INSIDE the flag-off scope (planning is lazy)
-      val (offBhj, offSmj, offRows) = withRuleOff {
+      val (offBhj, offSmj, offRows) = withoutRules(spark, StatsBroadcast) {
         val d = joined(dim()); (bhj(d), smj(d), d.collect().toSeq)
       }
       assert(offBhj === 0 && offSmj === 1)
@@ -107,7 +100,7 @@ class StatsBroadcastSpec extends SparkSpec {
       def dim() = SnapshotTable.read(spark, t)
         .filter(col("k") >= 9950L)
       assert(bhj(joined(dim())) === 1)
-      assert(withRuleOff { bhj(joined(dim())) } === 0)
+      assert(withoutRules(spark, StatsBroadcast) { bhj(joined(dim())) } === 0)
     }
   }
 
@@ -149,7 +142,7 @@ class StatsBroadcastSpec extends SparkSpec {
           sum(length(col("fpad"))).as("fpadlen"))
       val on = q()
       assert(bhj(on) === 1 && smj(on) === 0)
-      val (offBhj, offSmj, offRows) = withRuleOff {
+      val (offBhj, offSmj, offRows) = withoutRules(spark, StatsBroadcast) {
         val d = q(); (bhj(d), smj(d), d.collect().toSeq)
       }
       assert(offBhj === 0 && offSmj === 1)
@@ -188,11 +181,11 @@ class StatsBroadcastSpec extends SparkSpec {
       val q = aggJoined(aggSideOf(t))
       assert(bhj(q) === 1 && smj(q) === 0,
         q.queryExecution.sparkPlan.toString)
-      val (offB, offS) = withRuleOff {
+      val (offB, offS) = withoutRules(spark, StatsBroadcast) {
         val d = aggJoined(aggSideOf(t)); (bhj(d), smj(d)) }
       assert(offB === 0 && offS === 1)
       assert(q.collect().toSeq.map(_.toString).sorted ===
-        withRuleOff(aggJoined(aggSideOf(t))
+        withoutRules(spark, StatsBroadcast)(aggJoined(aggSideOf(t))
           .collect().toSeq.map(_.toString).sorted))
     }
   }
@@ -201,7 +194,6 @@ class StatsBroadcastSpec extends SparkSpec {
     "below the join broadcasts by the fact's NDV bound where the wide " +
     "dim and the fact both refuse; rule off shuffle-joins; rows identical") {
     val f = keyedTable()
-    EagerAggregation.install(spark)
     EagerAggregation.enableFor(spark, f, force = false)
     TableStats.analyze(spark, f, Seq("k"), k = 1024)
     // 50 keys, each with eight 128-char pads the query groups by, so the
@@ -219,7 +211,7 @@ class StatsBroadcastSpec extends SparkSpec {
     withThreshold(16384L) {
       val on = q()
       assert(bhj(on) === 1 && smj(on) === 0, on.queryExecution.sparkPlan.toString)
-      val (offB, offS, offRows) = withRuleOff {
+      val (offB, offS, offRows) = withoutRules(spark, StatsBroadcast) {
         val o = q(); (bhj(o), smj(o), o.collect().map(_.toString).sorted.toSeq)
       }
       assert(offB === 0 && offS === 1)
@@ -297,7 +289,9 @@ class StatsBroadcastSpec extends SparkSpec {
       val on = q()
       assert(bhj(on) === 1 && smj(on) === 0,
         "rank-bounded rows x max width must fit the threshold")
-      val (offB, offRows) = withRuleOff { val d = q(); (bhj(d), d.collect().toSeq) }
+      val (offB, offRows) = withoutRules(spark, StatsBroadcast) {
+        val d = q(); (bhj(d), d.collect().toSeq)
+      }
       assert(offB === 0)
       assert(on.collect().toSeq === offRows)
     }
@@ -340,7 +334,9 @@ class StatsBroadcastSpec extends SparkSpec {
       val on = q()
       assert(bhj(on) === 1 && smj(on) === 0,
         "a planned subset of the analyzed set must still be sizable")
-      val (offB, offRows) = withRuleOff { val d = q(); (bhj(d), d.collect().toSeq) }
+      val (offB, offRows) = withoutRules(spark, StatsBroadcast) {
+        val d = q(); (bhj(d), d.collect().toSeq)
+      }
       assert(offB === 0)
       assert(on.collect().toSeq === offRows)
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.SnapshotTable
 
 /** Grouped top-k pushdown: `row_number()/rank() OVER (PARTITION BY p
@@ -18,10 +19,8 @@ import graft.sources.SnapshotTable
   */
 class WindowTopKSpec extends SparkSpec {
 
-  WindowTopK.install(spark)
-
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("wintopk").resolve("t").toString
+    graft.Staged.scratch(spark, "wintopk") + "/t"
 
   /** 10k rows over 5 partition stamps, v range-clustered within each
     * partition (statsCols head), so per-group thresholds prune most of
@@ -63,12 +62,6 @@ class WindowTopKSpec extends SparkSpec {
     walk(df.queryExecution.executedPlan)
   }
 
-  private def withOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.snapshot.windowTopK", "false")
-    try body
-    finally spark.conf.set("spark.graft.snapshot.windowTopK", "true")
-  }
-
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
@@ -90,7 +83,7 @@ class WindowTopKSpec extends SparkSpec {
   test("per-group ascending top-k reads a fraction of the files with " +
     "rule-off row parity") {
     val t = table()
-    val (slowRows, slowFiles) = withOff {
+    val (slowRows, slowFiles) = withoutRules(spark, WindowTopK) {
       val d = topk(t, 3); (rows(d), filesRead(d))
     }
     assert(rows(topk(t, 3)) === slowRows)
@@ -102,13 +95,13 @@ class WindowTopKSpec extends SparkSpec {
   test("descending and rank() prune with parity; ties at the " +
     "threshold survive") {
     val t = table()
-    val (slowDesc, slowDescFiles) = withOff {
+    val (slowDesc, slowDescFiles) = withoutRules(spark, WindowTopK) {
       val d = topk(t, 5, desc = true); (rows(d), filesRead(d))
     }
     assert(rows(topk(t, 5, desc = true)) === slowDesc)
     assert(filesRead(topk(t, 5, desc = true)) < slowDescFiles)
 
-    val slowRank = withOff(rows(topk(t, 4, fn = "rank")))
+    val slowRank = withoutRules(spark, WindowTopK)(rows(topk(t, 4, fn = "rank")))
     assert(rows(topk(t, 4, fn = "rank")) === slowRank)
   }
 
@@ -118,7 +111,7 @@ class WindowTopKSpec extends SparkSpec {
     // Spark's default ascending null ordering is NULLS FIRST: with
     // nulls in v, ranks 1..n_nulls ARE the null rows — an injected
     // filter that dropped them would break parity loudly
-    val slow = withOff(rows(topk(t, 3)))
+    val slow = withoutRules(spark, WindowTopK)(rows(topk(t, 3)))
     assert(rows(topk(t, 3)) === slow)
     assert(slow.exists(_.contains("null")),
       "fixture must actually put nulls in the top ranks")
@@ -128,10 +121,10 @@ class WindowTopKSpec extends SparkSpec {
     "window expression over the same partition, and a filter under " +
     "the window all leave the scan unpruned") {
     val t = table()
-    val all = withOff(filesRead(topk(t, 3)))
+    val all = withoutRules(spark, WindowTopK)(filesRead(topk(t, 3)))
 
     // dense_rank: a row-count accumulation cannot bound distinct ranks
-    val slowDense = withOff(rows(topk(t, 3, fn = "dense_rank")))
+    val slowDense = withoutRules(spark, WindowTopK)(rows(topk(t, 3, fn = "dense_rank")))
     assert(rows(topk(t, 3, fn = "dense_rank")) === slowDense)
     assert(filesRead(topk(t, 3, fn = "dense_rank")) === all)
 
@@ -143,7 +136,7 @@ class WindowTopKSpec extends SparkSpec {
       .filter(col("rn") <= 3)
       .select(col("p"), col("rn"), col("k"), col("v"), col("ga"))
       .orderBy(col("p"), col("rn"))
-    val slowAvg = withOff(rows(withAvg()))
+    val slowAvg = withoutRules(spark, WindowTopK)(rows(withAvg()))
     assert(rows(withAvg()) === slowAvg)
     assert(filesRead(withAvg()) === all)
 
@@ -154,7 +147,7 @@ class WindowTopKSpec extends SparkSpec {
         .select(col("p"), col("rn"), col("k"), col("v"))
         .orderBy(col("p"), col("rn"))
     }
-    val slowF = withOff(rows(filtered()))
+    val slowF = withoutRules(spark, WindowTopK)(rows(filtered()))
     assert(rows(filtered()) === slowF)
     assert(filesRead(filtered()) === all)
   }
@@ -168,7 +161,8 @@ class WindowTopKSpec extends SparkSpec {
          |  SELECT p, k, v, row_number() OVER (PARTITION BY p
          |    ORDER BY v, k) AS rn FROM snapshot_table('$t'))
          |WHERE rn <= 3 ORDER BY p, rn, k""".stripMargin)
-    val (slowRows, slowFiles) = withOff { val d = q(); (rows(d), filesRead(d)) }
+    val (slowRows, slowFiles) =
+      withoutRules(spark, WindowTopK) { val d = q(); (rows(d), filesRead(d)) }
     assert(rows(q()) === slowRows)
     assert(filesRead(q()) < slowFiles,
       "the TVF-resolved relation must prune like the Scala read")
@@ -178,7 +172,7 @@ class WindowTopKSpec extends SparkSpec {
     val t = table()
     spark.conf.set("spark.graft.snapshot.windowTopK.maxGroups", "2")
     try {
-      val all = withOff(filesRead(topk(t, 3)))
+      val all = withoutRules(spark, WindowTopK)(filesRead(topk(t, 3)))
       assert(filesRead(topk(t, 3)) === all, "5 groups > cap 2 must refuse")
     } finally
       spark.conf.unset("spark.graft.snapshot.windowTopK.maxGroups")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.plans.MetadataAggPushdown
 
 /** Per-file NULL COUNTS in manifest stats: `count(col)` folds from the
@@ -17,20 +18,13 @@ import graft.plans.MetadataAggPushdown
   */
 class NullStatsSpec extends SparkSpec {
 
-  MetadataAggPushdown.install(spark)
-
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("nullstats").resolve("t").toString
+    graft.Staged.scratch(spark, "nullstats") + "/t"
 
   private def rewritten(df: DataFrame): Boolean = {
     val plan = df.queryExecution.optimizedPlan
     plan.collectFirst { case l: LogicalRelation => l }.isEmpty &&
       plan.collectFirst { case l: LocalRelation => l }.nonEmpty
-  }
-
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set("spark.graft.snapshot.metadataAgg", "false")
-    try body finally spark.conf.set("spark.graft.snapshot.metadataAgg", "true")
   }
 
   private def plannedFiles(df: DataFrame): Long = {
@@ -73,7 +67,7 @@ class NullStatsSpec extends SparkSpec {
       min(col("x")).as("mn"), max(col("x")).as("mx"))
     assert(rewritten(agg()))
     val meta = agg().head()
-    assert(meta === withRuleOff { agg().head() })
+    assert(meta === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(meta.getLong(0) === 6L && meta.getLong(1) === 3L &&
       meta.getDouble(2) === 10.0 && meta.getDouble(3) === 30.0)
   }
@@ -85,7 +79,9 @@ class NullStatsSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), count(col("x")).as("nx"))
     assert(rewritten(agg()))
     val meta = agg().orderBy(col("p")).collect().toSeq
-    assert(meta === withRuleOff { agg().orderBy(col("p")).collect().toSeq })
+    assert(meta === withoutRules(spark, MetadataAggPushdown) {
+      agg().orderBy(col("p")).collect().toSeq
+    })
     assert(meta.map(r => (r.getString(0), r.getLong(1), r.getLong(2))) ===
       Seq(("all", 2L, 0L), ("none", 2L, 2L), ("some", 2L, 1L)))
   }
@@ -102,7 +98,7 @@ class NullStatsSpec extends SparkSpec {
       .agg(min(col("x")).as("mn"), count(col("x")).as("nx"))
     assert(rewritten(agg()))
     val meta = agg().head()
-    assert(meta === withRuleOff { agg().head() })
+    assert(meta === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(meta.isNullAt(0) && meta.getLong(1) === 0L)
   }
 
@@ -140,7 +136,7 @@ class NullStatsSpec extends SparkSpec {
       .agg(count(col("v")).as("nv"), count(col("k")).as("nk"))
     assert(rewritten(agg()))
     val meta = agg().head()
-    assert(meta === withRuleOff { agg().head() })
+    assert(meta === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(meta.getLong(0) === 2L && meta.getLong(1) === 3L)
   }
 
@@ -192,7 +188,7 @@ class NullStatsSpec extends SparkSpec {
       .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
     assert(!rewritten(agg()), "NaN-contaminated bounds must refuse the fold")
     val meta = agg().head()
-    assert(meta === withRuleOff { agg().head() })
+    assert(meta === withoutRules(spark, MetadataAggPushdown) { agg().head() })
     assert(meta.getDouble(0) === 0.5, "true minimum lives in the NaN file")
     assert(meta.getDouble(1).isNaN, "scan max of a NaN-containing column is NaN")
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.plans.MetadataAggPushdown
 
 /** KMV distinct sketches: exact while unsaturated, bounded-error when
@@ -15,10 +16,8 @@ import graft.plans.MetadataAggPushdown
   */
 class TableStatsSpec extends SparkSpec {
 
-  MetadataAggPushdown.install(spark)
-
   private def freshDir(): String =
-    java.nio.file.Files.createTempDirectory("tstats").resolve("t").toString
+    graft.Staged.scratch(spark, "tstats") + "/t"
 
   private def rewritten(df: DataFrame): Boolean = {
     val plan = df.queryExecution.optimizedPlan
@@ -68,9 +67,9 @@ class TableStatsSpec extends SparkSpec {
       .agg(countDistinct(col("grp")).as("n_grp"))
     assert(rewritten(q()))
     assert(q().head().getLong(0) === 41L)
-    spark.conf.set("spark.graft.snapshot.metadataAgg", "false")
-    try assert(q().head().getLong(0) === 41L)
-    finally spark.conf.set("spark.graft.snapshot.metadataAgg", "true")
+    withoutRules(spark, MetadataAggPushdown) {
+      assert(q().head().getLong(0) === 41L)
+    }
     // any filter (even a partition filter) invalidates the whole-table
     // statistic — plan untouched
     val f = SnapshotTable.read(spark, t).filter(col("p") === "even")
