@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *    training job per shard IN PARALLEL via
   *    `groupByKey(hospital).mapGroups` (the reference trains hospitals
   *    sequentially in a for-loop — similarity_search.py:451);
-  *  - each task returns (weights, n_samples); the driver does the A5
-  *    FedAvg weighted average (similarity_search.py:476-493) and loops.
+  *  - each task is one [[ShardClient]]'s `fit` and returns its flat
+  *    weights and n_samples; the driver averages the flat vectors (A5
+  *    FedAvg, similarity_search.py:476-493, [[Mlp.fedAvgFlat]]) and loops.
   *
   * Driver↔executor crossings per round: 1 broadcast down (weights in
   * closure), 1 collect up (k flattened weight vectors, k = #hospitals).
@@ -27,11 +28,11 @@ object FederatedTrainer {
   case class TrainResult(hospital: String, flat: Array[Double], n: Long, finalLoss: Double)
 
   /** One federated training run over a DataFrame bearing `hospital` and a
-    * float-array `features` column (P1/P2 output). Returns the trained
-    * global weights plus per-round mean losses for observability.
+    * float-array `features` column (P1/P2 output), from `Mlp.init(42)`
+    * with [[ShardClient.fit]]'s batch size and learning rate. Returns the
+    * trained global weights plus per-round mean losses for observability.
     */
-  def train(patients: DataFrame, rounds: Int = 3, localEpochs: Int = 5,
-            batchSize: Int = 32, lr: Double = 1e-3, seed: Long = 42L):
+  def train(patients: DataFrame, rounds: Int = 3, localEpochs: Int = 5):
       (Mlp.Weights, Seq[Double]) = {
     val spark = patients.sparkSession
     import spark.implicits._
@@ -40,28 +41,26 @@ object FederatedTrainer {
       .select(col("hospital"), col("features").cast("array<double>").as("features"))
       .as[(String, Array[Double])]
 
-    var global = Mlp.init(seed)
+    var globalFlat = Mlp.init().flatten // serialized into the task closure
     val roundLosses = Seq.newBuilder[Double]
 
     (0 until rounds).foreach { _ =>
-      val globalFlat = global.flatten // serialized into the task closure
+      val start = globalFlat
       val results = ds.groupByKey(_._1)
         .mapGroups { (hospital, rows) =>
-          val x = rows.map(_._2).toArray
-          val (wts, losses) = Mlp.localFit(Mlp.unflatten(globalFlat), x,
-            epochs = localEpochs, batchSize = batchSize, lr = lr)
-          TrainResult(hospital, wts.flatten, x.length.toLong,
-            if (losses.nonEmpty) losses.last else Double.NaN)
+          val (flat, n, loss) = ShardClient(hospital, rows.map(_._2).toArray)
+            .fit(start, localEpochs)
+          TrainResult(hospital, flat, n, loss)
         }
         .collect()
 
-      global = Mlp.fedAvg(results.toSeq.map(r => (Mlp.unflatten(r.flat), r.n)))
+      globalFlat = Mlp.fedAvgFlat(results.toSeq.map(r => (r.flat, r.n)))
       roundLosses += {
         val ls = results.map(_.finalLoss).filterNot(_.isNaN)
         if (ls.nonEmpty) ls.sum / ls.length else Double.NaN
       }
     }
-    (global, roundLosses.result())
+    (Mlp.unflatten(globalFlat), roundLosses.result())
   }
 
   /** M4 — batch inference: embed every row's feature array with the
@@ -69,11 +68,9 @@ object FederatedTrainer {
     * task closure; the UDF is a pure Array[Float] ⇒ Array[Float] map —
     * embarrassingly parallel, no shuffle.
     */
-  def withEmbeddings(df: DataFrame, wts: Mlp.Weights,
-                     featuresCol: String = "features",
-                     outputCol: String = "embedding"): DataFrame = {
+  def withEmbeddings(df: DataFrame, wts: Mlp.Weights): DataFrame = {
     val w = wts // serialized once per task, not per row
     val embed = udf { x: Seq[Float] => Mlp.forward(w, x.toArray) }
-    df.withColumn(outputCol, embed(col(featuresCol)))
+    df.withColumn("embedding", embed(col("features")))
   }
 }

@@ -15,6 +15,18 @@ import scala.util.Random
   * Linear+ReLU nets (`bn = None`) remain supported for the hand-checked
   * spec nets.
   *
+  * Where each step lives (each is written once):
+  *  - `layer`: one Linear (+ ReLU on hidden layers) of one row; the eval
+  *    [[forward]] and the train-mode `trainForward` both call it;
+  *  - `trainForward`: the train-mode stack (dropout, batch-statistics BN
+  *    in `batchNorm`), keeping what backprop needs; [[localFit]] and
+  *    [[trainingLossOf]] call it;
+  *  - `gramLoss`: the Gram-reconstruction loss and D = E·Eᵀ − X·Xᵀ;
+  *  - `Adam.step`: the one Adam update, for W, b, γ and β;
+  *  - [[Weights.mapParts]]: the `flatten` order, which [[unflatten]],
+  *    deep copies and the Adam moments reuse; [[fedAvgFlat]] averages
+  *    flat vectors element-wise.
+  *
   * All math is plain double arrays with while-loops — this runs inside
   * executor tasks (one local model per shard), so no Spark types here.
   */
@@ -40,52 +52,42 @@ object Mlp {
                            bn: Option[Bn] = None) {
     def nLayers: Int = w.length
 
+    /** The same structure with every parameter array `a` replaced by
+      * `f(a)`, `f` applied in `flatten` order: per layer W's rows then b,
+      * then per hidden layer γ, β, running mean, running var.
+      */
+    def mapParts(f: Array[Double] => Array[Double]): Weights = {
+      val linear = w.indices.map(l => (w(l).map(f), f(b(l))))
+      val norm = bn.map { s =>
+        val per = s.gamma.indices.map(l =>
+          Vector(f(s.gamma(l)), f(s.beta(l)), f(s.runMean(l)), f(s.runVar(l))))
+        Bn(per.map(_(0)).toVector, per.map(_(1)).toVector,
+          per.map(_(2)).toVector, per.map(_(3)).toVector)
+      }
+      Weights(linear.map(_._1).toVector, linear.map(_._2).toVector, norm)
+    }
+
     def flatten: Array[Double] = {
       val out = Array.newBuilder[Double]
-      w.indices.foreach { l =>
-        w(l).foreach(row => out ++= row)
-        out ++= b(l)
-      }
-      bn.foreach { s =>
-        s.gamma.indices.foreach { l =>
-          out ++= s.gamma(l); out ++= s.beta(l)
-          out ++= s.runMean(l); out ++= s.runVar(l)
-        }
-      }
+      mapParts { a => out ++= a; a }
       out.result()
     }
   }
 
-  def unflatten(flat: Array[Double]): Weights = {
+  private lazy val standard: Weights = init()
+
+  /** Inverse of `flatten`: weights of `shape`'s structure (the standard
+    * net by default) read from `flat`.
+    */
+  def unflatten(flat: Array[Double], shape: Weights = standard): Weights = {
     var off = 0
-    val ws = Vector.newBuilder[Array[Array[Double]]]
-    val bs = Vector.newBuilder[Array[Double]]
-    (0 until dims.length - 1).foreach { l =>
-      val (in, out) = (dims(l), dims(l + 1))
-      val wMat = Array.ofDim[Double](out, in)
-      var i = 0
-      while (i < out) {
-        System.arraycopy(flat, off, wMat(i), 0, in); off += in; i += 1
-      }
-      val bVec = new Array[Double](out)
-      System.arraycopy(flat, off, bVec, 0, out); off += out
-      ws += wMat; bs += bVec
+    val out = shape.mapParts { a =>
+      val r = new Array[Double](a.length)
+      System.arraycopy(flat, off, r, 0, a.length); off += a.length
+      r
     }
-    // BN state for the hidden layers follows the linear stack
-    val g = Vector.newBuilder[Array[Double]]
-    val be = Vector.newBuilder[Array[Double]]
-    val rm = Vector.newBuilder[Array[Double]]
-    val rv = Vector.newBuilder[Array[Double]]
-    (1 until dims.length - 1).foreach { l =>
-      val d = dims(l)
-      Seq(g, be, rm, rv).foreach { bld =>
-        val v = new Array[Double](d)
-        System.arraycopy(flat, off, v, 0, d); off += d
-        bld += v
-      }
-    }
-    Weights(ws.result(), bs.result(),
-      Some(Bn(g.result(), be.result(), rm.result(), rv.result())))
+    require(off == flat.length, s"flat vector of ${flat.length} values for a shape of $off")
+    out
   }
 
   /** Seeded init, torch defaults: Linear W, b ~ U(-k, k) with
@@ -111,6 +113,22 @@ object Mlp {
       hidden.map(d => Array.fill(d)(1.0)))))
   }
 
+  /** One Linear of one row, `W·in + b`, followed by ReLU when `relu`. */
+  private def layer(wM: Array[Array[Double]], bV: Array[Double], in: Array[Double],
+                    relu: Boolean): Array[Double] = {
+    val out = new Array[Double](bV.length)
+    var i = 0
+    while (i < out.length) {
+      val row = wM(i)
+      var s = bV(i)
+      var j = 0
+      while (j < row.length) { s += row(j) * in(j); j += 1 }
+      out(i) = if (relu && s < 0) 0.0 else s
+      i += 1
+    }
+    out
+  }
+
   /** Inference forward pass (M4): per hidden layer affine + ReLU
     * (+ eval-mode BatchNorm over running stats when present; dropout is
     * identity in eval), final affine linear. Input/output float32 at the
@@ -121,121 +139,146 @@ object Mlp {
     var h = x.map(_.toDouble)
     var l = 0
     while (l < wts.nLayers) {
-      val (wM, bV) = (wts.w(l), wts.b(l))
-      val out = new Array[Double](bV.length)
       val hidden = l < wts.nLayers - 1
-      var i = 0
-      while (i < out.length) {
-        val row = wM(i)
-        var s = bV(i)
-        var j = 0
-        while (j < row.length) { s += row(j) * h(j); j += 1 }
-        out(i) = if (hidden && s < 0) 0.0 else s // ReLU on hidden
-        i += 1
-      }
+      h = layer(wts.w(l), wts.b(l), h, hidden)
       if (hidden) wts.bn.foreach { bn =>
         val (ga, be) = (bn.gamma(l), bn.beta(l))
         val (rm, rv) = (bn.runMean(l), bn.runVar(l))
-        var i2 = 0
-        while (i2 < out.length) {
-          out(i2) = ga(i2) * (out(i2) - rm(i2)) / math.sqrt(rv(i2) + bnEps) + be(i2)
-          i2 += 1
+        var i = 0
+        while (i < h.length) {
+          h(i) = ga(i) * (h(i) - rm(i)) / math.sqrt(rv(i) + bnEps) + be(i)
+          i += 1
         }
       }
-      h = out
       l += 1
     }
     h.map(_.toFloat)
   }
 
-  /** A5 — FedAvg: weight = n_k / Σn (similarity_search.py:476-493).
-    * Shape-agnostic (accumulates into the first client's shape).
+  /** A5 — FedAvg: weight = n_k / Σn (similarity_search.py:476-493). BN
+    * state averages like every other state_dict entry (what a
+    * parameter-shipping FL client does with running stats).
     */
-  def fedAvg(results: Seq[(Weights, Long)]): Weights = {
+  def fedAvg(results: Seq[(Weights, Long)]): Weights =
+    unflatten(fedAvgFlat(results.map { case (w, n) => (w.flatten, n) }), results.head._1)
+
+  /** FedAvg of flattened weights: `acc += src · n_k/Σn`, one client at a
+    * time in the given order.
+    */
+  def fedAvgFlat(results: Seq[(Array[Double], Long)]): Array[Double] = {
     require(results.nonEmpty, "fedAvg of zero clients")
     val total = results.map(_._2).sum.toDouble
-    val shape = results.head._1
-    val accW = shape.w.map(m => Array.ofDim[Double](m.length, m(0).length))
-    val accB = shape.b.map(v => new Array[Double](v.length))
-    // BN state averages like every other state_dict entry (what a
-    // parameter-shipping FL client does with running stats)
-    val accBn = shape.bn.map(s => Bn(
-      s.gamma.map(v => new Array[Double](v.length)),
-      s.beta.map(v => new Array[Double](v.length)),
-      s.runMean.map(v => new Array[Double](v.length)),
-      s.runVar.map(v => new Array[Double](v.length))))
-    results.foreach { case (wts, n) =>
+    val acc = new Array[Double](results.head._1.length)
+    results.foreach { case (src, n) =>
+      require(src.length == acc.length, "fedAvg of differently shaped clients")
       val weight = n / total
-      accW.indices.foreach { l =>
-        var i = 0
-        while (i < accW(l).length) {
-          val src = wts.w(l)(i); val dst = accW(l)(i)
-          var j = 0
-          while (j < dst.length) { dst(j) += src(j) * weight; j += 1 }
-          i += 1
-        }
-        val srcB = wts.b(l); val dstB = accB(l)
-        var k = 0
-        while (k < dstB.length) { dstB(k) += srcB(k) * weight; k += 1 }
+      var i = 0
+      while (i < acc.length) { acc(i) += src(i) * weight; i += 1 }
+    }
+    acc
+  }
+
+  /** Train-mode BatchNorm1d of `out` (batch rows × features) in place over
+    * the batch statistics: `xh = (z − μ)·istd`, then `γ·xh + β`; the
+    * running stats move with momentum 0.1 (unbiased var, as torch).
+    * Returns (xh, istd) for backprop.
+    */
+  private def batchNorm(out: Array[Array[Double]], bn: Bn,
+                        l: Int): (Array[Array[Double]], Array[Double]) = {
+    val (ga, be) = (bn.gamma(l), bn.beta(l))
+    val (rm, rv) = (bn.runMean(l), bn.runVar(l))
+    val b = out.length
+    val dimL = ga.length
+    val xh = Array.ofDim[Double](b, dimL)
+    val istd = new Array[Double](dimL)
+    var i = 0
+    while (i < dimL) {
+      var mu = 0.0
+      var r = 0
+      while (r < b) { mu += out(r)(i); r += 1 }
+      mu /= b
+      var va = 0.0
+      r = 0
+      while (r < b) { val dlt = out(r)(i) - mu; va += dlt * dlt; r += 1 }
+      va /= b // biased var normalizes (torch)
+      val is = 1.0 / math.sqrt(va + bnEps)
+      istd(i) = is
+      r = 0
+      while (r < b) {
+        xh(r)(i) = (out(r)(i) - mu) * is
+        out(r)(i) = ga(i) * xh(r)(i) + be(i)
+        r += 1
       }
-      (accBn, wts.bn) match {
-        case (Some(acc), Some(src)) =>
-          def add(dst: Vector[Array[Double]], s: Vector[Array[Double]]): Unit =
-            dst.indices.foreach { l =>
-              var i = 0
-              while (i < dst(l).length) { dst(l)(i) += s(l)(i) * weight; i += 1 }
+      rm(i) = (1 - bnMomentum) * rm(i) + bnMomentum * mu
+      rv(i) = (1 - bnMomentum) * rv(i) + bnMomentum * va * b / (b - 1.0)
+      i += 1
+    }
+    (xh, istd)
+  }
+
+  /** What one train-mode forward pass keeps for backprop, per layer l:
+    * `acts(l)` its input (`acts(nLayers)` = E); for hidden layers the
+    * post-ReLU activation `relu(l)`, the inverted dropout mask `mask(l)`
+    * (null when p = 0) and, when BN ran, `xhat(l)` and `invStd(l)`.
+    */
+  private final class Pass(nL: Int) {
+    val acts = new Array[Array[Array[Double]]](nL + 1)
+    val relu = new Array[Array[Array[Double]]](nL)
+    val mask = new Array[Array[Array[Double]]](nL)
+    val xhat = new Array[Array[Array[Double]]](nL)
+    val invStd = new Array[Array[Double]](nL)
+  }
+
+  /** Train-mode forward of batch `x`: per hidden layer Linear → ReLU →
+    * Dropout(p, inverted, drawn from `rng`) → batch-statistics BN (when
+    * `wts.bn` is present and the batch has ≥ 2 rows: torch raises on
+    * batches of 1, our shards never produce them). Updates the running
+    * statistics in `wts`.
+    */
+  private def trainForward(wts: Weights, x: Array[Array[Double]], p: Double,
+                           rng: Random): Pass = {
+    val nL = wts.nLayers
+    val pass = new Pass(nL)
+    pass.acts(0) = x
+    var l = 0
+    while (l < nL) {
+      val hidden = l < nL - 1
+      val out = pass.acts(l).map(layer(wts.w(l), wts.b(l), _, hidden))
+      if (hidden) {
+        pass.relu(l) = out.map(_.clone())
+        if (p > 0) {
+          val keep = 1.0 / (1.0 - p)
+          pass.mask(l) = out.map { row =>
+            val m = new Array[Double](row.length)
+            var i = 0
+            while (i < row.length) {
+              m(i) = if (rng.nextDouble() >= p) keep else 0.0
+              row(i) *= m(i)
+              i += 1
             }
-          add(acc.gamma, src.gamma); add(acc.beta, src.beta)
-          add(acc.runMean, src.runMean); add(acc.runVar, src.runVar)
-        case _ => ()
-      }
-    }
-    Weights(accW, accB, accBn)
-  }
-
-  /** Rebuild weights of an arbitrary shape from a flat vector (inverse of
-    * `flatten` for non-production dims; `unflatten` covers the standard
-    * net).
-    */
-  def unflattenLike(shape: Weights, flat: Array[Double]): Weights = {
-    var off = 0
-    val ws = Vector.newBuilder[Array[Array[Double]]]
-    val bs = Vector.newBuilder[Array[Double]]
-    shape.w.indices.foreach { l =>
-      ws += shape.w(l).map { row =>
-        val r = new Array[Double](row.length)
-        System.arraycopy(flat, off, r, 0, row.length); off += row.length
-        r
-      }
-      val bv = new Array[Double](shape.b(l).length)
-      System.arraycopy(flat, off, bv, 0, bv.length); off += bv.length
-      bs += bv
-    }
-    // flatten interleaves γ, β, runMean, runVar per hidden layer
-    val bn = shape.bn.map { s =>
-      val hidden = s.gamma.indices
-      val fields = Array.fill(4)(Array.ofDim[Array[Double]](hidden.length))
-      hidden.foreach { l =>
-        val d = s.gamma(l).length
-        fields.foreach { arr =>
-          val r = new Array[Double](d)
-          System.arraycopy(flat, off, r, 0, d); off += d
-          arr(l) = r
+            m
+          }
+        }
+        if (x.length >= 2) wts.bn.foreach { bn =>
+          val (xh, istd) = batchNorm(out, bn, l)
+          pass.xhat(l) = xh
+          pass.invStd(l) = istd
         }
       }
-      Bn(fields(0).toVector, fields(1).toVector, fields(2).toVector, fields(3).toVector)
+      pass.acts(l + 1) = out
+      l += 1
     }
-    Weights(ws.result(), bs.result(), bn)
+    pass
   }
 
-  /** Gram-reconstruction loss of a batch under given weights (V5,
-    * similarity_search.py:236-238) — exposed for the numerical gradient
-    * check in MlpSpec and for loss inspection.
+  /** V5 — the Gram-reconstruction loss `MSE(E·Eᵀ, X·Xᵀ)` of a batch
+    * (similarity_search.py:236-238) and D = E·Eᵀ − X·Xᵀ (b×b).
     */
-  def lossOf(wts: Weights, x: Array[Array[Double]]): Double = {
+  private def gramLoss(emb: Array[Array[Double]],
+                       x: Array[Array[Double]]): (Double, Array[Array[Double]]) = {
     val b = x.length
-    val emb = x.map(row => forward(wts, row.map(_.toFloat)).map(_.toDouble))
     val d = emb(0).length
+    val diff = Array.ofDim[Double](b, b)
     var loss = 0.0
     var r = 0
     while (r < b) {
@@ -247,12 +290,38 @@ object Mlp {
         j = 0
         while (j < x(0).length) { rx += x(r)(j) * x(c)(j); j += 1 }
         val dd = re - rx
+        diff(r)(c) = dd
         loss += dd * dd
         c += 1
       }
       r += 1
     }
-    loss / (b.toDouble * b)
+    (loss / (b.toDouble * b), diff)
+  }
+
+  /** Adam (β1 0.9, β2 0.999, eps 1e-8): moments `m`, `v` shaped like the
+    * trained weights, bias corrections of the current step.
+    */
+  private final class Adam(like: Weights, lr: Double) {
+    private val (beta1, beta2, eps) = (0.9, 0.999, 1e-8)
+    val m: Weights = like.mapParts(a => new Array[Double](a.length))
+    val v: Weights = like.mapParts(a => new Array[Double](a.length))
+    private var t = 0
+    private var bc1, bc2 = 0.0
+
+    def nextStep(): Unit = {
+      t += 1
+      bc1 = 1 - math.pow(beta1, t)
+      bc2 = 1 - math.pow(beta2, t)
+    }
+
+    /** Updates `p(i)` by gradient `g`, with `p`'s moments `mp`, `vp`. */
+    def step(p: Array[Double], mp: Array[Double], vp: Array[Double], i: Int, g: Double): Unit = {
+      val mi = mp(i) * beta1 + (1 - beta1) * g
+      val vi = vp(i) * beta2 + (1 - beta2) * g * g
+      mp(i) = mi; vp(i) = vi
+      p(i) -= lr * (mi / bc1) / (math.sqrt(vi / bc2) + eps)
+    }
   }
 
   /** M2 — local minibatch training with the Gram-reconstruction loss
@@ -266,8 +335,7 @@ object Mlp {
     * Linear → ReLU → Dropout(0.2, inverted, seeded) → BatchNorm1d
     * (batch stats; running stats tracked with momentum 0.1; γ/β learned
     * under the same Adam). Plain Linear→ReLU when `bn` is None (spec
-    * nets). Batches of size 1 skip BN (torch raises there; our shards
-    * never produce them — documented degenerate case).
+    * nets; no dropout there).
     *
     * Gradient: with D = E·Eᵀ − X·Xᵀ (symmetric, b×b), MSE over b² entries
     * gives dL/dE = (4/b²)·D·E, then standard backprop through
@@ -283,26 +351,11 @@ object Mlp {
     val bs = math.min(batchSize, n)
     val nBatches = math.max(n / bs, 1)
 
-    // deep-copy working weights (shape-agnostic — works for test nets too)
-    val wts = Weights(start.w.map(_.map(_.clone())), start.b.map(_.clone()),
-      start.bn.map(s => Bn(s.gamma.map(_.clone()), s.beta.map(_.clone()),
-        s.runMean.map(_.clone()), s.runVar.map(_.clone()))))
+    val wts = start.mapParts(_.clone())
     val nL = wts.nLayers
-    val useBn = wts.bn.isDefined
-    val p = if (useBn) dropout else 0.0
+    val p = if (wts.bn.isDefined) dropout else 0.0
     val dropRng = new Random(dropoutSeed)
-
-    // Adam state (linear + BN scale/shift)
-    val mW = wts.w.map(m => Array.ofDim[Double](m.length, m(0).length))
-    val vW = wts.w.map(m => Array.ofDim[Double](m.length, m(0).length))
-    val mB = wts.b.map(v => new Array[Double](v.length))
-    val vB = wts.b.map(v => new Array[Double](v.length))
-    val mG = wts.bn.map(s => s.gamma.map(v => new Array[Double](v.length)))
-    val vG = wts.bn.map(s => s.gamma.map(v => new Array[Double](v.length)))
-    val mBe = wts.bn.map(s => s.beta.map(v => new Array[Double](v.length)))
-    val vBe = wts.bn.map(s => s.beta.map(v => new Array[Double](v.length)))
-    val (beta1, beta2, eps) = (0.9, 0.999, 1e-8)
-    var t = 0
+    val adam = new Adam(wts, lr)
 
     val epochLosses = new Array[Double](epochs)
     var e = 0
@@ -312,124 +365,16 @@ object Mlp {
       while (bi < nBatches) {
         val x = data.slice(bi * bs, math.min((bi + 1) * bs, n))
         val b = x.length
-        val bnActive = useBn && b >= 2
-
-        // forward, keeping per-stage activations:
-        // acts(l) = input to layer l; for hidden layers also cache the
-        // post-ReLU activation, dropout mask, BN xhat and invStd
-        val acts = new Array[Array[Array[Double]]](nL + 1)
-        val reluOut = new Array[Array[Array[Double]]](nL)   // a = relu(z)
-        val dropMask = new Array[Array[Array[Double]]](nL)  // inverted mask
-        val xhat = new Array[Array[Array[Double]]](nL)
-        val invStd = new Array[Array[Double]](nL)
-        acts(0) = x
-        var l = 0
-        while (l < nL) {
-          val (wM, bV) = (wts.w(l), wts.b(l))
-          val hidden = l < nL - 1
-          val out = Array.ofDim[Double](b, bV.length)
-          var r = 0
-          while (r < b) {
-            val in = acts(l)(r)
-            var i = 0
-            while (i < bV.length) {
-              val row = wM(i)
-              var s = bV(i)
-              var j = 0
-              while (j < row.length) { s += row(j) * in(j); j += 1 }
-              out(r)(i) = if (hidden && s < 0) 0.0 else s
-              i += 1
-            }
-            r += 1
-          }
-          if (hidden && useBn) {
-            reluOut(l) = out.map(_.clone())
-            // inverted dropout
-            val mask = Array.ofDim[Double](b, bV.length)
-            if (p > 0) {
-              val keep = 1.0 / (1.0 - p)
-              var r2 = 0
-              while (r2 < b) {
-                var i2 = 0
-                while (i2 < bV.length) {
-                  mask(r2)(i2) = if (dropRng.nextDouble() >= p) keep else 0.0
-                  out(r2)(i2) *= mask(r2)(i2)
-                  i2 += 1
-                }
-                r2 += 1
-              }
-            } else {
-              mask.foreach(row => java.util.Arrays.fill(row, 1.0))
-            }
-            dropMask(l) = mask
-            if (bnActive) {
-              val bn = wts.bn.get
-              val (ga, be) = (bn.gamma(l), bn.beta(l))
-              val (rm, rv) = (bn.runMean(l), bn.runVar(l))
-              val dimL = bV.length
-              val xh = Array.ofDim[Double](b, dimL)
-              val istd = new Array[Double](dimL)
-              var i2 = 0
-              while (i2 < dimL) {
-                var mu = 0.0
-                var r2 = 0
-                while (r2 < b) { mu += out(r2)(i2); r2 += 1 }
-                mu /= b
-                var va = 0.0
-                r2 = 0
-                while (r2 < b) { val dlt = out(r2)(i2) - mu; va += dlt * dlt; r2 += 1 }
-                va /= b // biased var normalizes (torch)
-                val is = 1.0 / math.sqrt(va + bnEps)
-                istd(i2) = is
-                r2 = 0
-                while (r2 < b) {
-                  xh(r2)(i2) = (out(r2)(i2) - mu) * is
-                  out(r2)(i2) = ga(i2) * xh(r2)(i2) + be(i2)
-                  r2 += 1
-                }
-                // running stats: momentum 0.1, unbiased var (torch)
-                rm(i2) = (1 - bnMomentum) * rm(i2) + bnMomentum * mu
-                rv(i2) = (1 - bnMomentum) * rv(i2) +
-                  bnMomentum * va * b / (b - 1.0)
-                i2 += 1
-              }
-              xhat(l) = xh
-              invStd(l) = istd
-            }
-          }
-          acts(l + 1) = out
-          l += 1
-        }
-
-        // loss & dL/dE
-        val emb = acts(nL)
-        val d = emb(0).length
-        // D = E·Eᵀ − X·Xᵀ  (b×b)
-        val diff = Array.ofDim[Double](b, b)
-        var loss = 0.0
-        var r = 0
-        while (r < b) {
-          var c = 0
-          while (c < b) {
-            var re = 0.0; var rx = 0.0
-            var j = 0
-            while (j < d) { re += emb(r)(j) * emb(c)(j); j += 1 }
-            j = 0
-            while (j < x(0).length) { rx += x(r)(j) * x(c)(j); j += 1 }
-            val dd = re - rx
-            diff(r)(c) = dd
-            loss += dd * dd
-            c += 1
-          }
-          r += 1
-        }
-        loss /= (b.toDouble * b)
+        val pass = trainForward(wts, x, p, dropRng)
+        val emb = pass.acts(nL)
+        val (loss, diff) = gramLoss(emb, x)
         epochLoss += loss
 
         // grad wrt embeddings: (4/b²)·D·E
+        val d = emb(0).length
         val scale = 4.0 / (b.toDouble * b)
         var grad = Array.ofDim[Double](b, d)
-        r = 0
+        var r = 0
         while (r < b) {
           var j = 0
           while (j < d) {
@@ -443,91 +388,69 @@ object Mlp {
         }
 
         // backprop + Adam update
-        t += 1
-        val bc1 = 1 - math.pow(beta1, t)
-        val bc2 = 1 - math.pow(beta2, t)
-        l = nL - 1
+        adam.nextStep()
+        var l = nL - 1
         while (l >= 0) {
-          val in = acts(l)
-          val out = acts(l + 1)
+          val in = pass.acts(l)
           val (wM, bV) = (wts.w(l), wts.b(l))
           val inDim = wM(0).length
           val outDim = bV.length
           if (l < nL - 1) {
-            if (useBn) {
-              // backward through BN (if active this batch), then the
-              // dropout mask, then the ReLU gate
-              if (bnActive) {
-                val bn = wts.bn.get
-                val (ga, xh, istd) = (bn.gamma(l), xhat(l), invStd(l))
-                var i = 0
-                while (i < outDim) {
-                  var dG = 0.0; var dBe = 0.0
-                  var sumDxhat = 0.0; var sumDxhatXhat = 0.0
-                  var rr = 0
-                  while (rr < b) {
-                    val dy = grad(rr)(i)
-                    dG += dy * xh(rr)(i)
-                    dBe += dy
-                    val dxh = dy * ga(i)
-                    sumDxhat += dxh
-                    sumDxhatXhat += dxh * xh(rr)(i)
-                    rr += 1
-                  }
-                  // d(dropped input) per row
-                  rr = 0
-                  while (rr < b) {
-                    val dxh = grad(rr)(i) * ga(i)
-                    grad(rr)(i) = istd(i) / b *
-                      (b * dxh - sumDxhat - xh(rr)(i) * sumDxhatXhat)
-                    rr += 1
-                  }
-                  // Adam on γ/β
-                  val mg = mG.get(l)(i) * beta1 + (1 - beta1) * dG
-                  val vg = vG.get(l)(i) * beta2 + (1 - beta2) * dG * dG
-                  mG.get(l)(i) = mg; vG.get(l)(i) = vg
-                  ga(i) -= lr * (mg / bc1) / (math.sqrt(vg / bc2) + eps)
-                  val mb = mBe.get(l)(i) * beta1 + (1 - beta1) * dBe
-                  val vb = vBe.get(l)(i) * beta2 + (1 - beta2) * dBe * dBe
-                  mBe.get(l)(i) = mb; vBe.get(l)(i) = vb
-                  bn.beta(l)(i) -= lr * (mb / bc1) / (math.sqrt(vb / bc2) + eps)
-                  i += 1
+            // backward through BN (if it ran this batch), then the
+            // dropout mask, then the ReLU gate
+            if (pass.xhat(l) != null) {
+              val bn = wts.bn.get
+              val (ga, xh, istd) = (bn.gamma(l), pass.xhat(l), pass.invStd(l))
+              val (mBn, vBn) = (adam.m.bn.get, adam.v.bn.get)
+              var i = 0
+              while (i < outDim) {
+                var dG = 0.0; var dBe = 0.0
+                var sumDxhat = 0.0; var sumDxhatXhat = 0.0
+                var rr = 0
+                while (rr < b) {
+                  val dy = grad(rr)(i)
+                  dG += dy * xh(rr)(i)
+                  dBe += dy
+                  val dxh = dy * ga(i)
+                  sumDxhat += dxh
+                  sumDxhatXhat += dxh * xh(rr)(i)
+                  rr += 1
                 }
-              }
-              // dropout mask, then ReLU gate on the PRE-dropout activation
-              val (a, mask) = (reluOut(l), dropMask(l))
-              var rr = 0
-              while (rr < b) {
-                var i = 0
-                while (i < outDim) {
-                  grad(rr)(i) *= mask(rr)(i)
-                  if (a(rr)(i) <= 0.0) grad(rr)(i) = 0.0
-                  i += 1
+                // d(dropped input) per row
+                rr = 0
+                while (rr < b) {
+                  val dxh = grad(rr)(i) * ga(i)
+                  grad(rr)(i) = istd(i) / b *
+                    (b * dxh - sumDxhat - xh(rr)(i) * sumDxhatXhat)
+                  rr += 1
                 }
-                rr += 1
+                adam.step(ga, mBn.gamma(l), vBn.gamma(l), i, dG)
+                adam.step(bn.beta(l), mBn.beta(l), vBn.beta(l), i, dBe)
+                i += 1
               }
-            } else {
-              // plain net: ReLU mask (out==0 ⇒ grad 0)
-              var rr = 0
-              while (rr < grad.length) {
-                var i = 0
-                while (i < outDim) {
-                  if (out(rr)(i) <= 0.0) grad(rr)(i) = 0.0
-                  i += 1
-                }
-                rr += 1
+            }
+            // dropout mask, then ReLU gate on the PRE-dropout activation
+            val (a, mask) = (pass.relu(l), pass.mask(l))
+            var rr = 0
+            while (rr < b) {
+              var i = 0
+              while (i < outDim) {
+                if (mask != null) grad(rr)(i) *= mask(rr)(i)
+                if (a(rr)(i) <= 0.0) grad(rr)(i) = 0.0
+                i += 1
               }
+              rr += 1
             }
           }
           // grads: dW(i,j) = Σ_r grad(r,i)·in(r,j); db(i) = Σ_r grad(r,i)
           // next grad: dIn(r,j) = Σ_i grad(r,i)·W(i,j)  (pre-update W)
-          val nextGrad = if (l > 0) Array.ofDim[Double](grad.length, inDim) else null
+          val nextGrad = if (l > 0) Array.ofDim[Double](b, inDim) else null
           var i = 0
           while (i < outDim) {
             val wRow = wM(i)
             var gB = 0.0
             var rr = 0
-            while (rr < grad.length) {
+            while (rr < b) {
               val g = grad(rr)(i)
               gB += g
               if (l > 0) {
@@ -541,17 +464,11 @@ object Mlp {
             while (j < inDim) {
               var gW = 0.0
               rr = 0
-              while (rr < grad.length) { gW += grad(rr)(i) * in(rr)(j); rr += 1 }
-              val m = mW(l)(i)(j) * beta1 + (1 - beta1) * gW
-              val v = vW(l)(i)(j) * beta2 + (1 - beta2) * gW * gW
-              mW(l)(i)(j) = m; vW(l)(i)(j) = v
-              wRow(j) -= lr * (m / bc1) / (math.sqrt(v / bc2) + eps)
+              while (rr < b) { gW += grad(rr)(i) * in(rr)(j); rr += 1 }
+              adam.step(wRow, adam.m.w(l)(i), adam.v.w(l)(i), j, gW)
               j += 1
             }
-            val m = mB(l)(i) * beta1 + (1 - beta1) * gB
-            val v = vB(l)(i) * beta2 + (1 - beta2) * gB * gB
-            mB(l)(i) = m; vB(l)(i) = v
-            bV(i) -= lr * (m / bc1) / (math.sqrt(v / bc2) + eps)
+            adam.step(bV, adam.m.b(l), adam.v.b(l), i, gB)
             i += 1
           }
           if (l > 0) grad = nextGrad
@@ -565,77 +482,12 @@ object Mlp {
     (wts, epochLosses)
   }
 
-  /** Train-mode loss (batch-stats BN, dropout DISABLED) of one batch —
-    * the differentiable function [[localFit]] optimizes when p = 0; used
-    * by the numerical gradient check for the BN path. Does not mutate
-    * running stats.
+  /** The objective [[localFit]] minimises on batch `x` with dropout off:
+    * the train-mode forward (batch-statistics BN) and its Gram loss, run
+    * on a copy so the running statistics stay as they are. Used by the
+    * numerical gradient checks.
     */
-  def trainingLossOf(wts: Weights, x: Array[Array[Double]]): Double = {
-    val b = x.length
-    val nL = wts.nLayers
-    var acts: Array[Array[Double]] = x
-    var l = 0
-    while (l < nL) {
-      val (wM, bV) = (wts.w(l), wts.b(l))
-      val hidden = l < nL - 1
-      val out = Array.ofDim[Double](b, bV.length)
-      var r = 0
-      while (r < b) {
-        val in = acts(r)
-        var i = 0
-        while (i < bV.length) {
-          val row = wM(i)
-          var s = bV(i)
-          var j = 0
-          while (j < row.length) { s += row(j) * in(j); j += 1 }
-          out(r)(i) = if (hidden && s < 0) 0.0 else s
-          i += 1
-        }
-        r += 1
-      }
-      if (hidden && wts.bn.isDefined && b >= 2) {
-        val bn = wts.bn.get
-        val (ga, be) = (bn.gamma(l), bn.beta(l))
-        var i = 0
-        while (i < bV.length) {
-          var mu = 0.0
-          var r2 = 0
-          while (r2 < b) { mu += out(r2)(i); r2 += 1 }
-          mu /= b
-          var va = 0.0
-          r2 = 0
-          while (r2 < b) { val dlt = out(r2)(i) - mu; va += dlt * dlt; r2 += 1 }
-          va /= b
-          val is = 1.0 / math.sqrt(va + bnEps)
-          r2 = 0
-          while (r2 < b) {
-            out(r2)(i) = ga(i) * (out(r2)(i) - mu) * is + be(i)
-            r2 += 1
-          }
-          i += 1
-        }
-      }
-      acts = out
-      l += 1
-    }
-    val emb = acts
-    val d = emb(0).length
-    var loss = 0.0
-    var r = 0
-    while (r < b) {
-      var c = 0
-      while (c < b) {
-        var re = 0.0; var rx = 0.0
-        var j = 0
-        while (j < d) { re += emb(r)(j) * emb(c)(j); j += 1 }
-        j = 0
-        while (j < x(0).length) { rx += x(r)(j) * x(c)(j); j += 1 }
-        val dd = re - rx
-        loss += dd * dd
-        c += 1
-      }
-      r += 1
-    }
-    loss / (b.toDouble * b)
-  }
+  def trainingLossOf(wts: Weights, x: Array[Array[Double]]): Double =
+    gramLoss(trainForward(wts.mapParts(_.clone()), x, 0.0, new Random(0L))
+      .acts(wts.nLayers), x)._1
 }

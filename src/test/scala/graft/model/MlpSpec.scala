@@ -74,8 +74,8 @@ class MlpSpec extends AnyFunSuite {
     (0 until flatBefore.length by 3).foreach { i =>
       val plus = flatBefore.clone(); plus(i) += eps
       val minus = flatBefore.clone(); minus(i) -= eps
-      val numG = (Mlp.lossOf(Mlp.unflattenLike(start, plus), x) -
-        Mlp.lossOf(Mlp.unflattenLike(start, minus), x)) / (2 * eps)
+      val numG = (Mlp.trainingLossOf(Mlp.unflatten(plus, start), x) -
+        Mlp.trainingLossOf(Mlp.unflatten(minus, start), x)) / (2 * eps)
       if (math.abs(numG) > 1e-3) {
         checked += 1
         val step = flatAfter(i) - flatBefore(i)
@@ -168,8 +168,8 @@ class MlpSpec extends AnyFunSuite {
     (0 until flatBefore.length by 2).foreach { i =>
       val plus = flatBefore.clone(); plus(i) += eps
       val minus = flatBefore.clone(); minus(i) -= eps
-      val numG = (Mlp.trainingLossOf(Mlp.unflattenLike(w, plus), x) -
-        Mlp.trainingLossOf(Mlp.unflattenLike(w, minus), x)) / (2 * eps)
+      val numG = (Mlp.trainingLossOf(Mlp.unflatten(plus, w), x) -
+        Mlp.trainingLossOf(Mlp.unflatten(minus, w), x)) / (2 * eps)
       if (math.abs(numG) > 1e-3) {
         checked += 1
         val step = flatAfter(i) - flatBefore(i)
