@@ -140,16 +140,17 @@ object Mlp {
     var l = 0
     while (l < wts.nLayers) {
       val hidden = l < wts.nLayers - 1
-      h = layer(wts.w(l), wts.b(l), h, hidden)
+      val out = layer(wts.w(l), wts.b(l), h, hidden)
       if (hidden) wts.bn.foreach { bn =>
         val (ga, be) = (bn.gamma(l), bn.beta(l))
         val (rm, rv) = (bn.runMean(l), bn.runVar(l))
         var i = 0
-        while (i < h.length) {
-          h(i) = ga(i) * (h(i) - rm(i)) / math.sqrt(rv(i) + bnEps) + be(i)
+        while (i < out.length) {
+          out(i) = ga(i) * (out(i) - rm(i)) / math.sqrt(rv(i) + bnEps) + be(i)
           i += 1
         }
       }
+      h = out
       l += 1
     }
     h.map(_.toFloat)

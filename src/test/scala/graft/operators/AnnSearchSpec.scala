@@ -125,7 +125,7 @@ class AnnSearchSpec extends SparkSpec {
     val initial = all.filter(col("vec_id") % 5 =!= 0)
     val late = all.filter(col("vec_id") % 5 === 0)
     val planes = AnnSearch.hyperplanes(4, 64, 42L)
-    val path = java.nio.file.Files.createTempDirectory("ann_append").toString + "/lsh"
+    val path = graft.Staged.scratch(spark, "ann_append") + "/lsh"
     graft.sources.TableIO.writeAnnIndex(
       AnnSearch.withLshBucket(initial, "embedding", planes), path, "lsh_bucket")
     graft.sources.TableIO.writeLshPlanes(spark, path, planes, 42L)
@@ -155,7 +155,7 @@ class AnnSearchSpec extends SparkSpec {
 
     // IVF twin: frozen quantizer, assignment parity with the build path
     val (ivfAssigned, centroids) = AnnSearch.buildIvf(initial, "embedding")
-    val ivfPath = java.nio.file.Files.createTempDirectory("ann_append").toString + "/ivf"
+    val ivfPath = graft.Staged.scratch(spark, "ann_append") + "/ivf"
     graft.sources.TableIO.writeAnnIndex(ivfAssigned, ivfPath, "ivf_list")
     graft.sources.TableIO.writeIvfCentroids(spark, ivfPath, centroids)
     AnnSearch.appendToIvfIndex(spark, ivfPath, late)
@@ -213,7 +213,7 @@ class AnnSearchSpec extends SparkSpec {
     val initial = all.filter(col("vec_id") % 5 =!= 0)
     val late = all.filter(col("vec_id") % 5 === 0)
     val planes = AnnSearch.hyperplanes(4, 64, 42L)
-    val path = java.nio.file.Files.createTempDirectory("ann_dup").toString + "/lsh"
+    val path = graft.Staged.scratch(spark, "ann_dup") + "/lsh"
     graft.sources.TableIO.writeAnnIndex(
       AnnSearch.withLshBucket(initial, "embedding", planes), path, "lsh_bucket")
     graft.sources.TableIO.writeLshPlanes(spark, path, planes, 42L)
@@ -231,7 +231,7 @@ class AnnSearchSpec extends SparkSpec {
       "failed append must not write")
 
     // a batch with internal duplicates is rejected before touching the index
-    val freshPath = java.nio.file.Files.createTempDirectory("ann_dup").toString + "/lsh2"
+    val freshPath = graft.Staged.scratch(spark, "ann_dup") + "/lsh2"
     graft.sources.TableIO.writeAnnIndex(
       AnnSearch.withLshBucket(initial, "embedding", planes), freshPath, "lsh_bucket")
     graft.sources.TableIO.writeLshPlanes(spark, freshPath, planes, 42L)
@@ -244,7 +244,7 @@ class AnnSearchSpec extends SparkSpec {
   test("compactAnnIndex bounds files per bucket and preserves contents") {
     val all = corpus
     val planes = AnnSearch.hyperplanes(4, 64, 42L)
-    val path = java.nio.file.Files.createTempDirectory("ann_compact").toString + "/lsh"
+    val path = graft.Staged.scratch(spark, "ann_compact") + "/lsh"
     // initial build + 3 appends → several small files per touched bucket
     graft.sources.TableIO.writeAnnIndex(
       AnnSearch.withLshBucket(all.filter(col("vec_id") % 4 === 1), "embedding", planes),

@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Staged, Tables}
 import graft.operators.AnnSearch
 
 /** Partitioned-at-rest layout: reads must prune partitions (the scan's
@@ -14,7 +12,7 @@ import graft.operators.AnnSearch
 class TableIOSpec extends SparkSpec {
 
   test("index write partitioned by shard; shard reads prune partitions") {
-    val dir = Files.createTempDirectory("graft_index").toString
+    val dir = Staged.scratch(spark, "graft_index")
     val emb = Tables.embeddings(spark, sfDir)
       .withColumn("hospital", expr("vec_id % 3"))
     TableIO.writeIndex(emb, dir)
@@ -32,7 +30,7 @@ class TableIOSpec extends SparkSpec {
 
   test("ANN index on snapshot tables: probes plan only matching " +
     "buckets' files (manifest skipping)") {
-    val dir = Files.createTempDirectory("graft_ann").toString + "/idx"
+    val dir = Staged.scratch(spark, "graft_ann") + "/idx"
     val planes = AnnSearch.hyperplanes(4, 64)
     val emb = AnnSearch.withLshBucket(
       Tables.embeddings(spark, sfDir), "embedding", planes)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Staged, Tables}
 import graft.operators.AnnSearch
 
 class AnnIngestStreamSpec extends SparkSpec {
@@ -16,7 +16,7 @@ class AnnIngestStreamSpec extends SparkSpec {
   private def stageFile(src: java.nio.file.Path,
                         df: org.apache.spark.sql.DataFrame,
                         name: String, mtime: Long): Unit = {
-    val tmp = Files.createTempDirectory("ann_ingest_stage")
+    val tmp = Paths.get(Staged.scratch(spark, "ann_ingest_stage"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).toArray.map(_.toString)
       .find(_.endsWith(".parquet")).get
@@ -38,7 +38,7 @@ class AnnIngestStreamSpec extends SparkSpec {
     // append path — stream must equal batch
     val fit = initial.coalesce(1).sortWithinPartitions("vec_id")
     val (assigned, centroids) = AnnSearch.buildIvf(fit, "embedding")
-    val root = Files.createTempDirectory("ivf_ingest").toString
+    val root = Staged.scratch(spark, "ivf_ingest")
     val streamed = root + "/stream"
     val batched = root + "/batch"
     for (p <- Seq(streamed, batched)) {
@@ -46,11 +46,11 @@ class AnnIngestStreamSpec extends SparkSpec {
       graft.sources.TableIO.writeIvfCentroids(spark, p, centroids)
     }
 
-    val src = Files.createTempDirectory("ivf_ingest_src")
+    val src = Paths.get(Staged.scratch(spark, "ivf_ingest_src"))
     stageFile(src, lateA, "a.parquet", 1000000L)
     stageFile(src, lateB, "b.parquet", 2000000L)
     AnnIngestStream.ingestIvf(spark, src.toString, streamed, corpus.schema,
-      Files.createTempDirectory("ivf_ingest_ck").toString)
+      Staged.scratch(spark, "ivf_ingest_ck"))
     AnnSearch.appendToIvfIndex(spark, batched, lateA)
     AnnSearch.appendToIvfIndex(spark, batched, lateB)
 
@@ -67,7 +67,7 @@ class AnnIngestStreamSpec extends SparkSpec {
     val n1 = graft.sources.SnapshotTable.read(spark, streamed).count()
     val ex = intercept[StreamingQueryException] {
       AnnIngestStream.ingestIvf(spark, src.toString, streamed, corpus.schema,
-        Files.createTempDirectory("ivf_ingest_ck2").toString)
+        Staged.scratch(spark, "ivf_ingest_ck2"))
     }
     assert(ex.getCause.getMessage.contains("duplicate"), ex.getCause.getMessage)
     assert(graft.sources.SnapshotTable.read(spark, streamed).count() == n1, "failed replay must not write")
@@ -81,15 +81,15 @@ class AnnIngestStreamSpec extends SparkSpec {
     val lateB = corpus.filter(col("vec_id") % 10 === 5)
     val planes = AnnSearch.hyperplanes(4, 64, 42L)
 
-    val path = Files.createTempDirectory("ann_ingest").toString + "/lsh"
+    val path = Staged.scratch(spark, "ann_ingest") + "/lsh"
     graft.sources.TableIO.writeAnnIndex(
       AnnSearch.withLshBucket(initial, "embedding", planes), path, "lsh_bucket")
     graft.sources.TableIO.writeLshPlanes(spark, path, planes, 42L)
 
     // stage the two batches as files with ordered mtimes
-    val src = Files.createTempDirectory("ann_ingest_src")
+    val src = Paths.get(Staged.scratch(spark, "ann_ingest_src"))
     def stage(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("ann_ingest_stage")
+      val tmp = Paths.get(Staged.scratch(spark, "ann_ingest_stage"))
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).toArray.map(_.toString)
         .find(_.endsWith(".parquet")).get
@@ -102,7 +102,7 @@ class AnnIngestStreamSpec extends SparkSpec {
     stage(lateB, "b.parquet", 2000000L)
 
     AnnIngestStream.ingestLsh(spark, src.toString, path, corpus.schema,
-      Files.createTempDirectory("ann_ingest_ck").toString)
+      Staged.scratch(spark, "ann_ingest_ck"))
 
     val got = graft.sources.SnapshotTable.read(spark, path)
       .select("vec_id", "lsh_bucket").collect()
@@ -117,7 +117,7 @@ class AnnIngestStreamSpec extends SparkSpec {
     val n1 = graft.sources.SnapshotTable.read(spark, path).count()
     val ex = intercept[StreamingQueryException] {
       AnnIngestStream.ingestLsh(spark, src.toString, path, corpus.schema,
-        Files.createTempDirectory("ann_ingest_ck2").toString)
+        Staged.scratch(spark, "ann_ingest_ck2"))
     }
     assert(ex.getCause.getMessage.contains("duplicate"), ex.getCause.getMessage)
     assert(graft.sources.SnapshotTable.read(spark, path).count() == n1, "failed replay must not write")
