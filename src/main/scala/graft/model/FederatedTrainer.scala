@@ -41,11 +41,11 @@ object FederatedTrainer {
       .select(col("hospital"), col("features").cast("array<double>").as("features"))
       .as[(String, Array[Double])]
 
-    var globalFlat = Mlp.init().flatten // serialized into the task closure
+    var globalFlat = Mlp.init().flatten
     val roundLosses = Seq.newBuilder[Double]
 
     (0 until rounds).foreach { _ =>
-      val start = globalFlat
+      val start = globalFlat // serialized into the task closure
       val results = ds.groupByKey(_._1)
         .mapGroups { (hospital, rows) =>
           val (flat, n, loss) = ShardClient(hospital, rows.map(_._2).toArray)
