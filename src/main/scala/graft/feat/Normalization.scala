@@ -41,18 +41,28 @@ object Normalization {
              perGroup: Option[String] = None): DataFrame =
     standardize(df, cols, perGroup, sourceStats(df, None, cols, perGroup))
 
-  /** [[zscore]] of the frame `df`'s rows were drawn from, when they have
-    * since been narrow-coalesced: int column `range` holds each row's
-    * source range — its partition in that frame, `spark_partition_id()`
-    * evaluated before any repartitioning — and within a range the rows
-    * keep their order. The stats are then the source frame's bits, so a
-    * caller can materialize the coalesced rows once and both fold the
-    * stats and normalize over them. `range` is dropped from the result.
+  /** The `features` array of [[zscore]] followed by [[assembleFeatures]]
+    * over the frame `df`'s rows were drawn from, when they have since
+    * been narrow-coalesced; the columns themselves keep their raw values.
+    * Int column `range` holds each row's source range — its partition in
+    * that frame, `spark_partition_id()` evaluated before any
+    * repartitioning — and within a range the rows keep their order. The
+    * stats are then the source frame's bits, so a caller can materialize
+    * the coalesced rows once and both fold the stats and compute the
+    * features over them. `range` is dropped from the result.
     */
-  def zscoreBySourceRange(df: DataFrame, range: String, group: String,
-                          cols: Seq[String] = featureCols): DataFrame =
-    standardize(df, cols, Some(group), sourceStats(df, Some(range), cols, Some(group)))
-      .drop(range)
+  def featuresBySourceRange(df: DataFrame, range: String, group: String,
+                            cols: Seq[String] = featureCols,
+                            outputCol: String = "features"): DataFrame = {
+    val stats = sourceStats(df, Some(range), cols, Some(group))
+    df.join(broadcast(stats), Seq(group))
+      .withColumn(outputCol, array(cols.map(c => standardized(c).cast("float")): _*))
+      .drop(cols.flatMap(c => Seq(s"__mean_$c", s"__std_$c")) :+ range: _*)
+  }
+
+  /** Column `c` z-scored by the stats columns `__mean_c` and `__std_c`. */
+  private def standardized(c: String) =
+    (col(c) - col(s"__mean_$c")) / (col(s"__std_$c") + lit(1e-8))
 
   private def standardize(df: DataFrame, cols: Seq[String], perGroup: Option[String],
                           stats: DataFrame): DataFrame = {
@@ -60,9 +70,8 @@ object Normalization {
       case Some(g) => df.join(broadcast(stats), Seq(g))
       case None => df.crossJoin(broadcast(stats))
     }
-    normalized.withColumns(cols.map { c =>
-      c -> (col(c) - col(s"__mean_$c")) / (col(s"__std_$c") + lit(1e-8))
-    }.toMap).drop(cols.flatMap(c => Seq(s"__mean_$c", s"__std_$c")): _*)
+    normalized.withColumns(cols.map(c => c -> standardized(c)).toMap)
+      .drop(cols.flatMap(c => Seq(s"__mean_$c", s"__std_$c")): _*)
   }
 
   /** `(group?, __mean_c, __std_c, ...)` per group of `df`, as a local

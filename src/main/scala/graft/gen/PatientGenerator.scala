@@ -56,7 +56,7 @@ object PatientGenerator {
     * the generator once at one task per core (at ~9 ms of fixed overhead
     * per task, 64 ranges per hospital would be a tail of near-empty
     * tasks) and tags each row with its range, which is all the per-range
-    * z-score stats need ([[graft.feat.Normalization.zscoreBySourceRange]]).
+    * z-score stats need ([[graft.feat.Normalization.featuresBySourceRange]]).
     */
   val genPartitions = 64
 

@@ -34,8 +34,9 @@ object AnnSearch extends QueryPack {
   // ---------------------------------------------------------------- LSH
 
   /** Hyperplane count and seed of the engine's LSH bucketing: the
-    * persisted index ([[ensureLshIndex]]) and the optimizer rewrite
-    * ([[graft.plans.AnnTopKRewrite]]) must hash with the same planes. */
+    * persisted index ([[ensureLshIndex]]) records its planes beside it,
+    * and every later hash of a query or an appended vector reads them
+    * from there. */
   val LshPlanes = 4
   val LshSeed = 42L
 
@@ -329,32 +330,8 @@ object AnnSearch extends QueryPack {
     * DuckDB-oracle-checked from the seeded hyperplane literals.
     */
   def batchLshQuery(s: SparkSession, dir: String, topK: Int = 3): DataFrame = {
-    import s.implicits._
     val (path, planes) = ensureLshIndex(s, dir)
-    val queries = Tables.embeddings(s, dir)
-      .filter(col("vec_id").between(1, 5))
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val probeRows = queries.flatMap { case (qid, emb) =>
-      probeBuckets(emb, planes).map(b => (qid, b, emb.toSeq))
-    }.toSeq
-    val probes = probeRows.toDF("query_id", "lsh_bucket", "q_emb")
-    val allBuckets = probeRows.map(_._2).distinct
-
-    val candidates = graft.sources.TableIO
-      .openAnnIndexBuckets(s, path, "lsh_bucket", allBuckets) // ONE pruned scan
-      .join(broadcast(probes), Seq("lsh_bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        round(cosineSimilarity(col("embedding"), col("q_emb")), 6))
-
-    candidates
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKByExpr(col("vec_id"), col("sim"), topK).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("vec_id"), col("t.score").as("sim"))
-      .orderBy(col("query_id"), col("sim").desc, col("vec_id"))
+    batchQuery(s, dir, path, "lsh_bucket", topK)(probeBuckets(_, planes))
   }
 
   /** IVF twin of [[batchLshQuery]] — same serving-tier shape on the
@@ -369,22 +346,32 @@ object AnnSearch extends QueryPack {
     */
   def batchIvfQuery(s: SparkSession, dir: String, topK: Int = 3,
                     nprobe: Int = 4): DataFrame = {
-    import s.implicits._
     val (path, centroids) = ensureIvfIndex(s, dir)
+    batchQuery(s, dir, path, "ivf_list", topK)(
+      nearestLists(_, centroids, nprobe))
+  }
+
+  /** The one body of both batched queries: `probe` maps a query vector
+    * to the values of `partCol` (LSH buckets or IVF lists) it reads.
+    */
+  private def batchQuery(s: SparkSession, dir: String, path: String,
+                         partCol: String, topK: Int)(
+                         probe: Array[Float] => Seq[Int]): DataFrame = {
+    import s.implicits._
     val queries = Tables.embeddings(s, dir)
       .filter(col("vec_id").between(1, 5))
       .select(col("vec_id"), col("embedding"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val probeRows = queries.flatMap { case (qid, emb) =>
-      nearestLists(emb, centroids, nprobe).map(l => (qid, l, emb.toSeq))
+      probe(emb).map(p => (qid, p, emb.toSeq))
     }.toSeq
-    val probes = probeRows.toDF("query_id", "ivf_list", "q_emb")
-    val allLists = probeRows.map(_._2).distinct
+    val probes = probeRows.toDF("query_id", partCol, "q_emb")
+    val allParts = probeRows.map(_._2).distinct
 
     graft.sources.TableIO
-      .openAnnIndexBuckets(s, path, "ivf_list", allLists) // ONE pruned scan
-      .join(broadcast(probes), Seq("ivf_list"))
+      .openAnnIndexBuckets(s, path, partCol, allParts) // ONE pruned scan
+      .join(broadcast(probes), Seq(partCol))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("sim",
         round(cosineSimilarity(col("embedding"), col("q_emb")), 6))

@@ -32,8 +32,8 @@ import graft.sources.SnapshotTable.FileEntry
   *  - join-key distinct counts come from the ANALYZE sidecar's exact
   *    KMV sketches through [[TableStats.boundDistinct]] — the subset-
   *    valid, fingerprint-proven upper bound; a saturated sketch or a
-  *    missing sidecar REFUSES the whole rewrite (the declared
-  *    opt-in promises stats, not guesses);
+  *    missing sidecar REFUSES the whole rewrite (the rule reorders
+  *    on proven stats, never on guesses);
   *  - intermediate estimates use the textbook containment bound
   *    `|A ⋈ B| = rows(A)·rows(B) / max(ndv(keyA), ndv(keyB))`
   *    (Selinger's System R estimator — public knowledge), greedy
@@ -49,22 +49,11 @@ import graft.sources.SnapshotTable.FileEntry
   * TRAVELS with its leaf through the reorder; a hint on an
   * intermediate join side has no home after a reorder and refuses.
   *
-  * OPT-IN: inert unless `spark.graft.joinOrder` is `true` in the
-  * session (the conf travels to cloned micro-batch sessions and stays
-  * isolated from `newSession` tenants, like every conf-carried
-  * registry here). Installed with the other [[Rules]].
+  * Installed with the other [[Rules]] and switched off like them
+  * (`spark.sql.optimizer.excludedRules=graft.plans.JoinOrder`).
   */
 object JoinOrder extends Rule[LogicalPlan] with PredicateHelper
     with graft.QueryPack {
-
-  private val FlagKey = "spark.graft.joinOrder"
-
-  def enable(spark: SparkSession): Unit =
-    spark.conf.set(FlagKey, "true")
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (conf.getConfString(FlagKey, "false") != "true") plan
-    else rewrite(plan)
 
   // manual recursion instead of transformDown: a rebuilt or already-
   // canonical cluster's interior joins must NOT be re-flattened (a
@@ -78,13 +67,13 @@ object JoinOrder extends Rule[LogicalPlan] with PredicateHelper
   private case object Canonical extends Outcome
   private case object Refused extends Outcome
 
-  private def rewrite(p: LogicalPlan): LogicalPlan = p match {
+  override def apply(p: LogicalPlan): LogicalPlan = p match {
     case j: Join => reorder(j) match {
       case Rebuilt(np) => np
       case Canonical   => j // proven leaf-only below; nothing to visit
-      case Refused     => j.mapChildren(rewrite)
+      case Refused     => j.mapChildren(apply)
     }
-    case other => other.mapChildren(rewrite)
+    case other => other.mapChildren(apply)
   }
 
   /** One leaf of a flattened cluster with its proven numbers and the
@@ -397,7 +386,6 @@ object JoinOrder extends Rule[LogicalPlan] with PredicateHelper
     * the oracle's plain 3-way join.
     */
   def joinOrderQuery(s: SparkSession, dir: String): DataFrame = {
-    enable(s)
     import graft.sources.SnapshotTable
     val (o, c, nt) = fixturePaths(s, dir)
     val orders = SnapshotTable.read(s, o)

@@ -11,14 +11,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Each rule is switched off the same way, with Spark's own conf:
   * `spark.sql.optimizer.excludedRules=graft.plans.RankTopK` (a
-  * comma-separated list of rule names). The opt-in rules stay inert
-  * until opted into: [[AnnTopKRewrite]] (`spark.graft.ann.rewrite`),
-  * [[JoinOrder]] (`spark.graft.joinOrder`), and [[EagerAggregation]] and
-  * [[DynamicPrune]] for their registered tables only.
+  * comma-separated list of rule names); no rule has a switch of its
+  * own.
   */
 object Rules {
   val all: Seq[Rule[LogicalPlan]] = Seq(
-    AnnTopKRewrite,
     MetadataAggPushdown,
     MviewRewrite,
     StatsBroadcast,

@@ -126,7 +126,9 @@ object PatientPipeline extends QueryPack {
     * comparison is ulp-robust, while generated per-patient fields stay
     * full precision (shortest-repr doubles round-trip exactly through
     * DuckDB's parser). The GENERATOR summary was already golden-pinned
-    * the same way (2-decimal rounding).
+    * the same way (2-decimal rounding). The insights' clinical means are
+    * the raw generated values of the search's golden hits, which
+    * `PatientPipelineSpec` recomputes from the generator's rows.
     */
   override def oracleSql: Map[String, String] = Map(
     "q_patient_search" ->
@@ -156,8 +158,8 @@ object PatientPipeline extends QueryPack {
     "q_patient_insights" ->
       """SELECT CAST(4.779313 AS DOUBLE) AS avg_wait_transplanted_days,
         |  CAST(0.157008 AS DOUBLE) AS avg_wait_transplanted_months,
-        |  CAST(0.666107 AS DOUBLE) AS avg_age_success,
-        |  CAST(-0.810085 AS DOUBLE) AS avg_meld_success,
+        |  CAST(63.394235 AS DOUBLE) AS avg_age_success,
+        |  CAST(6.0 AS DOUBLE) AS avg_meld_success,
         |  CAST(0.0 AS DOUBLE) AS diabetes_rate_success,
         |  CAST(149.470504 AS DOUBLE) AS avg_wait_not_transplanted_days,
         |  CAST(1 AS BIGINT) AS still_waiting""".stripMargin,

@@ -62,7 +62,10 @@ class PatientSearch(spark: SparkSession) {
   /** setup_hospitals (similarity_search.py:419-434): generate shards,
     * z-score per hospital (the reference normalizes each client against
     * its own stats, similarity_search.py:180+198), assemble feature
-    * arrays. Returns the cached patient table, already filled.
+    * arrays. Returns the cached patient table, already filled: the
+    * generated columns keep their raw clinical values (the index's
+    * metadata and the insights read them), and only the `features` array
+    * holds z-scores.
     *
     * Layout rule: generation stays pinned at
     * [[PatientGenerator.genPartitions]] ranges per hospital (the seeded
@@ -81,11 +84,11 @@ class PatientSearch(spark: SparkSession) {
     * (`spark_partition_id()` over the generated ranges) in a cache that
     * this call releases before it returns. The z-score stats are one fold
     * over that cache (`setup:zscore-stats`,
-    * [[Normalization.zscoreBySourceRange]]): a partial per (hospital,
+    * [[Normalization.featuresBySourceRange]]): a partial per (hospital,
     * range) with Spark's `avg`/`stddev_pop` update formulas, merged in
     * range order on the driver — the bits of Spark's two-phase aggregate
     * over the uncoalesced frame, without its 64 tasks per hospital. The
-    * z-score and the feature array are then computed over the same cache
+    * feature array is then computed over the same cache
     * and the patient table cached (`setup:cache-fill`).
     *
     * Plan rule: the table is cached over a one-leaf logical plan
@@ -106,12 +109,11 @@ class PatientSearch(spark: SparkSession) {
         .cache()
       fill(g)
     }
-    val normalized = JobLabel(spark, "setup:zscore-stats") {
-      Normalization.zscoreBySourceRange(generated, PatientSearch.SourceRange, "hospital")
+    val assembled = JobLabel(spark, "setup:zscore-stats") {
+      Normalization.featuresBySourceRange(generated, PatientSearch.SourceRange, "hospital")
     }
     val withFeatures = JobLabel(spark, "setup:cache-fill") {
-      // keep raw outcome columns for metadata (z-scored features live in the array)
-      fill(GraftPlanBridge.oneLeaf(Normalization.assembleFeatures(normalized)).cache())
+      fill(GraftPlanBridge.oneLeaf(assembled).cache())
     }
     generated.unpersist(blocking = true)
     patients = Some(withFeatures)

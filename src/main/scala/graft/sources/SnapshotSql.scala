@@ -24,12 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * SELECT * FROM snapshot_declare_key('/t', 'pk', 1)      -- RELY key
   * SELECT * FROM snapshot_declare_fk('/f','fk','/t','pk',1) -- RELY FK
   * SELECT * FROM snapshot_enable_eager_agg('/f')          -- opt-in
-  * SELECT * FROM snapshot_enable_join_order()             -- opt-in
+  * SELECT * FROM snapshot_enable_dynamic_prune('/t')      -- opt-in
   * }}}
   *
-  * The last two are WRITE PROCEDURES in TVF syntax (Iceberg's `CALL`
-  * shape expressed on Spark's native TVF registry): analyzing the
-  * statement performs one commit and the relation is the outcome row.
+  * The declare and enable calls are PROCEDURES in TVF syntax
+  * (Iceberg's `CALL` shape expressed on Spark's native TVF registry):
+  * analyzing the statement declares the key or opts the table in, and
+  * the relation is the outcome row.
   *
   * The TVF resolves to the SAME relation the Scala API plans
   * ([[SnapshotFileIndex]]-backed), so WHERE predicates on a
@@ -544,22 +545,6 @@ object SnapshotSql {
           longArg("snapshot_enable_eager_agg", exprs, 1) == 1L
         graft.plans.EagerAggregation.enableFor(
           strArg("snapshot_enable_eager_agg", exprs, 0), force)
-        outcomeRow(spark, Seq("enabled" -> 1L))
-      }),
-    ("snapshot_enable_join_order",
-      new ExpressionInfo(getClass.getName, null, "snapshot_enable_join_order",
-        "_FUNC_() - opt this session into stats-driven join ordering: " +
-          "3+-table inner equi-join clusters over snapshot relations " +
-          "reorder greedily by proven manifest row counts and exact " +
-          "NDV sketches (smallest intermediate first); clusters " +
-          "without the proofs are left alone. The result row reports " +
-          "(enabled)",
-        "_FUNC_()"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.isEmpty,
-          s"snapshot_enable_join_order: expected 0 arguments, got ${exprs.length}")
-        val spark = SparkSession.active
-        graft.plans.JoinOrder.enable(spark)
         outcomeRow(spark, Seq("enabled" -> 1L))
       }),
     ("snapshot_enable_dynamic_prune",

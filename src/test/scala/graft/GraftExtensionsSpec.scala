@@ -204,9 +204,9 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head().getLong(0) === 500500L)
   }
 
-  test("extension-injected JoinOrder fires from plain SQL after the " +
-    "snapshot_enable_join_order procedure: a fact-first 3-way join " +
-    "reorders to the filtered selective dim first, results unchanged") {
+  test("extension-injected JoinOrder fires from plain SQL with no " +
+    "opt-in: a fact-first 3-way join reorders to the filtered selective " +
+    "dim first; with the rule excluded it plans as written, same rows") {
     import org.apache.spark.sql.functions._
     val root = graft.Staged.scratch(spark, "ext_joinorder")
     val (f, a, b) = (s"$root/fact", s"$root/dima", s"$root/dimb")
@@ -242,20 +242,18 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
             case _ => ""
           }
       }.filter(_.nonEmpty)
-    val before = q()
-    val beforeOrder = order(before)
-    val beforeRows = before.collect().map(_.toString).toSeq
-    assert(beforeOrder === Seq(f, a, b), "written order before the opt-in")
-    try {
-      assert(spark.sql("SELECT * FROM snapshot_enable_join_order()")
-        .head().getLong(0) === 1L)
-      val after = q()
-      assert(order(after) === Seq(f, b, a),
-        s"the filtered selective dim must join first: ${order(after)}\n" +
-          after.queryExecution.optimizedPlan.treeString)
-      assert(after.collect().map(_.toString).toSeq === beforeRows,
-        "reorder must never change results")
-    } finally spark.conf.set("spark.graft.joinOrder", "false")
+    val (offOrder, offRows) = graft.SparkSpec.withoutRules(spark,
+        graft.plans.JoinOrder) {
+      val off = q()
+      (order(off), off.collect().map(_.toString).toSeq)
+    }
+    assert(offOrder === Seq(f, a, b), "written order with the rule excluded")
+    val on = q()
+    assert(order(on) === Seq(f, b, a),
+      s"the filtered selective dim must join first: ${order(on)}\n" +
+        on.queryExecution.optimizedPlan.treeString)
+    assert(on.collect().map(_.toString).toSeq === offRows,
+      "reorder must never change results")
   }
 
   test("the extension injects graft.plans.Rules.all, in order") {

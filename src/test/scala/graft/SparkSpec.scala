@@ -25,20 +25,28 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   private val ExcludedRules = "spark.sql.optimizer.excludedRules"
 
+  /** Runs `body` with each `k -> v` set in `spark`'s conf. Afterwards,
+    * also when `body` throws, each key gets its prior value back, or is
+    * unset when it had none.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Runs `body` with `rules` switched off in `spark`, the way a user
     * switches a rule off: their names appended to Spark's
     * `spark.sql.optimizer.excludedRules`. The prior value comes back
     * afterwards. Plans optimized inside `body` are the rule-off
     * reference.
     */
-  def withoutRules[T](spark: SparkSession, rules: Rule[LogicalPlan]*)(body: => T): T = {
-    val prior = spark.conf.getOption(ExcludedRules)
-    spark.conf.set(ExcludedRules,
-      (prior.filter(_.nonEmpty).toSeq ++ rules.map(_.ruleName)).mkString(","))
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(ExcludedRules, v)
-      case None    => spark.conf.unset(ExcludedRules)
-    }
-  }
+  def withoutRules[T](spark: SparkSession, rules: Rule[LogicalPlan]*)(body: => T): T =
+    withConf(spark, ExcludedRules ->
+      (spark.conf.getOption(ExcludedRules).filter(_.nonEmpty).toSeq ++
+        rules.map(_.ruleName)).mkString(","))(body)
 }

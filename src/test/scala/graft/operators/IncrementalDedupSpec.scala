@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -20,7 +18,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("incremental result ≡ full-corpus run restricted to pairs touching " +
     "the batch") {
     val (old, batch, all) = split(sfDir)
-    val store = Files.createTempDirectory("bandstore").toString + "/store"
+    val store = graft.Staged.scratch(spark, "bandstore") + "/store"
     IncrementalDedup.writeBandStore(old, store)
     val got = IncrementalDedup.dedupNewBatch(old, store, batch)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -36,7 +34,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("absorb ≡ rebuild: store after appending the batch equals a " +
     "from-scratch store over the full corpus") {
     val (old, batch, all) = split(sfDir)
-    val dir = Files.createTempDirectory("bandstore_eq").toString
+    val dir = graft.Staged.scratch(spark, "bandstore_eq")
     val incr = dir + "/incr"
     val full = dir + "/full"
     IncrementalDedup.writeBandStore(old, incr)
@@ -55,7 +53,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val text = "alpha beta gamma delta epsilon zeta eta theta"
     val old = (0L to 5L).map((_, text)).toDF("doc_id", "text")
     val batch = Seq((10L, text), (11L, text)).toDF("doc_id", "text")
-    val store = Files.createTempDirectory("bandstore_cap").toString + "/store"
+    val store = graft.Staged.scratch(spark, "bandstore_cap") + "/store"
     IncrementalDedup.writeBandStore(old, store)
     val capped = IncrementalDedup.dedupNewBatch(old, store, batch,
       maxBucketSize = 5)
@@ -71,7 +69,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("store/batch overlap (the retry shape) yields no self-pairs and no " +
     "duplicate rows — output equals the clean non-overlapping run") {
     val (old, batch, all) = split(sfDir)
-    val dir = Files.createTempDirectory("bandstore_overlap").toString
+    val dir = graft.Staged.scratch(spark, "bandstore_overlap")
     val clean = dir + "/clean"
     val dirty = dir + "/dirty"
     IncrementalDedup.writeBandStore(old, clean)
@@ -91,7 +89,7 @@ class IncrementalDedupSpec extends SparkSpec {
   test("compactBatchDirs folds committed scopes into one dir, content " +
     "unchanged; crashed swaps heal both directions") {
     import org.apache.hadoop.fs.Path
-    val root = Files.createTempDirectory("bandstore_compact").toString + "/bands"
+    val root = graft.Staged.scratch(spark, "bandstore_compact") + "/bands"
     val t = (i: Int) => s"w$i x$i y$i z$i"
     for (id <- 0 to 3)
       IncrementalDedup.writeBandStore(
@@ -129,7 +127,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val old = Seq((1L, t1)).toDF("doc_id", "text")
     val b1 = Seq((2L, t1)).toDF("doc_id", "text")
     val b2 = Seq((3L, t1)).toDF("doc_id", "text")
-    val store = Files.createTempDirectory("bandstore_chain").toString + "/store"
+    val store = graft.Staged.scratch(spark, "bandstore_chain") + "/store"
     IncrementalDedup.writeBandStore(old, store)
     val p1 = IncrementalDedup.dedupNewBatch(old, store, b1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

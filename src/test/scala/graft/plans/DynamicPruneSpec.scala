@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
 
 import graft.SparkSpec
+import graft.SparkSpec.withConf
 import graft.sources.SnapshotTable
 
 /** IN-list dynamic file pruning: a registered small build side is
@@ -166,20 +167,20 @@ class DynamicPruneSpec extends SparkSpec {
 
     DynamicPrune.enableFor(spark, dim)
     // oversized build (manifest rows 10 > cap 5)
-    spark.conf.set("spark.graft.dynamicPrune.maxBuildRows", "5")
-    assert(dynConjuncts(join(filtered)) === 0)
-    spark.conf.unset("spark.graft.dynamicPrune.maxBuildRows")
+    withConf(spark, "spark.graft.dynamicPrune.maxBuildRows" -> "5") {
+      assert(dynConjuncts(join(filtered)) === 0)
+    }
 
     // over-cap key count (4 keys > cap 2): the int key falls back to
     // the [min, max] RANGE lane (Trino's large-set dynamic filter) —
     // injected with parity, and the fallback must not poison the
     // default-cap IN lane
-    spark.conf.set("spark.graft.dynamicPrune.maxKeys", "2")
-    assert(dynConjuncts(join(filtered)) === 0)
-    assert(rangeConjuncts(join(filtered)) === 1,
-      "over-cap int keys must fall back to a min/max range")
-    assert(rows(join(filtered)) === withOff(rows(join(filtered))))
-    spark.conf.unset("spark.graft.dynamicPrune.maxKeys")
+    withConf(spark, "spark.graft.dynamicPrune.maxKeys" -> "2") {
+      assert(dynConjuncts(join(filtered)) === 0)
+      assert(rangeConjuncts(join(filtered)) === 1,
+        "over-cap int keys must fall back to a min/max range")
+      assert(rows(join(filtered)) === withOff(rows(join(filtered))))
+    }
     assert(dynConjuncts(join(filtered)) === 1,
       "the small-cap fallback must not mask the default-cap success")
 

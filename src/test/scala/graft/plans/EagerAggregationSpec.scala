@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.SparkSpec.withoutRules
+import graft.SparkSpec.{withConf, withoutRules}
 import graft.sources.SnapshotTable
 
 /** Eager aggregation must (a) place a partial Aggregate BELOW the join
@@ -237,18 +237,12 @@ class EagerAggregationSpec extends SparkSpec {
           e.metrics("shuffleRecordsWritten").value
       }.sum, out)
     }
-    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (on, onRows) = shuffled()
       val (off, offRows) = withoutRules(spark, EagerAggregation)(shuffled())
       assert(onRows == offRows)
       assert(on * 5 < off, s"shuffle records: rule on $on, off $off")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

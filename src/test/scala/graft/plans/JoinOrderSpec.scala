@@ -5,13 +5,14 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.SparkSpec.withoutRules
 import graft.sources.{SnapshotFileIndex, SnapshotTable, TableStats}
 
 /** Stats-driven join ordering: a 3-table star written fact-first
-  * reorders to selective-dim-first from declared stats alone — plan
-  * flip pinned here, result parity with the rule off on every shape,
-  * and refusals (no stats, flag off, outer join, 2-table) leave the
-  * plan alone.
+  * reorders to selective-dim-first from declared stats alone, with no
+  * opt-in — plan flip pinned here, result parity with the rule
+  * excluded on every shape, and refusals (no stats, outer join,
+  * 2-table) leave the plan alone.
   */
 class JoinOrderSpec extends SparkSpec {
 
@@ -32,10 +33,7 @@ class JoinOrderSpec extends SparkSpec {
       }
     }.filter(_.nonEmpty)
 
-  private def withRule[T](body: => T): T = {
-    spark.conf.set("spark.graft.joinOrder", "true")
-    try body finally spark.conf.set("spark.graft.joinOrder", "false")
-  }
+  private def ruleOff[T](body: => T): T = withoutRules(spark, JoinOrder)(body)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
@@ -92,37 +90,34 @@ class JoinOrderSpec extends SparkSpec {
     "selective dim first — proven rows via entry restriction, exact " +
     "NDV sketches — with exact result parity") {
     val (f, a, b) = star(analyzed = true)
-    val off = leafOrder(starQuery(f, a, b, bFilter = true))
-    assert(off === Seq(f, a, b), "written order plans as written")
-    val offRows = rows(starQuery(f, a, b, bFilter = true))
-    val (on, onRows) = withRule {
+    val (off, offRows) = ruleOff {
       (leafOrder(starQuery(f, a, b, bFilter = true)),
         rows(starQuery(f, a, b, bFilter = true)))
     }
+    assert(off === Seq(f, a, b), "rule off: the written order plans as written")
+    val on = leafOrder(starQuery(f, a, b, bFilter = true))
+    val onRows = rows(starQuery(f, a, b, bFilter = true))
     assert(on === Seq(f, b, a),
       s"the filtered dimB edge (20 of 100 rows by stamp) must join " +
         s"first; got $on")
     assert(onRows === offRows, "reorder must never change results")
     // UNFILTERED: perfect containment ties every edge at the fact's
     // rows — the written order is already canonical, no churn
-    assert(withRule { leafOrder(starQuery(f, a, b, bFilter = false)) }
+    assert(leafOrder(starQuery(f, a, b, bFilter = false))
       === Seq(f, a, b), "an unfiltered star keeps its written order")
     // determinism / fixpoint: a second optimization pass yields the
     // same order (Canonical short-circuits, no oscillation)
-    assert(withRule { leafOrder(starQuery(f, a, b, bFilter = true)) }
-      === Seq(f, b, a))
+    assert(leafOrder(starQuery(f, a, b, bFilter = true)) === Seq(f, b, a))
   }
 
   test("the packaged q_join_order actually flips: customer ⋈ nation " +
     "(the selective dim-dim edge) plans first, the fact last") {
-    try {
-      val df = JoinOrder.joinOrderQuery(spark, "/root/testdata/sf0.001")
-      val order = leafOrder(df)
-      assert(order.size === 3, s"3 snapshot leaves expected: $order")
-      assert(order(0).endsWith("/customer") && order(1).endsWith("/nation")
-        && order(2).endsWith("/orders"),
-        s"expected [customer, nation, orders], got $order")
-    } finally spark.conf.set("spark.graft.joinOrder", "false")
+    val df = JoinOrder.joinOrderQuery(spark, "/root/testdata/sf0.001")
+    val order = leafOrder(df)
+    assert(order.size === 3, s"3 snapshot leaves expected: $order")
+    assert(order(0).endsWith("/customer") && order(1).endsWith("/nation")
+      && order(2).endsWith("/orders"),
+      s"expected [customer, nation, orders], got $order")
   }
 
   test("a VALUE-range-filtered dim sizes from the rank sidecar — rows " +
@@ -142,35 +137,41 @@ class JoinOrderSpec extends SparkSpec {
     // no rank summary on b_val: the value filter is invisible to the
     // manifest total — every edge estimates to the fact's rows and
     // the written order stands
-    assert(withRule { leafOrder(q()) } === Seq(f, a, b),
+    assert(leafOrder(q()) === Seq(f, a, b),
       "without a rank summary the value filter cannot size the dim")
     // with it: ~12 of 100 rows pass b_val <= 0 (exact-regime bound),
     // the dimB edge wins the start pair, the order flips
     graft.sources.RankStats.analyze(spark, b, Seq("b_val"))
-    val (on, onRows) = withRule { (leafOrder(q()), rows(q())) }
-    assert(on === Seq(f, b, a),
-      s"the rank-sized dim must join first: $on")
-    assert(onRows === rows(q()), "reorder must never change results")
+    assert(leafOrder(q()) === Seq(f, b, a),
+      s"the rank-sized dim must join first: ${leafOrder(q())}")
+    assert(rows(q()) === ruleOff(rows(q())),
+      "reorder must never change results")
   }
 
-  test("refusals leave the plan alone: no ANALYZE sketches, flag off, " +
-    "only two tables, outer join in the chain") {
+  test("refusals leave the plan alone: no ANALYZE sketches, only two " +
+    "tables, outer join in the chain; excluding the rule by name plans " +
+    "the written order with identical rows") {
     val (f, a, b) = star(analyzed = false)
-    assert(withRule { leafOrder(starQuery(f, a, b, bFilter = true)) }
-      === Seq(f, a, b),
-      "no NDV proof -> no reorder (opt-in promises stats, not guesses)")
+    assert(leafOrder(starQuery(f, a, b, bFilter = true)) === Seq(f, a, b),
+      "no NDV proof -> no reorder (stats, not guesses)")
     val (f2, a2, b2) = star(analyzed = true)
+    val (offOrder, offRows) = ruleOff {
+      (leafOrder(starQuery(f2, a2, b2, bFilter = true)),
+        rows(starQuery(f2, a2, b2, bFilter = true)))
+    }
+    assert(offOrder === Seq(f2, a2, b2), "rule excluded -> written order")
     assert(leafOrder(starQuery(f2, a2, b2, bFilter = true))
-      === Seq(f2, a2, b2), "flag off -> inert")
-    val two = withRule {
+      === Seq(f2, b2, a2), "the same query reorders with the rule on")
+    assert(rows(starQuery(f2, a2, b2, bFilter = true)) === offRows,
+      "rule on and off give identical rows")
+    val two =
       leafOrder(SnapshotTable.read(spark, f2)
         .join(SnapshotTable.read(spark, a2)
           .select(col("a_key"), col("a_val")),
           col("a_id") === col("a_key"))
         .groupBy(col("a_val")).agg(count(lit(1)).as("n")))
-    }
     assert(two === Seq(f2, a2), "a 2-table join is not a chain")
-    val outer = withRule {
+    val outer =
       leafOrder(SnapshotTable.read(spark, f2)
         .join(SnapshotTable.read(spark, a2)
           .select(col("a_key"), col("a_val")),
@@ -178,7 +179,6 @@ class JoinOrderSpec extends SparkSpec {
         .join(SnapshotTable.read(spark, b2)
             .filter(col("p") === "3").select(col("b_key"), col("b_val")),
           col("b_id") === col("b_key"), "left_outer"))
-    }
     assert(outer === Seq(f2, a2, b2),
       "an outer join must refuse the reorder (only inner commutes)")
   }

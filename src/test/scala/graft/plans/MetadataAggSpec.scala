@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.SparkSpec.withoutRules
+import graft.SparkSpec.{withConf, withoutRules}
 import graft.sources.SnapshotTable
 
 /** Metadata-only aggregates must be (a) answered WITHOUT planning any
@@ -254,17 +254,15 @@ class MetadataAggSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("k", "p"), "p")
     TableStats.analyze(spark, t, Seq.empty, sumCols = Seq("k"))
     def agg() = SnapshotTable.read(spark, t).agg(sum(col("k")).as("s"))
-    val key = "spark.sql.ansi.enabled"
-    val old = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "false")
+    withConf(spark, "spark.sql.ansi.enabled" -> "false") {
       assert(rewritten(agg()),
         "legacy mode: an in-range total is exact through transient wraps")
       assert(agg().head().getLong(0) === 6L)
-      spark.conf.set(key, "true")
+    }
+    withConf(spark, "spark.sql.ansi.enabled" -> "true") {
       assert(!rewritten(agg()),
         "ANSI without same-sign evidence must refuse the fold")
-    } finally spark.conf.set(key, old)
+    }
   }
 
   test("try_sum keys the gate off the EXPRESSION's eval mode, not the " +
@@ -295,10 +293,7 @@ class MetadataAggSpec extends SparkSpec {
     // built under ANSI conf refuses without same-sign proof (the
     // sibling ANSI test) — and try_sum above refuses under EITHER
     // conf, which is exactly the expression-mode-not-conf point.
-    val ansiKey = "spark.sql.ansi.enabled"
-    val ansiOld = spark.conf.get(ansiKey)
-    try {
-      spark.conf.set(ansiKey, "false")
+    withConf(spark, "spark.sql.ansi.enabled" -> "false") {
       def plainMixed() = SnapshotTable.read(spark, mixed)
         .agg(sum(col("k")).as("s"))
       assert(rewritten(plainMixed()))
@@ -307,7 +302,7 @@ class MetadataAggSpec extends SparkSpec {
       assert(!rewritten(SnapshotTable.read(spark, mixed)
         .selectExpr("try_sum(k) AS s")),
         "try_sum must refuse even under legacy conf")
-    } finally spark.conf.set(ansiKey, ansiOld)
+    }
     // same-sign k with stats: partials bounded by the total, TRY can
     // never go NULL where the fold answers -> folds, scan-exact
     val pos = freshDir()

@@ -4,11 +4,12 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.{SessionTune, SparkEntry, SparkSpec}
 import graft.SparkSpec.withoutRules
-import graft.sources.{SnapshotSql, SnapshotTable}
+import graft.sources.{SnapshotFileIndex, SnapshotSql, SnapshotTable, TableStats}
 
 /** The one rule list and its one installer: a session's first
   * table-access funnel installs every rule of [[Rules.all]], once, in
@@ -57,11 +58,49 @@ class RulesSpec extends SparkSpec {
       s.range(0, 100).select(col("id").as("k"), lit("x").as("p")), "p")
     s.sql(s"SELECT * FROM snapshot_declare_key('$t', 'k', 1)").collect()
     s.sql(s"SELECT * FROM snapshot_enable_eager_agg('$t')").collect()
-    s.sql("SELECT * FROM snapshot_enable_join_order()").collect()
     s.sql(s"SELECT * FROM snapshot_enable_dynamic_prune('$t')").collect()
     assert(s.sql(s"SELECT count(*) FROM snapshot_table('$t')")
       .head().getLong(0) === 100L)
     assert(s.experimental.extraOptimizations === Rules.all)
+  }
+
+  test("a fact-first 3-way join over ANALYZEd snapshot tables plans the " +
+    "same reordered leaf order before and after q_join_order runs in " +
+    "the session, with nothing opted in") {
+    val s = fresh()
+    val root = graft.Staged.scratch(s, "rules_order")
+    val (f, a, b) = (s"$root/fact", s"$root/dima", s"$root/dimb")
+    SnapshotTable.create(s, f, s.range(0, 4000).select(col("id").as("k"),
+      (col("id") % 400).as("a_id"), (col("id") % 40).as("b_id"),
+      lit("all").as("p")), "p")
+    SnapshotTable.create(s, a, s.range(0, 400).select(col("id").as("a_key"),
+      (col("id") % 7).as("a_val"), lit("all").as("p")), "p")
+    SnapshotTable.create(s, b, s.range(0, 40).select(col("id").as("b_key"),
+      (col("id") % 9).as("b_val"), (col("id") % 5).cast("string").as("p")),
+      "p")
+    TableStats.analyze(s, f, Seq("a_id", "b_id"), k = 4096)
+    TableStats.analyze(s, a, Seq("a_key"), k = 4096)
+    TableStats.analyze(s, b, Seq("b_key"), k = 4096)
+    def leafOrder(): Seq[String] = SnapshotTable.read(s, f)
+      .join(SnapshotTable.read(s, a), col("a_id") === col("a_key"))
+      .join(SnapshotTable.read(s, b).filter(col("p") === "3")
+        .select(col("b_key"), col("b_val")), col("b_id") === col("b_key"))
+      .groupBy(col("b_val")).agg(count(lit(1)).as("n"))
+      .queryExecution.optimizedPlan.collect {
+        case l: LogicalRelation => l.relation match {
+          case fs: HadoopFsRelation => fs.location match {
+            case i: SnapshotFileIndex => i.tablePath
+            case _ => ""
+          }
+          case _ => ""
+        }
+      }.filter(_.nonEmpty)
+    val before = leafOrder()
+    assert(before === Seq(f, b, a),
+      "the filtered selective dim joins first with no opt-in")
+    SparkEntry.queries("q_join_order")(s, sfDir).collect()
+    assert(leafOrder() === before,
+      "running another query must not change this query's plan")
   }
 
   test("a plain parquet read is a funnel too, and a second funnel adds " +

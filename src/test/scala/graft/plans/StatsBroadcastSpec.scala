@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoi
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.SparkSpec.withoutRules
+import graft.SparkSpec.{withConf, withoutRules}
 import graft.sources.SnapshotTable
 
 /** The stats-broadcast rule must (a) turn a shuffle join into a STATIC
@@ -58,12 +58,8 @@ class StatsBroadcastSpec extends SparkSpec {
     df.queryExecution.sparkPlan.collect {
       case s: SortMergeJoinExec => s }.size
 
-  private def withThreshold[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, bytes.toString)
-    try body finally spark.conf.set(key, old)
-  }
+  private def withThreshold[T](bytes: Long)(body: => T): T =
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> bytes.toString)(body)
 
   // keeps every dim column in the output so Spark's column-ratio
   // sizing cannot shrink the flag-off side under the threshold

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.SparkSpec.withoutRules
+import graft.SparkSpec.{withConf, withoutRules}
 import graft.sources.SnapshotTable
 
 /** Grouped top-k pushdown: `row_number()/rank() OVER (PARTITION BY p
@@ -170,11 +170,9 @@ class WindowTopKSpec extends SparkSpec {
 
   test("over-cap group counts refuse (bounded predicate size)") {
     val t = table()
-    spark.conf.set("spark.graft.snapshot.windowTopK.maxGroups", "2")
-    try {
+    withConf(spark, "spark.graft.snapshot.windowTopK.maxGroups" -> "2") {
       val all = withoutRules(spark, WindowTopK)(filesRead(topk(t, 3)))
       assert(filesRead(topk(t, 3)) === all, "5 groups > cap 2 must refuse")
-    } finally
-      spark.conf.unset("spark.graft.snapshot.windowTopK.maxGroups")
+    }
   }
 }

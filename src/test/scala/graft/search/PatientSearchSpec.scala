@@ -192,11 +192,19 @@ class PatientSearchSpec extends SparkSpec {
 
   test("layout: coalescing the cached patient table keeps every row, " +
     "in order and bit for bit") {
-    // the stats by Spark's aggregate over the 192-range generator frame
-    val uncoalesced = Normalization.assembleFeatures(ZScoreStatsSpec.aggregateZscore(
-      PatientGenerator.setupHospitals(spark, configs), PatientSchema.featureCols, Some("hospital")))
+    // the stats by Spark's aggregate over the 192-range generator frame;
+    // the raw copies of the feature columns are what the table keeps
+    val feats = PatientSchema.featureCols
+    val generated = PatientGenerator.setupHospitals(spark, configs)
+    val zscored = Normalization.assembleFeatures(ZScoreStatsSpec.aggregateZscore(
+      generated.select(col("*") +: feats.map(c => col(c).as(s"raw_$c")): _*),
+      feats, Some("hospital")))
+    val columns = ("hospital" +: generated.columns.toSeq.filterNot(_ == "hospital")) :+ "features"
+    val uncoalesced = zscored.select(columns.map(c =>
+      if (feats.contains(c)) col(s"raw_$c").as(c) else col(c)): _*)
     val cached = system._1.patientTable.get
-    assert(cached.columns.toSeq == uncoalesced.columns.toSeq)
+    assert(cached.columns.toSeq == columns)
+    assert(cached.schema == uncoalesced.schema)
     val expected = uncoalesced.collect().map(bits).toSeq
     val actual = cached.collect().map(bits).toSeq
     assert(actual.length == configs.map(_._2).sum)

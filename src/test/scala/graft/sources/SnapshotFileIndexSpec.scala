@@ -34,8 +34,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     df.orderBy("o_orderkey").collect().map(_.toString).toSeq
 
   private lazy val table: String = {
-    val t = java.nio.file.Files.createTempDirectory("snapidx")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapidx") + "/t"
     SnapshotTable.create(spark, t,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -141,8 +140,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
 
   test("clusterZOrder makes BOTH interleaved dimensions prunable — " +
     "including one a 1-D layout could never skip on — and loses no row") {
-    val t = java.nio.file.Files.createTempDirectory("snapzo")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapzo") + "/t"
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -191,8 +189,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
 
   test("per-file bloom filters skip equality lookups on an unclustered " +
     "column — exactly, including after compaction") {
-    val t = java.nio.file.Files.createTempDirectory("snapbloom")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapbloom") + "/t"
     SnapshotTable.create(spark, t,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -237,8 +234,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
 
   test("partition evolution: appends under a NEW partition column stay " +
     "exact — values of one layout never prune predicates on another") {
-    val t = java.nio.file.Files.createTempDirectory("snapevo")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapevo") + "/t"
     SnapshotTable.create(spark, t,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -279,8 +275,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
 
   test("monotone-transform predicates prune via stats evaluated at the " +
     "endpoints — and every pruned result matches the unpruned read") {
-    val t = java.nio.file.Files.createTempDirectory("snapmono")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapmono") + "/t"
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
     // first stats column = cluster column: day-granularity predicates
@@ -324,8 +319,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
   }
 
   test("filters still prune after a merge commit mixes file generations") {
-    val t = java.nio.file.Files.createTempDirectory("snapidx2")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapidx2") + "/t"
     SnapshotTable.create(spark, t,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -353,8 +347,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
       HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.types.DoubleType
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("snapidx3")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapidx3") + "/t"
     val df = Seq((1L, Some(1.0), "full"), (2L, Some(2.0), "full"),
       (3L, Option.empty[Double], "empty"), (4L, Option.empty[Double], "empty"))
       .toDF("k", "x", "p")

@@ -14,8 +14,7 @@ import graft.{SparkSpec, Tables}
 class SnapshotSqlSpec extends SparkSpec {
 
   private lazy val table: String = {
-    val t = java.nio.file.Files.createTempDirectory("snapsql")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapsql") + "/t"
     SnapshotTable.create(spark, t,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -53,8 +52,7 @@ class SnapshotSqlSpec extends SparkSpec {
   test("snapshot_table(path, version) time-travels; snapshot_changes " +
     "returns the tagged feed") {
     table // force fixture + registration
-    val t2 = java.nio.file.Files.createTempDirectory("snapsql2")
-      .resolve("t").toString
+    val t2 = graft.Staged.scratch(spark, "snapsql2") + "/t"
     SnapshotTable.create(spark, t2,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -133,8 +131,7 @@ class SnapshotSqlSpec extends SparkSpec {
     "per statement, outcome row reports the clause counts, result " +
     "readable back through snapshot_table") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("snapsqlw")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapsqlw") + "/t"
     SnapshotTable.create(spark, t,
       Seq((1L, 10.0, "a"), (2L, 20.0, "a"), (3L, 30.0, "b"))
         .toDF("k", "v", "p"), "p")
@@ -167,8 +164,7 @@ class SnapshotSqlSpec extends SparkSpec {
   test("maintenance procedures: snapshot_compact folds, snapshot_analyze " +
     "persists a servable sketch, snapshot_expire drops old versions") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("snapsqlm")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapsqlm") + "/t"
     SnapshotTable.create(spark, t,
       (1 to 50).map(i => (i.toLong, s"g${i % 2}")).toDF("k", "p"), "p")
     SnapshotTable.commitAppend(spark, t,
@@ -195,8 +191,7 @@ class SnapshotSqlSpec extends SparkSpec {
     "servable summary, snapshot_quantiles answers from metadata with " +
     "the freshness proof, and a stale sidecar refuses loudly") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("snapsqlr")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapsqlr") + "/t"
     SnapshotTable.create(spark, t,
       (1 to 100).map(i => (i.toLong, i.toDouble, "all")).toDF("k", "v", "p"),
       "p")
@@ -228,8 +223,7 @@ class SnapshotSqlSpec extends SparkSpec {
     "sums, snapshot_sums serves them with the freshness proof, a " +
     "delete-only commit refuses, and the delta refresh re-arms exactly") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("snapsqls")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snapsqls") + "/t"
     SnapshotTable.create(spark, t,
       (1 to 100).map(i => (i.toLong, i * 2L, "all")).toDF("k", "w", "p"),
       "p")

@@ -5,12 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.SparkSpec.withConf
 
 class SnapshotTableSpec extends SparkSpec {
 
   private def freshTable(): String = {
-    val table = java.nio.file.Files.createTempDirectory("snap")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snap") + "/t"
     SnapshotTable.create(spark, table,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -33,8 +33,7 @@ class SnapshotTableSpec extends SparkSpec {
     val updates = updatesBatch()
 
     // in-place reference: same base, same batch, hive-layout upsert
-    val upsDir = java.nio.file.Files.createTempDirectory("snapref")
-      .resolve("t").toString
+    val upsDir = graft.Staged.scratch(spark, "snapref") + "/t"
     Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority"))
@@ -194,8 +193,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("range-clustered stats skip disjoint files and survive merge " +
     "and compaction") {
-    val table = java.nio.file.Files.createTempDirectory("snapstats")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapstats") + "/t"
     val orders = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority"))
@@ -297,8 +295,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("commitDelete keeps rows where the predicate evaluates NULL " +
     "(three-valued logic: NULL is non-matching, not droppable)") {
-    val table = java.nio.file.Files.createTempDirectory("snapnull")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapnull") + "/t"
     import spark.implicits._
     val df = Seq[(Long, Option[Double], String)](
       (1L, Some(5.0), "a"), (2L, Some(50.0), "a"), (3L, None, "a"),
@@ -365,8 +362,7 @@ class SnapshotTableSpec extends SparkSpec {
     // an all-null stats column records NaN bounds + its exact null
     // count: min/max evidence absent, but the all-null proof lets a
     // range read skip the file entirely (no value can be in range)
-    val nullStats = java.nio.file.Files.createTempDirectory("snapnullst")
-      .resolve("t").toString
+    val nullStats = graft.Staged.scratch(spark, "snapnullst") + "/t"
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "p")
       .withColumn("s", lit(null).cast("bigint"))
@@ -384,14 +380,9 @@ class SnapshotTableSpec extends SparkSpec {
     // production-shaped write settings for this test only: the harness
     // pins 1 KB granularity + 4 shuffle partitions, under which hint
     // and estimate both hit the task cap and cannot be told apart
-    val gKey = "spark.graft.write.targetFileBytes"
-    val gOld = spark.conf.getOption(gKey)
-    val sOld = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(gKey, (128L << 20).toString)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try {
-      val t = java.nio.file.Files.createTempDirectory("snaprwsize")
-        .resolve("t").toString
+    withConf(spark, "spark.graft.write.targetFileBytes" -> (128L << 20).toString,
+        "spark.sql.shuffle.partitions" -> "32") {
+      val t = graft.Staged.scratch(spark, "snaprwsize") + "/t"
       import spark.implicits._
       val base = spark.range(0, 2000).select(
         col("id").as("k"), (col("id") % 5).cast("string").as("p"),
@@ -412,32 +403,25 @@ class SnapshotTableSpec extends SparkSpec {
           "range-split sizing regressed to the plan estimate")
       assert(SnapshotTable.read(spark, t).filter(col("v") === -1L).count()
         === spark.range(0, 2000, 7).count())
-    } finally {
-      gOld.fold(spark.conf.unset(gKey))(v => spark.conf.set(gKey, v))
-      spark.conf.set("spark.sql.shuffle.partitions", sOld)
     }
   }
 
   test("stats-clustered writes sort WITHIN files: parquet row-group " +
     "bounds on the stats column are disjoint, enabling row-group " +
     "pruning under the manifest's file-level skipping") {
-    val t = java.nio.file.Files.createTempDirectory("snaprg")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snaprg") + "/t"
     import spark.implicits._
     // small parquet blocks force several row groups per file
     val hc = spark.sparkContext.hadoopConfiguration
     val old = hc.get("parquet.block.size")
     hc.set("parquet.block.size", (64 * 1024).toString)
     try {
-      val gKey = "spark.graft.write.targetFileBytes"
-      val gOld = spark.conf.getOption(gKey)
-      spark.conf.set(gKey, (128L << 20).toString)
-      try {
+      withConf(spark, "spark.graft.write.targetFileBytes" -> (128L << 20).toString) {
         val df = spark.range(0, 200000).select(
           col("id").as("k"), lit("a").as("p"),
           concat(lit("padpadpadpadpadpad-"), col("id")).as("s"))
         SnapshotTable.create(spark, t, df, "p", statsCols = Seq("k"))
-      } finally gOld.fold(spark.conf.unset(gKey))(v => spark.conf.set(gKey, v))
+      }
       val entry = SnapshotTable.readManifest(spark, t, 1L).head
       val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -465,8 +449,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("statsHistory profiles every version from manifests: physical " +
     "rows/files/bytes, pending-delete counts, provable bounds + nulls, " +
     "SQL NULL where evidence is incomplete") {
-    val t = java.nio.file.Files.createTempDirectory("snaphist")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snaphist") + "/t"
     import spark.implicits._
     val base = Seq((1L, Some(10.0), "a"), (2L, Some(20.0), "a"),
       (3L, Option.empty[Double], "b")).toDF("k", "x", "p")
@@ -495,8 +478,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("commit metadata is O(changed files): a one-file append to a " +
     "many-file table writes a small segment + list, not the inventory") {
-    val table = java.nio.file.Files.createTempDirectory("snapmeta")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapmeta") + "/t"
     import spark.implicits._
     // ~40 partition values → ≥40 data files at create, more per append
     val wide = spark.range(0, 4000)
@@ -536,8 +518,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("segment fold bounds the manifest list across many commits") {
-    val table = java.nio.file.Files.createTempDirectory("snapfold")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapfold") + "/t"
     import spark.implicits._
     SnapshotTable.createEmpty(spark, table)
     (0 until 40).foreach { i =>
@@ -557,8 +538,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("secondary stats column skips files when it correlates with the " +
     "cluster column") {
-    val table = java.nio.file.Files.createTempDirectory("snap2col")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snap2col") + "/t"
     import spark.implicits._
     val df = spark.range(0, 20000).select(col("id").as("k"),
       (col("id") + 5).as("k2"), (col("id") % 4).cast("string").as("p"))
@@ -622,8 +602,7 @@ class SnapshotTableSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val t = java.nio.file.Files.createTempDirectory("snaprace")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "snaprace") + "/t"
     SnapshotTable.create(spark, t,
       Seq((0L, "g")).toDF("id", "p"), "p")
     val racers = (1 to 8).map { i =>
@@ -643,8 +622,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("type-widening evolution: int→long and float→double on shared " +
     "names, old int32/float files upcast on read; other changes refuse") {
-    val table = java.nio.file.Files.createTempDirectory("snapwide")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapwide") + "/t"
     import spark.implicits._
     import org.apache.spark.sql.types.{DoubleType, LongType}
     val base = Seq((1, 1.5f, "a"), (2, 2.5f, "b")).toDF("i", "f", "p")
@@ -753,8 +731,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("field-id evolution: rename is header-only and reads old files " +
     "by id; drop + re-add cannot resurrect old values") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("snapfid")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapfid") + "/t"
     val df = Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("k", "v", "p")
     SnapshotTable.create(spark, table, df, "p")
     val m1 = SnapshotTable.readManifest(spark, table, 1L)
@@ -795,8 +772,7 @@ class SnapshotTableSpec extends SparkSpec {
   }
 
   test("manifest entries round-trip values that need escaping") {
-    val table = java.nio.file.Files.createTempDirectory("snapesc")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapesc") + "/t"
     import spark.implicits._
     val df = Seq((1L, "a \"quoted\"\\part"), (2L, "plain")).toDF("k", "p")
     SnapshotTable.create(spark, table, df, "p")
@@ -870,8 +846,7 @@ class SnapshotTableSpec extends SparkSpec {
     "NULL passes, ADD validates existing data, the set survives " +
     "maintenance commits") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("snapck")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapck") + "/t"
     SnapshotTable.create(spark, table,
       Seq((1L, Some(10.0), "a"), (2L, None, "a"), (3L, Some(30.0), "b"))
         .toDF("k", "price", "p"), "p")
@@ -972,8 +947,7 @@ class SnapshotTableSpec extends SparkSpec {
     "live and all-NULL files carry verbatim, only straddlers rewrite, " +
     "and the survivors equal the filter") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("expire")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "expire") + "/t"
     // ts-clustered numeric column, several small files per partition
     SnapshotTable.create(spark, t,
       (1 to 400).map(i => (i.toLong, i.toDouble, s"g${i % 2}"))
@@ -1020,8 +994,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("maintain's expireBefore policy retires old rows on the janitor " +
     "tick, but never while deletes are pending") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("mexp")
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, "mexp") + "/t"
     SnapshotTable.create(spark, t,
       (1 to 100).map(i => (i.toLong, i.toDouble, "g")).toDF("id", "ts", "p"),
       "p", statsCols = Seq("ts"))
@@ -1074,8 +1047,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("maintain applies its three policies only past their thresholds " +
     "and is a safe no-op otherwise") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("snapmnt")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapmnt") + "/t"
     SnapshotTable.create(spark, table,
       Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("k", "p"), "p")
     (1 to 5).foreach(i => SnapshotTable.commitAppend(spark, table,
@@ -1110,8 +1082,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("maintain with hotValues scopes the small-file policy to the hot " +
     "partitions: cold partitions are never counted, folded, or rewritten") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("snapmnth")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapmnth") + "/t"
     SnapshotTable.create(spark, table,
       Seq((1L, "hot"), (2L, "cold")).toDF("k", "p"), "p")
     (1 to 4).foreach(i => SnapshotTable.commitAppend(spark, table,
@@ -1140,7 +1111,7 @@ class SnapshotTableSpec extends SparkSpec {
   test("tableStats reads only the manifest list; readHinted broadcasts " +
     "small tables and leaves big/unknown ones alone") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snapstats")
+    val dir = graft.Staged.scratch(spark, "snapstats")
     val dim = s"$dir/dim"
     SnapshotTable.create(spark, dim,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "p"), "p")
@@ -1163,23 +1134,11 @@ class SnapshotTableSpec extends SparkSpec {
     // the ADAPTIVE threshold too: AQE's SMJ→BHJ conversion reads its
     // own conf, and a prior suite may have left it explicitly set —
     // the static conf's fallback then no longer reaches AQE
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val oldA = spark.conf
-      .getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "1")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "1") {
       assert(!joinPlan(SnapshotTable.readHinted(spark, dim))
         .contains("BroadcastHashJoin"),
         "an over-threshold table must not be force-broadcast")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-      oldA match {
-        case Some(v) => spark.conf
-          .set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
-        case None => spark.conf
-          .unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      }
     }
   }
 
@@ -1187,8 +1146,7 @@ class SnapshotTableSpec extends SparkSpec {
     "a moved head, vacuum spares staged files, and a replayed publish " +
     "no-ops") {
     import spark.implicits._
-    val table = java.nio.file.Files.createTempDirectory("snapwap")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapwap") + "/t"
     SnapshotTable.create(spark, table,
       Seq((1L, 10.0, "a"), (2L, 20.0, "b")).toDF("k", "v", "p"), "p")
 
@@ -1245,8 +1203,7 @@ class SnapshotTableSpec extends SparkSpec {
 
   test("compactWhere folds small files only inside the named partitions, " +
     "carrying every other file by reference with rows unchanged") {
-    val table = java.nio.file.Files.createTempDirectory("snapcw")
-      .resolve("t").toString
+    val table = graft.Staged.scratch(spark, "snapcw") + "/t"
     // range-clustered create: the 1KB spec granularity splits each
     // partition value across several files
     SnapshotTable.create(spark, table,
@@ -1263,11 +1220,11 @@ class SnapshotTableSpec extends SparkSpec {
       .orderBy("o_orderkey").collect().toSeq
     // compact at PRODUCTION granularity (the suite default is 1KB so
     // fixtures spread; folding needs the real target)
-    spark.conf.set("spark.graft.write.targetFileBytes", "134217728")
     val (v2, folded, produced) =
-      try SnapshotTable.compactWhere(spark, table,
-        "o_orderpriority", Seq(target), smallThreshold = Long.MaxValue)
-      finally spark.conf.set("spark.graft.write.targetFileBytes", "1024")
+      withConf(spark, "spark.graft.write.targetFileBytes" -> "134217728") {
+        SnapshotTable.compactWhere(spark, table,
+          "o_orderpriority", Seq(target), smallThreshold = Long.MaxValue)
+      }
     assert(folded === inTarget && produced < folded)
     val after = SnapshotTable.readManifest(spark, table, v2)
     // untouched partitions: identical entries, carried by reference

@@ -17,8 +17,7 @@ import graft.sources.SnapshotTable
 class SnapshotSourceSpec extends SparkSpec {
 
   private def freshTable(prefix: String): String = {
-    val t = java.nio.file.Files.createTempDirectory(prefix)
-      .resolve("t").toString
+    val t = graft.Staged.scratch(spark, prefix) + "/t"
     SnapshotTable.create(spark, t,
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -53,7 +52,7 @@ class SnapshotSourceSpec extends SparkSpec {
   test("startingVersion=0 replays the initial snapshot; a restarted " +
     "checkpoint emits only commits after its offset — exactly once overall") {
     val t = freshTable("snapsrc")
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_out")
     val (cp, out) = (s"$dir/cp", s"$dir/out")
     val baseN = SnapshotTable.read(spark, t).count()
 
@@ -76,7 +75,7 @@ class SnapshotSourceSpec extends SparkSpec {
   test("default start is tail-only: the initial snapshot is NOT replayed, " +
     "later commits are") {
     val t = freshTable("snapsrc_tail")
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_tail_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_tail_out")
     val (cp, out) = (s"$dir/cp", s"$dir/out")
 
     drain(t, cp, out) // current version = 1, nothing after it
@@ -91,7 +90,7 @@ class SnapshotSourceSpec extends SparkSpec {
   test("a rewrite commit in the window fails the insert-only stream; " +
     "ignoreChanges skips the removals and keeps tailing") {
     val t = freshTable("snapsrc_rw")
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_rw_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_rw_out")
 
     val updates = Tables.orders(spark, sfDir)
       .filter(col("o_orderkey") % 97 === 0)
@@ -123,7 +122,7 @@ class SnapshotSourceSpec extends SparkSpec {
     val t = freshTable("snapsrc_rate")
     val n2 = appendBatch(t, 6000000L) // v2
     val n3 = appendBatch(t, 6100000L) // v3
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_rate_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_rate_out")
     val (cp, out) = (s"$dir/cp", s"$dir/out")
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -167,7 +166,7 @@ class SnapshotSourceSpec extends SparkSpec {
     SnapshotTable.commitDeleteLazy(spark, t,
       Tables.orders(spark, sfDir).limit(1).select("o_orderkey"),
       "o_orderkey") // v2: logical removal, no files rewritten
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_eqdel_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_eqdel_out")
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drain(t, s"$dir/cp", s"$dir/out", Map("startingVersion" -> "1"))
     }
@@ -188,7 +187,7 @@ class SnapshotSourceSpec extends SparkSpec {
             "o_orderpriority"),
         "o_orderpriority")
     }
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_fold_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_fold_out")
     drain(t, s"$dir/cp", s"$dir/out", Map("startingVersion" -> "0"))
     val baseN = SnapshotTable.readVersion(spark, t, 1L).count()
     val all = spark.read.parquet(s"$dir/out")
@@ -202,7 +201,7 @@ class SnapshotSourceSpec extends SparkSpec {
     val t = freshTable("snapsrc_bytes")
     appendBatch(t, 7000000L) // v2
     appendBatch(t, 7100000L) // v3
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_bytes_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_bytes_out")
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
 
     def drain(budget: Long, cp: String, out: String): Unit = {
@@ -238,7 +237,7 @@ class SnapshotSourceSpec extends SparkSpec {
   test("table-to-table streaming ETL: source table → snapshot sink lands " +
     "every appended row exactly once") {
     val src = freshTable("snapsrc_t2t")
-    val dir = java.nio.file.Files.createTempDirectory("snapsrc_t2t_out")
+    val dir = graft.Staged.scratch(spark, "snapsrc_t2t_out")
     val dst = s"$dir/dst"
     SnapshotTable.createEmpty(spark, dst)
 
