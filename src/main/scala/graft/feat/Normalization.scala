@@ -52,11 +52,10 @@ object Normalization {
     * features over them. `range` is dropped from the result.
     */
   def featuresBySourceRange(df: DataFrame, range: String, group: String,
-                            cols: Seq[String] = featureCols,
-                            outputCol: String = "features"): DataFrame = {
+                            cols: Seq[String] = featureCols): DataFrame = {
     val stats = sourceStats(df, Some(range), cols, Some(group))
     df.join(broadcast(stats), Seq(group))
-      .withColumn(outputCol, array(cols.map(c => standardized(c).cast("float")): _*))
+      .withColumn("features", array(cols.map(c => standardized(c).cast("float")): _*))
       .drop(cols.flatMap(c => Seq(s"__mean_$c", s"__std_$c")) :+ range: _*)
   }
 
