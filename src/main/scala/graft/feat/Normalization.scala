@@ -51,12 +51,11 @@ object Normalization {
     * the coalesced rows once and both fold the stats and compute the
     * features over them. `range` is dropped from the result.
     */
-  def featuresBySourceRange(df: DataFrame, range: String, group: String,
-                            cols: Seq[String] = featureCols): DataFrame = {
-    val stats = sourceStats(df, Some(range), cols, Some(group))
+  def featuresBySourceRange(df: DataFrame, range: String, group: String): DataFrame = {
+    val stats = sourceStats(df, Some(range), featureCols, Some(group))
     df.join(broadcast(stats), Seq(group))
-      .withColumn("features", array(cols.map(c => standardized(c).cast("float")): _*))
-      .drop(cols.flatMap(c => Seq(s"__mean_$c", s"__std_$c")) :+ range: _*)
+      .withColumn("features", array(featureCols.map(c => standardized(c).cast("float")): _*))
+      .drop(featureCols.flatMap(c => Seq(s"__mean_$c", s"__std_$c")) :+ range: _*)
   }
 
   /** Column `c` z-scored by the stats columns `__mean_c` and `__std_c`. */
